@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":…,"queries":{…}}.
   *
@@ -39,89 +37,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    // Scale-derived AQE start parallelism (see BenchCore.scaleInitialPartitions):
-    // replaces the constant 512, which was right at the sf100 decade and pure
-    // per-exchange overhead at bench scale (optimization round 13). Shared
-    // helper so Bench/Verify/Probe/ExplainDump/PlanTime cannot drift (r14).
-    val initialParts = BenchCore.initialPartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // custom SQL functions + the ts-normalization pushdown rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // tmpfs-by-default shuffle dirs (GRAFT_LOCAL_DIR overrides): host disk
-      // is intermittently throttled and was measured turning 3 s shuffles
-      // into minutes (DiskBlockObjectWriter-bound)
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Shuffle parallelism must SCALE WITH DATA, not with local cores: a
-      // fixed 32 meant ~30M-row final-aggregation hash states per task at
-      // the sf100 decade, which starved execution memory beside the
-      // flagship's checkpoint blocks (AGGREGATE_OUT_OF_MEMORY — caught by
-      // the third-decade audit, round 11). AQE's initialPartitionNum is
-      // the idiomatic fix: shuffles START at 512 partitions and AQE
-      // coalesces them to the advisory size, so small SFs keep their
-      // effective parallelism (and their measured timings) while large
-      // ones keep per-task state bounded. On a real cluster this is the
-      // knob ops sets to O(cores × a few) — the engine no longer assumes
-      // one value fits every scale. Round 13: the start count itself now
-      // DERIVES from the input size (BenchCore.scaleInitialPartitions)
-      // instead of the constant 512 — the constant was tuned for the sf100
-      // decade and made every bench-scale exchange pay 512-bucket map
-      // writes + 512-partition AQE statistics for ~17 MB of data.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialParts)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Fixed calibration workload: generate → modular hash-agg → sort, all
-    // in-memory and data-independent, sized to exercise codegen + exchange
-    // machinery for a few hundred ms warm. Its only legitimate run-to-run
-    // variation is the host.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 8L * 1000 * 1000, 1L, numPartitions = 32)
-        .selectExpr("id % 9973 AS k", "(id * 2654435761) % 1000003 AS v")
-        .groupBy("k").agg(
-          org.apache.spark.sql.functions.sum("v"),
-          org.apache.spark.sql.functions.avg("v"))
-        .orderBy("k").count(): Unit
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
 
     // Dev-only subset filter (comma-separated names): scaling audits time
     // the heaviest queries on a larger synthetic corpus without paying the
     // full 118-query pass. The driver's per-round bench never sets this.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-        .foreach { case (name, fn) =>
-          try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
-          catch { case e: Throwable => System.err.println(s"[bench] warmup $name: ${e.getMessage}") }
-        }
-    }
-    calibrate() // untimed: JIT/codegen warm for the calibration plan itself
-
-    // Untimed DATA-warm pass over the measured directory (round 12): the
-    // sf0.001 warmup above warms JIT/codegen but never touches the
-    // measured parquet bytes, and first-pass cold reads measured as
-    // 22–48% ladder spread at sf10 (collapsing to 3.3% warm). Reading
-    // every byte once puts the corpus in the page cache before the first
-    // timed pass — the steady state a long-lived cluster's scans see.
-    // SPARK_GRAFT_DATA_WARM=0 opts out (e.g. when cold-read behavior is
-    // itself the measurement target).
-    if (sys.env.getOrElse("SPARK_GRAFT_DATA_WARM", "1") != "0") {
-      val tw0 = System.nanoTime()
-      val warmed = BenchCore.warmData(new java.io.File(sfDir), System.err.println(_))
-      System.err.println(f"[bench] data-warm: ${warmed / 1e9}%.2f GB in " +
-        f"${(System.nanoTime() - tw0) / 1e9}%.1f s")
-    }
+    val ordered = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
+    BenchCore.warmUp(spark, ordered, sfDir, warmDir, "bench")
 
     // Measurement + noise defense live in BenchCore (median-of-3, adaptive
     // 5-pass escalation, and — when the calibration noise_index exceeds
@@ -132,15 +58,7 @@ object Bench {
     // total look better.
     val byName = SparkEntry.queries
     def onePass(name: String): (Double, Boolean) = {
-      // Decade-scale heap hygiene, OUTSIDE the timed region: checkpoint
-      // blocks from a finished query are freed by the ContextCleaner only
-      // after their weak refs are GC-enqueued, and under sf100-sized
-      // allocation bursts the next query's tasks can OOM before that
-      // happens (measured: training_mix_full OOM'd at 64 g following
-      // three completed queries, but passed solo). Trigger only under
-      // real pressure so sf0.1 canonical windows never pay a full GC.
-      val rt = Runtime.getRuntime
-      if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
+      BenchCore.gcIfPressured()
       val t0 = System.nanoTime()
       // FULL-ROW materialization, not Dataset.count(): count-star lets the
       // optimizer PRUNE every aggregate expression the count doesn't need,
@@ -158,14 +76,12 @@ object Bench {
         }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    val ordered = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     // Dev-only single-pass probe mode for very large tiered decades
     // (sf100); the driver's per-round bench never sets it, so every
     // canonical capture stays median-of-3-to-5.
     val basePasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .map(_.toInt).filter(p => p >= 1 && p <= 5).getOrElse(3)
-    val core = BenchCore.measure(ordered, onePass, () => calibrate(),
+    val core = BenchCore.measure(ordered, onePass, () => BenchCore.calibrate(spark),
       log = System.err.println(_), basePasses = basePasses)
     val results = core.queries
     val cals = core.calibrations
@@ -200,7 +116,7 @@ object Bench {
     // window. exit fields emit as null in that case.
     val exitCalOpt =
       if (noiseIndex <= BenchCore.CanonicalNoiseGate) None
-      else Some((1 to 3).map(_ => calibrate()).min)
+      else Some((1 to 3).map(_ => BenchCore.calibrate(spark)).min)
     val exitRatioOpt = exitCalOpt.map(_ / math.max(cals.min, 1e-9))
     // Per-query throttle evidence counts only where relative spread is
     // meaningful: a 0.1 s query at ±0.1 s of scheduler jitter reads as

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{avg, sum}
+
 /** The bench measurement loop, factored pure so the noise defense is
   * TESTABLE: pass-runner and calibrator are injected functions, which lets
   * BenchChaosSpec replay a recorded throttle window deterministically and
@@ -319,6 +322,51 @@ object BenchCore {
       s""""candidates":${obj(_.candidates.toString)},"xw_spread_pct":${obj(q => f"${q.xwSpreadPct}%.1f")}}"""
   }
 
+  /** Fixed calibration workload: generate → modular hash-agg → sort, all
+    * in-memory and data-independent, sized to exercise codegen + exchange
+    * machinery for a few hundred ms warm. Its only legitimate run-to-run
+    * variation is the host. Returns seconds. */
+  def calibrate(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 8L * 1000 * 1000, 1L, numPartitions = 32)
+      .selectExpr("id % 9973 AS k", "(id * 2654435761) % 1000003 AS v")
+      .groupBy("k").agg(sum("v"), avg("v"))
+      .orderBy("k").count(): Unit
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Untimed warm-up before the first timed pass, logged under `tag`: each
+    * named query once on the tiny `warmDir` corpus (JIT/codegen — see
+    * [[Bench]]), the calibration plan once, then every byte under `sfDir`
+    * via [[warmData]] unless SPARK_GRAFT_DATA_WARM=0 (e.g. when cold-read
+    * behavior is itself the measurement target). */
+  def warmUp(spark: SparkSession, names: Seq[String], sfDir: String, warmDir: String,
+      tag: String): Unit = {
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) names.foreach { name =>
+      try SparkEntry.queries(name)(spark, warmDir).queryExecution.toRdd.count(): Unit
+      catch { case e: Throwable => System.err.println(s"[$tag] warmup $name: ${e.getMessage}") }
+    }
+    calibrate(spark): Unit
+    if (sys.env.getOrElse("SPARK_GRAFT_DATA_WARM", "1") != "0") {
+      val tw0 = System.nanoTime()
+      val warmed = warmData(new java.io.File(sfDir), System.err.println(_))
+      System.err.println(f"[$tag] data-warm: ${warmed / 1e9}%.2f GB in " +
+        f"${(System.nanoTime() - tw0) / 1e9}%.1f s")
+    }
+  }
+
+  /** Decade-scale heap hygiene, run OUTSIDE a timed region: checkpoint
+    * blocks from a finished query are freed by the ContextCleaner only
+    * after their weak refs are GC-enqueued, and under sf100-sized
+    * allocation bursts the next query's tasks can OOM before that happens
+    * (measured: training_mix_full OOM'd at 64 g following three completed
+    * queries, but passed solo). Collects only under real pressure so sf0.1
+    * windows never pay a full GC. */
+  def gcIfPressured(): Unit = {
+    val rt = Runtime.getRuntime
+    if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
+  }
+
   /** Untimed data-warm pass (round 12, from the round-11 ladder finding:
     * dedup_lsh_tune's 22–48% sf10 spreads collapsed to 3.3% once the
     * parquet bytes were page-cache-warm — first-pass cold reads were
@@ -391,12 +439,9 @@ object BenchCore {
     if (inputBytes <= 0L) math.max(512, 2 * cpus)
     else math.min(4096, math.max(2 * cpus, (inputBytes / (32L << 20)).toInt))
 
-  /** The derived-or-overridden AQE `initialPartitionNum` value shared by
-    * EVERY session builder (Bench, Verify, Probe, ExplainDump, PlanTime) —
-    * previously copy-pasted five times, where one drifting copy would
-    * silently diverge bench vs verify configs (round-13 ADVICE). A
-    * malformed SPARK_GRAFT_INITIAL_PARTS fails with a named message
-    * instead of a raw NumberFormatException. */
+  /** The derived-or-overridden AQE `initialPartitionNum` value that
+    * [[GraftSession.local]] sets. A malformed SPARK_GRAFT_INITIAL_PARTS
+    * fails with a named message instead of a raw NumberFormatException. */
   def initialPartitions(sfDir: String, cpus: Int): String =
     initialPartitionsFrom(sys.env.get("SPARK_GRAFT_INITIAL_PARTS"), inputBytes(sfDir), cpus)
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Decade-scale probe runner: times named registry queries on
   * SPARK_GRAFT_SF_DIR and APPENDS one JSON line per timed pass to the
   * probe artifact — the evidence file is written BY THE RUNNER, not by a
@@ -41,36 +39,13 @@ object Probe {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "probes.jsonl")
     val passes = sys.env.get("SPARK_GRAFT_PROBE_PASSES").map(_.toInt)
       .filter(p => p >= 1 && p <= 9).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val codeId = sys.env.getOrElse("SPARK_GRAFT_CODE_ID",
       BenchCore.gitHeadId(new java.io.File(".")))
     val heapGb = Runtime.getRuntime.maxMemory / (1L << 30)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        BenchCore.initialPartitions(sfDir, cpus.toInt))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 8L * 1000 * 1000, 1L, numPartitions = 32)
-        .selectExpr("id % 9973 AS k", "(id * 2654435761) % 1000003 AS v")
-        .groupBy("k").agg(
-          org.apache.spark.sql.functions.sum("v"),
-          org.apache.spark.sql.functions.avg("v"))
-        .orderBy("k").count(): Unit
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = GraftSession.local(cpus, sfDir)
 
     def append(line: String): Unit = {
       // append-mode write, flushed per line: the artifact survives a later
@@ -82,29 +57,16 @@ object Probe {
     def now(): String = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss"))
 
-    // JIT/codegen warmup on the tiny corpus, for the probed queries only.
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      names.foreach { name =>
-        try SparkEntry.queries(name)(spark, warmDir).queryExecution.toRdd.count(): Unit
-        catch { case e: Throwable => System.err.println(s"[probe] warmup $name: ${e.getMessage}") }
-      }
-    }
-    calibrate() // untimed: JIT for the calibration plan itself
-    if (sys.env.getOrElse("SPARK_GRAFT_DATA_WARM", "1") != "0") {
-      val tw0 = System.nanoTime()
-      val warmed = BenchCore.warmData(new java.io.File(sfDir), System.err.println(_))
-      System.err.println(f"[probe] data-warm: ${warmed / 1e9}%.2f GB in " +
-        f"${(System.nanoTime() - tw0) / 1e9}%.1f s")
-    }
+    // JIT/codegen warmup for the probed queries only, then the data warm.
+    BenchCore.warmUp(spark, names, sfDir, warmDir, "probe")
 
     names.foreach { name =>
-      val calBefore = calibrate()
+      val calBefore = BenchCore.calibrate(spark)
       var coldSec = Double.NaN
       var warmMin = Double.NaN
       var allOk = true
       (1 to passes).foreach { pass =>
-        val rt = Runtime.getRuntime
-        if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
+        BenchCore.gcIfPressured()
         val kind = if (pass == 1) "cold" else "warm"
         val t0 = System.nanoTime()
         val ok =
@@ -120,7 +82,7 @@ object Probe {
           f""""kind":"$kind","sec":$sec%.2f,"ok":$ok,"cal_before":$calBefore%.2f,""" +
           f""""code":"$codeId","heap_gb":$heapGb,"cpus":$cpus}""")
       }
-      val calAfter = calibrate()
+      val calAfter = BenchCore.calibrate(spark)
       def j(d: Double) = if (d.isNaN) "null" else f"$d%.2f"
       append(f"""{"ts":"${now()}","query":"$name","sf":"$sfDir","summary":true,""" +
         f""""passes":$passes,"cold_sec":${j(coldSec)},"warm_min_sec":${j(warmMin)},""" +

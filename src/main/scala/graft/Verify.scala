@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     // Optional dev-loop filter: comma-separated query names as a 3rd arg
     // (the driver always passes exactly 2 args → full dump).
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ts canonicalization: ns parquet reads as long via this flag; other
-      // physical layouts normalize in Tables.scala (TESTDATA.md contract)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // custom SQL functions + the ts-normalization pushdown rule
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // tmpfs-by-default shuffle dirs (GRAFT_LOCAL_DIR overrides; see LocalDirs)
-      .config("spark.local.dir", LocalDirs.sparkLocalDir)
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffles scale with data, AQE coalesces back; start count derives
-      // from the input size (see BenchCore.scaleInitialPartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        BenchCore.initialPartitions(sfDir, cpus.toInt))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     // A query that throws must become a RED row in the round artifact, not a
     // silently shrunken denominator (round-5 lesson: 28 broken queries were

@@ -87,9 +87,24 @@ object MrJob {
     fs.listStatus(p).filter(_.isFile).map(_.getPath.toString).sorted.toSeq
   }
 
-  private def applyProc(proc: LineProc, rdd: RDD[String]): RDD[String] = proc match {
-    case Exec(cmd) => rdd.pipe(cmd, PipeEnv)
+  /** F3/F7: run a mapper or reducer over every partition's line stream.
+    * Exec stages talk UTF-8 whatever the JVM's default charset: under a
+    * POSIX locale that default is ASCII, and `pipe` would turn every
+    * non-ASCII character into `?` on its way to and from the process. */
+  def applyProc(proc: LineProc, rdd: RDD[String]): RDD[String] = proc match {
+    case Exec(cmd) => rdd.pipe(cmd, PipeEnv, encoding = "UTF-8")
     case Native(f) => rdd.mapPartitions(f)
+  }
+
+  /** F4+F5+F6: md5-mod-R routing with byte-wise whole-line sort; Spark's
+    * sort-based shuffle externally sorts and k-way-merges per partition —
+    * the same sort/merge topology the reference implements by hand. */
+  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] = {
+    implicit val lineOrdering: Ordering[String] = CByteOrdering
+    mapped
+      .map(line => (line, null))
+      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(numReducers))
+      .keys
   }
 
   /** Run a complete job; returns the R output file paths
@@ -119,17 +134,8 @@ object MrJob {
       if (taskRdds.size == 1) taskRdds.head else sc.union(taskRdds)
     }
 
-    // F4+F5+F6: md5-mod-R routing with byte-wise whole-line sort; Spark's
-    // sort-based shuffle externally sorts and k-way-merges per partition —
-    // the same sort/merge topology the reference implements by hand.
-    implicit val lineOrdering: Ordering[String] = CByteOrdering
-    val sorted = mapped
-      .map(line => (line, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(job.numReducers))
-      .keys
-
     // F7: reducer over each merged sorted partition stream.
-    val reduced = applyProc(job.reducer, sorted)
+    val reduced = applyProc(job.reducer, shuffleSort(mapped, job.numReducers))
 
     // F8: deterministic part-%05d sink, written executor-side through the
     // Hadoop FileSystem API (works on local FS and HDFS/object stores).

@@ -1,5 +1,6 @@
 package graft.mr
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 
@@ -13,28 +14,30 @@ object MrQueries {
 
   private val Reducers = 8
 
-  private def textLines(spark: SparkSession, sfDir: String) = {
+  /** `documents.text` as the line corpus through map → md5-mod-R
+    * partition → C-sort → reduce, the shuffle step [[MrJob.run]] runs. */
+  private def mapReduce(spark: SparkSession, sfDir: String, mapper: LineProc,
+      reducer: LineProc, reducers: Int): RDD[String] = {
     import spark.implicits._
-    Tables.documents(spark, sfDir).select("text").as[String].rdd
+    val lines = Tables.documents(spark, sfDir).select("text").as[String].rdd
+    MrJob.applyProc(reducer, MrJob.shuffleSort(MrJob.applyProc(mapper, lines), reducers))
+  }
+
+  /** A word count job's `word\tcount` reducer lines as a (word, cnt) frame. */
+  private def wordCount(spark: SparkSession, sfDir: String, mapper: LineProc,
+      reducer: LineProc): DataFrame = {
+    import spark.implicits._
+    mapReduce(spark, sfDir, mapper, reducer, Reducers).map { l =>
+      val i = l.lastIndexOf('\t')
+      (l.substring(0, i), l.substring(i + 1).toLong)
+    }.toDF("word", "cnt")
   }
 
   /** Word count through the full MR dataflow (map → md5-mod partition →
     * C-sort → streaming reduce), i.e. F3+F4+F5+F6+F7 of SURVEY.md §2.1,
     * with wc_map.sh/wc_reduce.sh stream semantics. */
-  def mrWordcount(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    implicit val ord: Ordering[String] = CByteOrdering
-    val mapped = textLines(spark, sfDir).mapPartitions(NativeQueries.wcMapSh)
-    val reduced = mapped
-      .map(l => (l, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(Reducers))
-      .keys
-      .mapPartitions(NativeQueries.wcReduceSh)
-    reduced.map { l =>
-      val i = l.lastIndexOf('\t')
-      (l.substring(0, i), l.substring(i + 1).toLong)
-    }.toDF("word", "cnt")
-  }
+  def mrWordcount(spark: SparkSession, sfDir: String): DataFrame =
+    wordCount(spark, sfDir, Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
 
   /** Oracle twin of wc_map.sh tokenization: split on single `[` `]`
     * space/tab characters (tr's SET1 brackets are literals) KEEPING empty
@@ -86,34 +89,15 @@ object MrQueries {
     * unmodified binaries), so the same DuckDB oracle checks this path at
     * full strength. On a multi-node cluster the extracted scripts would be
     * shipped with `sc.addFile`; local mode shares the driver filesystem. */
-  def mrWordcountExec(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val execDir = wcExecDir
-    implicit val ord: Ordering[String] = CByteOrdering
-    val env = Map("LC_ALL" -> "C")
-    val mapped = textLines(spark, sfDir).pipe(Seq(s"$execDir/wc_map.sh"), env)
-    val reduced = mapped
-      .map(l => (l, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(Reducers))
-      .keys
-      .pipe(Seq(s"$execDir/wc_reduce.sh"), env)
-    reduced.map { l =>
-      val i = l.lastIndexOf('\t')
-      (l.substring(0, i), l.substring(i + 1).toLong)
-    }.toDF("word", "cnt")
-  }
+  def mrWordcountExec(spark: SparkSession, sfDir: String): DataFrame =
+    wordCount(spark, sfDir,
+      Exec(Seq(s"$wcExecDir/wc_map.sh")), Exec(Seq(s"$wcExecDir/wc_reduce.sh")))
 
   /** Grep through the MR dataflow with grep_map.py/grep_reduce.py stream
     * semantics (strip, drop blanks, lowercase containment, constant key). */
   def mrGrep(spark: SparkSession, sfDir: String, q: String = "vector"): DataFrame = {
     import spark.implicits._
-    implicit val ord: Ordering[String] = CByteOrdering
-    val mapped = textLines(spark, sfDir).mapPartitions(NativeQueries.grepMap(q))
-    mapped
-      .map(l => (l, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(1))
-      .keys
-      .mapPartitions(NativeQueries.grepReduce)
+    mapReduce(spark, sfDir, Native(NativeQueries.grepMap(q)), Native(NativeQueries.grepReduce), 1)
       .toDF("line")
   }
 

@@ -71,13 +71,7 @@ object MrSubmit {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-mr-submit")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.LocalDirs.sparkLocalDir)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus, a.input)
     try run(spark, a) finally spark.stop()
   }
 }

@@ -1441,7 +1441,7 @@ object Dedup {
   private[graft] def lshTuneOfShingles(sh0: DataFrame): DataFrame = {
     val docsets = lshTuneDocsets(sh0).localCheckpoint()
     // ONE exact-scoring evaluation per distinct candidate pair, total.
-    // Attribution (ProbeLshTune at sf1: 1.58M (cfg, pair) rows, 1.56M
+    // Attribution (round-10 stage timing at sf1: 1.58M (cfg, pair) rows, 1.56M
     // distinct pairs — the (16×1) arm IS the candidate volume, and the
     // array_intersect scoring join is the decade's dominant cost): the
     // verdict depends only on the pair, so candidates collapse to distinct

@@ -1515,8 +1515,8 @@ object Similarity {
     // guide §2.4): the previous form checkpointed each method's top-k
     // SEPARATELY and ran count/overlap/assemble per method — 3 checkpoint
     // materializations + 6 aggregations + 6 joins whose AQE exchange
-    // materialization is driver-sequenced (PlanTime: construction is half
-    // this query's wall time). The three top-k frames now UNION into one
+    // materialization is driver-sequenced (round-13 attribution: construction
+    // is half this query's wall time). The three top-k frames now UNION into one
     // method-tagged frame behind ONE checkpoint, and both rollups
     // (per-query index size, per-query overlap vs brute) come out of ONE
     // aggregation each over (method, query); the per-method rows reassemble

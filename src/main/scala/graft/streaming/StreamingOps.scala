@@ -212,75 +212,54 @@ object StreamingOps {
     maxes.max
   }
 
-  /** Local-mode state-partition + checkpoint-IO tuning, not semantics:
-    * each micro-batch pays a fixed per-state-partition cost (store open/
-    * commit/snapshot — a stream-stream join commits FOUR stores per
-    * partition) and the demo keyspaces are small, so 4 state partitions
-    * beat the session default (32) and the previous 8 — measured on the
-    * sf0.1 join family; 2 over-serializes. Spark 4's checkpoint file CHECKSUMS
-    * (`ChecksumCheckpointFileManager`, twin .checksum file per delta/log
-    * write) are also disabled for the demos: these are throwaway
-    * unique-per-run checkpoints that are never restarted from, so
-    * bit-rot protection buys nothing and doubles the per-commit file
-    * count (measured: summed per-batch store commit time ~3-5 s across
-    * the 32 store instances of a join batch). Both settings are restored
-    * afterwards; a production run keeps checksums on its durable
-    * checkpoints and sizes partitions to its executors. */
-  /** State-partition count for the streaming demos. Round-9 A/B at sf0.1
-    * (15-query family, same window): parts=4 28.8 s, parts=2 29.9 s,
-    * parts=2 + RocksDB changelog checkpointing 29.8 s — neither candidate
-    * knob beats the default, so 4 stays; the env override remains for
-    * future A/B runs. */
-  private val StateParts = sys.env.getOrElse("GRAFT_STATE_PARTS", "4")
+  /** State-partition count for the streaming demos — local-mode tuning,
+    * not semantics: each micro-batch pays a fixed cost per state partition
+    * (store open/commit/snapshot) and the demo keyspaces are small, so 4
+    * beats the session default (32) and the previous 8; 2 over-serializes.
+    * Settled three times at sf0.1: round 9 (15-query family, one window)
+    * parts=4 28.8 s, parts=2 29.9 s, parts=2 + changelog 29.8 s; round 13
+    * re-confirmed 4; round 14 under join state v3, parts=2 10.5–10.7 s vs
+    * 8.01 s summed over the join trio. */
+  private val StateParts = "4"
 
-  /** Stream-stream joins run with join state format VERSION 3 — one
-    * RocksDB store per partition with virtual column families — instead of
-    * the default v2's FOUR stores per partition per join (optimization
-    * round 14, VERDICT #1; guide §5 — the streaming family's floor is the
-    * per-batch store-commit fan-out, measured by StreamProbe at
-    * 0.51–0.75 s summed commit per micro-batch across the 16 v2 store
-    * instances of a 4-partition join, data or no data). v3 quarters the
-    * per-batch commit/load/maintenance instance count; it requires the
-    * RocksDB provider (the at-scale posture every tws demo already runs).
-    * Values are provider-independent — the oracle hash-checks all three
-    * join demos. GRAFT_JOIN_STORE_V2=1 restores the previous form for A/B.
-    */
+  /** Stream-stream joins run with join state format v3 — ONE RocksDB store
+    * per partition with virtual column families instead of v2's four — and
+    * RocksDB changelog checkpointing, where a commit appends a changelog
+    * delta (O(changed keys)) instead of zipping a full snapshot. The
+    * streaming family's floor is the per-batch store-commit fan-out: a
+    * StreamingQueryListener measured 0.51–0.75 s summed commit per batch
+    * across the 16 v2 store instances of a 4-partition join, data or no
+    * data, falling to 0.15–0.18 s on steady-state batches with both
+    * changes. Round-14 interleaved A/B at sf0.1 (join/full/outer summed):
+    * v2 8.77 s, v3 8.29 s, v3 + changelog 8.01 s (−9%). Values are
+    * provider-independent — the oracle hash-checks all three join demos. */
   private def withJoinStoreV3[A](spark: SparkSession)(body: => A): A =
-    if (sys.env.get("GRAFT_JOIN_STORE_V2").contains("1")) body
-    else {
-      val fmtKey = "spark.sql.streaming.join.stateFormatVersion"
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prevFmt = spark.conf.getOption(fmtKey)
-      val prevProv = spark.conf.getOption(provKey)
-      val prevCl = spark.conf.getOption(clKey)
-      spark.conf.set(fmtKey, "3")
-      spark.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit appends a changelog delta instead
-      // of zipping+uploading a full RocksDB snapshot per batch (snapshots
-      // move to the async maintenance thread) — the per-commit cost becomes
-      // O(changed keys), the production default posture for RocksDB state.
-      if (sys.env.get("GRAFT_JOIN_NO_CHANGELOG").isEmpty) spark.conf.set(clKey, "true")
-      try body finally {
-        prevFmt match { case Some(v) => spark.conf.set(fmtKey, v); case None => spark.conf.unset(fmtKey) }
-        prevProv match { case Some(v) => spark.conf.set(provKey, v); case None => spark.conf.unset(provKey) }
-        prevCl match { case Some(v) => spark.conf.set(clKey, v); case None => spark.conf.unset(clKey) }
-      }
-    }
+    withConfs(spark,
+      "spark.sql.streaming.join.stateFormatVersion" -> "3",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
 
-  private def withStateParts[A](spark: SparkSession)(body: => A): A = {
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set("spark.sql.shuffle.partitions", StateParts)
-    spark.conf.set(ckKey, "false")
-    try body finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None => spark.conf.unset(ckKey)
-      }
+  /** Runs `body` on [[StateParts]] shuffle partitions with Spark 4's
+    * checkpoint file CHECKSUMS (`ChecksumCheckpointFileManager`, twin
+    * .checksum file per delta/log write) disabled: these are throwaway
+    * unique-per-run checkpoints that are never restarted from, so bit-rot
+    * protection buys nothing and doubles the per-commit file count
+    * (measured: summed per-batch store commit time ~3-5 s across the 32
+    * store instances of a join batch). Both settings are restored
+    * afterwards; a production run keeps checksums on its durable
+    * checkpoints. */
+  private def withStateParts[A](spark: SparkSession)(body: => A): A =
+    withConfs(spark, "spark.sql.shuffle.partitions" -> StateParts,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
+
+  /** Runs `body` with the given session confs set, restoring them after. */
+  private def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
