@@ -2,9 +2,11 @@ package graft.mr
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
-import org.apache.spark.rdd.RDD
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
+import org.apache.spark.{Aggregator, SparkContext, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
 /** The reference's whole job contract as one Spark pipeline (SURVEY.md §3.4):
@@ -41,10 +43,11 @@ final case class JobSpec(
     reducer: LineProc,
     numMappers: Int = 2,
     numReducers: Int = 2,
-    /** false (default) = reference-compat F2: each FILE is one map
-      * partition (exec mappers fork once per file, like the reference's
-      * one-Popen-per-file accounting). true = let Spark split files by
-      * BYTE RANGES across `numMappers`+ tasks — the right shape when one
+    /** false (default) = reference-compat F2: each FILE is its own map
+      * task (exec mappers fork once per file, like the reference's
+      * one-Popen-per-file accounting), and `numMappers` does not group
+      * files into fewer tasks. true = let Spark split files by BYTE
+      * RANGES across `numMappers`+ tasks — the right shape when one
       * input file is 10 GB. Only valid when the mapper is line-local
       * (emits per line with no cross-line state), which every shipped
       * mapper is; reducers are unaffected (they always run after the
@@ -52,39 +55,91 @@ final case class JobSpec(
     splitFilesByBytes: Boolean = false)
 
 /** C-locale (byte-wise) whole-line ordering — the reference sorts with
-  * `LC_ALL=C sort` (`/root/reference/tests/test_worker_11.py:104-105`).
-  * Unsigned UTF-8 byte comparison, not UTF-16 code-unit comparison. */
+  * `LC_ALL=C sort` (the reference's `tests/test_worker_11.py:104-105`):
+  * unsigned comparison of the lines' `getBytes(UTF_8)`, not UTF-16
+  * code-unit comparison.
+  *
+  * Compares chars in place. Below the first differing char both lines
+  * encode to the same bytes, and two differing non-surrogate chars order
+  * as their UTF-8 encodings do, so the char difference decides. Only when
+  * the char at the first difference is a surrogate (a supplementary
+  * character sorts above U+E000–U+FFFF in UTF-8, below it in UTF-16, and
+  * an unpaired one encodes as `?`) does it compare the encoded bytes. */
 object CByteOrdering extends Ordering[String] {
   override def compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i == n) {
+      if (a.length == b.length) 0
+      else if (Character.isSurrogate((if (a.length > n) a else b).charAt(n))) compareBytes(a, b)
+      else a.length - b.length
+    } else {
+      val ca = a.charAt(i)
+      val cb = b.charAt(i)
+      if (Character.isSurrogate(ca) || Character.isSurrogate(cb)) compareBytes(a, b)
+      else ca - cb
+    }
+  }
+
+  private def compareBytes(a: String, b: String): Int = {
     val ab = a.getBytes(StandardCharsets.UTF_8)
     val bb = b.getBytes(StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(ab.length, bb.length)
-    while (i < n) {
-      val d = (ab(i) & 0xff) - (bb(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    ab.length - bb.length
+    java.util.Arrays.compareUnsigned(ab, bb)
   }
 }
 
 /** Routes a whole line to md5(key-before-first-TAB) mod R. */
 class Md5LinePartitioner(numPartitions0: Int) extends Md5Partitioner(numPartitions0) {
   override def getPartition(key: Any): Int =
-    Md5Partitioning.partition(Md5Partitioning.keyOf(key.asInstanceOf[String]), numPartitions0)
+    Md5Partitioning.partitionLine(key.asInstanceOf[String], numPartitions0)
+}
+
+/** TextInputFormat over an explicit list of files: `listStatus` looks each
+  * listed path up instead of globbing it, so a file named `in[1]`, `x{y}`
+  * or `f*` opens exactly that file. */
+class ListedTextInputFormat extends TextInputFormat {
+  override protected def listStatus(job: JobConf): Array[FileStatus] =
+    FileInputFormat.getInputPaths(job).map(p => p.getFileSystem(job).getFileStatus(p))
+}
+
+/** [[ListedTextInputFormat]] with one split per file (F2 compat mode). */
+class WholeFileTextInputFormat extends ListedTextInputFormat {
+  override protected def isSplitable(fs: FileSystem, file: Path): Boolean = false
 }
 
 object MrJob {
 
   private val PipeEnv = Map("LC_ALL" -> "C")
 
-  /** F1+F2: deterministic sorted listing, file i → map task i % M
+  /** F1: deterministic sorted listing of the input directory's files
     * (`/root/reference/tests/test_manager_02.py:162-197`). */
   def listInputFiles(spark: SparkSession, inputDir: String): Seq[String] = {
     val p = new Path(inputDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(p).filter(_.isFile).map(_.getPath.toString).sorted.toSeq
+  }
+
+  /** F1+F2: all of a job's files through one HadoopRDD. The paths go in as
+    * `Path`s, so a comma in a name is escaped rather than split on, and
+    * [[ListedTextInputFormat]] opens each without globbing it. Compat mode
+    * reads one partition per file (exec mappers fork once per file, like
+    * the reference's one-Popen-per-file accounting in its
+    * `tests/test_worker_11.py:152-154`). Byte-split mode
+    * lets TextInputFormat cut newline-aligned byte ranges of about
+    * total/numMappers, so one 10 GB file still parallelizes; line-local
+    * mappers give identical output.
+    *
+    * The JobConf is handed to Spark, which then uses it as is; a path
+    * string read (`textFile`) would instead cache a JobConf per RDD in
+    * SparkEnv's soft-valued metadata map, where a full GC leaves it. */
+  private[mr] def readInput(sc: SparkContext, files: Seq[String], job: JobSpec): RDD[String] = {
+    val conf = new JobConf(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(conf, files.map(new Path(_)): _*)
+    val format =
+      if (job.splitFilesByBytes) classOf[ListedTextInputFormat] else classOf[WholeFileTextInputFormat]
+    sc.hadoopRDD(conf, format, classOf[LongWritable], classOf[Text], job.numMappers)
+      .map(_._2.toString)
   }
 
   /** F3/F7: run a mapper or reducer over every partition's line stream.
@@ -97,42 +152,47 @@ object MrJob {
   }
 
   /** F4+F5+F6: md5-mod-R routing with byte-wise whole-line sort; Spark's
-    * sort-based shuffle externally sorts and k-way-merges per partition —
-    * the same sort/merge topology the reference implements by hand. */
-  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] = {
-    implicit val lineOrdering: Ordering[String] = CByteOrdering
-    mapped
-      .map(line => (line, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(numReducers))
-      .keys
-  }
+    * sort-based shuffle externally sorts and merges per partition — the
+    * same sort/merge topology the reference implements by hand.
+    *
+    * Equal lines are interchangeable and the whole-line sort puts them side
+    * by side, so the shuffle carries each distinct line once per map task
+    * with its count (a map-side combine in Spark's spillable maps) and the
+    * sorted `(line, n)` pairs expand back into n copies: every reducer,
+    * Native or Exec, reads the same stream as if each line had been
+    * shuffled on its own. */
+  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] =
+    new ShuffledRDD[String, Long, Long](mapped.map(line => (line, 1L)),
+        new Md5LinePartitioner(numReducers))
+      .setKeyOrdering(CByteOrdering)
+      .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
+      .setMapSideCombine(true)
+      .mapPartitions(expandCounts)
+
+  /** Sorted `(line, n)` pairs back into n copies of each line, lazily. */
+  private def expandCounts(counted: Iterator[(String, Long)]): Iterator[String] =
+    new Iterator[String] {
+      private var line: String = _
+      private var left = 0L
+      def hasNext: Boolean = left > 0 || counted.hasNext
+      def next(): String = {
+        if (left == 0) {
+          val (l, n) = counted.next()
+          line = l
+          left = n
+        }
+        left -= 1
+        line
+      }
+    }
 
   /** Run a complete job; returns the R output file paths
     * (`outputDir/part-00000 … part-{R-1}`). */
   def run(spark: SparkSession, job: JobSpec): Seq[String] = {
-    val sc = spark.sparkContext
     val files = listInputFiles(spark, job.inputDir)
     require(files.nonEmpty, s"no input files in ${job.inputDir}")
-
-    // F2+F3. Compat mode (default): group files round-robin into map
-    // tasks; each input file is a separate partition so Exec mappers fork
-    // once per file, exactly like the reference's one-Popen-per-file
-    // accounting (/root/reference/tests/test_worker_11.py:152-154).
-    // Byte-split mode: hand the whole file list to one textFile so Hadoop
-    // TextInputFormat splits by byte ranges (~total/numMappers per task,
-    // newline-aligned) — a single 10 GB file parallelizes instead of
-    // pinning one task; line-local mappers produce identical output.
-    val mapped = if (job.splitFilesByBytes) {
-      applyProc(job.mapper, sc.textFile(files.mkString(","), job.numMappers))
-    } else {
-      val taskRdds = files.indices.groupBy(_ % job.numMappers).toSeq.sortBy(_._1).map {
-        case (_, idxs) =>
-          val taskFiles = idxs.map(files)
-          val fileRdds = taskFiles.map(f => applyProc(job.mapper, sc.textFile(f, 1)))
-          if (fileRdds.size == 1) fileRdds.head else sc.union(fileRdds)
-      }
-      if (taskRdds.size == 1) taskRdds.head else sc.union(taskRdds)
-    }
+    // F3: mapper over each map task's lines.
+    val mapped = applyProc(job.mapper, readInput(spark.sparkContext, files, job))
 
     // F7: reducer over each merged sorted partition stream.
     val reduced = applyProc(job.reducer, shuffleSort(mapped, job.numReducers))

@@ -23,21 +23,47 @@ package graft.mr
 object NativeQueries {
 
   /** wc_map.sh twin. Split set is `[`, `]`, space, tab — tr's SET1
-    * brackets are literal split characters, not class syntax. */
+    * brackets are literal split characters, not class syntax. Splits by
+    * hand, keeping empty segments as `split(_, -1)` would. */
   def wcMapSh(lines: Iterator[String]): Iterator[String] =
     lines.flatMap { line =>
-      line.split("[\\[\\] \t]", -1).iterator.map(seg => seg.toLowerCase + "\t1")
+      new Iterator[String] {
+        private var start = 0 // -1 once the last segment is out
+        def hasNext: Boolean = start >= 0
+        def next(): String = {
+          var end = start
+          while (end < line.length && !isWcSeparator(line.charAt(end))) end += 1
+          val seg = line.substring(start, end)
+          start = if (end < line.length) end + 1 else -1
+          seg.toLowerCase + "\t1"
+        }
+      }
     }
+
+  private def isWcSeparator(c: Char): Boolean = c == ' ' || c == '\t' || c == '[' || c == ']'
+
+  /** Length of `line`'s key (the prefix before the first TAB). */
+  private def keyLength(line: String): Int = {
+    val i = line.indexOf('\t')
+    if (i < 0) line.length else i
+  }
+
+  /** Whether `line`'s key equals the key `first.substring(0, k)`, compared
+    * in place. Equal lines of a sorted stream are often the same object. */
+  private def sameKey(line: String, first: String, k: Int): Boolean =
+    (line eq first) || (line.regionMatches(0, first, 0, k) &&
+      (line.length == k || line.charAt(k) == '\t'))
 
   /** wc_reduce.sh twin (consecutive-group count over the sorted stream). */
   def wcReduceSh(lines: Iterator[String]): Iterator[String] = new Iterator[String] {
     private val it = lines.buffered
     def hasNext: Boolean = it.hasNext
     def next(): String = {
-      val key = Md5Partitioning.keyOf(it.head)
-      var n = 0L
-      while (it.hasNext && Md5Partitioning.keyOf(it.head) == key) { it.next(); n += 1 }
-      s"$key\t$n"
+      val first = it.next()
+      val k = keyLength(first)
+      var n = 1L
+      while (it.hasNext && sameKey(it.head, first, k)) { it.next(); n += 1 }
+      first.substring(0, k) + "\t" + n
     }
   }
 
@@ -51,14 +77,14 @@ object NativeQueries {
     private val it = lines.buffered
     def hasNext: Boolean = it.hasNext
     def next(): String = {
-      val key = Md5Partitioning.keyOf(it.head)
+      val first = it.head
+      val k = keyLength(first)
       var n = 0L
-      while (it.hasNext && Md5Partitioning.keyOf(it.head) == key) {
+      while (it.hasNext && sameKey(it.head, first, k)) {
         val l = it.next()
-        val sep = l.indexOf('\t')
-        n += (if (sep < 0) 0L else l.substring(sep + 1).trim.toLong)
+        n += (if (l.length == k) 0L else l.substring(k + 1).trim.toLong)
       }
-      s"$key $n"
+      first.substring(0, k) + " " + n
     }
   }
 

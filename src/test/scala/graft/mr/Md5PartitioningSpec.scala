@@ -30,6 +30,20 @@ class Md5PartitioningSpec extends AnyFunSuite {
       assert((0 until r).contains(Md5Partitioning.partition(k, r)))
   }
 
+  test("keys of any length route by the md5 of their getBytes(UTF_8)") {
+    // Short keys are encoded into a per-thread buffer, very long ones
+    // (past 64K chars) into a fresh array; both must digest the same bytes.
+    def ref(k: String, r: Int): Int =
+      new java.math.BigInteger(1, java.security.MessageDigest.getInstance("MD5")
+        .digest(k.getBytes("UTF-8"))).mod(java.math.BigInteger.valueOf(r)).intValue()
+    val unit = "a\u00e9\u65e5\ud83d\ude00\ud800"
+    for (n <- Seq(1, 100, 10922, 10923, 20000); r <- Seq(2, 7, 64)) {
+      val k = unit * n
+      assert(Md5Partitioning.partition(k, r) === ref(k, r), s"${k.length} chars, R=$r")
+      assert(Md5Partitioning.partitionLine(k + "\tv", r) === ref(k, r), s"${k.length} chars + TAB, R=$r")
+    }
+  }
+
   test("C byte ordering sorts bytes unsigned (non-ASCII after ASCII)") {
     // 'é' (0xc3 0xa9 in UTF-8) must sort after all ASCII, unlike UTF-16
     // code-unit string comparison which agrees here but differs for

@@ -155,23 +155,45 @@ class MrJobSpec extends AnyFunSuite {
   }
 
   test("map routing matches test_worker_08 partition goldens (R=2)") {
-    // Partition+sort the mapper output of the reference input and check the
-    // per-partition key sets against the md5 routing contract.
+    // Partition+sort the mapper output of the reference input through the
+    // job's own shuffle and check the per-partition key sets against the
+    // md5 routing contract.
     assume(haveFixtures)
-    val sc = spark.sparkContext
-    val lines = MrJob.listInputFiles(spark, RefInput)
-      .map(f => sc.textFile(f, 1)).reduce(sc.union(_, _))
-    val mapped = lines.mapPartitions(NativeQueries.wcMapSh)
-    implicit val ord: Ordering[String] = CByteOrdering
-    val parts = mapped.map(l => (l, null))
-      .repartitionAndSortWithinPartitions(new Md5LinePartitioner(2))
-      .keys
+    val mapped = spark.sparkContext.textFile(RefInput).mapPartitions(NativeQueries.wcMapSh)
+    val parts = MrJob.shuffleSort(mapped, 2)
       .mapPartitionsWithIndex { case (pid, it) => it.map(l => (pid, Md5Partitioning.keyOf(l))) }
       .distinct().collect().toSet
     for (k <- Seq("", "bye", "hello") if parts.exists(_._2 == k))
       assert(parts.contains((0, k)) && !parts.contains((1, k)))
     for (k <- Seq("world", "goodbye", "hadoop") if parts.exists(_._2 == k))
       assert(parts.contains((1, k)) && !parts.contains((0, k)))
+  }
+
+  test("input files named with a comma, brackets, braces or * are each read once, as named") {
+    // A path string would be split at the comma, and Hadoop would glob the
+    // rest: in[1] matches only in1, x{y} only xy, and f* both f* and fx.
+    val files = Seq("a,b" -> "comma", "in[1]" -> "bracket", "in1" -> "one", "x{y}" -> "brace",
+      "xy" -> "plain", "f*" -> "star", "fx" -> "sibling")
+    val in = Files.createTempDirectory("graft-mr-names-in-")
+    for ((name, word) <- files)
+      Files.write(in.resolve(name), s"$word $word\n".getBytes(StandardCharsets.UTF_8))
+    val want = files.map { case (_, word) => word -> 2L }.toMap
+    for (split <- Seq(false, true)) {
+      val out = tmpOut(s"names-$split")
+      val spec = JobSpec(in.toString, out.toString,
+        Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh),
+        numMappers = 2, numReducers = 3, splitFilesByBytes = split)
+      MrJob.run(spark, spec)
+      val got = (0 until 3).flatMap(i => readLines(out.resolve(f"part-$i%05d")))
+        .map { l => val i = l.lastIndexOf('\t'); l.substring(0, i) -> l.substring(i + 1).toLong }
+        .toMap
+      assert(got === want, s"splitFilesByBytes=$split")
+      if (!split) {
+        val listed = MrJob.listInputFiles(spark, in.toString)
+        assert(MrJob.readInput(spark.sparkContext, listed, spec).getNumPartitions === files.size,
+          "compat mode reads one partition per file")
+      }
+    }
   }
 
   test("randomized corpus: MR pipeline counts == native groupBy counts") {
@@ -231,14 +253,13 @@ class MrJobSpec extends AnyFunSuite {
     // the R=1 golden, and the map stage must actually have >1 partition.
     assume(haveFixtures)
     val out = tmpOut("wc-split")
-    MrJob.run(spark, JobSpec(RefInput, out.toString,
+    val spec = JobSpec(RefInput, out.toString,
       Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh),
-      numMappers = 8, numReducers = 1, splitFilesByBytes = true))
+      numMappers = 8, numReducers = 1, splitFilesByBytes = true)
+    MrJob.run(spark, spec)
     assert(readLines(out.resolve("part-00000")) === readLines(Paths.get(WcGolden)))
-    val nSplits = spark.sparkContext
-      .textFile(MrJob.listInputFiles(spark, RefInput).mkString(","), 8)
-      .getNumPartitions
-    assert(nSplits > 1)
+    val files = MrJob.listInputFiles(spark, RefInput)
+    assert(MrJob.readInput(spark.sparkContext, files, spec).getNumPartitions > 1)
   }
 
   test("Md5LinePartitioner is not equal to Md5Partitioner (different routing)") {

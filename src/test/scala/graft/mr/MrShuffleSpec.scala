@@ -1,0 +1,111 @@
+package graft.mr
+
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+import java.security.MessageDigest
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession
+
+/** The shuffle contract byte for byte, with no reference checkout: an
+  * identity job over generated corpora must write into each `part-%05d`
+  * exactly the lines an independent oracle routes there — md5 of the key
+  * bytes folded mod R — in unsigned-byte order, duplicates kept. The
+  * reducer is a Native identity and `/bin/cat` through `RDD.pipe`; the
+  * corpora range from a few lines repeated thousands of times (the
+  * counted shuffle's best case) to all-distinct lines. */
+class MrShuffleSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+
+  private val R = 4
+
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
+  /** int(md5(key), 16) % r, folded byte by byte. */
+  private def route(line: String, r: Int): Int = {
+    val key = line.takeWhile(_ != '\t')
+    MessageDigest.getInstance("MD5").digest(utf8(key))
+      .foldLeft(0L)((acc, b) => ((acc << 8) | (b & 0xffL)) % r).toInt
+  }
+
+  /** Expected bytes of each part file. */
+  private def oracle(lines: Seq[String], r: Int): Seq[Array[Byte]] = {
+    val byPart = lines.groupBy(route(_, r))
+    (0 until r).map { p =>
+      val out = new ByteArrayOutputStream()
+      byPart.getOrElse(p, Nil).map(utf8)
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a, b) < 0)
+        .foreach { b => out.write(b); out.write('\n') }
+      out.toByteArray
+    }
+  }
+
+  /** The lines in three files; no line holds a `\r` or `\n`, so every line
+    * reads back as written. */
+  private def inputDir(lines: Seq[String]): Path = {
+    val dir = Files.createTempDirectory("graft-mr-shuffle-in-")
+    dir.toFile.deleteOnExit()
+    lines.grouped(math.max(1, (lines.size + 2) / 3)).zipWithIndex.foreach { case (chunk, i) =>
+      Files.write(dir.resolve(f"file$i%02d"), utf8(chunk.mkString("", "\n", "\n")))
+    }
+    dir
+  }
+
+  private def assertIdentityJobsMatchOracle(lines: Seq[String]): Unit = {
+    val in = inputDir(lines)
+    val want = oracle(lines, R)
+    val identity: Iterator[String] => Iterator[String] = it => it
+    val jobs = Seq(
+      "native" -> (Native(identity), false),
+      "exec cat" -> (Exec(Seq("/bin/cat")), false),
+      "native, byte-split" -> (Native(identity), true))
+    for ((name, (reducer, split)) <- jobs) {
+      val out = Files.createTempDirectory("graft-mr-shuffle-out-")
+      out.toFile.deleteOnExit()
+      MrJob.run(spark, JobSpec(in.toString, out.toString, Native(identity), reducer,
+        numMappers = 2, numReducers = R, splitFilesByBytes = split))
+      for (p <- 0 until R) {
+        val part = f"part-$p%05d"
+        assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(part)), want(p)),
+          s"$name: $part differs from the oracle")
+      }
+    }
+  }
+
+  private val words = Vector("alpha", "beta", "", "Gamma", "\u00e9psilon", "\u65e5\u672c",
+    "a\tb", "k\t", "\tv", "x\ty\tz", "\ue000", "\ufffd", "\ud83d\ude00", "\ud800\udc00", "zeta")
+
+  test("duplicate-heavy Zipf lines: every part file equals the oracle byte for byte") {
+    val rnd = new scala.util.Random(7)
+    val cdf = words.indices.map(i => 1.0 / (i + 1)).scanLeft(0.0)(_ + _).tail
+    def zipf(): String = {
+      val u = rnd.nextDouble() * cdf.last
+      words(cdf.indexWhere(_ >= u))
+    }
+    assertIdentityJobsMatchOracle(Seq.fill(6000)(s"${zipf()}\t1"))
+  }
+
+  test("all-distinct lines: every part file equals the oracle byte for byte") {
+    val rnd = new scala.util.Random(11)
+    assertIdentityJobsMatchOracle((0 until 3000).map(i =>
+      s"${rnd.alphanumeric.take(1 + rnd.nextInt(12)).mkString}-$i\t${rnd.nextInt()}"))
+  }
+
+  test("empty lines, lines with no TAB and keys followed by several TABs") {
+    val edge = Seq("", "", "\t", "\t\t", "noTab", "noTab", "a\tb\tc", "a\tb", "a", "a\t",
+      "\t\tx", " ", " \t ", "[x]\t1", "a b\t1", "a\u0001\t1")
+    assertIdentityJobsMatchOracle((0 until 40).flatMap(_ => edge))
+  }
+
+  test("non-ASCII, supplementary characters and U+E000-U+FFFF beside surrogate pairs") {
+    // UTF-16 order puts U+E000-U+FFFF after every supplementary character;
+    // UTF-8 (C-locale) order puts them before.
+    val bmpHigh = Seq("\ue000", "\ue001", "\ufb01", "\uff21", "\ufffd", "\uffff")
+    val astral = Seq("\ud800\udc00", "\ud83d\ude00", "\ud83e\udd80", "\udbff\udfff")
+    val mixed = for (b <- bmpHigh; a <- astral; t <- Seq("", "\t1", "\tv\tw"))
+      yield Seq(s"k$b$t", s"k$a$t", s"$a$b$t", s"$b$a$t", s"\u00e9$a$t", s"\u00df$b$t")
+    assertIdentityJobsMatchOracle(mixed.flatten ++ mixed.flatten.take(50))
+  }
+}
