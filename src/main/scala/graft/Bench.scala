@@ -1,7 +1,9 @@
 package graft
 
-/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":"total","value":…,"queries":{…}}.
+/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR,
+  * appends the window to `<details>.windows.jsonl`, re-derives the details
+  * file from that log ([[BenchCore.derive]]) and prints ONE short JSON line
+  * {"metric":"total","value":…,"refused":[…],"details":…}.
   *
   * A warmup pass runs each query once at sf0.001 (untimed): local-mode cold
   * JVMs otherwise charge whole-stage-codegen compilation and C2 JIT of the
@@ -38,7 +40,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.local(GraftSession.cpus, sfDir)
+    val cpus = GraftSession.cpus
+    // Hashed at launch, so the id names the sources this run was built from.
+    val codeId = BenchCore.codeId(new java.io.File("."))
+    val spark = GraftSession.local(cpus, sfDir)
 
     // Dev-only subset filter (comma-separated names): scaling audits time
     // the heaviest queries on a larger synthetic corpus without paying the
@@ -83,235 +88,69 @@ object Bench {
       .map(_.toInt).filter(p => p >= 1 && p <= 5).getOrElse(3)
     val core = BenchCore.measure(ordered, onePass, () => BenchCore.calibrate(spark),
       log = System.err.println(_), basePasses = basePasses)
-    val results = core.queries
-    val cals = core.calibrations
-    val noiseIndex = core.noiseIndex
 
-    def fmt(d: Double) = f"$d%.4f"
-    val qs = results.map(r => "\"" + r.name + "\":" + fmt(r.median)).mkString("{", ",", "}")
-    val spreads = results.map(r => "\"" + r.name + "\":" + f"${r.spreadPct}%.1f").mkString("{", ",", "}")
-    val passCounts = results.map(r => "\"" + r.name + "\":" + r.passes).mkString("{", ",", "}")
-    val failed = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
-    val rescued = results.filter(_.rescued).map("\"" + _.name + "\"").mkString("[", ",", "]")
-    val total = results.map(_.median).sum
-    val calJson = cals.map(fmt).mkString("[", ",", "]")
-    // Stdout carries ONE SHORT machine-readable JSON line: the driver
-    // tail-captures ~2.2 KB of stdout, and a 100+-query map (~2.9 KB)
-    // overflowed it for three straight rounds (BENCH_r01..r03 all
-    // `parsed: null`). Totals/failed/counts/noise stay on stdout; the full
-    // per-query median+spread+passes map is written to a repo artifact
-    // (path overridable via SPARK_GRAFT_BENCH_DETAILS) and mirrored to
-    // stderr.
-    // Canonical noise gate (BenchCore.canonicalAcceptable): a throttled
-    // window's capture is diverted to <path>.noisy — kept for inspection,
-    // never the cross-round comparison baseline. The exit calibration
-    // separates self-inflicted mid-run calibration drift (GC/heap state
-    // between memory-heavy queries — present in every full-surface window
-    // ever captured on this host, identical across same-code runs) from
-    // external throttling: a quiet host returns to the window's best
-    // calibration once the bench's own pressure stops.
+    // Canonical noise gate (BenchCore.canonicalAcceptable). The exit
+    // calibration separates self-inflicted mid-run calibration drift
+    // (GC/heap state between memory-heavy queries — present in every
+    // full-surface window ever captured on this host, identical across
+    // same-code runs) from external throttling: a quiet host returns to the
+    // window's best calibration once the bench's own pressure stops.
     // Skipped when the raw noise_index already accepts (round 11, ADVICE):
     // the gate's first disjunct decides regardless of the exit state, so
     // the three passes would be pure added wall-clock on every quiet
     // window. exit fields emit as null in that case.
+    val noiseIndex = core.noiseIndex
     val exitCalOpt =
       if (noiseIndex <= BenchCore.CanonicalNoiseGate) None
       else Some((1 to 3).map(_ => BenchCore.calibrate(spark)).min)
-    val exitRatioOpt = exitCalOpt.map(_ / math.max(cals.min, 1e-9))
+    val exitRatioOpt = exitCalOpt.map(_ / math.max(core.calibrations.min, 1e-9))
     // Per-query throttle evidence counts only where relative spread is
     // meaningful: a 0.1 s query at ±0.1 s of scheduler jitter reads as
     // 100% spread on a perfectly quiet host (measured: ~90 sub-second
     // queries escalate in EVERY full-surface window), so the gate's dirty
     // signal takes multi-second queries only — where >50% through full
     // escalation really does mean an external window landed on them.
-    val spreadDirty = results.exists(q =>
+    val spreadDirty = core.queries.exists(q =>
       q.ok && q.median >= BenchCore.DirtyMedianFloor &&
         q.passes >= 5 && q.spreadPct > BenchCore.UnstableSpread)
-    val requestedPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "bench_details.json")
-    // A BENCH_ONLY subset run must NEVER write the canonical details path:
-    // a quiet 2-query window would otherwise clobber the full-surface
-    // canonical with an n=2 artifact. Subset details always divert to
-    // .subset; their evidence reaches the canonical only through the
-    // windows sidecar + offline assembly.
-    val isSubset = only.nonEmpty
-    val gateAccepted = BenchCore.canonicalAcceptable(noiseIndex, exitRatioOpt, spreadDirty)
-    val detailsPath =
-      if (isSubset) requestedPath + ".subset"
-      else BenchCore.detailsPathFor(requestedPath, noiseIndex, exitRatioOpt, spreadDirty)
-    val accepted = !isSubset && gateAccepted
-    val exitCalJson = exitCalOpt.map(fmt).getOrElse("null")
-    val exitRatioJson = exitRatioOpt.map(r => f"$r%.2f").getOrElse("null")
-    // Refused-window campaign telemetry (round-11 ask #7): refusals append
-    // to a sidecar that survives across bench JVMs, so the round's BENCH_r*
-    // stdout line carries how many windows were tried before one landed.
-    // An ACCEPTED canonical capture records the campaign in its details
-    // artifact and clears the sidecar — the campaign concluded.
-    val sidecarPath = requestedPath + ".refused.jsonl"
-    val sidecarFile = new java.io.File(sidecarPath)
-    val priorRefusals: Seq[BenchCore.Refusal] =
-      if (!sidecarFile.isFile) Seq.empty
-      else try {
-        val src = scala.io.Source.fromFile(sidecarFile, "UTF-8")
-        try src.getLines().flatMap(BenchCore.parseRefusal).toList finally src.close()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] refusal sidecar read failed: ${e.getMessage}"); Seq.empty
-      }
-    val refusals: Seq[BenchCore.Refusal] =
-      if (isSubset) priorRefusals // subset runs are not campaign windows
-      else if (accepted) {
-        if (sidecarFile.isFile && !sidecarFile.delete())
-          System.err.println(s"[bench] could not clear refusal sidecar $sidecarPath")
-        priorRefusals
-      } else {
-        val ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-          .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss"))
-        val cur = BenchCore.Refusal(ts, noiseIndex, exitRatioOpt.getOrElse(1.0), spreadDirty)
-        try {
-          val w = new java.io.FileWriter(sidecarFile, java.nio.charset.StandardCharsets.UTF_8, true)
-          try w.write(BenchCore.renderRefusal(cur) + "\n") finally w.close()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] refusal sidecar append failed: ${e.getMessage}")
-        }
-        priorRefusals :+ cur
-      }
-    if (!accepted && !isSubset)
-      System.err.println(f"[bench] noise_index $noiseIndex%.2f, exit_ratio $exitRatioJson%s, " +
-        s"spread_dirty $spreadDirty: canonical capture refused (window ${refusals.size} of the " +
-        s"campaign), details diverted to $detailsPath")
-    else if (noiseIndex > BenchCore.CanonicalNoiseGate)
-      System.err.println(f"[bench] noise_index $noiseIndex%.2f accepted: exit calibration " +
-        s"$exitCalJson s recovered to ${exitRatioJson}x of the window's best and every query stabilized")
-    // "noisy": the gate's verdict travels INSIDE the artifact (round 14,
-    // VERDICT ask #7): refused windows used to divert ONLY to the .noisy
-    // sidecar, which the driver never reads — two straight rounds of
-    // refused windows left the driver's per-query PERF table empty. The
-    // per-query medians now always reach the primary details path too
-    // (below), explicitly flagged so a reader applies the caveat instead
-    // of getting no data at all.
-    val detailsJson =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","passes":$basePasses,"estimator":"median","work":"full_rows","n":${results.size},"noisy":${!gateAccepted},"noise_index":${f"$noiseIndex%.2f"},"calibration_sec":$calJson,"exit_calibration_sec":$exitCalJson,"exit_ratio":$exitRatioJson,"refused":${BenchCore.refusalsJson(refusals)},"failed":$failed,"rescued":$rescued,"rescue_ran":${core.rescueRan},"queries":$qs,"spread_pct":$spreads,"pass_count":$passCounts}"""
-    try {
-      val w = new java.io.PrintWriter(detailsPath, "UTF-8")
-      try w.println(detailsJson) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] details write failed: ${e.getMessage}") }
-    System.err.println(s"[bench] details=$detailsJson")
+    val accepted = BenchCore.canonicalAcceptable(noiseIndex, exitRatioOpt, spreadDirty)
+    val rec = BenchCore.WindowRecord(
+      ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
+        .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss")),
+      codeId = codeId, sf = sfDir, work = "full_rows", noiseIndex = noiseIndex,
+      exitRatio = exitRatioOpt, spreadDirty = spreadDirty, queries = core.queries,
+      accepted = accepted, passes = basePasses, cpus = cpus,
+      heapGb = (Runtime.getRuntime.maxMemory >> 30).toInt,
+      calibrations = core.calibrations, exitCalibration = exitCalOpt,
+      rescueRan = core.rescueRan)
+    val line = BenchCore.renderWindow(rec)
+    System.err.println(s"[bench] window=$line")
 
-    // ---- Per-query quiet-window assembly (round 12, BenchCore scaladoc).
-    // Every full-pass window (accepted or refused, full-surface or a
-    // TARGETED BENCH_ONLY re-measure of specific unadjudicated queries)
-    // appends its per-query medians to a windows sidecar keyed by git
-    // HEAD; when a FULL-surface window is refused but >=2 same-code
-    // windows exist and every query has at least one stable (or
-    // cross-window-agreeing) candidate, the canonical is ASSEMBLED from
-    // the per-query minima and lands at the requested path, explicitly
-    // marked. Single-pass probes (basePasses 1) never feed the sidecar,
-    // and subset windows never trigger in-process assembly themselves
-    // (graft.BenchAssemble is the offline path that can conclude a
-    // campaign after a targeted re-measure).
-    val codeId = sys.env.getOrElse("SPARK_GRAFT_CODE_ID",
-      BenchCore.gitHeadId(new java.io.File(".")))
-    val windowsPath = requestedPath + ".windows.jsonl"
-    val windowsFile = new java.io.File(windowsPath)
-    // An unidentifiable build (CWD outside the repo, unborn HEAD) must not
-    // feed the sidecar: eligibleWindows rejects "unknown" so every such
-    // append would silently grow the sidecar while stalling assembly
-    // forever (ADVICE, round 13). Warn loudly and skip instead.
+    // The windows log is the only state the bench keeps: this window is
+    // appended, and the details file is re-derived from the whole log
+    // (BenchCore.derive: the identity's latest accepted window, else an
+    // assembly over its windows, else its latest refused window flagged
+    // noisy). An unidentifiable build must not feed the log: it could
+    // never join an assembly, so the append would only grow the log.
+    val detailsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS", "bench_details.json")
     if (codeId == "unknown")
       System.err.println("[bench] WARNING: code id is 'unknown' (not launched from the repo " +
-        "root and SPARK_GRAFT_CODE_ID unset) — window evidence will NOT be persisted; " +
-        "this window cannot join any assembly campaign")
-    val sidecarEligible = basePasses >= 3 && codeId != "unknown"
-    val fullSurfaceWindow = only.isEmpty && sidecarEligible
-    var assembled: Option[BenchCore.Assembled] = None
-    if (sidecarEligible && isSubset) {
-      // Targeted subset window: persist the evidence; assembly is offline.
-      val ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss"))
-      val rec = BenchCore.WindowRecord(ts, codeId, sfDir, "full_rows",
-        noiseIndex, exitRatioOpt, spreadDirty, results)
-      try {
-        val w = new java.io.FileWriter(windowsFile, java.nio.charset.StandardCharsets.UTF_8, true)
-        try w.write(BenchCore.renderWindow(rec) + "\n") finally w.close()
-        System.err.println(s"[bench] subset window (${results.size} queries) appended to $windowsPath")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] windows sidecar append failed: ${e.getMessage}")
-      }
+        "root) — window evidence will NOT be persisted")
+    else try {
+      java.nio.file.Files.write(BenchCore.windowsLog(detailsPath),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND): Unit
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] windows log append failed: ${e.getMessage}")
     }
-    if (fullSurfaceWindow) {
-      val ts = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-        .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss"))
-      val rec = BenchCore.WindowRecord(ts, codeId, sfDir, "full_rows",
-        noiseIndex, exitRatioOpt, spreadDirty, results)
-      if (accepted) {
-        // A window-accepted canonical supersedes any campaign in flight.
-        if (windowsFile.isFile && !windowsFile.delete())
-          System.err.println(s"[bench] could not clear windows sidecar $windowsPath")
-      } else {
-        try {
-          val w = new java.io.FileWriter(windowsFile, java.nio.charset.StandardCharsets.UTF_8, true)
-          try w.write(BenchCore.renderWindow(rec) + "\n") finally w.close()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] windows sidecar append failed: ${e.getMessage}")
-        }
-        val windows: Seq[BenchCore.WindowRecord] =
-          try {
-            val src = scala.io.Source.fromFile(windowsFile, "UTF-8")
-            try src.getLines().flatMap(BenchCore.parseWindow).toList finally src.close()
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] windows sidecar read failed: ${e.getMessage}"); Seq.empty
-          }
-        val eligible = BenchCore.eligibleWindows(windows, codeId, sfDir, "full_rows", ordered)
-        assembled = BenchCore.assemble(eligible, ordered)
-        assembled match {
-          case None =>
-            System.err.println(s"[bench] assembly not yet possible: ${eligible.size} eligible " +
-              s"window(s) for code $codeId (need >=${BenchCore.MinAssemblyWindows} with every query stable somewhere)")
-          case Some(asm) =>
-            val aTotal = asm.queries.map(_.median).sum
-            val asmJson = BenchCore.assembledJson(asm, sfDir, basePasses, codeId,
-              eligible.map(_.noiseIndex), refusals)
-            try {
-              val w = new java.io.PrintWriter(requestedPath, "UTF-8")
-              try w.println(asmJson) finally w.close()
-              // Campaign concluded: the refusal history is recorded in the
-              // artifact itself; both sidecars reset for the next campaign.
-              if (sidecarFile.isFile) sidecarFile.delete(): Unit
-              if (windowsFile.isFile) windowsFile.delete(): Unit
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] assembled canonical write failed: ${e.getMessage}")
-            }
-            System.err.println(f"[bench] ASSEMBLED canonical from ${asm.windows} windows: " +
-              f"total $aTotal%.2f s (window totals were ${eligible.map(_.queries.filter(_.ok).map(_.median).sum).map(t => f"$t%.1f").mkString("/")})")
-            System.err.println(s"[bench] assembled=$asmJson")
-        }
+    val derived =
+      try BenchCore.writeDerived(detailsPath, SparkEntry.queries.keys.toSeq.sorted)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] details derivation failed: ${e.getMessage}"); None
       }
-    }
-    // Refused full-surface window with no assembled canonical available:
-    // the per-query medians still land at the PRIMARY details path, flagged
-    // "noisy":true (round-14 ask #7 — the driver reads only this path, and
-    // a silent sidecar diversion starved its per-query comparison two
-    // rounds running; flagged data with a caveat beats no data). The .noisy
-    // sidecar copy above is kept as the campaign's inspection history.
-    if (fullSurfaceWindow && !accepted && assembled.isEmpty) {
-      try {
-        val w = new java.io.PrintWriter(requestedPath, "UTF-8")
-        try w.println(detailsJson) finally w.close()
-        System.err.println(s"[bench] refused window's per-query medians written to " +
-          s"$requestedPath with noisy=true (no assembled canonical available)")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] noisy-flagged details write failed: ${e.getMessage}")
-      }
-    }
-    val asmField = assembled.map(a => s""","assembled_from":${a.windows},"assembled_total":${fmt(a.queries.map(_.median).sum)}""").getOrElse("")
-    // refused[] capped at the 8 most recent on stdout (the driver tail-
-    // captures ~2.2 KB); refused_n carries the campaign's full count and
-    // the details artifact the full array.
-    // The reported details path is wherever the freshest per-query data
-    // actually lives: the primary path unless this was a subset run (which
-    // never touches it).
-    val reportedDetails =
-      if (fullSurfaceWindow && !accepted && assembled.isEmpty) requestedPath else detailsPath
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir","passes":$basePasses,"estimator":"median","work":"full_rows","noise_index":${f"$noiseIndex%.2f"},"refused_n":${refusals.size},"refused":${BenchCore.refusalsJson(refusals, cap = 8)}$asmField,"details":"$reportedDetails"}""")
+    System.err.println(derived.fold(s"[bench] no full-surface window in the log: $detailsPath not written")(
+      d => s"[bench] details=${BenchCore.compact(d.details)}"))
+    println(BenchCore.summaryLine(rec, derived, detailsPath))
     spark.stop()
   }
 }

@@ -1,73 +1,23 @@
 package graft
 
-/** Offline canonical assembler: reads the windows sidecar a bench
-  * campaign left behind and assembles the per-query-min canonical WITHOUT
-  * running another ~26-minute window — for when the campaign's windows
-  * already contain sufficient per-query evidence but the last in-process
-  * assembly attempt ran before the evidence was complete (or under an
-  * older assembly rule). Measurement code identity is still enforced: all
-  * windows must carry the SAME codeId/sf/work/query-set, and the tool
-  * refuses mixed sidecars rather than guessing. On success it writes the
-  * canonical artifact (same renderer as Bench — BenchCore.assembledJson),
-  * embeds the refusal campaign, and clears both sidecars.
+/** Offline re-derivation of the details file from a campaign's windows log
+  * ([[BenchCore.derive]], the same function every bench run ends with) —
+  * for when the log already holds sufficient evidence but no run has
+  * derived from it since, e.g. under an older assembly rule. Exits 1 when
+  * the log holds no full-surface window.
   *
   * Usage: runMain graft.BenchAssemble [detailsPath]
-  *   detailsPath defaults to bench_details.json; sidecars are derived as
-  *   <detailsPath>.windows.jsonl and <detailsPath>.refused.jsonl.
+  *   detailsPath defaults to bench_details.json; the log is
+  *   <detailsPath>.windows.jsonl.
   */
 object BenchAssemble {
   def main(args: Array[String]): Unit = {
     val detailsPath = args.headOption.getOrElse("bench_details.json")
-    val windowsFile = new java.io.File(detailsPath + ".windows.jsonl")
-    val refusedFile = new java.io.File(detailsPath + ".refused.jsonl")
-    require(windowsFile.isFile, s"no windows sidecar at $windowsFile")
-    def lines(f: java.io.File): Seq[String] =
-      if (!f.isFile) Seq.empty
-      else {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().toList finally src.close()
-      }
-    val windows = lines(windowsFile).flatMap(BenchCore.parseWindow)
-    require(windows.nonEmpty, "windows sidecar parsed to zero records")
-    val keys = windows.map(w => (w.codeId, w.sf, w.work)).distinct
-    require(keys.size == 1,
-      s"sidecar mixes ${keys.size} distinct (code, sf, work) identities; refusing to assemble")
-    require(windows.head.codeId != "unknown", "windows carry codeId 'unknown'; refusing")
-    // The assembled canonical covers the QUERY REGISTRY, validated against
-    // SparkEntry.queries (a map of closures — no SparkSession needed), not
-    // the union of whatever names the sidecar happens to hold: a sidecar of
-    // targeted subset windows must not assemble a partial canonical onto
-    // the full-surface details path (round 13, ADVICE). assemble() itself
-    // additionally requires >= MinAssemblyWindows registry-covering
-    // windows, so a subset-only sidecar fails there too.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val sidecarNames = windows.flatMap(_.queries.map(_.name)).toSet
-    require(sidecarNames.subsetOf(names.toSet),
-      s"sidecar names outside the current registry (stale windows?): ${(sidecarNames -- names).mkString(", ")}")
-    BenchCore.assemble(windows, names) match {
+    BenchCore.writeDerived(detailsPath, SparkEntry.queries.keys.toSeq.sorted) match {
       case None =>
-        System.err.println(s"[assemble] insufficient evidence across ${windows.size} windows " +
-          s"(need >=${BenchCore.MinAssemblyWindows} full-surface windows and every query " +
-          "quiet somewhere or in cross-window agreement)")
+        System.err.println(s"[assemble] no full-surface window in ${BenchCore.windowsLog(detailsPath)}")
         sys.exit(1)
-      case Some(asm) =>
-        val refusals = lines(refusedFile).flatMap(BenchCore.parseRefusal)
-        // basePasses: the pass regime the windows actually ran, derived as
-        // the min per-query pass count across all windows (the base —
-        // escalated queries only ever carry MORE passes), instead of the
-        // hardcoded 3 that could misreport a 4/5-pass campaign (ADVICE).
-        val basePasses = windows.flatMap(_.queries.map(_.passes)).min
-        val json = BenchCore.assembledJson(asm, windows.head.sf, basePasses,
-          windows.head.codeId, windows.map(_.noiseIndex), refusals)
-        val w = new java.io.PrintWriter(detailsPath, "UTF-8")
-        try w.println(json) finally w.close()
-        if (refusedFile.isFile) refusedFile.delete(): Unit
-        if (windowsFile.isFile) windowsFile.delete(): Unit
-        val fallback = asm.queries.filterNot(_.quiet).map(_.name)
-        System.err.println(f"[assemble] canonical assembled from ${asm.windows} windows: " +
-          f"total ${asm.queries.map(_.median).sum}%.2f s; agreement-fallback queries: " +
-          (if (fallback.isEmpty) "none" else fallback.mkString(", ")))
-        println(json)
+      case Some(d) => println(BenchCore.compact(d.details))
     }
   }
 }

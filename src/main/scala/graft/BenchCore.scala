@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{avg, sum}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** The bench measurement loop, factored pure so the noise defense is
   * TESTABLE: pass-runner and calibrator are injected functions, which lets
@@ -44,11 +46,10 @@ object BenchCore {
   /** Canonical-capture noise gate (round 10): round 9 committed three
     * same-code canonical refreshes spanning 117.5–151.1 s (±22%), so
     * cross-round per-query comparisons were dominated by host throttling,
-    * not code. A capture that fails [[canonicalAcceptable]] is NOT allowed
-    * to overwrite the canonical details artifact — it lands beside it
-    * (suffix [[NoisySuffix]]) so the data is kept but never becomes the
-    * comparison baseline. 1.5 is the recovery criterion the rescue sweep
-    * already trusts ([[RecoveredFactor]]).
+    * not code. A capture that fails [[canonicalAcceptable]] is kept in the
+    * windows log but never replaces an accepted or assembled details file
+    * of its code ([[derive]]). 1.5 is the recovery criterion the rescue
+    * sweep already trusts ([[RecoveredFactor]]).
     *
     * The EXIT-CALIBRATION clause exists by measurement, not taste: on a
     * full 182-query window the mid/end calibrations sit 1.7–2.4× above
@@ -66,7 +67,6 @@ object BenchCore {
     * runs) recovered AND no query carried a >[[UnstableSpread]]% spread
     * through full escalation (the direct per-query throttle evidence). */
   val CanonicalNoiseGate = 1.5
-  val NoisySuffix = ".noisy"
 
   /** Hard ceiling on the exit-calibration clause (round 11, ADVICE): the
     * clause exists to forgive SELF-inflicted GC/heap calibration drift,
@@ -97,44 +97,6 @@ object BenchCore {
       (noiseIndex <= CanonicalNoiseCeiling &&
         exitRatio.exists(_ <= RecoveredFactor) && !spreadDirty)
 
-  def detailsPathFor(requested: String, noiseIndex: Double,
-      exitRatio: Option[Double], spreadDirty: Boolean): String =
-    if (canonicalAcceptable(noiseIndex, exitRatio, spreadDirty)) requested
-    else requested + NoisySuffix
-
-  /** One refused canonical window, persisted across bench JVMs so the
-    * round artifact shows HOW MANY windows were tried before one landed —
-    * the machine-readable difference between "the code got slower" and
-    * "the host was loud" (round-11 ask #7). A refusal always carries an
-    * exit ratio: refusal implies noise_index > [[CanonicalNoiseGate]],
-    * which is exactly the condition under which the exit calibration
-    * runs. */
-  case class Refusal(ts: String, noiseIndex: Double, exitRatio: Double,
-      spreadDirty: Boolean)
-
-  /** One compact JSON object per refusal — doubles as the sidecar line
-    * format and the stdout/detail array element (~55 B/entry, so a long
-    * campaign stays inside the driver's ~2.2 KB stdout tail when capped
-    * with [[refusalsJson]]). */
-  def renderRefusal(r: Refusal): String =
-    f"""{"ts":"${r.ts}","ni":${r.noiseIndex}%.2f,"er":${r.exitRatio}%.2f,"sd":${r.spreadDirty}}"""
-
-  private val RefusalRe =
-    """\{"ts":"([^"]*)","ni":([0-9.eE+-]+),"er":([0-9.eE+-]+),"sd":(true|false)\}""".r
-
-  /** Strict inverse of [[renderRefusal]]; a corrupt sidecar line parses to
-    * None and is dropped rather than poisoning the artifact. */
-  def parseRefusal(line: String): Option[Refusal] = line.trim match {
-    case RefusalRe(ts, ni, er, sd) =>
-      try Some(Refusal(ts, ni.toDouble, er.toDouble, sd.toBoolean))
-      catch { case _: NumberFormatException => None }
-    case _ => None
-  }
-
-  /** JSON array of the LAST `cap` refusals (chronological order kept). */
-  def refusalsJson(rs: Seq[Refusal], cap: Int = Int.MaxValue): String =
-    rs.takeRight(cap).map(renderRefusal).mkString("[", ",", "]")
-
   case class Q(name: String, median: Double, spreadPct: Double, passes: Int,
       ok: Boolean, rescued: Boolean = false)
 
@@ -145,7 +107,7 @@ object BenchCore {
   // gets rarer (round 11: four refusals, zero acceptances — the gate was
   // refusing evidence, not hiding regressions). The acceptance UNIT
   // therefore generalizes from window to QUERY: every window (refused or
-  // not) persists its per-query medians to a sidecar, and once at least
+  // not) appends its per-query medians to the windows log, and once at least
   // [[MinAssemblyWindows]] same-code windows exist, the canonical is
   // assembled per query as the MINIMUM median over the windows where that
   // query was STABLE ([[stableIn]]). min is the same monotonicity
@@ -154,7 +116,8 @@ object BenchCore {
   // itself a median of 3–5 passes, so the min over window-medians is the
   // least-interfered honest estimate, not a lucky single pass. Windows
   // mixing code versions must never assemble together — eligibility
-  // requires an exact codeId (git HEAD) + sf + work + query-set match.
+  // requires an exact codeId ([[codeId]]) + sf + work + cpus match and a
+  // contained query set.
   // --------------------------------------------------------------------
 
   /** Minimum same-code FULL-SURFACE windows before an assembled canonical
@@ -176,55 +139,55 @@ object BenchCore {
   def stableIn(q: Q): Boolean =
     q.ok && !(q.median >= DirtyMedianFloor && q.passes >= 5 && q.spreadPct > UnstableSpread)
 
-  /** One full bench window as persisted to the windows sidecar. */
+  /** One bench window as appended to the windows log, the only state the
+    * bench keeps: the details file is [[derive]]d from the log. `accepted`
+    * is the [[canonicalAcceptable]] verdict, `passes` the base pass count,
+    * `heapGb` the JVM's max heap in whole GiB. */
   case class WindowRecord(ts: String, codeId: String, sf: String, work: String,
       noiseIndex: Double, exitRatio: Option[Double], spreadDirty: Boolean,
-      queries: Seq[Q])
+      queries: Seq[Q], accepted: Boolean, passes: Int, cpus: Int, heapGb: Int,
+      calibrations: Seq[Double], exitCalibration: Option[Double], rescueRan: Boolean)
 
   def renderWindow(w: WindowRecord): String = {
     import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val qs = org.json4s.JArray(w.queries.toList.map(q =>
+    val qs = JArray(w.queries.toList.map(q =>
       ("n" -> q.name) ~ ("m" -> q.median) ~ ("s" -> q.spreadPct) ~
-        ("p" -> q.passes) ~ ("ok" -> q.ok)))
-    JsonMethods.compact(JsonMethods.render(
-      ("ts" -> w.ts) ~ ("code" -> w.codeId) ~ ("sf" -> w.sf) ~
-        ("work" -> w.work) ~ ("ni" -> w.noiseIndex) ~
-        ("er" -> w.exitRatio) ~ ("sd" -> w.spreadDirty) ~ ("q" -> qs)))
+        ("p" -> q.passes) ~ ("ok" -> q.ok) ~ ("r" -> q.rescued)))
+    compact(("ts" -> w.ts) ~ ("code" -> w.codeId) ~ ("sf" -> w.sf) ~
+      ("work" -> w.work) ~ ("ni" -> w.noiseIndex) ~
+      ("er" -> w.exitRatio) ~ ("sd" -> w.spreadDirty) ~ ("q" -> qs) ~
+      ("accepted" -> w.accepted) ~ ("passes" -> w.passes) ~ ("cpus" -> w.cpus) ~
+      ("heap_gb" -> w.heapGb) ~ ("cal" -> w.calibrations.toList) ~
+      ("xc" -> w.exitCalibration) ~ ("rr" -> w.rescueRan))
   }
 
-  /** Strict inverse of [[renderWindow]]; a corrupt line parses to None
-    * and is dropped rather than poisoning the assembly. */
-  def parseWindow(line: String): Option[WindowRecord] = {
-    import org.json4s._
+  /** Strict inverse of [[renderWindow]]; a corrupt line — including one
+    * written before a field existed — parses to None and is dropped rather
+    * than poisoning the derived details. */
+  def parseWindow(line: String): Option[WindowRecord] =
     try {
-      val j = jackson.JsonMethods.parse(line)
-      def str(f: String) = j \ f match { case JString(s) => s; case _ => throw new MatchError(f) }
+      val j = JsonMethods.parse(line)
+      def str(v: JValue) = v match { case JString(s) => s; case o => throw new MatchError(o) }
+      def bool(v: JValue) = v match { case JBool(b) => b; case o => throw new MatchError(o) }
       def dbl(v: JValue) = v match {
         case JDouble(d) => d; case JInt(i) => i.toDouble
         case JDecimal(d) => d.toDouble; case JLong(l) => l.toDouble
         case other => throw new MatchError(other)
       }
-      val er = j \ "er" match { case JNothing | JNull => None; case v => Some(dbl(v)) }
-      val sd = j \ "sd" match { case JBool(b) => b; case _ => throw new MatchError("sd") }
-      val qs = j \ "q" match {
-        case JArray(items) => items.map { it =>
-          Q(
-            name = it \ "n" match { case JString(s) => s; case _ => throw new MatchError("n") },
-            median = dbl(it \ "m"), spreadPct = dbl(it \ "s"),
-            passes = dbl(it \ "p").toInt,
-            ok = it \ "ok" match { case JBool(b) => b; case _ => throw new MatchError("ok") })
-        }
-        case _ => throw new MatchError("q")
-      }
-      Some(WindowRecord(str("ts"), str("code"), str("sf"), str("work"),
-        dbl(j \ "ni"), er, sd, qs))
+      def opt(v: JValue) = v match { case JNothing | JNull => None; case v => Some(dbl(v)) }
+      def arr(v: JValue) = v match { case JArray(items) => items; case o => throw new MatchError(o) }
+      val qs = arr(j \ "q").map(it => Q(str(it \ "n"), dbl(it \ "m"), dbl(it \ "s"),
+        dbl(it \ "p").toInt, bool(it \ "ok"), bool(it \ "r")))
+      Some(WindowRecord(str(j \ "ts"), str(j \ "code"), str(j \ "sf"), str(j \ "work"),
+        dbl(j \ "ni"), opt(j \ "er"), bool(j \ "sd"), qs, bool(j \ "accepted"),
+        dbl(j \ "passes").toInt, dbl(j \ "cpus").toInt, dbl(j \ "heap_gb").toInt,
+        arr(j \ "cal").map(dbl), opt(j \ "xc"), bool(j \ "rr")))
     } catch { case _: Throwable => None }
-  }
 
   /** Windows that may assemble with a capture identified by (codeId, sf,
-    * work, names): same commit, same data, same estimator, and a query
-    * set CONTAINED in the registry being assembled — full-surface windows
+    * work, cpus, names): same code, same data, same estimator, same core
+    * count (a 4-core and a 32-core window must not pool per-query minima),
+    * and a query set CONTAINED in the registry being assembled — full-surface windows
     * carry all names; a TARGETED subset window (a BENCH_ONLY re-measure of
     * the specific queries a campaign could not adjudicate) carries fewer.
     * Per-query acceptance makes the subset window valid evidence: it
@@ -234,11 +197,11 @@ object BenchCore {
     * (including itself) — an unidentifiable build must not
     * cross-assemble. */
   def eligibleWindows(windows: Seq[WindowRecord], codeId: String, sf: String,
-      work: String, names: Seq[String]): Seq[WindowRecord] = {
+      work: String, cpus: Int, names: Seq[String]): Seq[WindowRecord] = {
     val nameSet = names.toSet
     if (codeId == "unknown") Seq.empty
     else windows.filter(w => w.codeId == codeId && w.sf == sf && w.work == work &&
-      w.queries.nonEmpty && w.queries.map(_.name).toSet.subsetOf(nameSet))
+      w.cpus == cpus && w.queries.nonEmpty && w.queries.map(_.name).toSet.subsetOf(nameSet))
   }
 
   /** One assembled per-query result: the chosen window-median, which
@@ -301,25 +264,144 @@ object BenchCore {
     Some(Assembled(perQuery, windows.size))
   }
 
-  /** The assembled-canonical details artifact, shared by the in-process
-    * path (Bench, at window end) and the offline assembler
-    * ([[graft.BenchAssemble]]) so the two can never drift in format. */
-  def assembledJson(asm: Assembled, sf: String, basePasses: Int,
-      codeId: String, windowNoise: Seq[Double], refusals: Seq[Refusal]): String = {
-    def fmt(d: Double) = f"$d%.4f"
-    val aTotal = asm.queries.map(_.median).sum
-    def obj(f: AssembledQ => String) =
-      asm.queries.map(q => "\"" + q.name + "\":" + f(q)).mkString("{", ",", "}")
-    val fallback = asm.queries.filterNot(_.quiet)
-      .map("\"" + _.name + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${fmt(aTotal)},"unit":"sec","sf":"$sf","passes":$basePasses,""" +
-      s""""estimator":"assembled_min_median","work":"full_rows","n":${asm.queries.size},""" +
-      s""""assembled_from":${asm.windows},"code_id":"$codeId",""" +
-      s""""window_noise":${windowNoise.map(n => f"$n%.2f").mkString("[", ",", "]")},""" +
-      s""""refused":${refusalsJson(refusals)},"failed":[],"agreed_fallback":$fallback,""" +
-      s""""queries":${obj(q => fmt(q.median))},"spread_pct":${obj(q => f"${q.spreadPct}%.1f")},""" +
-      s""""pass_count":${obj(_.passes.toString)},"from_window":${obj(_.fromWindow.toString)},""" +
-      s""""candidates":${obj(_.candidates.toString)},"xw_spread_pct":${obj(q => f"${q.xwSpreadPct}%.1f")}}"""
+  // --------------------------------------------------------------------
+  // The details file, DERIVED from the windows log. The log is append-only
+  // and never cleared; the details file is a pure function of it, so an
+  // interrupted run, a subset re-measure or an offline re-derivation
+  // ([[graft.BenchAssemble]]) can never leave the two out of step.
+  // --------------------------------------------------------------------
+
+  /** The details file [[derive]] yields, the identity's refused full-surface
+    * windows in log order, and the assembly when rule 2 chose it. */
+  case class Derived(details: JValue, refused: Seq[WindowRecord], assembled: Option[Assembled])
+
+  /** Minimum base pass count of a window that may define or join an identity. */
+  val MinCanonicalPasses = 3
+
+  /** The details file as a function of the windows log. The identity is
+    * that of the log's latest full-surface record (query set == `registry`,
+    * passes >= [[MinCanonicalPasses]], known code): its (code, sf, work,
+    * cpus). Picked in order: (1) the identity's latest accepted
+    * full-surface window; (2) else [[assemble]] over its eligible windows,
+    * subset windows included; (3) else its latest refused window, flagged
+    * `noisy:true` (a reader applies the caveat instead of getting no data).
+    * None when the log holds no full-surface record. */
+  def derive(log: Seq[String], registry: Seq[String]): Option[Derived] = {
+    val nameSet = registry.toSet
+    val windows = log.flatMap(parseWindow)
+      .filter(w => w.passes >= MinCanonicalPasses && w.codeId != "unknown")
+    def fullSurface(w: WindowRecord) = w.queries.map(_.name).toSet == nameSet
+    windows.findLast(fullSurface).map { id =>
+      val fulls = windows.filter(w => fullSurface(w) && w.codeId == id.codeId &&
+        w.sf == id.sf && w.work == id.work && w.cpus == id.cpus)
+      val refused = fulls.filterNot(_.accepted)
+      fulls.findLast(_.accepted) match {
+        case Some(a) => Derived(windowDetails(a, refused), refused, None)
+        case None =>
+          val eligible = eligibleWindows(windows, id.codeId, id.sf, id.work, id.cpus, registry)
+          assemble(eligible, registry) match {
+            case Some(asm) => Derived(assembledDetails(asm, id, eligible, refused), refused, Some(asm))
+            case None => Derived(windowDetails(refused.last, refused), refused, None)
+          }
+      }
+    }
+  }
+
+  /** `d` at a fixed number of decimals: 4 for seconds, 2 for noise_index
+    * and exit_ratio, 1 for spreads. */
+  def dec(d: Double, scale: Int): JValue =
+    JDecimal(BigDecimal(d).setScale(scale, BigDecimal.RoundingMode.HALF_UP))
+
+  def compact(v: JValue): String = JsonMethods.compact(JsonMethods.render(v))
+
+  private def orNull(v: Option[JValue]): JValue = v.getOrElse(JNull)
+
+  /** Refused windows as `{"ts","ni","er","sd"}` elements (~55 B each). */
+  private def refusedArray(rs: Seq[WindowRecord]): JValue = {
+    import org.json4s.JsonDSL._
+    JArray(rs.toList.map(w => ("ts" -> w.ts) ~ ("ni" -> dec(w.noiseIndex, 2)) ~
+      ("er" -> orNull(w.exitRatio.map(dec(_, 2)))) ~ ("sd" -> w.spreadDirty)))
+  }
+
+  /** The keys both details shapes open with, in their fixed order. */
+  private def header(value: Double, id: WindowRecord, passes: Int, estimator: String,
+      n: Int): JObject = {
+    import org.json4s.JsonDSL._
+    ("metric" -> "total") ~ ("value" -> dec(value, 4)) ~ ("unit" -> "sec") ~
+      ("sf" -> id.sf) ~ ("passes" -> passes) ~ ("estimator" -> estimator) ~
+      ("work" -> id.work) ~ ("cpus" -> id.cpus) ~ ("heap_gb" -> id.heapGb) ~ ("n" -> n)
+  }
+
+  private def windowDetails(w: WindowRecord, refused: Seq[WindowRecord]): JValue = {
+    import org.json4s.JsonDSL._
+    def byName(f: Q => JValue) = JObject(w.queries.toList.map(q => q.name -> f(q)))
+    def names(p: Q => Boolean) = w.queries.filter(p).map(_.name).toList
+    header(w.queries.map(_.median).sum, w, w.passes, "median", w.queries.size) ~
+      ("noisy" -> !w.accepted) ~ ("noise_index" -> dec(w.noiseIndex, 2)) ~
+      ("calibration_sec" -> JArray(w.calibrations.toList.map(dec(_, 4)))) ~
+      ("exit_calibration_sec" -> orNull(w.exitCalibration.map(dec(_, 4)))) ~
+      ("exit_ratio" -> orNull(w.exitRatio.map(dec(_, 2)))) ~
+      ("refused" -> refusedArray(refused)) ~ ("failed" -> names(!_.ok)) ~
+      ("rescued" -> names(_.rescued)) ~ ("rescue_ran" -> w.rescueRan) ~
+      ("queries" -> byName(q => dec(q.median, 4))) ~
+      ("spread_pct" -> byName(q => dec(q.spreadPct, 1))) ~
+      ("pass_count" -> byName(q => JInt(q.passes)))
+  }
+
+  private def assembledDetails(asm: Assembled, id: WindowRecord,
+      eligible: Seq[WindowRecord], refused: Seq[WindowRecord]): JValue = {
+    import org.json4s.JsonDSL._
+    def byName(f: AssembledQ => JValue) = JObject(asm.queries.toList.map(q => q.name -> f(q)))
+    header(asm.queries.map(_.median).sum, id, eligible.map(_.passes).min,
+        "assembled_min_median", asm.queries.size) ~
+      ("assembled_from" -> asm.windows) ~ ("code_id" -> id.codeId) ~
+      ("window_noise" -> JArray(eligible.toList.map(w => dec(w.noiseIndex, 2)))) ~
+      ("refused" -> refusedArray(refused)) ~ ("failed" -> JArray(Nil)) ~
+      ("agreed_fallback" -> asm.queries.filterNot(_.quiet).map(_.name).toList) ~
+      ("queries" -> byName(q => dec(q.median, 4))) ~
+      ("spread_pct" -> byName(q => dec(q.spreadPct, 1))) ~
+      ("pass_count" -> byName(q => JInt(q.passes))) ~
+      ("from_window" -> byName(q => JInt(q.fromWindow))) ~
+      ("candidates" -> byName(q => JInt(q.candidates))) ~
+      ("xw_spread_pct" -> byName(q => dec(q.xwSpreadPct, 1)))
+  }
+
+  /** Bench's one stdout line: this window's totals beside the derived
+    * campaign state. The driver tail-captures ~2.2 KB of stdout (a
+    * 100+-query map overflowed it for three rounds), so per-query data
+    * stays in the details file and `refused` keeps the 8 most recent
+    * entries; `refused_n` carries the full count. */
+  def summaryLine(w: WindowRecord, derived: Option[Derived], detailsPath: String): String = {
+    import org.json4s.JsonDSL._
+    val refused = derived.toSeq.flatMap(_.refused)
+    val assembled = derived.flatMap(_.assembled).toList.flatMap(a => List(
+      "assembled_from" -> JInt(a.windows),
+      "assembled_total" -> dec(a.queries.map(_.median).sum, 4)))
+    compact(("metric" -> "total") ~ ("value" -> dec(w.queries.map(_.median).sum, 4)) ~
+      ("unit" -> "sec") ~ ("n" -> w.queries.size) ~
+      ("failed" -> w.queries.filterNot(_.ok).map(_.name).toList) ~ ("sf" -> w.sf) ~
+      ("passes" -> w.passes) ~ ("estimator" -> "median") ~ ("work" -> w.work) ~
+      ("noise_index" -> dec(w.noiseIndex, 2)) ~ ("refused_n" -> refused.size) ~
+      ("refused" -> refusedArray(refused.takeRight(8))) ~ JObject(assembled) ~
+      ("details" -> detailsPath))
+  }
+
+  /** `<detailsPath>.windows.jsonl`: the append-only windows log. */
+  def windowsLog(detailsPath: String): java.nio.file.Path =
+    java.nio.file.Paths.get(detailsPath + ".windows.jsonl")
+
+  /** [[derive]] over the windows log beside `detailsPath`, writing the
+    * details file when derive yields one. */
+  def writeDerived(detailsPath: String, registry: Seq[String]): Option[Derived] = {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val log = windowsLog(detailsPath)
+    val lines = if (Files.isRegularFile(log)) Files.readAllLines(log, UTF_8).asScala.toSeq else Nil
+    val derived = derive(lines, registry)
+    derived.foreach(d => Files.write(java.nio.file.Paths.get(detailsPath),
+      (compact(d.details) + "\n").getBytes(UTF_8)))
+    derived
   }
 
   /** Fixed calibration workload: generate → modular hash-agg → sort, all
@@ -458,31 +540,32 @@ object BenchCore {
       case None => scaleInitialPartitions(bytes, cpus).toString
     }
 
-  /** Current commit id for window-assembly eligibility: resolves
-    * .git/HEAD (following one symbolic ref, incl. packed-refs), truncated
-    * to 12 hex chars. "unknown" when unreadable or the ref is unborn —
-    * which [[eligibleWindows]] treats as never-matching. */
-  def gitHeadId(repoDir: java.io.File): String = {
-    def readFile(f: java.io.File): Option[String] =
-      if (!f.isFile) None
-      else try {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try Some(src.mkString.trim) finally src.close()
-      } catch { case _: Throwable => None }
-    val head = readFile(new java.io.File(repoDir, ".git/HEAD"))
-    val resolved = head.flatMap { h =>
-      if (!h.startsWith("ref: ")) Some(h)
-      else {
-        val ref = h.stripPrefix("ref: ").trim
-        readFile(new java.io.File(repoDir, s".git/$ref")).orElse(
-          readFile(new java.io.File(repoDir, ".git/packed-refs")).flatMap { pr =>
-            pr.linesIterator.map(_.trim)
-              .find(l => !l.startsWith("#") && l.endsWith(" " + ref))
-              .map(_.split(" ", 2)(0))
-          })
+  /** Code id for window-assembly eligibility: the first 12 hex chars of a
+    * SHA-256 over the sorted relative paths and bytes of every regular file
+    * under `dir/src/main`. Content, not the git commit, so a commit that
+    * changes only artifacts keeps its windows. "unknown" when that
+    * directory is absent — which [[eligibleWindows]] treats as
+    * never-matching. */
+  def codeId(dir: java.io.File): String = {
+    import java.nio.file.{Files, LinkOption}
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(dir, "src/main").toPath
+    if (!Files.isDirectory(root)) "unknown"
+    else {
+      val walk = Files.walk(root)
+      val files = try walk.iterator.asScala.filter(Files.isRegularFile(_, LinkOption.NOFOLLOW_LINKS))
+          .map(p => root.relativize(p).toString.replace(java.io.File.separatorChar, '/') -> p)
+          .toList.sortBy(_._1)
+        finally walk.close()
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.foreach { case (rel, p) =>
+        val bytes = Files.readAllBytes(p)
+        md.update(rel.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        md.update(java.nio.ByteBuffer.allocate(9).put(0: Byte).putLong(bytes.length).array())
+        md.update(bytes)
       }
+      md.digest().take(6).map(b => f"${b & 0xff}%02x").mkString
     }
-    resolved.filter(_.matches("[0-9a-f]{12,40}")).map(_.take(12)).getOrElse("unknown")
   }
 
   case class Result(queries: Seq[Q], calibrations: Seq[Double], noiseIndex: Double,

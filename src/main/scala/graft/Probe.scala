@@ -1,5 +1,8 @@
 package graft
 
+import org.json4s.{JNull, JObject, JValue}
+import org.json4s.JsonDSL._
+
 /** Decade-scale probe runner: times named registry queries on
   * SPARK_GRAFT_SF_DIR and APPENDS one JSON line per timed pass to the
   * probe artifact — the evidence file is written BY THE RUNNER, not by a
@@ -21,7 +24,7 @@ package graft
   *     only comparable solo — a bundle member inherits its predecessor's
   *     un-reclaimed checkpoint blocks), and bracketing calibrations are
   *     recorded for the reader instead of gating anything;
-  *   - never touches the bench sidecars or canonical artifacts.
+  *   - never touches the bench windows log or details file.
   *
   * Usage: runMain graft.Probe <query>[,<query>...]
   * Env: SPARK_GRAFT_SF_DIR (target data), SPARK_GRAFT_PROBE_OUT (artifact,
@@ -41,15 +44,16 @@ object Probe {
       .filter(p => p >= 1 && p <= 9).getOrElse(2)
     val cpus = GraftSession.cpus
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val codeId = sys.env.getOrElse("SPARK_GRAFT_CODE_ID",
-      BenchCore.gitHeadId(new java.io.File(".")))
+    val codeId = BenchCore.codeId(new java.io.File("."))
     val heapGb = Runtime.getRuntime.maxMemory / (1L << 30)
 
     val spark = GraftSession.local(cpus, sfDir)
 
-    def append(line: String): Unit = {
+    def append(fields: JObject): Unit = {
       // append-mode write, flushed per line: the artifact survives a later
       // OOM. Also mirrored to stdout for the launcher's log.
+      val line = BenchCore.compact(("ts" -> now()) ~ fields ~
+        ("code" -> codeId) ~ ("heap_gb" -> heapGb) ~ ("cpus" -> cpus))
       val w = new java.io.FileWriter(outPath, java.nio.charset.StandardCharsets.UTF_8, true)
       try w.write(line + "\n") finally w.close()
       println(line)
@@ -78,16 +82,16 @@ object Probe {
         allOk &&= ok
         if (ok && pass == 1) coldSec = sec
         if (ok && pass > 1 && (warmMin.isNaN || sec < warmMin)) warmMin = sec
-        append(f"""{"ts":"${now()}","query":"$name","sf":"$sfDir","pass":$pass,""" +
-          f""""kind":"$kind","sec":$sec%.2f,"ok":$ok,"cal_before":$calBefore%.2f,""" +
-          f""""code":"$codeId","heap_gb":$heapGb,"cpus":$cpus}""")
+        append(("query" -> name) ~ ("sf" -> sfDir) ~ ("pass" -> pass) ~ ("kind" -> kind) ~
+          ("sec" -> BenchCore.dec(sec, 2)) ~ ("ok" -> ok) ~
+          ("cal_before" -> BenchCore.dec(calBefore, 2)))
       }
       val calAfter = BenchCore.calibrate(spark)
-      def j(d: Double) = if (d.isNaN) "null" else f"$d%.2f"
-      append(f"""{"ts":"${now()}","query":"$name","sf":"$sfDir","summary":true,""" +
-        f""""passes":$passes,"cold_sec":${j(coldSec)},"warm_min_sec":${j(warmMin)},""" +
-        f""""ok":$allOk,"cal_before":$calBefore%.2f,"cal_after":$calAfter%.2f,""" +
-        f""""code":"$codeId","heap_gb":$heapGb,"cpus":$cpus}""")
+      def j(d: Double): JValue = if (d.isNaN) JNull else BenchCore.dec(d, 2)
+      append(("query" -> name) ~ ("sf" -> sfDir) ~ ("summary" -> true) ~
+        ("passes" -> passes) ~ ("cold_sec" -> j(coldSec)) ~ ("warm_min_sec" -> j(warmMin)) ~
+        ("ok" -> allOk) ~ ("cal_before" -> BenchCore.dec(calBefore, 2)) ~
+        ("cal_after" -> BenchCore.dec(calAfter, 2)))
     }
     spark.stop()
   }

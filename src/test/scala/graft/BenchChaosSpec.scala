@@ -75,63 +75,66 @@ class BenchChaosSpec extends AnyFunSuite {
   }
 
   test("canonical noise gate: a throttled window cannot overwrite the canonical artifact") {
-    def path(ni: Double, exit: Option[Double] = Some(1.0), dirty: Boolean = false) =
-      BenchCore.detailsPathFor("bench_details.json", ni, exit, dirty)
+    def accepts(ni: Double, exit: Option[Double] = Some(1.0), dirty: Boolean = false) =
+      BenchCore.canonicalAcceptable(ni, exit, dirty)
     // quiet window → canonical, regardless of the exit state — including
     // the round-11 shape where the exit calibration is SKIPPED (None)
     // because the three passes cannot change a ≤gate verdict
-    assert(path(1.0, exit = Some(9.9), dirty = true) === "bench_details.json")
-    assert(path(1.0, exit = None, dirty = true) === "bench_details.json")
-    assert(path(BenchCore.CanonicalNoiseGate, exit = None) === "bench_details.json")
+    assert(accepts(1.0, exit = Some(9.9), dirty = true))
+    assert(accepts(1.0, exit = None, dirty = true))
+    assert(accepts(BenchCore.CanonicalNoiseGate, exit = None))
     // elevated mid-run calibrations + recovered exit + stable queries =
     // the self-inflicted GC/heap drift every full-surface window shows
     // (incl. the round-9 "cleaner" capture at noise 2.40) → canonical
-    assert(path(2.40, exit = Some(1.2)) === "bench_details.json")
-    assert(path(2.40, exit = Some(BenchCore.RecoveredFactor)) === "bench_details.json")
+    assert(accepts(2.40, exit = Some(1.2)))
+    assert(accepts(2.40, exit = Some(BenchCore.RecoveredFactor)))
     // …but an exit calibration still elevated = genuine external load
-    assert(path(2.40, exit = Some(1.51)) === "bench_details.json.noisy")
-    assert(path(18.44, exit = Some(3.0)) === "bench_details.json.noisy") // the round-5 capture
+    assert(!accepts(2.40, exit = Some(1.51)))
+    assert(!accepts(18.44, exit = Some(3.0))) // the round-5 capture
     // …and a query that escalated to 5 passes and STILL spread >50% is
-    // direct per-query throttle evidence: divert even if the exit is clean
-    assert(path(2.40, exit = Some(1.2), dirty = true) === "bench_details.json.noisy")
+    // direct per-query throttle evidence: refuse even if the exit is clean
+    assert(!accepts(2.40, exit = Some(1.2), dirty = true))
     // round-11 hard ceiling (ADVICE): a window the rescue layer itself
     // calls throttled (> NoiseThreshold) cannot become canonical even if
     // the throttle lifted before exit and only sub-floor queries took it
-    assert(path(4.19, exit = Some(1.0)) === "bench_details.json.noisy")
-    assert(path(BenchCore.CanonicalNoiseCeiling, exit = Some(1.0)) === "bench_details.json")
+    assert(!accepts(4.19, exit = Some(1.0)))
+    assert(accepts(BenchCore.CanonicalNoiseCeiling, exit = Some(1.0)))
     // above the gate, a missing exit ratio can never accept
-    assert(path(2.40, exit = None) === "bench_details.json.noisy")
+    assert(!accepts(2.40, exit = None))
     // the gate must be at least as strict as what the rescue layer calls
     // "recovered" — a window rescue would accept is one canonical accepts
     assert(BenchCore.CanonicalNoiseGate <= BenchCore.RecoveredFactor)
   }
 
   test("refusal telemetry: render/parse round-trip, corrupt-line drop, stdout cap") {
-    val rs = (1 to 12).map(i =>
-      BenchCore.Refusal(f"08-15T17:$i%02d:00", 1.5 + i * 0.1, 1.0 + i * 0.05,
-        spreadDirty = i % 3 == 0))
-    // sidecar round-trip: every rendered line parses back to itself
-    for (r <- rs) {
-      val line = BenchCore.renderRefusal(r)
-      val back = BenchCore.parseRefusal(line)
-      assert(back.nonEmpty, s"unparseable: $line")
-      assert(back.get.ts === r.ts && back.get.spreadDirty === r.spreadDirty)
-      assert(math.abs(back.get.noiseIndex - r.noiseIndex) < 0.005)
-      assert(math.abs(back.get.exitRatio - r.exitRatio) < 0.005)
-    }
-    // a corrupt sidecar line drops instead of poisoning the artifact
-    assert(BenchCore.parseRefusal("garbage").isEmpty)
-    assert(BenchCore.parseRefusal("""{"ts":"x","ni":abc,"er":1.0,"sd":true}""").isEmpty)
-    assert(BenchCore.parseRefusal("").isEmpty)
-    // the stdout array keeps the LAST cap entries in chronological order
-    val capped = BenchCore.refusalsJson(rs, cap = 8)
-    assert(!capped.contains("17:04:00") && capped.contains("17:05:00")
-      && capped.contains("17:12:00"))
-    assert(capped.indexOf("17:05:00") < capped.indexOf("17:12:00"))
-    // the full array is valid one-line JSON the details artifact embeds
-    val full = BenchCore.refusalsJson(rs)
-    assert(full.startsWith("[") && full.endsWith("]") && !full.contains("\n"))
-    assert(full.split("\\},\\{").length === 12)
+    import org.json4s._
+    val names = Seq("a", "b")
+    val rs = (1 to 12).map(i => BenchCore.WindowRecord(f"08-15T17:$i%02d:00", "c1", "/d/sf0.1",
+      "full_rows", 1.5 + i * 0.1, Some(1.0 + i * 0.05), spreadDirty = i % 3 == 0,
+      Seq(BenchCore.Q("a", 1.0 + i, 5.0, 3, ok = true), BenchCore.Q("b", 2.0, 5.0, 3, ok = true)),
+      accepted = false, passes = 3, cpus = 4, heapGb = 7, calibrations = Seq(0.5, 0.9, 1.0),
+      exitCalibration = Some(0.6), rescueRan = false))
+    val lines = rs.map(BenchCore.renderWindow)
+    // a corrupt log line drops instead of poisoning the details — also a
+    // line in the format written before accepted/passes/cpus/heap_gb
+    val oldFormat = """{"ts":"08-15T18:00:00","code":"c1","sf":"/d/sf0.1","work":"full_rows",""" +
+      """"ni":9.0,"er":9.0,"sd":true,"q":[{"n":"a","m":1.0,"s":5.0,"p":3,"ok":true},""" +
+      """{"n":"b","m":2.0,"s":5.0,"p":3,"ok":true}]}"""
+    val log = lines.take(4) ++ Seq("garbage", "", """{"ts":"x","ni":abc}""") ++
+      lines.drop(4) :+ oldFormat
+    val d = BenchCore.derive(log, names).get
+    // the refused list is every refused window, chronological
+    assert(d.refused == rs)
+    val full = d.details \ "refused"
+    assert(full.children.size === 12)
+    assert(full.children.map(_ \ "ts") == rs.map(r => JString(r.ts)))
+    assert(BenchCore.compact(full.children.head) === """{"ts":"08-15T17:01:00","ni":1.60,"er":1.05,"sd":false}""")
+    // the twelve windows assemble; the dropped lines are not among them
+    assert(d.assembled.map(_.windows).contains(12))
+    // the stdout copy keeps the LAST 8 in chronological order
+    val out = jackson.JsonMethods.parse(BenchCore.summaryLine(rs.last, Some(d), "bd.json"))
+    assert(out \ "refused_n" == JInt(12))
+    assert((out \ "refused").children.map(_ \ "ts") == rs.takeRight(8).map(r => JString(r.ts)))
   }
 
   test("single-pass probe mode (basePasses=1) runs exactly one pass and never escalates") {
