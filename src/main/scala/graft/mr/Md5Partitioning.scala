@@ -15,9 +15,10 @@ import org.apache.spark.Partitioner
   * custom routing — a cheap pure function, usable both as an RDD
   * [[Partitioner]] and as a column expression ([[graft.functions.Md5Mod]]).
   *
-  * Every record of an MR job crosses this code, so a call allocates
-  * nothing for keys up to 64K chars: each thread keeps one digest, its
-  * output buffer and a buffer for the key's UTF-8 bytes.
+  * Each distinct line of every MR map task, and every row of an
+  * `md5_mod` column, crosses this code, so a call allocates nothing for
+  * keys up to 64K chars: each thread keeps one digest, its output buffer
+  * and a buffer for the key's UTF-8 bytes.
   */
 object Md5Partitioning {
 

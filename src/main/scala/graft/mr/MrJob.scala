@@ -156,18 +156,24 @@ object MrJob {
     * same sort/merge topology the reference implements by hand.
     *
     * Equal lines are interchangeable and the whole-line sort puts them side
-    * by side, so the shuffle carries each distinct line once per map task
-    * with its count (a map-side combine in Spark's spillable maps) and the
-    * sorted `(line, n)` pairs expand back into n copies: every reducer,
-    * Native or Exec, reads the same stream as if each line had been
-    * shuffled on its own. */
-  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] =
-    new ShuffledRDD[String, Long, Long](mapped.map(line => (line, 1L)),
-        new Md5LinePartitioner(numReducers))
+    * by side, so each map task first counts its lines (a spillable
+    * [[org.apache.spark.util.collection.ExternalAppendOnlyMap]] keyed by
+    * the line) and only then routes them: md5 runs once per distinct line
+    * per map task, not once per record. The shuffle itself has no
+    * aggregator and no map-side combine, so up to
+    * `spark.shuffle.sort.bypassMergeThreshold` (200) reducers the map side
+    * takes the bypass-merge writer; the reduce side sorts the `(line, n)`
+    * pairs without re-summing them and expands each into n copies. Every
+    * reducer, Native or Exec, reads the same stream as if each line had
+    * been shuffled on its own. */
+  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] = {
+    val count = new Aggregator[String, Long, Long](n => n, _ + _, _ + _)
+    val counted = mapped.mapPartitions(lines =>
+      count.combineValuesByKey(lines.map((_, 1L)), TaskContext.get()))
+    new ShuffledRDD[String, Long, Long](counted, new Md5LinePartitioner(numReducers))
       .setKeyOrdering(CByteOrdering)
-      .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
-      .setMapSideCombine(true)
       .mapPartitions(expandCounts)
+  }
 
   /** Sorted `(line, n)` pairs back into n copies of each line, lazily. */
   private def expandCounts(counted: Iterator[(String, Long)]): Iterator[String] =

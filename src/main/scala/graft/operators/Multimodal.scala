@@ -469,23 +469,27 @@ object Multimodal {
       .as[Payload]
     val frameHashes = payloads.mapPartitions { rows =>
       val md = java.security.MessageDigest.getInstance("MD5")
-      val hexU = "0123456789ABCDEF".toCharArray
-      def hexUpper(bs: Array[Byte]): String = {
-        val sb = new java.lang.StringBuilder(bs.length * 2)
-        bs.foreach { b => sb.append(hexU((b >> 4) & 0xF)).append(hexU(b & 0xF)) }
-        sb.toString
+      val hexU = "0123456789ABCDEF".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      // Uppercase ASCII hex of bs[off, off + n): the bytes md5 sees.
+      def hexUpper(bs: Array[Byte], off: Int, n: Int): Array[Byte] = {
+        val out = new Array[Byte](2 * n)
+        var i = 0
+        while (i < n) {
+          val b = bs(off + i)
+          out(2 * i) = hexU((b >> 4) & 0xF)
+          out(2 * i + 1) = hexU(b & 0xF)
+          i += 1
+        }
+        out
       }
-      def hexLower(bs: Array[Byte]): String = bs.map("%02x".format(_)).mkString
       rows.flatMap { p =>
         ImageHeaders.decode(buildContainer(p.doc_id, p.payload)) match {
           case Some(d) =>
             var off = 0
             d.frameSizes.iterator.map { sz =>
-              val slice = java.util.Arrays.copyOfRange(d.payload, off, off + sz)
+              val hex = hexUpper(d.payload, off, sz)
               off += sz
-              md.reset()
-              val h = hexLower(md.digest(hexUpper(slice).getBytes("US-ASCII")))
-              FrameHashRow(p.doc_id, java.lang.Long.parseLong(h.substring(0, 14), 16))
+              FrameHashRow(p.doc_id, Hashing.top56(md.digest(hex)))
             }
           case None => Iterator.empty
         }

@@ -28,10 +28,21 @@ object Hashing {
     * probe keys an operator needs hashed OUTSIDE a Catalyst expression
     * (e.g. the streaming CMS probe cells). Must stay bit-identical to the
     * Column form; HashingSpec pins the equivalence. */
-  def md5LongJvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.lang.Long.parseLong(d.map("%02x".format(_)).mkString.substring(0, 14), 16)
+  def md5LongJvm(s: String): Long =
+    top56(java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** The digest's first 7 bytes as a big-endian unsigned 56-bit value —
+    * what parsing its first 14 hex chars base-16 gives, with no text in
+    * between. */
+  def top56(digest: Array[Byte]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < 7) {
+      acc = (acc << 8) | (digest(i) & 0xffL)
+      i += 1
+    }
+    acc
   }
 }
 

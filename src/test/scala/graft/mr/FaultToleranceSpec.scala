@@ -13,9 +13,9 @@ import graft.SparkTestSession
   * dead-worker reassignment tests
   * (`/root/reference/tests/test_manager_05.py:271-288` — kill a worker
   * mid-map, the task is reassigned, output is unchanged). Here the failure
-  * is a first-attempt exception inside a map task; the test session runs
-  * `local[4, 2]` (`spark.task.maxFailures` semantics: tasks get one
-  * retry), so the DAGScheduler must resubmit the attempt and the job must
+  * is a first-attempt exception inside a map or a reduce task; the test
+  * session runs `local[4, 2]` (`spark.task.maxFailures` semantics: tasks
+  * get one retry), so the DAGScheduler must resubmit the attempt and the job must
   * produce byte-identical output to an undisturbed run. */
 class FaultToleranceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -55,52 +55,82 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(readLines(out.resolve("part-00000")) === readLines(Paths.get(WcGolden)))
   }
 
-  test("hermetic: an attempt that dies halfway through its map output leaves the output byte-identical") {
-    // Generated corpus, no reference checkout. The first attempt of map
-    // partition 0 emits half of its records into the map-side combine,
-    // then dies; its partial counts must not reach the output.
+  /** Generated Zipf-ish corpus in four files, no reference checkout. */
+  private lazy val corpus: Seq[String] = {
     val rnd = new scala.util.Random(3)
     val words = Vector("the", "a", "", "[x]", "Zipf", "\u00e9t\u00e9", "\ud83d\ude00", "\ue000", "tail")
-    val lines = Seq.fill(1600)(Seq.fill(1 + rnd.nextInt(6))(
+    Seq.fill(1600)(Seq.fill(1 + rnd.nextInt(6))(
       words(math.min(words.size - 1, (-math.log(rnd.nextDouble()) * 2).toInt))).mkString(" "))
+  }
+
+  private lazy val corpusDir: Path = {
     val in = Files.createTempDirectory("graft-f13-in-")
     in.toFile.deleteOnExit()
-    lines.grouped(400).zipWithIndex.foreach { case (chunk, i) =>
+    corpus.grouped(400).zipWithIndex.foreach { case (chunk, i) =>
       Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     }
-    val half = NativeQueries.wcMapSh(lines.take(400).iterator).size / 2
-    FaultToleranceSpec.drills.set(0)
-    val failingMapper = Native { lines =>
+    in
+  }
+
+  /** Word count of the corpus at R=3; the bytes of each part file. */
+  private def runWordCount(mapper: LineProc, reducer: LineProc): Seq[Array[Byte]] = {
+    val out = Files.createTempDirectory("graft-f13-out-")
+    out.toFile.deleteOnExit()
+    MrJob.run(spark, JobSpec(corpusDir.toString, out.toString, mapper, reducer,
+      numMappers = 4, numReducers = 3))
+    (0 until 3).map(i => Files.readAllBytes(out.resolve(f"part-$i%05d")))
+  }
+
+  /** `f`'s output, except that the first attempt of `partition` in a stage
+    * whose tasks run `f` throws once it has emitted `n` lines. */
+  private def dieAfter(partition: Int, n: Int, f: Iterator[String] => Iterator[String]): Native =
+    Native { lines =>
       val tc = TaskContext.get()
-      val out = NativeQueries.wcMapSh(lines)
-      if (tc != null && tc.partitionId() == 0 && tc.attemptNumber() == 0) {
+      val out = f(lines)
+      if (tc != null && tc.partitionId() == partition && tc.attemptNumber() == 0) {
         FaultToleranceSpec.drills.incrementAndGet()
         out.zipWithIndex.map { case (l, i) =>
-          if (i == half) throw new RuntimeException("F13 drill: map attempt dies halfway")
+          if (i == n) throw new RuntimeException(s"F13 drill: attempt dies after $n lines")
           l
         }
       } else out
     }
-    def run(mapper: LineProc): Seq[Array[Byte]] = {
-      val out = Files.createTempDirectory("graft-f13-out-")
-      out.toFile.deleteOnExit()
-      MrJob.run(spark, JobSpec(in.toString, out.toString, mapper, Native(NativeQueries.wcReduceSh),
-        numMappers = 4, numReducers = 3))
-      (0 until 3).map(i => Files.readAllBytes(out.resolve(f"part-$i%05d")))
-    }
-    val drilled = run(failingMapper)
+
+  private def assertSameParts(drilled: Seq[Array[Byte]], undisturbed: Seq[Array[Byte]]): Unit = {
     assert(FaultToleranceSpec.drills.get() === 1,
       "the injected failure must have fired exactly once (attempt 0), then been retried")
-    val undisturbed = run(Native(NativeQueries.wcMapSh))
     for (i <- 0 until 3)
       assert(java.util.Arrays.equals(drilled(i), undisturbed(i)), f"part-$i%05d differs")
+  }
+
+  test("hermetic: an attempt that dies halfway through its map output leaves the output byte-identical") {
+    // The first attempt of map partition 0 emits half of its lines into
+    // the map task's line count, then dies; its partial counts must not
+    // reach the output.
+    val half = NativeQueries.wcMapSh(corpus.take(400).iterator).size / 2
+    FaultToleranceSpec.drills.set(0)
+    val drilled = runWordCount(dieAfter(0, half, NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+    val undisturbed = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+    assertSameParts(drilled, undisturbed)
     val counts = drilled.flatMap(b => new String(b, StandardCharsets.UTF_8).split("\n"))
       .filter(_.nonEmpty)
       .map { l => val i = l.lastIndexOf('\t'); l.substring(0, i) -> l.substring(i + 1).toLong }
       .toMap
-    val expect = lines.flatMap(_.split("[\\[\\] \t]", -1)).map(_.toLowerCase)
+    val expect = corpus.flatMap(_.split("[\\[\\] \t]", -1)).map(_.toLowerCase)
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(counts === expect)
+  }
+
+  test("hermetic: a reduce attempt that dies halfway through its output leaves the output byte-identical") {
+    // The first attempt of reduce partition 0 emits half of its part
+    // file's lines, then dies; the retry re-reads the counted shuffle
+    // output, expands it again and rewrites the whole file.
+    val undisturbed = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+    val half = new String(undisturbed(0), StandardCharsets.UTF_8).count(_ == '\n') / 2
+    assert(half > 0)
+    FaultToleranceSpec.drills.set(0)
+    val drilled = runWordCount(Native(NativeQueries.wcMapSh), dieAfter(0, half, NativeQueries.wcReduceSh))
+    assertSameParts(drilled, undisturbed)
   }
 }
 

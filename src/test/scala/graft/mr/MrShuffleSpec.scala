@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 
+import org.apache.spark.ShuffleDependency
+import org.apache.spark.rdd.RDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -72,6 +74,31 @@ class MrShuffleSpec extends AnyFunSuite {
           s"$name: $part differs from the oracle")
       }
     }
+  }
+
+  /** The shuffle dependencies under `rdd`, nearest first. */
+  private def shuffleDeps(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap {
+      case d: ShuffleDependency[_, _, _] => d +: shuffleDeps(d.rdd)
+      case d => shuffleDeps(d.rdd)
+    }
+
+  test("the shuffle routes counted lines: no aggregator, no map-side combine, C-byte key order") {
+    // Spark's map-side combine hashes every record before combining it;
+    // counting inside the map task first hashes each distinct line once.
+    val sorted = MrJob.shuffleSort(spark.sparkContext.parallelize(Seq("b\t1", "a\t1", "b\t1"), 2), R)
+    val deps = shuffleDeps(sorted)
+    assert(deps.size === 1)
+    val dep = deps.head
+    assert(!dep.mapSideCombine)
+    assert(dep.aggregator.isEmpty)
+    val ordering: Option[Any] = dep.keyOrdering
+    assert(ordering === Some(CByteOrdering))
+    dep.partitioner match {
+      case p: Md5LinePartitioner => assert(p.numPartitions === R)
+      case p => fail(s"partitioner is ${p.getClass.getName}, not Md5LinePartitioner")
+    }
+    assert(sorted.collect().toSeq.sortWith(CByteOrdering.lt) === Seq("a\t1", "b\t1", "b\t1"))
   }
 
   private val words = Vector("alpha", "beta", "", "Gamma", "\u00e9psilon", "\u65e5\u672c",
