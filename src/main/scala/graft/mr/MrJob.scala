@@ -1,10 +1,13 @@
 package graft.mr
 
+import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, FileOutputFormat, JobConf, RecordWriter, Reporter,
+  TextInputFormat}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.{Aggregator, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
@@ -14,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   *   read dir (F1) → split files round-robin (F2) → mapper (F3)
   *   → md5-mod-R partition (F4) → C-locale sort (F5, merged shuffle F6)
-  *   → reducer over sorted stream (F7) → part-%05d sink (F8)
+  *   → reducer over sorted stream (F7) → committed part-%05d files (F8)
   * }}}
   *
   * Mapper/reducer are *line-stream transformers*: either a streamed external
@@ -28,7 +31,11 @@ import org.apache.spark.sql.SparkSession
   * Scheduling, heartbeats, retries and shutdown (F9–F15) intentionally map
   * to Spark internals — DAGScheduler stage barriers, executor heartbeats,
   * `spark.task.maxFailures`, `spark.stop()` — per SURVEY.md §2.1; nothing to
-  * reimplement.
+  * reimplement. So does the sink: `saveAsHadoopFile` runs the old-API
+  * `FileOutputCommitter`, which gives each task attempt a scratch dir under
+  * `_temporary/` and renames into place only the attempt that Spark's
+  * `OutputCommitCoordinator` lets commit (F15), so the output dir ends up
+  * holding exactly R part files, or nothing if the job fails.
   */
 sealed trait LineProc
 /** External executable honoring the stdin/stdout line protocol. */
@@ -93,6 +100,29 @@ object CByteOrdering extends Ordering[String] {
 class Md5LinePartitioner(numPartitions0: Int) extends Md5Partitioner(numPartitions0) {
   override def getPartition(key: Any): Int =
     Md5Partitioning.partitionLine(key.asInstanceOf[String], numPartitions0)
+}
+
+/** Writes each line plus `\n` in UTF-8 (an unpaired surrogate becomes `?`)
+  * to the file the commit path names `part-%05d` in the task attempt's
+  * scratch dir. The file is opened on the raw FS under a
+  * `ChecksumFileSystem`, so no `.crc` file lands beside it. */
+class PartFileOutputFormat extends FileOutputFormat[NullWritable, String] {
+  /** The engine makes the output dir on admission, so it already exists. */
+  override def checkOutputSpecs(ignored: FileSystem, job: JobConf): Unit = ()
+
+  override def getRecordWriter(ignored: FileSystem, job: JobConf, name: String,
+      progress: Progressable): RecordWriter[NullWritable, String] = {
+    val file = FileOutputFormat.getTaskOutputPath(job, name)
+    val fs = file.getFileSystem(job) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    val w = new BufferedWriter(new OutputStreamWriter(fs.create(file, progress), StandardCharsets.UTF_8))
+    new RecordWriter[NullWritable, String] {
+      def write(key: NullWritable, line: String): Unit = { w.write(line); w.write('\n') }
+      def close(reporter: Reporter): Unit = w.close()
+    }
+  }
 }
 
 /** TextInputFormat over an explicit list of files: `listStatus` looks each
@@ -203,29 +233,11 @@ object MrJob {
     // F7: reducer over each merged sorted partition stream.
     val reduced = applyProc(job.reducer, shuffleSort(mapped, job.numReducers))
 
-    // F8: deterministic part-%05d sink, written executor-side through the
-    // Hadoop FileSystem API (works on local FS and HDFS/object stores).
-    writePartFiles(spark, reduced, job.outputDir)
-  }
-
-  def writePartFiles(spark: SparkSession, rdd: RDD[String], outputDir: String): Seq[String] = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val out = new Path(outputDir)
-    val fs = out.getFileSystem(conf.value)
-    fs.mkdirs(out)
-    val n = rdd.getNumPartitions
-    rdd.foreachPartition { lines =>
-      val pid = TaskContext.getPartitionId()
-      val path = new Path(outputDir, f"part-$pid%05d")
-      val pfs = path.getFileSystem(conf.value)
-      val os = pfs.create(path, true)
-      try {
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(os, StandardCharsets.UTF_8))
-        lines.foreach { l => w.write(l); w.write('\n') }
-        w.flush()
-      } finally os.close()
-    }
-    (0 until n).map(i => new Path(outputDir, f"part-$i%05d").toString)
+    // F8+F15: part-%05d through the commit path; no _SUCCESS marker.
+    val conf = new JobConf(spark.sparkContext.hadoopConfiguration)
+    conf.setBoolean("mapreduce.fileoutputcommitter.marksuccessfuljobs", false)
+    reduced.map(l => (NullWritable.get, l)).saveAsHadoopFile(job.outputDir,
+      classOf[NullWritable], classOf[String], classOf[PartFileOutputFormat], conf)
+    (0 until reduced.getNumPartitions).map(i => new Path(job.outputDir, f"part-$i%05d").toString)
   }
 }

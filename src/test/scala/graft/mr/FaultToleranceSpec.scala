@@ -16,7 +16,14 @@ import graft.SparkTestSession
   * is a first-attempt exception inside a map or a reduce task; the test
   * session runs `local[4, 2]` (`spark.task.maxFailures` semantics: tasks
   * get one retry), so the DAGScheduler must resubmit the attempt and the job must
-  * produce byte-identical output to an undisturbed run. */
+  * produce byte-identical output to an undisturbed run.
+  *
+  * F8+F15, the sink: a job publishes exactly R `part-%05d` files through
+  * Hadoop's output committer, a job whose reduce task fails on every attempt
+  * leaves its output dir empty, and a rerun replaces a stale part file. No
+  * drill runs with speculation on: Spark starts its speculation checker only
+  * outside local mode, so a local session never launches a duplicate
+  * attempt. */
 class FaultToleranceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -72,22 +79,34 @@ class FaultToleranceSpec extends AnyFunSuite {
     in
   }
 
-  /** Word count of the corpus at R=3; the bytes of each part file. */
-  private def runWordCount(mapper: LineProc, reducer: LineProc): Seq[Array[Byte]] = {
+  private val Parts = (0 until 3).map(i => f"part-$i%05d")
+
+  private def tmpOut(): Path = {
     val out = Files.createTempDirectory("graft-f13-out-")
     out.toFile.deleteOnExit()
-    MrJob.run(spark, JobSpec(corpusDir.toString, out.toString, mapper, reducer,
-      numMappers = 4, numReducers = 3))
-    (0 until 3).map(i => Files.readAllBytes(out.resolve(f"part-$i%05d")))
+    out
   }
 
-  /** `f`'s output, except that the first attempt of `partition` in a stage
-    * whose tasks run `f` throws once it has emitted `n` lines. */
-  private def dieAfter(partition: Int, n: Int, f: Iterator[String] => Iterator[String]): Native =
+  /** Word count of the corpus at R=3 into `out`; the bytes of each part file. */
+  private def runWordCount(mapper: LineProc, reducer: LineProc, out: Path = tmpOut()): Seq[Array[Byte]] = {
+    MrJob.run(spark, JobSpec(corpusDir.toString, out.toString, mapper, reducer,
+      numMappers = 4, numReducers = 3))
+    Parts.map(p => Files.readAllBytes(out.resolve(p)))
+  }
+
+  /** Every name in `dir`, hidden ones included, sorted. */
+  private def listing(dir: Path): Seq[String] =
+    Option(dir.toFile.list()).map(_.toSeq.sorted).getOrElse(Nil)
+
+  /** `f`'s output, except that the first attempt (or, with `everyAttempt`,
+    * each attempt) of `partition` in a stage whose tasks run `f` throws
+    * once it has emitted `n` lines. */
+  private def dieAfter(partition: Int, n: Int, f: Iterator[String] => Iterator[String],
+      everyAttempt: Boolean = false): Native =
     Native { lines =>
       val tc = TaskContext.get()
       val out = f(lines)
-      if (tc != null && tc.partitionId() == partition && tc.attemptNumber() == 0) {
+      if (tc != null && tc.partitionId() == partition && (everyAttempt || tc.attemptNumber() == 0)) {
         FaultToleranceSpec.drills.incrementAndGet()
         out.zipWithIndex.map { case (l, i) =>
           if (i == n) throw new RuntimeException(s"F13 drill: attempt dies after $n lines")
@@ -100,7 +119,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(FaultToleranceSpec.drills.get() === 1,
       "the injected failure must have fired exactly once (attempt 0), then been retried")
     for (i <- 0 until 3)
-      assert(java.util.Arrays.equals(drilled(i), undisturbed(i)), f"part-$i%05d differs")
+      assert(java.util.Arrays.equals(drilled(i), undisturbed(i)), s"${Parts(i)} differs")
   }
 
   test("hermetic: an attempt that dies halfway through its map output leaves the output byte-identical") {
@@ -131,6 +150,42 @@ class FaultToleranceSpec extends AnyFunSuite {
     FaultToleranceSpec.drills.set(0)
     val drilled = runWordCount(Native(NativeQueries.wcMapSh), dieAfter(0, half, NativeQueries.wcReduceSh))
     assertSameParts(drilled, undisturbed)
+  }
+
+  test("hermetic: a committed job's output dir holds exactly part-00000 … part-00002") {
+    // No checksum files, no _SUCCESS marker, no _temporary scratch dir.
+    val out = tmpOut()
+    val parts = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
+    assert(listing(out) === Parts)
+    assert(parts.forall(_.nonEmpty))
+  }
+
+  test("hermetic: a job whose reduce task fails on every attempt leaves its output dir empty") {
+    // Reduce partition 1 dies halfway through its part file on both of its
+    // attempts, so the job fails; neither its half-written file nor the
+    // other partitions' committed files may stay behind.
+    val undisturbed = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+    val half = new String(undisturbed(1), StandardCharsets.UTF_8).count(_ == '\n') / 2
+    assert(half > 0)
+    FaultToleranceSpec.drills.set(0)
+    val out = tmpOut()
+    intercept[org.apache.spark.SparkException] {
+      runWordCount(Native(NativeQueries.wcMapSh),
+        dieAfter(1, half, NativeQueries.wcReduceSh, everyAttempt = true), out)
+    }
+    assert(FaultToleranceSpec.drills.get() === 2, "both attempts of reduce partition 1 must have died")
+    assert(listing(out) === Nil)
+  }
+
+  test("hermetic: a rerun into the same output dir replaces its part files byte for byte") {
+    val out = tmpOut()
+    val first = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
+    // A stale, half-written part file from an earlier run must be replaced.
+    Files.write(out.resolve(Parts(1)), first(1).take(first(1).length / 2))
+    val rerun = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
+    for (i <- 0 until 3)
+      assert(java.util.Arrays.equals(rerun(i), first(i)), s"${Parts(i)} differs")
+    assert(listing(out) === Parts)
   }
 }
 

@@ -281,4 +281,33 @@ class MrJobSpec extends AnyFunSuite {
       Native(NativeQueries.grepMap("product")), Native(NativeQueries.grepReduce), 1, 1))
     assert(id0 === 0 && id1 === 1)
   }
+
+  test("hermetic: FIFO engine assigns sequential job ids and makes each output dir on admission") {
+    val in = Files.createTempDirectory("graft-mr-fifo-in-")
+    for (i <- 0 until 3)
+      Files.write(in.resolve(s"file0$i"), s"a product $i\nnone\n".getBytes(StandardCharsets.UTF_8))
+    val engine = new MapReduceEngine(spark)
+    val outs = Seq("fifo0", "fifo1").map(tag => tmpOut(tag).resolve("out"))
+    val ids = outs.map { out =>
+      engine.submit(JobSpec(in.toString, out.toString,
+        Native(NativeQueries.grepMap("product")), Native(NativeQueries.grepReduce), 1, 1))._1
+    }
+    assert(ids === Seq(0, 1))
+    for (out <- outs) {
+      assert(out.toFile.list().toSeq === Seq("part-00000"))
+      assert(readLines(out.resolve("part-00000")) === List("a product 0", "a product 1", "a product 2"))
+    }
+  }
+
+  test("hermetic: shuffleSort merges test_worker_07's sorted runs into one reduce stream (R=1)") {
+    // The two map outputs of test_worker_07 (maptask0000{0,1}-part00000),
+    // one map partition each, through the job's own shuffle and the wc
+    // reducer; expected output per the reference's
+    // tests/test_worker_07.py:127-135.
+    val runs = Seq(Seq("\t1", "bye\t1", "hello\t1"), Seq("\t1", "hello\t1"))
+    val maps = spark.sparkContext.parallelize(runs, 2).flatMap(identity)
+    assert(maps.glom().collect().map(_.toSeq).toSeq === runs)
+    val merged = MrJob.shuffleSort(maps, 1)
+    assert(merged.mapPartitions(NativeQueries.wcReduceSh).collect().toList === List("\t2", "bye\t1", "hello\t2"))
+  }
 }

@@ -112,6 +112,36 @@ class MrSubmitSpec extends AnyFunSuite {
       "identity job must reproduce md5-mod routing + C-sort exactly")
   }
 
+  test("hermetic: submit with the cat identity pair on a generated corpus routes and C-sorts every line (M=2, R=3)") {
+    // The fixture test above, over four generated files: TAB-keyed and
+    // whole-line keys, duplicates, empty lines and non-ASCII text. The
+    // output dir must hold exactly the R part files.
+    val rnd = new scala.util.Random(11)
+    val words = Vector("alpha", "Beta", "", "\u00e9t\u00e9", "\ud83d\ude00", "\ue000", "z")
+    val lines = Seq.fill(400) {
+      val key = words(rnd.nextInt(words.size))
+      if (rnd.nextBoolean()) s"$key\t${words(rnd.nextInt(words.size))}" else key
+    }
+    val in = Files.createTempDirectory("graft-submit-cat-gen-in-")
+    in.toFile.deleteOnExit()
+    lines.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
+      Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    }
+    val out = Files.createTempDirectory("graft-submit-cat-gen-").resolve("out")
+    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+      "-i", in.toString, "-o", out.toString,
+      "-m", "cat", "-r", "cat", "--nmappers", "2", "--nreducers", "3")))
+    val names = (0 until 3).map(r => f"part-$r%05d")
+    assert(parts.map(p => Paths.get(p).getFileName.toString) === names)
+    assert(out.toFile.list().toSeq.sorted === names)
+    val expected = (0 until 3).map { r =>
+      lines.filter(l => md5Part(l.split("\t", 2).head, 3) == r).sorted(cOrder)
+    }
+    val got = parts.map(p => readLines(Paths.get(p)))
+    assert(got === expected,
+      "identity job must reproduce md5-mod routing + C-sort exactly")
+  }
+
   test("submit of the wc .sh pair with TWO reducers partitions the golden by md5 (M=4, R=2)") {
     // Multi-reducer through the CLI: the R=1 golden's lines must split by
     // md5(word) % 2 across the two part files, each file C-sorted — the
