@@ -33,15 +33,18 @@ object LocalDirs {
     val dir = s"$scratchRoot/graft-feed-cache/${java.util.UUID.randomUUID}"
     val f = new java.io.File(dir)
     f.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(x: java.io.File): Unit = {
-        // listFiles() returns null on IO error / concurrent deletion — a
-        // shutdown-hook NPE would abandon the rest of the cache tree.
-        if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-        x.delete(): Unit
-      }
-      rm(f)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
     dir
+  }
+
+  /** Deletes `path` and everything under it; a missing path is a no-op. */
+  private[graft] def rmTree(path: String): Unit = {
+    def rm(x: java.io.File): Unit = {
+      // listFiles() returns null on IO error / concurrent deletion — an NPE
+      // would abandon the rest of the tree.
+      if (x.isDirectory) Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
+      x.delete(): Unit
+    }
+    rm(new java.io.File(path))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.json4s.{JObject, JString}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -29,24 +32,13 @@ object Verify {
         System.err.println(s"[verify] $name FAILED: $first")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter(kv => only.forall(_.contains(kv._1)))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    // json4s escapes quotes, backslashes and every control char — a tab or
+    // CR in builder-authored SQL must not make the driver's json.load fail.
+    def json(kvs: Iterable[(String, String)]): String =
+      BenchCore.compact(JObject(kvs.map { case (k, v) => k -> JString(v) }.toList))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))))
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), json(errors))
     spark.stop()
     // Exit 0 even on failures — a nonzero status could make a driver discard
     // the whole dump; _errors.json is the failure signal. Summarize loudly.

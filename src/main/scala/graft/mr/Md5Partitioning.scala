@@ -3,8 +3,6 @@ package graft.mr
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.Partitioner
-
 /** Reference-exact data routing: partition = int(md5(key_utf8), 16) % R.
   *
   * The reference's shuffle routes each `key TAB value` line by the md5 of
@@ -12,8 +10,9 @@ import org.apache.spark.Partitioner
   * `/root/reference/tests/test_worker_08.py:226-243`: at R=2, keys "",
   * "bye", "hello" → part 0; "world", "goodbye", "hadoop" → part 1).
   * Spark's built-in hashpartitioning is Murmur3, so byte-compat needs this
-  * custom routing — a cheap pure function, usable both as an RDD
-  * [[Partitioner]] and as a column expression ([[graft.functions.Md5Mod]]).
+  * custom routing — a cheap pure function, used by the MR shuffle's
+  * [[Md5LinePartitioner]] and by a column expression
+  * ([[graft.functions.Md5Mod]]).
   *
   * Each distinct line of every MR map task, and every row of an
   * `md5_mod` column, crosses this code, so a call allocates nothing for
@@ -120,21 +119,4 @@ object Md5Partitioning {
     val i = line.indexOf('\t')
     if (i < 0) line else line.substring(0, i)
   }
-}
-
-/** RDD partitioner wrapping [[Md5Partitioning.partition]]; keys are the
-  * line-prefix strings. */
-class Md5Partitioner(val numPartitions0: Int) extends Partitioner {
-  override def numPartitions: Int = numPartitions0
-  override def getPartition(key: Any): Int =
-    Md5Partitioning.partition(key.asInstanceOf[String], numPartitions0)
-  override def equals(other: Any): Boolean = other match {
-    // getClass, not instanceof: Md5LinePartitioner(R) routes by the line's
-    // KEY PREFIX while this routes by the raw key — treating them as equal
-    // would let Spark skip a shuffle on a cogroup/join of RDDs partitioned
-    // by each, silently mis-colocating keys.
-    case o: Md5Partitioner => o.getClass == getClass && o.numPartitions0 == numPartitions0
-    case _ => false
-  }
-  override def hashCode: Int = getClass.hashCode * 31 + numPartitions0
 }

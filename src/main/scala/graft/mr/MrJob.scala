@@ -8,7 +8,7 @@ import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
 import org.apache.hadoop.mapred.{FileInputFormat, FileOutputFormat, JobConf, RecordWriter, Reporter,
   TextInputFormat}
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.{Aggregator, SparkContext, TaskContext}
+import org.apache.spark.{Aggregator, Partitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
@@ -96,10 +96,18 @@ object CByteOrdering extends Ordering[String] {
   }
 }
 
-/** Routes a whole line to md5(key-before-first-TAB) mod R. */
-class Md5LinePartitioner(numPartitions0: Int) extends Md5Partitioner(numPartitions0) {
+/** Routes a whole line to md5(key-before-first-TAB) mod R. Equal only to
+  * itself at the same R: Spark skips the shuffle of a cogroup/join whose
+  * inputs carry equal partitioners, so a partitioner that routes
+  * differently must never compare equal. */
+class Md5LinePartitioner(override val numPartitions: Int) extends Partitioner {
   override def getPartition(key: Any): Int =
-    Md5Partitioning.partitionLine(key.asInstanceOf[String], numPartitions0)
+    Md5Partitioning.partitionLine(key.asInstanceOf[String], numPartitions)
+  override def equals(other: Any): Boolean = other match {
+    case o: Md5LinePartitioner => o.getClass == getClass && o.numPartitions == numPartitions
+    case _ => false
+  }
+  override def hashCode: Int = getClass.hashCode * 31 + numPartitions
 }
 
 /** Writes each line plus `\n` in UTF-8 (an unpaired surrogate becomes `?`)

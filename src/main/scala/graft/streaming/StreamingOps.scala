@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
 import graft.operators.Exact._
 
@@ -15,13 +14,20 @@ import graft.operators.Exact._
   * streaming share the aggregation expressions — only the source/sink
   * differ, which is exactly Spark's unified-engine design.
   *
-  * Feed discipline: every registered demo query ingests through a FILE
-  * SOURCE fed by time-split parquet chunk drops ([[stageTimeChunks]]) — the
-  * corpus is staged by one distributed Spark write and replayed by file
-  * renames, so NO registered pipeline ever materializes rows on the driver
-  * (a `collect()`-fed MemoryStream demo would bottleneck at 100× scale even
-  * though the operator under test is driver-free). MemoryStream appears
-  * only in specs, where crafted/out-of-order micro-corpora need per-row
+  * Feed discipline: every registered query runs through ONE replay loop,
+  * [[replay]]. A demo names its query, its input [[Side]]s (frame, order
+  * column, optional sentinel row), its stream transform and the confs it
+  * needs; the loop stages each side as time-split parquet chunks
+  * ([[stageTimeChunks]], cached per session and hard-linked per run),
+  * starts the memory sink on a fresh checkpoint, renames chunk k of every
+  * side into its watch dir per micro-batch (the sentinels ride the last
+  * drop), stops the query and deletes the run's scratch — feeds and
+  * checkpoint alike. The corpus is staged by one distributed Spark write
+  * and replayed by file renames, so NO registered pipeline ever
+  * materializes rows on the driver (a `collect()`-fed MemoryStream demo
+  * would bottleneck at 100× scale even though the operator under test is
+  * driver-free). MemoryStream appears only in specs and the spec-only
+  * upsert harness, where crafted/out-of-order micro-corpora need per-row
   * control.
   */
 object StreamingOps {
@@ -36,24 +42,9 @@ object StreamingOps {
 
   /** A staged chunk replay: `watchDir` is the directory the streaming file
     * source watches; `chunks(k)` are the staged parquet part-files of
-    * time-chunk k, moved in by [[dropChunk]] one chunk per micro-batch;
-    * `baseDir` owns both and is deleted by [[cleanupFeed]] once the run's
-    * result is materialized. */
-  private[streaming] case class ChunkFeed(baseDir: String, watchDir: String,
+    * time-chunk k, moved in by [[replay]] one chunk per micro-batch. */
+  private[streaming] case class ChunkFeed(watchDir: String,
       chunks: IndexedSeq[Seq[java.io.File]], maxOrder: Option[Long])
-
-  /** Deletes a feed's staging + watch dirs. Every demo query drains into a
-    * memory sink (fully materialized before return), so the corpus copy in
-    * scratch is garbage the moment the stream stops — without this, a
-    * median-of-3 bench over the streaming surface accumulates one staged
-    * corpus per query per pass in /dev/shm. */
-  private def cleanupFeed(feeds: ChunkFeed*): Unit = feeds.foreach { f =>
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(rm)
-      x.delete(): Unit
-    }
-    rm(new java.io.File(f.baseDir))
-  }
 
   /** Stages `df` as `numChunks` TIME-DISJOINT parquet chunk directories
     * under `baseDir/stage`, ready to be replayed into `baseDir/in` (the
@@ -96,7 +87,7 @@ object StreamingOps {
       if (d.isDirectory) d.listFiles().filter(_.getName.endsWith(".parquet")).toSeq
       else Seq.empty[java.io.File]
     }
-    ChunkFeed(baseDir, watchDir, chunks, maxOrder)
+    ChunkFeed(watchDir, chunks, maxOrder)
   }
 
   /** Session-scoped staged-feed cache: the demo/bench harness replays the
@@ -106,12 +97,12 @@ object StreamingOps {
     * (cacheKey) per JVM and every subsequent run HARDLINKS the master's
     * part-files into its own throwaway feed dirs (a metadata op). The
     * replay itself is untouched: per-run watch dirs stay unique (the file
-    * source tracks seen paths), [[dropChunk]] renames only the per-run
-    * links, and [[cleanupFeed]] deletes only the per-run tree — the master
-    * under [[graft.LocalDirs.feedCacheRoot]] lives until JVM exit.
-    * Callers' keys MUST determine the staged frame's content (table,
-    * projection, filter, sfDir, chunking), which is what each call site's
-    * literal key + sfDir + orderCol + numChunks encode. */
+    * source tracks seen paths), [[replay]] renames only the per-run links
+    * and deletes only the per-run tree — the master under
+    * [[graft.LocalDirs.feedCacheRoot]] lives until JVM exit. Keys MUST
+    * determine the staged frame's content (table, projection, filter,
+    * sfDir, chunking); [[replay]] builds them from the query name, side,
+    * sfDir, order column and chunk count. */
   private val stagedMasters =
     new java.util.concurrent.ConcurrentHashMap[String, ChunkFeed]()
   private val masterSeq = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -141,13 +132,13 @@ object StreamingOps {
     val chunks = master.chunks.zipWithIndex.map { case (files, k) =>
       files.map(f => linkOrCopy(f, new java.io.File(s"$baseDir/stage/chunk=$k", f.getName)))
     }
-    ChunkFeed(baseDir, watchDir, chunks, master.maxOrder)
+    ChunkFeed(watchDir, chunks, master.maxOrder)
   }
 
   /** [[stageSentinel]] with the same session cache: sentinel frames are
     * tiny but each previously cost a full coalesce(1) parquet write JOB per
-    * run. Content is deterministic given the cache key (callers fold the
-    * sentinel's time/id values into it). */
+    * run. Content is deterministic given the cache key ([[replay]] folds
+    * the sentinel row itself into it). */
   private val sentinelMasters =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[java.io.File]]()
 
@@ -159,17 +150,8 @@ object StreamingOps {
     master.map(f => linkOrCopy(f, new java.io.File(dir, f.getName)))
   }
 
-  /** Moves chunk k's staged part-files into the watch dir (file rename —
-    * a metadata op, no data movement). The file source picks them up on
-    * the next trigger. */
-  private def dropChunk(feed: ChunkFeed, k: Int): Unit =
-    feed.chunks(k).foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Paths.get(feed.watchDir, s"chunk$k-${f.getName}"))
-    }
-
   /** Stages a sentinel frame as parquet part-files OUTSIDE the watch dir,
-    * before the stream starts; [[dropFiles]] renames them in later. Writing
+    * before the stream starts; [[replay]] renames them in later. Writing
     * the sentinel directly into the watch dir mid-replay (the previous
     * form) raced the trigger loop: the Spark write job takes long enough
     * that the engine's background listing often split the final chunk and
@@ -182,22 +164,13 @@ object StreamingOps {
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
   }
 
-  /** Renames pre-staged files into the watch dir (metadata op). */
+  /** Renames files into a watch dir under a tag (metadata op, no data
+    * movement); the file source picks them up on the next trigger. */
   private def dropFiles(watchDir: String, tag: String, files: Seq[java.io.File]): Unit =
     files.foreach { f =>
       java.nio.file.Files.move(f.toPath,
         java.nio.file.Paths.get(watchDir, s"$tag-${f.getName}"))
     }
-
-  /** Deletes a whole scratch tree (feeds + sentinel staging under one
-    * base) — the join demos' two feeds and sentinels share a parent. */
-  private def rmTree(path: String): Unit = {
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles().foreach(rm)
-      x.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
 
   /** Max event time across the given staged side(s) — read from the feeds'
     * own quantile pass (zero extra jobs), NULL-safely: an empty side has no
@@ -219,8 +192,26 @@ object StreamingOps {
     * Settled three times at sf0.1: round 9 (15-query family, one window)
     * parts=4 28.8 s, parts=2 29.9 s, parts=2 + changelog 29.8 s; round 13
     * re-confirmed 4; round 14 under join state v3, parts=2 10.5–10.7 s vs
-    * 8.01 s summed over the join trio. */
-  private val StateParts = "4"
+    * 8.01 s summed over the join trio.
+    *
+    * Every streaming query runs on these partitions with Spark 4's
+    * checkpoint file CHECKSUMS (`ChecksumCheckpointFileManager`, twin
+    * .checksum file per delta/log write) disabled: these are throwaway
+    * unique-per-run checkpoints that are never restarted from, so bit-rot
+    * protection buys nothing and doubles the per-commit file count
+    * (measured: summed per-batch store commit time ~3-5 s across the 32
+    * store instances of a join batch). [[replay]] restores both settings
+    * afterwards; a production run keeps checksums on its durable
+    * checkpoints. */
+  private val StateParts = Seq("spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+
+  /** The RocksDB state store: `transformWithState` requires it (multiple
+    * column families for named state + timers), so every tws demo pins it
+    * for its run — which also makes those the registered queries that
+    * exercise the PRODUCTION store on every correctness pass. */
+  private val RocksDb = Seq("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Stream-stream joins run with join state format v3 — ONE RocksDB store
     * per partition with virtual column families instead of v2's four — and
@@ -233,25 +224,9 @@ object StreamingOps {
     * changes. Round-14 interleaved A/B at sf0.1 (join/full/outer summed):
     * v2 8.77 s, v3 8.29 s, v3 + changelog 8.01 s (−9%). Values are
     * provider-independent — the oracle hash-checks all three join demos. */
-  private def withJoinStoreV3[A](spark: SparkSession)(body: => A): A =
-    withConfs(spark,
-      "spark.sql.streaming.join.stateFormatVersion" -> "3",
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
-
-  /** Runs `body` on [[StateParts]] shuffle partitions with Spark 4's
-    * checkpoint file CHECKSUMS (`ChecksumCheckpointFileManager`, twin
-    * .checksum file per delta/log write) disabled: these are throwaway
-    * unique-per-run checkpoints that are never restarted from, so bit-rot
-    * protection buys nothing and doubles the per-commit file count
-    * (measured: summed per-batch store commit time ~3-5 s across the 32
-    * store instances of a join batch). Both settings are restored
-    * afterwards; a production run keeps checksums on its durable
-    * checkpoints. */
-  private def withStateParts[A](spark: SparkSession)(body: => A): A =
-    withConfs(spark, "spark.sql.shuffle.partitions" -> StateParts,
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")(body)
+  private val JoinStoreV3 = RocksDb ++ Seq(
+    "spark.sql.streaming.join.stateFormatVersion" -> "3",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** Runs `body` with the given session confs set, restoring them after. */
   private def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
@@ -261,6 +236,65 @@ object StreamingOps {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** One input of a [[replay]]: `df` is staged as time chunks on
+    * `orderCol`; `sentinel`, given the max order over all sides, is the
+    * row folded into this side's LAST chunk drop — a watermark-advancing
+    * flush whose own output the demo filters out. Its fields follow
+    * `df`'s columns. */
+  private case class Side(df: DataFrame, orderCol: String,
+      sentinel: Option[Long => Product] = None)
+
+  /** The replay loop of every streaming query. Stages each side's
+    * time-split feed (session-cached, hard-linked per run) and its
+    * sentinel, builds `query` over one file-source stream per side, and
+    * runs it on a fresh checkpoint under [[StateParts]] plus `confs`:
+    * into the memory sink `name` (read it with `spark.table(name)`), or
+    * into `foreachBatch` when given. Batch k drops chunk k of every side
+    * (the sentinels ride the last), then `feed(k)` (the spec-only
+    * MemoryStream harness), then drains with `processAllAvailable`. The
+    * run's whole scratch — feeds, sentinels, checkpoint — lives under one
+    * dir, deleted once the query stops, success or not. With no sides it
+    * is a plain bounded run: `numChunks` drains, nothing staged.
+    *
+    * Returns the sides' max order (the sentinel base), or Long.MaxValue
+    * when no side has a sentinel. */
+  private def replay(spark: SparkSession, name: String, sfDir: String, numChunks: Int,
+      sides: Seq[Side], confs: Seq[(String, String)] = Nil, outputMode: String = "append",
+      foreachBatch: Option[(DataFrame, Long) => Unit] = None, feed: Int => Unit = _ => ())(
+      query: Seq[DataFrame] => DataFrame): Long = {
+    val run = ckptDir(name)
+    try {
+      def key(i: Int) = s"$name|$i|$sfDir"
+      val feeds = sides.zipWithIndex.map { case (s, i) =>
+        stageTimeChunksCached(s.df, s.orderCol, numChunks, s"$run/feed$i", key(i))
+      }
+      val maxOrder =
+        if (sides.exists(_.sentinel.isDefined)) maxUsOrFail(name, feeds: _*) else Long.MaxValue
+      val sentinels = sides.zipWithIndex.map { case (s, i) =>
+        s.sentinel.toSeq.flatMap { sentinel =>
+          val row = sentinel(maxOrder)
+          stageSentinelCached(spark.createDataFrame(
+            java.util.List.of(Row.fromTuple(row)), s.df.schema), s"$run/sent$i", s"${key(i)}|$row")
+        }
+      }
+      val out = query(sides.zip(feeds).map { case (s, f) =>
+        spark.readStream.schema(s.df.schema).parquet(f.watchDir)
+      })
+      withConfs(spark, StateParts ++ confs: _*) {
+        val w = out.writeStream.outputMode(outputMode).option("checkpointLocation", s"$run/ckpt")
+        val q = foreachBatch.fold(w.format("memory").queryName(name))(w.foreachBatch(_)).start()
+        try (0 until numChunks).foreach { k =>
+          feeds.foreach(f => dropFiles(f.watchDir, s"chunk$k", f.chunks(k)))
+          if (k == numChunks - 1) // the sentinel flush rides the last batch
+            feeds.zip(sentinels).foreach { case (f, sent) => dropFiles(f.watchDir, "sentinel", sent) }
+          feed(k)
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+      maxOrder
+    } finally graft.LocalDirs.rmTree(run)
   }
 
   /** Hourly per-type counts/sums computed THROUGH the streaming engine:
@@ -275,24 +309,19 @@ object StreamingOps {
     // RAW physical schema (NOT Tables.events' normalized one: the stream
     // reads the raw files, so the ts normalization must run stream-side).
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // File-stream sources take a directory; glob-filter to the events table.
-    val stream = Tables.normalizeEvents(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir))
-    val agg = stream
-      // Floor-division hour bucket, shared with the batch twin (see
-      // EventOps.hourEpochExpr for the pre-1970 parity rationale).
-      .groupBy(expr(graft.operators.EventOps.hourEpochExpr).as("hour_epoch"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), dsum(col("value"), 24, 6).as("sum_value"))
     val name = "graft_stream_hourly"
-    withStateParts(spark) {
-      val q = agg.writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try q.processAllAvailable() finally q.stop()
+    replay(spark, name, sfDir, 1, Nil, outputMode = "complete") { _ =>
+      // File-stream sources take a directory; glob-filter to the events table.
+      Tables.normalizeEvents(spark.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(sfDir))
+        // Floor-division hour bucket, shared with the batch twin (see
+        // EventOps.hourEpochExpr for the pre-1970 parity rationale).
+        .groupBy(expr(graft.operators.EventOps.hourEpochExpr).as("hour_epoch"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), dsum(col("value"), 24, 6).as("sum_value"))
     }
     // Materialize: the memory-sink table is session-scoped mutable state.
     spark.table(name)
   }
-
   case class Ev(user_id: Long, event_id: Long, us: Long, value: Double)
   case class SessionRow(user_id: Long, session_id: Long, n_events: Long,
       first_event_id: Long, last_event_id: Long, sum_value: Double)
@@ -341,9 +370,7 @@ object StreamingOps {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = stream.sparkSession
     import spark.implicits._
-    stream
-      .withColumn("event_time", timestamp_micros(col("us")))
-      .withWatermark("event_time", watermarkDelay)
+    watermarked(stream.toDF(), watermarkDelay)
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, SessionRow](
@@ -396,43 +423,36 @@ object StreamingOps {
       numChunks: Int = 2): DataFrame = {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val evs = Tables.events(spark, sfDir)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_sessionize_feed"), s"graft_stream_sessionize_feed|$sfDir|$numChunks")
-    val maxUs = maxUsOrFail("streamingSessionize", feed)
-    val stream = spark.readStream.schema(evs.schema).parquet(feed.watchDir).as[Ev]
-    val sessions = sessionizeStream(stream, gapUs)
     val name = "graft_stream_sessionize"
     // Sentinel: one literal row (driver-built by construction, not a
     // corpus collect) whose far-future timestamp pushes the watermark
     // past every real session's gap edge, firing the timeouts. Its own
-    // (marker-id) session stays open and is filtered out below. Pre-staged
-    // before the stream starts and folded into the LAST chunk drop — see
-    // [[stageSentinel]] for why this costs one fewer micro-batch.
-    val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0)).toDS().toDF(),
-      s"${feed.baseDir}/sentinel", s"sessionize-sent|$sfDir|$gapMinutes")
-    // try/finally: a failed run must still reclaim the staged corpus copy
-    // (tmpfs scratch) — the memory-sink table is complete or irrelevant.
-    try withStateParts(spark) {
-      val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(feed, k)
-          if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    // Sentinel discrimination by the event_id = -1 MARKER the feeder set,
-    // never by user_id sign: negative/NULL user ids are legal data the
-    // quality gate contemplates, so a sign filter would silently drop real
-    // rows under generator drift (ADVICE r6). A real session can't consist
-    // solely of the marker id — only the sentinel's own session matches.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+    // (marker-id) session stays open and is filtered out below.
+    replay(spark, name, sfDir, numChunks, Seq(Side(sessionEvents(spark, sfDir), "us",
+        Some(maxUs => Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0))))) { s =>
+      sessionizeStream(s.head.as[Ev], gapUs).toDF()
+    }
+    spark.table(name).filter(NotSentinelSession)
   }
+
+  /** (user_id, event_id, us, value): the event columns the three
+    * sessionizers replay. */
+  private def sessionEvents(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.events(spark, sfDir).selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
+
+  /** Sentinel discrimination by the event_id = -1 MARKER the sessionizers'
+    * sentinel row carries, never by user_id sign: negative/NULL user ids
+    * are legal data the quality gate contemplates, so a sign filter would
+    * silently drop real rows under generator drift (ADVICE r6). A real
+    * session can't consist solely of the marker id — only the sentinel's
+    * own session matches. */
+  private val NotSentinelSession =
+    !(col("first_event_id") === -1L && col("last_event_id") === -1L)
+
+  /** `df` with `event_time` (from its `us` column) as the watermark,
+    * `delay` behind the max event time seen. */
+  private def watermarked(df: DataFrame, delay: String = "0 seconds"): DataFrame =
+    df.withColumn("event_time", timestamp_micros(col("us"))).withWatermark("event_time", delay)
 
   /** Gap-based sessionization via Spark's NATIVE `session_window`
     * aggregation — the declarative twin of [[sessionizeStream]]'s
@@ -454,44 +474,23 @@ object StreamingOps {
     * as [[streamingSessionize]]. */
   def streamingSessionWindow(spark: SparkSession, sfDir: String, gapMinutes: Int = 30,
       numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val evs = Tables.events(spark, sfDir)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_session_native_feed"), s"graft_stream_session_native_feed|$sfDir|$numChunks")
-    val maxUs = maxUsOrFail("streamingSessionWindow", feed)
-    val sessions = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-      .withColumn("event_time", timestamp_micros(col("us")))
-      .withWatermark("event_time", "0 seconds")
-      .groupBy(session_window(col("event_time"), s"$gapMinutes minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event_id"),
-        max(col("event_id")).as("last_event_id"), dsum(col("value"), 24, 6).as("sum_value"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        (unix_micros(col("session_window.end")) - gapUs).as("session_last_us"),
-        col("n_events"), col("first_event_id"), col("last_event_id"), col("sum_value"))
     val name = "graft_stream_session_native"
     // Far-future sentinel (same pattern as streamingSessionize): advances
     // the watermark past every real session's end so append mode emits
-    // them all; its own session is filtered out below. Pre-staged, folded
-    // into the last chunk drop ([[stageSentinel]]).
-    val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 2000L * gapUs, 0.0)).toDS().toDF(),
-      s"${feed.baseDir}/sentinel", s"swin-sent|$sfDir|$gapMinutes")
-    try withStateParts(spark) {
-      val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(feed, k)
-          if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
-    // Marker-based sentinel filter — see [[streamingSessionize]]'s note.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+    // them all; its own session is filtered out below.
+    replay(spark, name, sfDir, numChunks, Seq(Side(sessionEvents(spark, sfDir), "us",
+        Some(maxUs => Ev(-1L, -1L, maxUs + 2000L * gapUs, 0.0))))) { s =>
+      watermarked(s.head)
+        .groupBy(session_window(col("event_time"), s"$gapMinutes minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event_id"),
+          max(col("event_id")).as("last_event_id"), dsum(col("value"), 24, 6).as("sum_value"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("session_start_us"),
+          (unix_micros(col("session_window.end")) - gapUs).as("session_last_us"),
+          col("n_events"), col("first_event_id"), col("last_event_id"), col("sum_value"))
+    }
+    spark.table(name).filter(NotSentinelSession)
   }
 
   /** Gap sessionization as a [[org.apache.spark.sql.streaming.StatefulProcessor]]
@@ -575,44 +574,16 @@ object StreamingOps {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val gapUs = gapMinutes * 60L * 1000000L
-    val evs = Tables.events(spark, sfDir)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_session_tws"
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks,
-        ckptDir("graft_stream_session_tws_feed"), s"graft_stream_session_tws_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingSessionizeTws", feed)
-        val sessions = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[Ev]
-          .groupByKey(_.user_id)
-          .transformWithState(new GapSessionProcessor(gapUs),
-            TimeMode.EventTime(), OutputMode.Append())
-        // Pre-staged sentinel, folded into the last chunk ([[stageSentinel]]).
-        val sent = stageSentinelCached(Seq(Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"tws-sent|$sfDir|$gapMinutes")
-        withStateParts(spark) {
-          val q = sessions.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    // Marker-based sentinel filter — see [[streamingSessionize]]'s note.
-    spark.table(name)
-      .filter(!(col("first_event_id") === -1L && col("last_event_id") === -1L))
+    replay(spark, name, sfDir, numChunks, Seq(Side(sessionEvents(spark, sfDir), "us",
+        Some(maxUs => Ev(-1L, -1L, maxUs + 1000L * gapUs, 0.0)))), RocksDb) { s =>
+      watermarked(s.head).as[Ev]
+        .groupByKey(_.user_id)
+        .transformWithState(new GapSessionProcessor(gapUs),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+    }
+    spark.table(name).filter(NotSentinelSession)
   }
 
   /** Island oracle with the session-window boundary rule (`>= gap` starts a
@@ -685,27 +656,13 @@ object StreamingOps {
     import org.apache.spark.sql.expressions.Window
     val evs = Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "event_type")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_transitions"
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks,
-        ckptDir("graft_stream_transitions_feed"), s"graft_stream_transitions_feed|$sfDir|$numChunks")
-      try {
-        val steps = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .as[TEv]
-          .groupByKey(_.user_id)
-          .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append())
-        withStateParts(spark) {
-          val q = steps.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-          finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
+    replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us")), RocksDb) { s =>
+      s.head.as[TEv]
+        .groupByKey(_.user_id)
+        .transformWithState(new TransitionProcessor, TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }
     spark.table(name)
       .groupBy(col("prev_type"), col("next_type"))
       .agg(count(lit(1)).as("n"))
@@ -804,50 +761,28 @@ object StreamingOps {
         expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us"),
         Hashing.md5Long(col("user_id").cast("string")).as("h"),
         expr("ts div 1000").as("us"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_kmv"
-    var sentWin = Long.MaxValue // sentinel window start, set once staged
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_kmv_feed"), s"graft_stream_kmv_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingKmv", feed)
-        val sketches = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[KEv]
-          .groupByKey(_.win_us)
-          .transformWithState(
-            new KmvWindowProcessor(TextAnalysis.KmvK, TextAnalysis.KmvNumerator),
-            TimeMode.EventTime(), OutputMode.Append())
-        // Sentinel two windows past the data: its OWN window's end stays
-        // above the watermark it sets, so it never emits; every real
-        // window's end falls below it, so every real timer fires.
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(Seq(KEv(sentWin, -1L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"kmv-sent|$sfDir")
-        withStateParts(spark) {
-          val q = sketches.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
+    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
+        Some(maxUs => KEv(sentinelWin(maxUs), -1L, sentinelWin(maxUs))))), RocksDb) { s =>
+      watermarked(s.head).as[KEv]
+        .groupByKey(_.win_us)
+        .transformWithState(
+          new KmvWindowProcessor(TextAnalysis.KmvK, TextAnalysis.KmvNumerator),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+    }
     // Structural sentinel filter: the sentinel's window START is beyond
     // every real event by construction (no marker-column dependence). Its
     // timer never fires anyway (own window end > the watermark it sets) —
     // this is belt-and-braces against a future flush-discipline change.
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
   }
+
+  /** The window sketches' sentinel window (and event time): two windows
+    * past the data, so its OWN window's end stays above the watermark it
+    * sets and it never emits, while every real window's end falls below
+    * it and every real timer fires. */
+  private def sentinelWin(maxUs: Long): Long = (maxUs / WinUs + 2L) * WinUs
 
   case class HllEv(win_us: Long, bucket: Long, rho: Long, us: Long)
   case class HllSt(regs: Array[Long])
@@ -937,42 +872,17 @@ object StreamingOps {
         expr(s"CASE WHEN x = 0 THEN ${TextAnalysis.HllRhoMax} ELSE least(bit_count((x & (-x)) - 1) + 1, ${TextAnalysis.HllRhoMax}) END")
           .cast("long").as("rho"),
         col("us"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_hll"
-    var sentWin = Long.MaxValue
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_hll_feed"), s"graft_stream_hll_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingHll", feed)
-        val sketches = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[HllEv]
-          .groupByKey(_.win_us)
-          .transformWithState(
-            new HllWindowProcessor(m.toInt, TextAnalysis.HllNumerator),
-            TimeMode.EventTime(), OutputMode.Append())
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(Seq(HllEv(sentWin, 0L, 1L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"hll-sent|$sfDir")
-        withStateParts(spark) {
-          val q = sketches.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
+        Some(maxUs => HllEv(sentinelWin(maxUs), 0L, 1L, sentinelWin(maxUs))))), RocksDb) { s =>
+      watermarked(s.head).as[HllEv]
+        .groupByKey(_.win_us)
+        .transformWithState(
+          new HllWindowProcessor(m.toInt, TextAnalysis.HllNumerator),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+    }
+    spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
   }
 
   /** Batch oracle for [[streamingHll]]: identical register math per
@@ -1090,42 +1000,16 @@ object StreamingOps {
     val probes = CmsProbeUsers.map { u =>
       u -> Array.tabulate(depth)(d => (Hashing.md5LongJvm(s"$d:$u") % width).toInt)
     }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.get(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "graft_stream_cms"
-    var sentWin = Long.MaxValue
-    try {
-      val feed = stageTimeChunksCached(evs, "us", numChunks, ckptDir("graft_stream_cms_feed"), s"graft_stream_cms_feed|$sfDir|$numChunks")
-      try {
-        val maxUs = maxUsOrFail("streamingCms", feed)
-        val rows = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-          .withColumn("event_time", timestamp_micros(col("us")))
-          .withWatermark("event_time", "0 seconds")
-          .as[CmsEv]
-          .groupByKey(_.win_us)
-          .transformWithState(new CmsWindowProcessor(depth, width, probes),
-            TimeMode.EventTime(), OutputMode.Append())
-        val sentUs = (maxUs / WinUs + 2L) * WinUs
-        sentWin = sentUs / WinUs * WinUs
-        val sent = stageSentinelCached(
-          Seq(CmsEv(sentWin, 0L, 0L, 0L, 0L, sentUs)).toDS().toDF(),
-          s"${feed.baseDir}/sentinel", s"cms-sent|$sfDir")
-        withStateParts(spark) {
-          val q = rows.writeStream.outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckptDir(name)).start()
-          try {
-            (0 until numChunks).foreach { k =>
-              dropChunk(feed, k)
-              if (k == numChunks - 1) dropFiles(feed.watchDir, "sentinel", sent)
-              q.processAllAvailable()
-            }
-          } finally q.stop()
-        }
-      } finally cleanupFeed(feed)
-    } finally spark.conf.set(providerKey, prevProvider)
-    spark.table(name).filter(col("win_us") < lit(sentWin))
+    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
+        Some(maxUs => CmsEv(sentinelWin(maxUs), 0L, 0L, 0L, 0L, sentinelWin(maxUs))))), RocksDb) { s =>
+      watermarked(s.head).as[CmsEv]
+        .groupByKey(_.win_us)
+        .transformWithState(new CmsWindowProcessor(depth, width, probes),
+          TimeMode.EventTime(), OutputMode.Append())
+        .toDF()
+    }
+    spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
   }
 
   /** Batch oracle for [[streamingCms]]: per-window sketch cells from the
@@ -1193,37 +1077,41 @@ object StreamingOps {
     * value-for-value. */
   def streamingIntervalJoin(spark: SparkSession, sfDir: String,
       numChunks: Int = 2): DataFrame = {
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_ivjoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"ivjoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"ivjoin-purchases|$sfDir|$numChunks")
-    val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+    val name = "graft_stream_ivjoin"
+    replay(spark, name, sfDir, numChunks, joinSides(spark, sfDir, flush = false), JoinStoreV3) { s =>
+      purchaseClickJoin(s, "inner")
+        .select(col("purchase_id"), col("p_user").as("user_id"), col("click_id"))
+    }
+    spark.table(name)
+  }
+
+  /** The join demos' (clicks, purchases) sides as (user_id, event_id, us).
+    * With `flush`, each side carries ONE sentinel row — event_id = -1
+    * marker, negative user_id (-1 clicks, -2 purchases), event time two
+    * hours past the corpus — folded into the final chunk drop: that batch's
+    * max event time advances the watermark past every real row's join
+    * window, and the engine's own watermark-required no-data micro-batch
+    * evicts-and-emits the outer tail. */
+  private def joinSides(spark: SparkSession, sfDir: String, flush: Boolean): Seq[Side] =
+    Seq("click" -> -1L, "purchase" -> -2L).map { case (tpe, sentinelUser) =>
+      Side(Tables.events(spark, sfDir).filter(col("event_type") === tpe)
+          .selectExpr("user_id", "event_id", "ts div 1000 AS us"), "us",
+        if (flush) Some(maxUs => (sentinelUser, -1L, maxUs + 2L * 3600L * 1000000L)) else None)
+    }
+
+  /** Purchases joined to the same user's clicks from the preceding hour,
+    * over the replay's (clicks, purchases) streams, each watermarked at
+    * its own max event time. */
+  private def purchaseClickJoin(streams: Seq[DataFrame], joinType: String): DataFrame = {
+    val Seq(c, p) = streams
+    val clicks = c.select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         timestamp_micros(col("us")).as("c_time"))
       .withWatermark("c_time", "0 seconds")
-    val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+    val purchases = p.select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         timestamp_micros(col("us")).as("p_time"))
       .withWatermark("p_time", "0 seconds")
-    val joined = purchases.join(clicks, expr(
-      "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"))
-      .select(col("purchase_id"), col("p_user").as("user_id"), col("click_id"))
-    val name = "graft_stream_ivjoin"
-    try withJoinStoreV3(spark) { withStateParts(spark) {
-      val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k =>
-          dropChunk(cFeed, k); dropChunk(pFeed, k)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } } finally cleanupFeed(cFeed, pFeed)
-    spark.table(name)
+    purchases.join(clicks, expr(
+      "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"), joinType)
   }
 
   /** Watermarked stream-stream LEFT OUTER interval join — the fourth
@@ -1253,58 +1141,11 @@ object StreamingOps {
     * a topic before decommission. */
   def streamingJoinOuter(spark: SparkSession, sfDir: String,
       numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_lojoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"lojoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"lojoin-purchases|$sfDir|$numChunks")
     val name = "graft_stream_lojoin"
-    // try/finally: the staged corpus copies are garbage whether the run
-    // succeeded or threw — without it, a failed run leaks them into /dev/shm.
-    try {
-      // NULL-safe per side: either side may legitimately be empty (a round
-      // with no clicks); only both-empty aborts. Read from the feeds'
-      // staging pass — no extra jobs.
-      val maxUs = maxUsOrFail("streamingJoinOuter", cFeed, pFeed)
-      val hourUs = 3600L * 1000000L
-      // Pre-staged per-side sentinels ([[stageSentinel]]): renamed in with
-      // the last chunk so chunk + flush share ONE micro-batch listing.
-      def sentinel(userId: Long, dir: String) = stageSentinelCached(
-        Seq((userId, -1L, maxUs + 2L * hourUs)).toDF("user_id", "event_id", "us"), dir,
-        s"lojoin-sent|$sfDir|$userId")
-      val cSent = sentinel(-1L, s"$base/sent_c")
-      val pSent = sentinel(-2L, s"$base/sent_p")
-      val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          timestamp_micros(col("us")).as("c_time"))
-        .withWatermark("c_time", "0 seconds")
-      val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          timestamp_micros(col("us")).as("p_time"))
-        .withWatermark("p_time", "0 seconds")
-      val joined = purchases.join(clicks, expr(
-          "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"),
-          "leftOuter")
+    replay(spark, name, sfDir, numChunks, joinSides(spark, sfDir, flush = true), JoinStoreV3) { s =>
+      purchaseClickJoin(s, "leftOuter")
         .select(col("purchase_id"), col("p_user").as("user_id"), col("click_id"))
-      withJoinStoreV3(spark) { withStateParts(spark) {
-        val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckptDir(name)).start()
-        try {
-          (0 until numChunks).foreach { k =>
-            dropChunk(cFeed, k); dropChunk(pFeed, k)
-            if (k == numChunks - 1) { // fold the watermark flush into the last batch
-              dropFiles(cFeed.watchDir, "sentinel", cSent)
-              dropFiles(pFeed.watchDir, "sentinel", pSent)
-            }
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } }
-    } finally rmTree(base) // feeds + sentinel staging share the base dir
+    }
     // The purchase-side sentinel surfaces as an unmatched row whose
     // purchase_id IS the event_id = -1 marker the feeder wrote; the click
     // sentinel is inner-side and never emits. Discriminating on the marker
@@ -1335,57 +1176,12 @@ object StreamingOps {
     * the event_id = -1 marker they carry, never by the user_id sign. */
   def streamingJoinFull(spark: SparkSession, sfDir: String,
       numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    def side(tpe: String) = Tables.events(spark, sfDir)
-      .filter(col("event_type") === tpe)
-      .selectExpr("user_id", "event_id", "ts div 1000 AS us")
-    val clickDf = side("click")
-    val purchDf = side("purchase")
-    val base = ckptDir("graft_stream_fojoin_feed")
-    val cFeed = stageTimeChunksCached(clickDf, "us", numChunks, s"$base/clicks", s"fojoin-clicks|$sfDir|$numChunks")
-    val pFeed = stageTimeChunksCached(purchDf, "us", numChunks, s"$base/purchases", s"fojoin-purchases|$sfDir|$numChunks")
     val name = "graft_stream_fojoin"
-    try {
-      // NULL-safe per side: either side may legitimately be empty (a round
-      // with no clicks); only both-empty aborts. Read from the feeds'
-      // staging pass — no extra jobs.
-      val maxUs = maxUsOrFail("streamingJoinFull", cFeed, pFeed)
-      val hourUs = 3600L * 1000000L
-      // Pre-staged per-side sentinels ([[stageSentinel]]): renamed in with
-      // the last chunk so chunk + flush share ONE micro-batch listing.
-      def sentinel(userId: Long, dir: String) = stageSentinelCached(
-        Seq((userId, -1L, maxUs + 2L * hourUs)).toDF("user_id", "event_id", "us"), dir,
-        s"fojoin-sent|$sfDir|$userId")
-      val cSent = sentinel(-1L, s"$base/sent_c")
-      val pSent = sentinel(-2L, s"$base/sent_p")
-      val clicks = spark.readStream.schema(clickDf.schema).parquet(cFeed.watchDir)
-        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-          timestamp_micros(col("us")).as("c_time"))
-        .withWatermark("c_time", "0 seconds")
-      val purchases = spark.readStream.schema(purchDf.schema).parquet(pFeed.watchDir)
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          timestamp_micros(col("us")).as("p_time"))
-        .withWatermark("p_time", "0 seconds")
-      val joined = purchases.join(clicks, expr(
-          "p_user = c_user AND c_time >= p_time - INTERVAL 1 HOUR AND c_time <= p_time"),
-          "fullOuter")
+    replay(spark, name, sfDir, numChunks, joinSides(spark, sfDir, flush = true), JoinStoreV3) { s =>
+      purchaseClickJoin(s, "fullOuter")
         .select(col("purchase_id"),
           coalesce(col("p_user"), col("c_user")).as("user_id"), col("click_id"))
-      withJoinStoreV3(spark) { withStateParts(spark) {
-        val q = joined.writeStream.outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckptDir(name)).start()
-        try {
-          (0 until numChunks).foreach { k =>
-            dropChunk(cFeed, k); dropChunk(pFeed, k)
-            if (k == numChunks - 1) { // fold the watermark flush into the last batch
-              dropFiles(cFeed.watchDir, "sentinel", cSent)
-              dropFiles(pFeed.watchDir, "sentinel", pSent)
-            }
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } }
-    } finally rmTree(base) // feeds + sentinel staging share the base dir
+    }
     // Sentinels surface only as unmatched outer rows carrying the
     // event_id = -1 marker in their surviving side's id column (their
     // far-future event times sit beyond every real join window, so they can
@@ -1429,28 +1225,20 @@ object StreamingOps {
   def streamingEnrich(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
     val purch = Tables.events(spark, sfDir).filter(col("event_type") === "purchase")
       .selectExpr("event_id", "user_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(purch, "us", numChunks,
-      ckptDir("graft_stream_enrich_feed"), s"graft_stream_enrich_feed|$sfDir|$numChunks")
-    // The static side is materialized ONCE (r14, guide §2.1/§5): a
-    // stream-static join re-plans AND re-executes the static subtree every
-    // micro-batch, so without this the customer⋈nation join ran per batch
-    // (4× here). The checkpoint is the "cache the enrichment dim" posture a
-    // production ingest takes — per batch the dim side is a block scan.
-    val dims = Tables.customer(spark, sfDir)
-      .join(broadcast(Tables.nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"))
-      .localCheckpoint()
-    val enriched = spark.readStream.schema(purch.schema).parquet(feed.watchDir)
-      .join(dims, col("user_id") === col("c_custkey"))
-      .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value"))
     val name = "graft_stream_enrich"
-    try withStateParts(spark) {
-      val q = enriched.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
+    replay(spark, name, sfDir, numChunks, Seq(Side(purch, "us"))) { s =>
+      // The static side is materialized ONCE (r14, guide §2.1/§5): a
+      // stream-static join re-plans AND re-executes the static subtree every
+      // micro-batch, so without this the customer⋈nation join ran per batch
+      // (4× here). The checkpoint is the "cache the enrichment dim" posture a
+      // production ingest takes — per batch the dim side is a block scan.
+      val dims = Tables.customer(spark, sfDir)
+        .join(broadcast(Tables.nation(spark, sfDir)), col("c_nationkey") === col("n_nationkey"))
+        .select(col("c_custkey"), col("c_name"), col("n_name"))
+        .localCheckpoint()
+      s.head.join(dims, col("user_id") === col("c_custkey"))
+        .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value"))
+    }
     spark.table(name)
   }
 
@@ -1474,19 +1262,10 @@ object StreamingOps {
     * operator's semantics exactly. */
   def streamingDedup(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
     val docs = Tables.documents(spark, sfDir).selectExpr("doc_id", "text")
-    val feed = stageTimeChunksCached(docs, "doc_id", numChunks,
-      ckptDir("graft_stream_dedup_feed"), s"graft_stream_dedup_feed|$sfDir|$numChunks")
-    val deduped = spark.readStream.schema(docs.schema).parquet(feed.watchDir)
-      .select(md5(col("text")).as("content_hash"))
-      .dropDuplicates("content_hash")
     val name = "graft_stream_dedup"
-    try withStateParts(spark) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
+    replay(spark, name, sfDir, numChunks, Seq(Side(docs, "doc_id"))) { s =>
+      s.head.select(md5(col("text")).as("content_hash")).dropDuplicates("content_hash")
+    }
     spark.table(name)
   }
 
@@ -1517,21 +1296,12 @@ object StreamingOps {
     require(span.getLong(1) - span.getLong(0) < horizonDays * 86400L * 1000000L,
       s"events span exceeds the $horizon dedup horizon; the DISTINCT oracle " +
         "no longer models eviction-free behavior - widen horizonDays")
-    val feed = stageTimeChunksCached(evs, "us", numChunks,
-      ckptDir("graft_stream_dedup_wm_feed"), s"graft_stream_dedup_wm_feed|$sfDir|$numChunks")
-    val deduped = spark.readStream.schema(evs.schema).parquet(feed.watchDir)
-      .withColumn("event_time", timestamp_micros(col("us")))
-      .withWatermark("event_time", horizon)
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
     val name = "graft_stream_dedup_wm"
-    try withStateParts(spark) {
-      val q = deduped.writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckptDir(name)).start()
-      try {
-        (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-      } finally q.stop()
-    } finally cleanupFeed(feed)
+    replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us"))) { s =>
+      watermarked(s.head, horizon)
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))
+    }
     spark.table(name)
   }
 
@@ -1555,57 +1325,45 @@ object StreamingOps {
     * Scale: every merge is |keys|-bounded (both sides pre-reduced), the
     * snapshot is partitioned storage (not driver memory), and at 100 TB
     * the same loop runs with bucket-co-located snapshot+batch on the merge
-    * key. `feed` drives the ingest (chunk drops or MemoryStream pushes);
-    * the returned frame is the final snapshot. */
-  private def upsertRun(spark: SparkSession, stream: Dataset[UpEv])(
-      feed: StreamingQuery => Unit): DataFrame = {
+    * key. `run` starts the ingest (chunk drops or MemoryStream pushes)
+    * with the merge as its `foreachBatch`; the returned frame is the final
+    * snapshot. */
+  private def upsertRun(spark: SparkSession)(
+      run: ((DataFrame, Long) => Unit) => Unit): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val baseDir = ckptDir("graft_stream_upsert_snap")
     var currentVersion = -1L
     def snapPath(v: Long) = s"$baseDir/v$v"
-    def deleteDir(path: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path))
-    }
-    withStateParts(spark) {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckptDir("graft_stream_upsert"))
-        .foreachBatch { (batch: Dataset[UpEv], batchId: Long) =>
-          val w = Window.partitionBy(col("user_id"))
-            .orderBy(col("us").desc, col("event_id").desc)
-          val latest = batch.toDF()
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-          val merged =
-            if (currentVersion < 0) latest
-            else {
-              val snap = spark.read.parquet(snapPath(currentVersion))
-              snap.as("s").join(latest.as("u"),
-                  col("s.user_id") === col("u.user_id"), "full_outer")
-                .select(
-                  coalesce(col("u.user_id"), col("s.user_id")).as("user_id"),
-                  when(col("s.user_id").isNull ||
-                      (col("u.user_id").isNotNull &&
-                        (col("u.us") > col("s.us") ||
-                          (col("u.us") === col("s.us") && col("u.event_id") > col("s.event_id")))),
-                    struct(col("u.us").as("us"), col("u.event_id").as("event_id"),
-                      col("u.value").as("value")))
-                    .otherwise(struct(col("s.us").as("us"), col("s.event_id").as("event_id"),
-                      col("s.value").as("value"))).as("r"))
-                .select(col("user_id"), col("r.us").as("us"),
-                  col("r.event_id").as("event_id"), col("r.value").as("value"))
-            }
-          merged.write.mode("overwrite").parquet(snapPath(batchId))
-          val superseded = currentVersion
-          currentVersion = batchId
-          // A/B swap: the new version is durable, so the old one (fully
-          // read by the merge's write above) is garbage now.
-          if (superseded >= 0) deleteDir(snapPath(superseded))
+    run { (batch, batchId) =>
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("us").desc, col("event_id").desc)
+      val latest = batch
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+      val merged =
+        if (currentVersion < 0) latest
+        else {
+          val snap = spark.read.parquet(snapPath(currentVersion))
+          snap.as("s").join(latest.as("u"),
+              col("s.user_id") === col("u.user_id"), "full_outer")
+            .select(
+              coalesce(col("u.user_id"), col("s.user_id")).as("user_id"),
+              when(col("s.user_id").isNull ||
+                  (col("u.user_id").isNotNull &&
+                    (col("u.us") > col("s.us") ||
+                      (col("u.us") === col("s.us") && col("u.event_id") > col("s.event_id")))),
+                struct(col("u.us").as("us"), col("u.event_id").as("event_id"),
+                  col("u.value").as("value")))
+                .otherwise(struct(col("s.us").as("us"), col("s.event_id").as("event_id"),
+                  col("s.value").as("value"))).as("r"))
+            .select(col("user_id"), col("r.us").as("us"),
+              col("r.event_id").as("event_id"), col("r.value").as("value"))
         }
-        .start()
-      try feed(q) finally q.stop()
+      merged.write.mode("overwrite").parquet(snapPath(batchId))
+      val superseded = currentVersion
+      currentVersion = batchId
+      // A/B swap: the new version is durable, so the old one (fully
+      // read by the merge's write above) is garbage now.
+      if (superseded >= 0) graft.LocalDirs.rmTree(snapPath(superseded))
     }
     if (currentVersion < 0) // empty feed → no batch ever fired, no snapshot
       spark.range(0).selectExpr("id AS user_id", "id AS last_us",
@@ -1621,18 +1379,15 @@ object StreamingOps {
     * snapshot; the oracle checks it equals the batch
     * latest-purchase-per-user over the whole table. */
   def streamingUpsert(spark: SparkSession, sfDir: String, numChunks: Int = 3): DataFrame = {
-    import spark.implicits._
     val purchases = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    val feed = stageTimeChunksCached(purchases, "us", numChunks,
-      ckptDir("graft_stream_upsert_feed"), s"graft_stream_upsert_feed|$sfDir|$numChunks")
-    val stream = spark.readStream.schema(purchases.schema).parquet(feed.watchDir).as[UpEv]
     // The snapshot lives in its own dir (and must survive — the returned
-    // frame reads it lazily); only the feed copy is garbage, success or not.
-    try upsertRun(spark, stream) { q =>
-      (0 until numChunks).foreach { k => dropChunk(feed, k); q.processAllAvailable() }
-    } finally cleanupFeed(feed)
+    // frame reads it lazily); the replay deletes only its feed and checkpoint.
+    upsertRun(spark) { merge =>
+      replay(spark, "graft_stream_upsert", sfDir, numChunks, Seq(Side(purchases, "us")),
+        foreachBatch = Some(merge))(_.head)
+    }
   }
 
   /** Spec-only harness of [[upsertRun]] over an explicit feed — crafted and
@@ -1645,12 +1400,11 @@ object StreamingOps {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[UpEv]
-    upsertRun(spark, source.toDS()) { q =>
-      val chunkSize = math.max(1, math.ceil(purchases.length.toDouble / numChunks).toInt)
-      purchases.grouped(chunkSize).foreach { chunk =>
-        source.addData(chunk.toSeq)
-        q.processAllAvailable()
-      }
+    val chunkSize = math.max(1, math.ceil(purchases.length.toDouble / numChunks).toInt)
+    val chunks = purchases.grouped(chunkSize).toIndexedSeq
+    upsertRun(spark) { merge =>
+      replay(spark, "graft_stream_upsert", "", chunks.size, Nil, foreachBatch = Some(merge),
+        feed = k => source.addData(chunks(k)))(_ => source.toDS().toDF())
     }
   }
 

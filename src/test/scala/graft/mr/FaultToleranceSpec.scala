@@ -62,12 +62,25 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(readLines(out.resolve("part-00000")) === readLines(Paths.get(WcGolden)))
   }
 
-  /** Generated Zipf-ish corpus in four files, no reference checkout. */
+  /** Generated corpus in four files, no reference checkout: a Zipf-ish
+    * draw over nine edge-case words for one token in four, and a word from
+    * a million-word generated vocabulary for the rest, so each reduce
+    * partition's part file runs to tens of KiB. */
   private lazy val corpus: Seq[String] = {
     val rnd = new scala.util.Random(3)
     val words = Vector("the", "a", "", "[x]", "Zipf", "\u00e9t\u00e9", "\ud83d\ude00", "\ue000", "tail")
     Seq.fill(1600)(Seq.fill(1 + rnd.nextInt(6))(
-      words(math.min(words.size - 1, (-math.log(rnd.nextDouble()) * 2).toInt))).mkString(" "))
+      if (rnd.nextInt(4) > 0) f"generated-word-${rnd.nextInt(1 << 20)}%07d"
+      else words(math.min(words.size - 1, (-math.log(rnd.nextDouble()) * 2).toInt))).mkString(" "))
+  }
+
+  /** The sink writes through an 8 KiB buffer; a reduce drill must die only
+    * after its part's first `n` lines carry more bytes than that, so the
+    * dying attempt has put a torn file on disk, not just in memory. */
+  private def assertTearsFile(part: Array[Byte], n: Int): Unit = {
+    val bytes = new String(part, StandardCharsets.UTF_8).split("\n").take(n)
+      .map(_.getBytes(StandardCharsets.UTF_8).length + 1).sum
+    assert(bytes > 8192, s"the drill dies after $n lines, only $bytes bytes: still inside the writer buffer")
   }
 
   private lazy val corpusDir: Path = {
@@ -147,6 +160,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     val undisturbed = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
     val half = new String(undisturbed(0), StandardCharsets.UTF_8).count(_ == '\n') / 2
     assert(half > 0)
+    assertTearsFile(undisturbed(0), half)
     FaultToleranceSpec.drills.set(0)
     val drilled = runWordCount(Native(NativeQueries.wcMapSh), dieAfter(0, half, NativeQueries.wcReduceSh))
     assertSameParts(drilled, undisturbed)
@@ -167,6 +181,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     val undisturbed = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
     val half = new String(undisturbed(1), StandardCharsets.UTF_8).count(_ == '\n') / 2
     assert(half > 0)
+    assertTearsFile(undisturbed(1), half)
     FaultToleranceSpec.drills.set(0)
     val out = tmpOut()
     intercept[org.apache.spark.SparkException] {

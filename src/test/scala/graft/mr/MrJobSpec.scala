@@ -262,14 +262,14 @@ class MrJobSpec extends AnyFunSuite {
     assert(MrJob.readInput(spark.sparkContext, files, spec).getNumPartitions > 1)
   }
 
-  test("Md5LinePartitioner is not equal to Md5Partitioner (different routing)") {
-    // If these compared equal, Spark would treat RDDs partitioned by each
-    // as co-partitioned and skip the shuffle on a cogroup — wrong results.
-    assert(new Md5Partitioner(4) != new Md5LinePartitioner(4))
-    assert(new Md5LinePartitioner(4) != new Md5Partitioner(4))
-    assert(new Md5Partitioner(4) == new Md5Partitioner(4))
+  test("Md5LinePartitioner equality: same R equal, different R not") {
+    // Equal partitioners make Spark treat RDDs partitioned by each as
+    // co-partitioned and skip the shuffle on a cogroup, so equality must
+    // mean identical routing.
     assert(new Md5LinePartitioner(4) == new Md5LinePartitioner(4))
-    assert(new Md5Partitioner(4) != new Md5Partitioner(8))
+    assert(new Md5LinePartitioner(4).hashCode == new Md5LinePartitioner(4).hashCode)
+    assert(new Md5LinePartitioner(4) != new Md5LinePartitioner(8))
+    assert(new Md5LinePartitioner(4) != new org.apache.spark.HashPartitioner(4))
   }
 
   test("FIFO engine assigns sequential job ids") {

@@ -184,12 +184,70 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming sessionize (chunked feed) equals the batch sessionize rows") {
-    val streamed = StreamingOps.streamingSessionize(spark, Sf)
-      .collect().map(_.toSeq).toSet
     val batch = EventOps.sessionize(spark, Sf)
       .collect().map(_.toSeq).toSet
+    assert(batch.nonEmpty)
+    // Both arbitrary-state forms: flatMapGroupsWithState and the
+    // transformWithState processor (under its pinned RocksDB store).
+    for ((form, run) <- Seq(
+        "flatMapGroupsWithState" -> (() => StreamingOps.streamingSessionize(spark, Sf)),
+        "transformWithState" -> (() => StreamingOps.streamingSessionizeTws(spark, Sf)))) {
+      val streamed = run().collect().map(_.toSeq).toSet
+      assert(streamed === batch, s"$form sessions diverged from the batch sessionize")
+    }
+  }
+
+  test("streaming transitions (transformWithState, chunked feed) equal the batch matrix") {
+    val streamed = StreamingOps.streamingTransitions(spark, Sf).collect().map(_.toSeq).toSet
+    val batch = EventOps.transitions(spark, Sf).collect().map(_.toSeq).toSet
     assert(streamed === batch)
     assert(streamed.nonEmpty)
+  }
+
+  test("stream-stream FULL OUTER join equals batch; the flush drains both null tails") {
+    import org.apache.spark.sql.functions._
+    def opt(r: org.apache.spark.sql.Row, i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    def key(r: org.apache.spark.sql.Row) = (opt(r, 0), opt(r, 1), opt(r, 2))
+    val streamed = StreamingOps.streamingJoinFull(spark, Sf).collect().map(key).toSet
+    val ev = graft.Tables.events(spark, Sf).withColumn("us", expr("ts div 1000"))
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("us").as("pus"))
+    val c = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("cu"), col("us").as("cus"))
+    val batch = p.join(c, col("user_id") === col("cu") &&
+        col("cus") >= col("pus") - 3600000000L && col("cus") <= col("pus"), "full_outer")
+      .select(col("purchase_id"), coalesce(col("user_id"), col("cu")), col("click_id"))
+      .collect().map(key).toSet
+    assert(streamed === batch)
+    assert(streamed.exists(_._1.isEmpty), "unmatched clicks must surface")
+    assert(streamed.exists(_._3.isEmpty), "unmatched purchases must surface")
+    assert(streamed.exists(r => r._1.nonEmpty && r._3.nonEmpty))
+  }
+
+  test("stream-static enrichment equals the batch purchases ⋈ customer ⋈ nation") {
+    import org.apache.spark.sql.functions._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val streamed = rows(StreamingOps.streamingEnrich(spark, Sf))
+    val batch = rows(graft.Tables.events(spark, Sf).filter(col("event_type") === "purchase")
+      .join(graft.Tables.customer(spark, Sf), col("user_id") === col("c_custkey"))
+      .join(graft.Tables.nation(spark, Sf), col("c_nationkey") === col("n_nationkey"))
+      .select(col("event_id"), col("user_id"), col("c_name"), col("n_name"), col("value")))
+    assert(streamed === batch)
+    assert(streamed.nonEmpty)
+  }
+
+  test("a replay deletes its checkpoint and feeds: no graft-ckpt entry outlives the run") {
+    val root = new java.io.File(s"${graft.LocalDirs.scratchRoot}/graft-ckpt")
+    def entries(prefix: String) =
+      Option(root.list()).getOrElse(Array.empty[String]).filter(_.startsWith(prefix)).toSet
+    for ((prefix, run) <- Seq(
+        "graft_stream_dedup-" -> (() => StreamingOps.streamingDedup(spark, Sf)),
+        "graft_stream_hourly-" -> (() => StreamingOps.streamingHourly(spark, Sf)))) {
+      val before = entries(prefix)
+      assert(run().count() > 0)
+      assert(entries(prefix) === before, s"$prefix run left scratch behind")
+    }
   }
 
   test("foreachBatch upsert: chunked-feed snapshot equals the batch latest-per-user") {
