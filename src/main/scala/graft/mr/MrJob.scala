@@ -8,7 +8,7 @@ import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
 import org.apache.hadoop.mapred.{FileInputFormat, FileOutputFormat, JobConf, RecordWriter, Reporter,
   TextInputFormat}
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.{Aggregator, Partitioner, SparkContext, TaskContext}
+import org.apache.spark.{Partitioner, SparkContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
@@ -194,23 +194,81 @@ object MrJob {
     * same sort/merge topology the reference implements by hand.
     *
     * Equal lines are interchangeable and the whole-line sort puts them side
-    * by side, so each map task first counts its lines (a spillable
-    * [[org.apache.spark.util.collection.ExternalAppendOnlyMap]] keyed by
-    * the line) and only then routes them: md5 runs once per distinct line
-    * per map task, not once per record. The shuffle itself has no
-    * aggregator and no map-side combine, so up to
+    * by side, so each map task first counts its lines in a [[LineCounts]]
+    * table and only then routes them: md5 runs once per distinct line per
+    * flush of the table, not once per record. The table is bounded by
+    * entries and by key chars; when it fills it emits its `(line, n)`
+    * pairs and counts on, so a line seen again after a flush is one more
+    * pair and a task's memory stays bounded without spill files or size
+    * sampling. On lines that rarely repeat the table costs one hash probe
+    * per line on top of the routing it does anyway, so there is no
+    * separate stop-counting branch. The shuffle itself has no aggregator
+    * and no map-side combine, so up to
     * `spark.shuffle.sort.bypassMergeThreshold` (200) reducers the map side
     * takes the bypass-merge writer; the reduce side sorts the `(line, n)`
     * pairs without re-summing them and expands each into n copies. Every
     * reducer, Native or Exec, reads the same stream as if each line had
     * been shuffled on its own. */
-  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] = {
-    val count = new Aggregator[String, Long, Long](n => n, _ + _, _ + _)
-    val counted = mapped.mapPartitions(lines =>
-      count.combineValuesByKey(lines.map((_, 1L)), TaskContext.get()))
-    new ShuffledRDD[String, Long, Long](counted, new Md5LinePartitioner(numReducers))
+  def shuffleSort(mapped: RDD[String], numReducers: Int): RDD[String] =
+    new ShuffledRDD[String, Long, Long](mapped.mapPartitions(new LineCounts(_)),
+        new Md5LinePartitioner(numReducers))
       .setKeyOrdering(CByteOrdering)
       .mapPartitions(expandCounts)
+
+  /** One map task's line counts: parallel key and count arrays of
+    * [[LineCounts.Slots]] slots with linear probing, allocated once. It
+    * reads lines until it holds [[LineCounts.MaxEntries]] distinct lines
+    * or [[LineCounts.MaxChars]] chars of them, or the input ends, then
+    * hands out its `(line, n)` pairs in slot order, clearing each slot as
+    * it goes, and then reads on. */
+  private[mr] final class LineCounts(lines: Iterator[String]) extends Iterator[(String, Long)] {
+    import LineCounts._
+    private val keys = new Array[String](Slots)
+    private val counts = new Array[Long](Slots)
+    private var entries = 0 // occupied slots, all at or after `cursor` while emitting
+    private var cursor = 0
+
+    def hasNext: Boolean = entries > 0 || { fill(); entries > 0 }
+
+    def next(): (String, Long) = {
+      if (!hasNext) throw new NoSuchElementException("no more line counts")
+      while (keys(cursor) == null) cursor += 1
+      val pair = (keys(cursor), counts(cursor))
+      keys(cursor) = null
+      cursor += 1
+      entries -= 1
+      pair
+    }
+
+    private def fill(): Unit = {
+      var chars = 0L
+      while (entries < MaxEntries && chars < MaxChars && lines.hasNext) {
+        val line = lines.next()
+        var i = (line.hashCode * 0x9e3779b9) >>> (32 - Bits) // Fibonacci hashing
+        var k = keys(i)
+        while (k != null && !k.equals(line)) {
+          i = (i + 1) & (Slots - 1)
+          k = keys(i)
+        }
+        if (k == null) {
+          keys(i) = line
+          counts(i) = 1
+          entries += 1
+          chars += line.length
+        } else counts(i) += 1
+      }
+      cursor = 0
+    }
+  }
+
+  private[mr] object LineCounts {
+    val Bits = 16
+    val Slots: Int = 1 << Bits
+    /** Half the slots, so a probe stays short. */
+    val MaxEntries: Int = Slots / 2
+    /** Key chars held before a flush (4 to 8 MiB of string bytes); a
+      * single longer line is counted on its own. */
+    val MaxChars: Long = 4L << 20
   }
 
   /** Sorted `(line, n)` pairs back into n copies of each line, lazily. */

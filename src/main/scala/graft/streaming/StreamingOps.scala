@@ -99,7 +99,7 @@ object StreamingOps {
     * replay itself is untouched: per-run watch dirs stay unique (the file
     * source tracks seen paths), [[replay]] renames only the per-run links
     * and deletes only the per-run tree — the master under
-    * [[graft.LocalDirs.feedCacheRoot]] lives until JVM exit. Keys MUST
+    * [[graft.LocalDirs.jvmScratchRoot]] lives until JVM exit. Keys MUST
     * determine the staged frame's content (table, projection, filter,
     * sfDir, chunking); [[replay]] builds them from the query name, side,
     * sfDir, order column and chunk count. */
@@ -126,7 +126,7 @@ object StreamingOps {
     val key = s"$cacheKey|$orderCol|$numChunks"
     val master = stagedMasters.computeIfAbsent(key, _ =>
       stageTimeChunks(df, orderCol, numChunks,
-        s"${graft.LocalDirs.feedCacheRoot}/feed-${masterSeq.getAndIncrement()}"))
+        s"${graft.LocalDirs.jvmScratchRoot}/feed-${masterSeq.getAndIncrement()}"))
     val watchDir = s"$baseDir/in"
     new java.io.File(watchDir).mkdirs()
     val chunks = master.chunks.zipWithIndex.map { case (files, k) =>
@@ -146,7 +146,7 @@ object StreamingOps {
       cacheKey: String): Seq[java.io.File] = {
     val master = sentinelMasters.computeIfAbsent(cacheKey, _ =>
       stageSentinel(df,
-        s"${graft.LocalDirs.feedCacheRoot}/sent-${masterSeq.getAndIncrement()}"))
+        s"${graft.LocalDirs.jvmScratchRoot}/sent-${masterSeq.getAndIncrement()}"))
     master.map(f => linkOrCopy(f, new java.io.File(dir, f.getName)))
   }
 
@@ -1319,8 +1319,8 @@ object StreamingOps {
     * State lives in the TABLE, not the state store, so the stream restarts
     * for free and the snapshot is queryable mid-stream. The superseded
     * version is deleted right after the new one is published (an A/B
-    * swap), so repeated runs don't accumulate snapshot directories in
-    * scratch.
+    * swap). The final version, which the returned frame reads lazily,
+    * lives under [[graft.LocalDirs.jvmScratchRoot]] and goes at JVM exit.
     *
     * Scale: every merge is |keys|-bounded (both sides pre-reduced), the
     * snapshot is partitioned storage (not driver memory), and at 100 TB
@@ -1331,7 +1331,8 @@ object StreamingOps {
   private def upsertRun(spark: SparkSession)(
       run: ((DataFrame, Long) => Unit) => Unit): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val baseDir = ckptDir("graft_stream_upsert_snap")
+    val baseDir =
+      s"${graft.LocalDirs.jvmScratchRoot}/graft_stream_upsert_snap-${java.util.UUID.randomUUID}"
     var currentVersion = -1L
     def snapPath(v: Long) = s"$baseDir/v$v"
     run { (batch, batchId) =>
@@ -1382,8 +1383,9 @@ object StreamingOps {
     val purchases = Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase")
       .selectExpr("user_id", "event_id", "ts div 1000 AS us", "value")
-    // The snapshot lives in its own dir (and must survive — the returned
-    // frame reads it lazily); the replay deletes only its feed and checkpoint.
+    // The snapshot lives in its own JVM-scoped dir (and must survive — the
+    // returned frame reads it lazily); the replay deletes only its feed and
+    // checkpoint.
     upsertRun(spark) { merge =>
       replay(spark, "graft_stream_upsert", sfDir, numChunks, Seq(Side(purchases, "us")),
         foreachBatch = Some(merge))(_.head)

@@ -153,6 +153,23 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(counts === expect)
   }
 
+  test("hermetic: a map attempt that dies after its count table has flushed leaves the output byte-identical") {
+    // Each word count line fans out into 64 tagged copies, so map partition
+    // 0 emits more distinct lines than the count table holds. Its first
+    // attempt dies only after the table filled and handed its pairs to the
+    // shuffle writer; the retry must rewrite the whole map output.
+    val fanOut: Iterator[String] => Iterator[String] = lines =>
+      NativeQueries.wcMapSh(lines).flatMap(l => Iterator.tabulate(64)(j => s"$j:$l"))
+    val out0 = fanOut(corpus.take(400).iterator).toVector
+    val n = out0.size * 3 / 4
+    assert(new MrJob.LineCounts(out0.take(n).iterator).size > out0.take(n).distinct.size,
+      "the table must have flushed before the attempt dies")
+    FaultToleranceSpec.drills.set(0)
+    val drilled = runWordCount(dieAfter(0, n, fanOut), Native(NativeQueries.wcReduceSh))
+    val undisturbed = runWordCount(Native(fanOut), Native(NativeQueries.wcReduceSh))
+    assertSameParts(drilled, undisturbed)
+  }
+
   test("hermetic: a reduce attempt that dies halfway through its output leaves the output byte-identical") {
     // The first attempt of reduce partition 0 emits half of its part
     // file's lines, then dies; the retry re-reads the counted shuffle

@@ -32,6 +32,39 @@ class MrJobSpec extends AnyFunSuite {
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       .split("\n", -1).toList.dropRight(1) // files end with trailing newline
 
+  /** The named exec scripts vendored under `/graft/exec/` on the classpath
+    * (main and test resources), extracted into one temp dir; their paths. */
+  private def vendored(names: String*): Seq[String] = {
+    val dir = Files.createTempDirectory("graft-vendored-")
+    dir.toFile.deleteOnExit()
+    names.map { n =>
+      val p = dir.resolve(n)
+      val in = getClass.getResourceAsStream(s"/graft/exec/$n")
+      assert(in != null, s"vendored resource $n missing")
+      try Files.copy(in, p) finally in.close()
+      p.toFile.setExecutable(true)
+      p.toFile.deleteOnExit()
+      p.toString
+    }
+  }
+
+  /** `lines` written into three files of a fresh input dir. */
+  private def inputOf(tag: String, lines: Seq[String]): Path = {
+    val in = Files.createTempDirectory(s"graft-mr-$tag-in-")
+    in.toFile.deleteOnExit()
+    lines.grouped((lines.size + 2) / 3).zipWithIndex.foreach { case (chunk, i) =>
+      Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    }
+    in
+  }
+
+  /** The bytes of each part file of a job over `in` with R reducers. */
+  private def partBytes(in: Path, mapper: LineProc, reducer: LineProc, r: Int): Seq[Seq[Byte]] = {
+    val out = tmpOut("twin")
+    MrJob.run(spark, JobSpec(in.toString, out.toString, mapper, reducer, numMappers = 2, numReducers = r))
+    (0 until r).map(i => Files.readAllBytes(out.resolve(f"part-$i%05d")).toSeq)
+  }
+
   test("native word count matches word_count_correct.txt (merged, like test_integration_01)") {
     assume(haveFixtures)
     val out = tmpOut("wc-native")
@@ -96,16 +129,7 @@ class MrJobSpec extends AnyFunSuite {
     // reference checkout is absent) must hit the same golden as the
     // reference's own wc_map.sh/wc_reduce.sh.
     assume(haveFixtures)
-    val res = Seq("wc_map.sh", "wc_reduce.sh").map { n =>
-      val dir = Files.createTempDirectory("graft-vendored-")
-      dir.toFile.deleteOnExit()
-      val p = dir.resolve(n)
-      val in = getClass.getResourceAsStream(s"/graft/exec/$n")
-      assert(in != null, s"vendored resource $n missing")
-      try Files.copy(in, p) finally in.close()
-      p.toFile.setExecutable(true)
-      p.toString
-    }
+    val res = vendored("wc_map.sh", "wc_reduce.sh")
     val out = tmpOut("wc-vendored")
     MrJob.run(spark, JobSpec(RefInput, out.toString,
       Exec(Seq(res(0))), Exec(Seq(res(1))), numMappers = 2, numReducers = 1))
@@ -167,6 +191,61 @@ class MrJobSpec extends AnyFunSuite {
       assert(parts.contains((0, k)) && !parts.contains((1, k)))
     for (k <- Seq("world", "goodbye", "hadoop") if parts.exists(_._2 == k))
       assert(parts.contains((1, k)) && !parts.contains((0, k)))
+  }
+
+  test("hermetic: shuffleSort routes test_worker_08's keys to their golden partitions (R=2)") {
+    // tests/test_worker_08.py:226-243: "", "bye", "hello" go to partition
+    // 0 and "world", "goodbye", "hadoop" to partition 1; each partition's
+    // stream comes out C-sorted with every duplicate kept.
+    val text = Seq("hello world", "Goodbye  Hadoop", "bye\thello", "", "world[bye]")
+    val mapped = spark.sparkContext.parallelize(text, 2).mapPartitions(NativeQueries.wcMapSh)
+    val parts = MrJob.shuffleSort(mapped, 2).glom().collect().map(_.toList).toList
+    assert(parts === List(
+      List("\t1", "\t1", "\t1", "bye\t1", "bye\t1", "hello\t1", "hello\t1"),
+      List("goodbye\t1", "hadoop\t1", "world\t1", "world\t1")))
+  }
+
+  test("hermetic: exec word count (vendored wc_map.sh/wc_reduce.sh) == native twins byte-exactly") {
+    // A Zipf-ish draw over words that hit tr's split set (brackets, TABs,
+    // runs of spaces), ASCII case, non-ASCII and supplementary characters,
+    // with empty lines; and lines of distinct mixed-case words.
+    val rnd = new scala.util.Random(17)
+    val words = Vector("the", "The", "THE", "a", "[tag]", "x[y]z", "", "\t", "caf\u00e9", "\ud83d\ude00",
+      "\ue000", "Zipf", "tail")
+    val zipf = Seq.fill(800)(Seq.fill(rnd.nextInt(8))(
+      words(math.min(words.size - 1, (-math.log(rnd.nextDouble()) * 3).toInt))).mkString(" "))
+    val distinct = (0 until 800).map(i => s"w$i-${rnd.alphanumeric.take(1 + rnd.nextInt(10)).mkString} W$i")
+    val Seq(map, reduce) = vendored("wc_map.sh", "wc_reduce.sh")
+    for ((tag, lines) <- Seq("zipf" -> zipf, "distinct" -> distinct)) {
+      val in = inputOf(s"wc-$tag", lines)
+      val exec = partBytes(in, Exec(Seq(map)), Exec(Seq(reduce)), 3)
+      val native = partBytes(in, Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), 3)
+      assert(exec.forall(_.nonEmpty), s"$tag: an empty part file")
+      for (i <- 0 until 3) assert(exec(i) === native(i), f"$tag: part-$i%05d differs")
+    }
+  }
+
+  test("hermetic: exec grep (vendored grep_*.py) == native twins, default and argv query") {
+    // Lines padded with spaces and TABs (both sides strip them), some with
+    // an inner TAB (both reducers drop those), and the query words in
+    // several cases and inside longer words.
+    val rnd = new scala.util.Random(19)
+    val words = Vector("product", "Product", "PRODUCTS", "byproduct", "money", "Money", "mon", "ey",
+      "caf\u00e9", "\ud83d\ude00", "plain", "text")
+    val pads = Vector("", " ", "  ", "\t")
+    val lines = Seq.fill(600)(pads(rnd.nextInt(pads.size)) +
+      Seq.fill(rnd.nextInt(6))(words(rnd.nextInt(words.size))).mkString(if (rnd.nextInt(10) == 0) "\t" else " ") +
+      pads(rnd.nextInt(pads.size)))
+    val in = inputOf("grep", lines)
+    val Seq(map, reduce) = vendored("grep_map.py", "grep_reduce.py")
+    val outs = for ((query, argv) <- Seq("product" -> Seq(map), "money" -> Seq(map, "money"))) yield {
+      val exec = partBytes(in, Exec(argv), Exec(Seq(reduce)), 1)
+      val native = partBytes(in, Native(NativeQueries.grepMap(query)), Native(NativeQueries.grepReduce), 1)
+      assert(exec.head.nonEmpty, s"query '$query' matches no line: the comparison is vacuous")
+      assert(exec === native, s"query '$query'")
+      exec
+    }
+    assert(outs(0) !== outs(1), "the argv query must change the output")
   }
 
   test("input files named with a comma, brackets, braces or * are each read once, as named") {

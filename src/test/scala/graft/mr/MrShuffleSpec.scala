@@ -55,6 +55,13 @@ class MrShuffleSpec extends AnyFunSuite {
     dir
   }
 
+  private def assertPartsMatch(out: Path, want: Seq[Array[Byte]], name: String): Unit =
+    for (p <- 0 until R) {
+      val part = f"part-$p%05d"
+      assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(part)), want(p)),
+        s"$name: $part differs from the oracle")
+    }
+
   private def assertIdentityJobsMatchOracle(lines: Seq[String]): Unit = {
     val in = inputDir(lines)
     val want = oracle(lines, R)
@@ -68,11 +75,7 @@ class MrShuffleSpec extends AnyFunSuite {
       out.toFile.deleteOnExit()
       MrJob.run(spark, JobSpec(in.toString, out.toString, Native(identity), reducer,
         numMappers = 2, numReducers = R, splitFilesByBytes = split))
-      for (p <- 0 until R) {
-        val part = f"part-$p%05d"
-        assert(java.util.Arrays.equals(Files.readAllBytes(out.resolve(part)), want(p)),
-          s"$name: $part differs from the oracle")
-      }
+      assertPartsMatch(out, want, name)
     }
   }
 
@@ -134,5 +137,60 @@ class MrShuffleSpec extends AnyFunSuite {
     val mixed = for (b <- bmpHigh; a <- astral; t <- Seq("", "\t1", "\tv\tw"))
       yield Seq(s"k$b$t", s"k$a$t", s"$a$b$t", s"$b$a$t", s"\u00e9$a$t", s"\u00df$b$t")
     assertIdentityJobsMatchOracle(mixed.flatten ++ mixed.flatten.take(50))
+  }
+
+  /** An identity job over `lines` in ONE file (so one map task), byte for
+    * byte against the oracle with both reducers, after checking that the
+    * map task's count table flushed: the shuffle's parent RDD emits more
+    * `(line, n)` pairs than there are distinct lines. Its input and output
+    * run to tens of MiB, so it deletes them when done. */
+  private def assertFlushingJobMatchesOracle(lines: Seq[String]): Unit = {
+    val in = Files.createTempDirectory("graft-mr-flush-in-")
+    val out = Files.createTempDirectory("graft-mr-flush-out-")
+    try {
+      Files.write(in.resolve("file00"), utf8(lines.mkString("", "\n", "\n")))
+      val identity: Iterator[String] => Iterator[String] = it => it
+      val spec = JobSpec(in.toString, "", Native(identity), Native(identity), numMappers = 2, numReducers = R)
+      val mapped = MrJob.readInput(spark.sparkContext, MrJob.listInputFiles(spark, in.toString), spec)
+      assert(mapped.getNumPartitions === 1)
+      val pairs = shuffleDeps(MrJob.shuffleSort(mapped, R)).head.rdd.count()
+      val distinct = lines.distinct.size
+      assert(pairs > distinct, s"$pairs pairs for $distinct distinct lines: the table never flushed")
+      val want = oracle(lines, R)
+      for ((name, reducer) <- Seq("native" -> Native(identity), "exec-cat" -> Exec(Seq("/bin/cat")))) {
+        val parts = out.resolve(name)
+        MrJob.run(spark, spec.copy(outputDir = parts.toString, reducer = reducer))
+        assertPartsMatch(parts, want, name)
+      }
+    } finally {
+      graft.LocalDirs.rmTree(in.toString)
+      graft.LocalDirs.rmTree(out.toString)
+    }
+  }
+
+  test("more distinct lines than the count table holds: equal lines split across flushes") {
+    // Three rounds over more distinct lines than the entry cap, so every
+    // line's copies land in different flushes; a hot line every seventh
+    // record is counted in every flush.
+    val distinct = MrJob.LineCounts.MaxEntries + MrJob.LineCounts.MaxEntries / 4
+    val lines = for {
+      round <- 0 until 3
+      i <- 0 until distinct
+      hot <- if (i % 7 == 0) Seq(true, false) else Seq(false)
+    } yield if (hot) s"hot\t$round" else s"k$i\tv${i % 5}"
+    assertFlushingJobMatchesOracle(lines)
+  }
+
+  test("long lines past the count table's char cap: equal lines split across flushes") {
+    // 48 distinct lines of 64-128 Ki chars, twice over, so the char cap
+    // fills the table long before its entry cap; half of the keys are
+    // longer than the md5 router's buffer, half end at a TAB.
+    val rnd = new scala.util.Random(13)
+    val long = (0 until 48).map { i =>
+      val body = rnd.alphanumeric.take((1 << 16) + rnd.nextInt(1 << 16)).mkString
+      if (i % 2 == 0) s"$i-$body" else s"$i\t$body"
+    }
+    assert(long.map(_.length.toLong).sum > MrJob.LineCounts.MaxChars)
+    assertFlushingJobMatchesOracle(long ++ long.reverse)
   }
 }

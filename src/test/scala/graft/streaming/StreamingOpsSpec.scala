@@ -29,9 +29,10 @@ class StreamingOpsSpec extends AnyFunSuite {
     val gapUs = 30L * min
     val name = "graft_stream_sess_mb"
     val source = MemoryStream[Ev]
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     val q = StreamingOps.sessionizeStream(source.toDS(), gapUs)
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     def rows() = spark.table(name).as[SessionRow].collect().toSeq
       .sortBy(r => (r.user_id, r.session_id))
     try {
@@ -61,7 +62,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       assert(rows() === Seq(
         SessionRow(1, 1, 2, 10, 11, 3.75), SessionRow(1, 2, 1, 12, 12, 0.5),
         SessionRow(1, 3, 1, 13, 13, 1.0), SessionRow(2, 1, 1, 99, 99, 0.25)))
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.rmTree(ckpt) }
   }
 
   test("streaming dedup suppresses re-ingested duplicates across micro-batches") {
@@ -71,11 +72,12 @@ class StreamingOpsSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val name = "graft_stream_dedup_mb"
     val source = MemoryStream[Doc]
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     val q = source.toDS()
       .select(org.apache.spark.sql.functions.md5($"text").as("content_hash"))
       .dropDuplicates("content_hash")
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     try {
       source.addData(Doc(1, "alpha"), Doc(2, "beta"), Doc(3, "alpha"))
       q.processAllAvailable()
@@ -83,7 +85,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       source.addData(Doc(4, "beta"), Doc(5, "gamma")) // cross-batch dup + new
       q.processAllAvailable()
       assert(spark.table(name).count() === 3)
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.rmTree(ckpt) }
   }
 
   test("watermarked dedup bounds state: expired hashes are evicted, in-horizon dups suppressed") {
@@ -95,13 +97,14 @@ class StreamingOpsSpec extends AnyFunSuite {
     // (event-time µs, text); 1-hour dedup horizon — the production form of
     // streamingDedup whose state does NOT grow with the corpus.
     val source = MemoryStream[(Long, String)]
+    val ckpt = graft.LocalDirs.streamingCkpt(name)
     val q = source.toDS().toDF("us", "text")
       .withColumn("event_time", timestamp_micros(col("us")))
       .select(col("event_time"), md5(col("text")).as("content_hash"))
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("content_hash")
       .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", graft.LocalDirs.streamingCkpt(name)).start()
+      .option("checkpointLocation", ckpt).start()
     val hr = 3600L * 1000000L
     try {
       // batch 1: two distinct docs + an in-batch dup; watermark → t=2h-1h=1h
@@ -118,7 +121,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       source.addData((11L * hr, "alpha"))
       q.processAllAvailable()
       assert(spark.table(name).count() === 4)
-    } finally q.stop()
+    } finally { q.stop(); graft.LocalDirs.rmTree(ckpt) }
   }
 
   test("watermarked dedup (chunked feed, horizon > span) equals batch distinct keys") {
@@ -241,9 +244,12 @@ class StreamingOpsSpec extends AnyFunSuite {
     val root = new java.io.File(s"${graft.LocalDirs.scratchRoot}/graft-ckpt")
     def entries(prefix: String) =
       Option(root.list()).getOrElse(Array.empty[String]).filter(_.startsWith(prefix)).toSet
+    // The upsert prefix covers the run's checkpoint and its final snapshot
+    // (graft_stream_upsert_snap-), which lives in JVM-scoped scratch.
     for ((prefix, run) <- Seq(
         "graft_stream_dedup-" -> (() => StreamingOps.streamingDedup(spark, Sf)),
-        "graft_stream_hourly-" -> (() => StreamingOps.streamingHourly(spark, Sf)))) {
+        "graft_stream_hourly-" -> (() => StreamingOps.streamingHourly(spark, Sf)),
+        "graft_stream_upsert" -> (() => StreamingOps.streamingUpsert(spark, Sf)))) {
       val before = entries(prefix)
       assert(run().count() > 0)
       assert(entries(prefix) === before, s"$prefix run left scratch behind")
@@ -384,23 +390,25 @@ class StreamingOpsSpec extends AnyFunSuite {
       .writeStream.outputMode("complete").format("memory").queryName(qn)
       .option("checkpointLocation", ckpt).start()
 
-    clicks.filter(col("event_id") % 2 === 0).write.parquet(inDir)
-    val q1 = startQuery("graft_restart_run1")
-    try q1.processAllAvailable() finally q1.stop()
-    val afterChunk1 = counts("graft_restart_run1")
-    assert(afterChunk1.values.sum > 0)
+    try {
+      clicks.filter(col("event_id") % 2 === 0).write.parquet(inDir)
+      val q1 = startQuery("graft_restart_run1")
+      try q1.processAllAvailable() finally q1.stop()
+      val afterChunk1 = counts("graft_restart_run1")
+      assert(afterChunk1.values.sum > 0)
 
-    // New files arrive while the query is DOWN; the restart must pick up
-    // exactly these and merge onto the recovered state store.
-    clicks.filter(col("event_id") % 2 === 1).write.mode("append").parquet(inDir)
-    val q2 = startQuery("graft_restart_run2")
-    try q2.processAllAvailable() finally q2.stop()
-    val resumed = counts("graft_restart_run2")
+      // New files arrive while the query is DOWN; the restart must pick up
+      // exactly these and merge onto the recovered state store.
+      clicks.filter(col("event_id") % 2 === 1).write.mode("append").parquet(inDir)
+      val q2 = startQuery("graft_restart_run2")
+      try q2.processAllAvailable() finally q2.stop()
+      val resumed = counts("graft_restart_run2")
 
-    val batch = clicks.groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resumed === batch)
-    assert(resumed !== afterChunk1) // chunk 2 really arrived after the stop
+      val batch = clicks.groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(resumed === batch)
+      assert(resumed !== afterChunk1) // chunk 2 really arrived after the stop
+    } finally graft.LocalDirs.rmTree(base)
   }
 
   test("streaming KMV (chunked feed, watermark-fired windows) equals the batch min-k sketch") {
