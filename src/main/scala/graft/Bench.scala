@@ -61,25 +61,9 @@ object Bench {
     // round-5-style throttle window). A failed pass contributes no timing
     // and the name lands in "failed", so a fast crash can't make the
     // total look better.
-    val byName = SparkEntry.queries
     def onePass(name: String): (Double, Boolean) = {
-      BenchCore.gcIfPressured()
-      val t0 = System.nanoTime()
-      // FULL-ROW materialization, not Dataset.count(): count-star lets the
-      // optimizer PRUNE every aggregate expression the count doesn't need,
-      // so card-shaped queries timed a hollowed plan (measured at sf1:
-      // quality_classifier 0.78 s counted vs 5.3 s materialized, token_count
-      // 0.34 vs 2.5, q1_agg 0.51 vs 2.0). toRdd.count() walks the optimized
-      // plan's own UnsafeRow output — every column computed, nothing
-      // collected — which is the work a consumer of the result actually
-      // pays. Round 11 forward: benches are NOT comparable to the
-      // count()-era canonicals; the campaign re-baselines.
-      val ok =
-        try { byName(name)(spark, sfDir).queryExecution.toRdd.count(): Unit; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val p = BenchCore.timedPass(spark, name, sfDir, "bench")
+      (p.total, p.ok)
     }
     // Dev-only single-pass probe mode for very large tiered decades
     // (sf100); the driver's per-round bench never sets it, so every

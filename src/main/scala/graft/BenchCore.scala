@@ -449,6 +449,48 @@ object BenchCore {
     if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
   }
 
+  /** One timed pass of a registry query: construct (building the frame,
+    * including eager driver-sequenced work: k-means/BPE loops,
+    * checkpoints), plan (analysis through physical planning) and exec
+    * seconds; `total` is what Bench and Probe time. Exec is FULL-ROW
+    * materialization, not Dataset.count(): count-star lets the optimizer
+    * PRUNE every aggregate expression the count doesn't need, so
+    * card-shaped queries timed a hollowed plan (measured at sf1:
+    * quality_classifier 0.78 s counted vs 5.3 s materialized, token_count
+    * 0.34 vs 2.5, q1_agg 0.51 vs 2.0). toRdd.count() walks the optimized
+    * plan's own UnsafeRow output — every column computed, nothing
+    * collected — which is the work a consumer of the result actually
+    * pays. Round 11 forward: benches are NOT comparable to the
+    * count()-era canonicals.
+    *
+    * [[gcIfPressured]] runs before the clock starts. A failure is logged
+    * under `tag` and gives `ok = false`: the failing phase keeps the time
+    * it ran, later phases read 0. */
+  case class Pass(constructS: Double, planS: Double, execS: Double, rows: Long, ok: Boolean) {
+    def total: Double = constructS + planS + execS
+  }
+
+  def timedPass(spark: SparkSession, name: String, sfDir: String, tag: String): Pass = {
+    gcIfPressured()
+    val marks = scala.collection.mutable.ArrayBuffer(System.nanoTime())
+    var rows = 0L
+    val ok =
+      try {
+        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        marks += System.nanoTime()
+        qe.executedPlan
+        marks += System.nanoTime()
+        rows = qe.toRdd.count()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[$tag] $name failed: ${e.getMessage}"); false
+      }
+    val end = System.nanoTime()
+    while (marks.size < 4) marks += end
+    def sec(i: Int) = (marks(i + 1) - marks(i)) / 1e9
+    Pass(sec(0), sec(1), sec(2), rows, ok)
+  }
+
   /** Untimed data-warm pass (round 12, from the round-11 ladder finding:
     * dedup_lsh_tune's 22–48% sf10 spreads collapsed to 3.3% once the
     * parquet bytes were page-cache-warm — first-pass cold reads were

@@ -40,18 +40,11 @@ object Explain {
             case None => println(plan)
           }
         }
-        for (r <- 1 to reps) {
-          BenchCore.gcIfPressured()
-          val t0 = System.nanoTime()
-          val qe = fn(spark, sfDir).queryExecution
-          val t1 = System.nanoTime()
-          qe.executedPlan
-          val t2 = System.nanoTime()
-          val n = qe.toRdd.count()
-          val t3 = System.nanoTime()
-          println(f"[explain] $name rep$r: $n rows, construct ${(t1 - t0) / 1e9}%.3fs, " +
-            f"plan ${(t2 - t1) / 1e9}%.3fs, exec ${(t3 - t2) / 1e9}%.3fs, total ${(t3 - t0) / 1e9}%.3fs")
-        }
+        (1 to reps).iterator.map(r => r -> BenchCore.timedPass(spark, name, sfDir, "explain"))
+          .takeWhile(_._2.ok).foreach { case (r, p) =>
+            println(f"[explain] $name rep$r: ${p.rows} rows, construct ${p.constructS}%.3fs, " +
+              f"plan ${p.planS}%.3fs, exec ${p.execS}%.3fs, total ${p.total}%.3fs")
+          }
       } catch { case e: Throwable =>
         System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
       }

@@ -70,15 +70,9 @@ object Probe {
       var warmMin = Double.NaN
       var allOk = true
       (1 to passes).foreach { pass =>
-        BenchCore.gcIfPressured()
         val kind = if (pass == 1) "cold" else "warm"
-        val t0 = System.nanoTime()
-        val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count(): Unit; true }
-          catch { case e: Throwable =>
-            System.err.println(s"[probe] $name pass $pass failed: ${e.getMessage}"); false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val p = BenchCore.timedPass(spark, name, sfDir, s"probe pass $pass")
+        val (sec, ok) = (p.total, p.ok)
         allOk &&= ok
         if (ok && pass == 1) coldSec = sec
         if (ok && pass > 1 && (warmMin.isNaN || sec < warmMin)) warmMin = sec

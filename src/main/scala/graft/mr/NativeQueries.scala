@@ -67,10 +67,14 @@ object NativeQueries {
     }
   }
 
-  /** wc_map.py twin: Python str.split() ≡ split on whitespace runs, no
-    * empties, leading/trailing ignored. */
+  /** wc_map.py twin: Python str.split() ≡ split on runs of whitespace as
+    * `str.isspace` defines it, no empties, leading/trailing ignored. That
+    * set is Unicode White_Space (no-break spaces and NEL included, which
+    * Java's `\s` and `Character.isWhitespace` miss) plus U+001C–U+001F. */
   def wcMapPy(lines: Iterator[String]): Iterator[String] =
-    lines.flatMap(_.split("\\s+").iterator.filter(_.nonEmpty).map(w => s"$w\t1"))
+    lines.flatMap(PyWhitespace.split(_).iterator.filter(_.nonEmpty).map(w => s"$w\t1"))
+
+  private val PyWhitespace = java.util.regex.Pattern.compile("[\\p{IsWhite_Space}\\x1c-\\x1f]+")
 
   /** wc_reduce.py twin: sums the numeric values, SPACE-separated output. */
   def wcReducePy(lines: Iterator[String]): Iterator[String] = new Iterator[String] {

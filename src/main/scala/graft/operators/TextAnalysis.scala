@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -658,18 +658,25 @@ object TextAnalysis {
   def hllDistinct(spark: SparkSession, sfDir: String): DataFrame =
     hllDistinctOf(Tables.events(spark, sfDir))
 
+  /** One element's HLL register update from its 56-bit hash `h`: `bucket`
+    * = h mod m, and `rho` = trailing zeros + 1 of h div m, capped at
+    * [[HllRhoMax]] (h div m = 0 reads as the cap). Shared by [[hllDistinct]]
+    * and the streaming twin, [[graft.streaming.StreamingOps.streamingHll]];
+    * `hllDistinctSql` and `streamingHllSql` spell the same math in DuckDB. */
+  private[graft] def hllRegister(h: Column): Seq[Column] = {
+    val x = call_function("div", h, lit(HllM))
+    Seq((h % HllM).as("bucket"),
+      when(x === 0, HllRhoMax).otherwise(least(bit_count((x bitwiseAND -x) - 1) + 1, lit(HllRhoMax)))
+        .cast("long").as("rho"))
+  }
+
   /** Core over an explicit events frame — the spec feeds a crafted corpus
     * with an event_type literally named 'ALL' to prove the merged row
     * cannot collide with it. */
   def hllDistinctOf(events: DataFrame): DataFrame = {
     val ids = events
       .filter(col("event_id").isNotNull)
-      .select(col("event_type"), Hashing.md5Long(col("event_id").cast("string")).as("h"))
-      .select(col("event_type"), (col("h") % HllM).as("bucket"),
-        expr(s"h div $HllM").as("x"))
-      .select(col("event_type"), col("bucket"),
-        expr(s"CASE WHEN x = 0 THEN $HllRhoMax ELSE least(bit_count((x & (-x)) - 1) + 1, $HllRhoMax) END")
-          .cast("long").as("rho"))
+      .select(col("event_type") +: hllRegister(Hashing.md5Long(col("event_id").cast("string"))): _*)
       .localCheckpoint() // registers + exact both read the hashed stream
     val regs = ids.groupBy(col("event_type"), col("bucket"))
       .agg(max(col("rho")).as("r"))

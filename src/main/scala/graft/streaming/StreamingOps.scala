@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Exact._
@@ -29,6 +31,17 @@ import graft.operators.Exact._
   * driver-free). MemoryStream appears only in specs and the spec-only
   * upsert harness, where crafted/out-of-order micro-corpora need per-row
   * control.
+  *
+  * Arbitrary state: the sessionizers and the transition extractor each
+  * keep their own keyed state, while the three window sketches
+  * ([[streamingKmv]], [[streamingHll]], [[streamingCms]]) share ONE
+  * `transformWithState` processor and one runner ([[windowSketch]]). Per
+  * 1-hour window the processor keeps an `Array[Long]` of cells; a sketch
+  * supplies the empty window's cell count, a fold of one micro-batch's
+  * rows into the cells, and an emit of the closed window's rows. The
+  * window-close policy (one end-of-window timer, emit once, drop the
+  * state) therefore lives in one place, and the timer needs no armed flag:
+  * cells exist exactly while the window's timer is pending.
   */
 object StreamingOps {
 
@@ -672,110 +685,64 @@ object StreamingOps {
   }
 
   case class KEv(win_us: Long, h: Long, us: Long)
-  case class KmvSt(hs: Array[Long])
   case class KmvRow(win_us: Long, n_sketch: Long, kmv_estimate: Long)
-
-  /** Per-WINDOW KMV cardinality state: the k smallest DISTINCT 56-bit
-    * user hashes seen for the hour, kept sorted — O(k) longs per window
-    * forever, the whole point of running a sketch instead of a streaming
-    * `count(DISTINCT)` whose state grows with the user population. The
-    * min-k-of-distinct merge is a set union followed by trim, so it is
-    * associative, commutative and idempotent — batch order, chunk
-    * boundaries and intra-window duplicates cannot change the final
-    * sketch, which is why the streaming result hash-matches the batch
-    * oracle exactly. ONE event-time timer per window, armed once at the
-    * fixed window end (the window end never moves, so there is no
-    * delete/re-arm dance like the gap sessionizer's moving timer — just an
-    * armed flag): when the watermark passes it, the window's final
-    * estimate emits once and the state drops. */
-  class KmvWindowProcessor(k: Int, numerator: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, KEv, KmvRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-      ExpiredTimerInfo, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var sk: ValueState[KmvSt] = _
-    @transient private var armed: ValueState[Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      sk = getHandle.getValueState[KmvSt]("sk", Encoders.product[KmvSt], TTLConfig.NONE)
-      armed = getHandle.getValueState[Boolean]("armed", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-    override def handleInputRows(win: Long, rows: Iterator[KEv],
-        tv: TimerValues): Iterator[KmvRow] = {
-      val prev = if (sk.exists()) sk.get().hs else Array.empty[Long]
-      val merged = (prev ++ rows.map(_.h)).distinct.sorted.take(k)
-      sk.update(KmvSt(merged))
-      // Fixed end-of-window timer, armed ONCE per window (re-registering
-      // the same instant would be a warned no-op); max() only guards the
-      // (impossible under time-partitioned chunks) late-row case from
-      // registering in the past.
-      if (!armed.exists()) {
-        getHandle.registerTimer(
-          math.max((win + WinUs) / 1000L + 1L, tv.getCurrentWatermarkInMs() + 1L))
-        armed.update(true)
-      }
-      Iterator.empty
-    }
-    override def handleExpiredTimer(win: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[KmvRow] =
-      if (!sk.exists()) Iterator.empty
-      else {
-        val hs = sk.get().hs
-        sk.clear()
-        armed.clear()
-        val est = if (hs.length < k) hs.length.toLong else numerator / hs.last
-        Iterator.single(KmvRow(win, hs.length.toLong, est))
-      }
-  }
+  case class HllEv(win_us: Long, bucket: Long, rho: Long, us: Long)
+  case class HllRow(win_us: Long, n_used: Long, hll_est: Long)
+  case class CmsEv(win_us: Long, b0: Long, b1: Long, b2: Long, b3: Long, us: Long)
+  case class CmsProbeRow(win_us: Long, user_id: Long, cms_est: Long)
 
   private val WinUs = 3600000000L // 1-hour tumbling windows, µs
 
-  /** Streaming DISTINCT-USERS-PER-HOUR via a KMV sketch — the continuous
-    * twin of [[graft.operators.TextAnalysis.distinctKmv]] and the third
-    * `transformWithState` operator, showing the shape the other two don't:
-    * keyed state PLUS a fixed event-time timer (the sessionizer's timer
-    * moves; the transition extractor has none). Cardinality-per-window is
-    * the canonical streaming-sketch job: exact distinct needs per-window
-    * state proportional to the user population, the sketch needs k longs,
-    * and because KMV's estimate is a pure integer function of the min-k
-    * distinct hashes (TextAnalysis.scala KMV scaladoc) the streaming
-    * output is bit-comparable against a batch DuckDB oracle — a property
-    * HLL's float harmonic mean lacked until [[streamingHll]]'s fixed-point
-    * integer spelling. Windows close on WATERMARK ADVANCEMENT:
-    * the far-future sentinel folded into the last chunk pushes the
-    * watermark past every real window end, firing all timers in the final
-    * no-data micro-batch (same flush discipline as the outer joins).
-    * Runs under the RocksDB provider like every tws path.
+  /** The one fixed-window sketch operator behind [[streamingKmv]],
+    * [[streamingHll]] and [[streamingCms]]. Per 1-hour window (the key)
+    * its state is ONE `Array[Long]` of sketch cells — KMV's sorted min-k
+    * distinct hashes, HLL's registers, CMS's depth×width counters — so
+    * per-window state is a fixed number of longs however many events the
+    * hour holds, the whole point of running a sketch instead of an exact
+    * streaming aggregate. A sketch passes in three things:
+    *   - `size`: the empty window's cell count;
+    *   - `fold(cells, rows)`: the cells after one micro-batch's rows of
+    *     the window (it may update `cells` in place and return them). Each
+    *     fold is a merge that commutes — union-and-trim, register max,
+    *     counter add — so chunk boundaries, duplicates and arrival order
+    *     cannot change the final cells, which is why every stream
+    *     hash-matches its batch oracle;
+    *   - `emit(win, cells)`: the window's output rows.
     *
-    * At 100 TB the plan holds: the keyed shuffle ships (window, hash)
-    * pairs — the same volume any windowed count pays — and per-window
-    * state stays k longs no matter how many users an hour holds; hot
-    * windows are a fan-in concern for the batch-side `distinct` that
-    * Spark's partial aggregation already bounds. */
-  def streamingKmv(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import graft.operators.{Hashing, TextAnalysis}
-    val evs = Tables.events(spark, sfDir)
-      .filter(col("user_id").isNotNull)
-      .select(
-        expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us"),
-        Hashing.md5Long(col("user_id").cast("string")).as("h"),
-        expr("ts div 1000").as("us"))
-    val name = "graft_stream_kmv"
-    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
-        Some(maxUs => KEv(sentinelWin(maxUs), -1L, sentinelWin(maxUs))))), RocksDb) { s =>
-      watermarked(s.head).as[KEv]
-        .groupByKey(_.win_us)
-        .transformWithState(
-          new KmvWindowProcessor(TextAnalysis.KmvK, TextAnalysis.KmvNumerator),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
+    * Lifecycle: the first rows of a window register ONE event-time timer
+    * at the fixed window end (the end never moves, so there is no
+    * delete/re-arm dance like [[GapSessionProcessor]]'s moving timer); when
+    * the watermark passes it, the window emits once and its cells drop.
+    * The cells are written in the call that registers the timer and
+    * cleared in the expiry that consumes it, so "cells exist" already
+    * means "timer armed" and no separate flag is kept. The max() only
+    * guards the (impossible under time-partitioned chunks) late-row case
+    * from registering in the past. */
+  private class WindowSketchProcessor[E, R](size: Int,
+      fold: (Array[Long], Iterator[E]) => Array[Long], emit: (Long, Array[Long]) => Iterator[R])
+      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, E, R] {
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
+      ExpiredTimerInfo, TTLConfig, ValueState}
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    @transient private var cells: ValueState[Array[Long]] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      cells = getHandle.getValueState[Array[Long]]("cells", ExpressionEncoder[Array[Long]](),
+        TTLConfig.NONE)
+    override def handleInputRows(win: Long, rows: Iterator[E], tv: TimerValues): Iterator[R] = {
+      val prev = if (cells.exists()) cells.get() else {
+        getHandle.registerTimer(
+          math.max((win + WinUs) / 1000L + 1L, tv.getCurrentWatermarkInMs() + 1L))
+        new Array[Long](size)
+      }
+      cells.update(fold(prev, rows))
+      Iterator.empty
     }
-    // Structural sentinel filter: the sentinel's window START is beyond
-    // every real event by construction (no marker-column dependence). Its
-    // timer never fires anyway (own window end > the watermark it sets) —
-    // this is belt-and-braces against a future flush-discipline change.
-    spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
+    override def handleExpiredTimer(win: Long, tv: TimerValues,
+        info: ExpiredTimerInfo): Iterator[R] = {
+      val cs = cells.get()
+      cells.clear()
+      emit(win, cs)
+    }
   }
 
   /** The window sketches' sentinel window (and event time): two windows
@@ -784,105 +751,97 @@ object StreamingOps {
     * it and every real timer fires. */
   private def sentinelWin(maxUs: Long): Long = (maxUs / WinUs + 2L) * WinUs
 
-  case class HllEv(win_us: Long, bucket: Long, rho: Long, us: Long)
-  case class HllSt(regs: Array[Long])
-  case class HllRow(win_us: Long, n_used: Long, hll_est: Long)
-
-  /** Per-window HyperLogLog registers — the third streaming sketch,
-    * completing the trio (KMV: how many distinct — small-range exact;
-    * CMS: how often these keys; HLL: how many distinct in the n ≫ m
-    * regime at 512 longs per window). Historically this repo's sketches
-    * avoided HLL as not oracle-verifiable (float harmonic mean); the
-    * fixed-point integer estimator of
-    * [[graft.operators.TextAnalysis.hllDistinct]] removed that bar, so
-    * the streaming twin inherits bit-exact batch comparability. Register
-    * merge is elementwise MAX — commutative, associative, idempotent —
-    * so chunk boundaries, duplicates and arrival order cannot change the
-    * final registers (same argument as KMV's union-and-trim). bucket/rho
-    * arrive PRE-COMPUTED per row (codegen'd md5 expressions in the scan
-    * stage); the hot loop is one array-max per event. Fixed end-of-window
-    * timer, emit once, drop state — identical lifecycle to
-    * [[KmvWindowProcessor]]. */
-  class HllWindowProcessor(m: Int, numerator: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, HllEv, HllRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-      ExpiredTimerInfo, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[HllSt] = _
-    @transient private var armed: ValueState[Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[HllSt]("st", Encoders.product[HllSt], TTLConfig.NONE)
-      armed = getHandle.getValueState[Boolean]("armed", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-    override def handleInputRows(win: Long, rows: Iterator[HllEv],
-        tv: TimerValues): Iterator[HllRow] = {
-      val regs = if (st.exists()) st.get().regs else new Array[Long](m)
-      rows.foreach { e =>
-        val b = e.bucket.toInt
-        if (e.rho > regs(b)) regs(b) = e.rho
-      }
-      st.update(HllSt(regs))
-      if (!armed.exists()) {
-        getHandle.registerTimer(
-          math.max((win + WinUs) / 1000L + 1L, tv.getCurrentWatermarkInMs() + 1L))
-        armed.update(true)
-      }
-      Iterator.empty
-    }
-    override def handleExpiredTimer(win: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[HllRow] =
-      if (!st.exists()) Iterator.empty
-      else {
-        val regs = st.get().regs
-        st.clear()
-        armed.clear()
-        var used = 0L
-        var z = 0L
-        var i = 0
-        while (i < m) {
-          if (regs(i) > 0) { used += 1; z += 1L << (45 - regs(i)) }
-          else z += 1L << 45
-          i += 1
-        }
-        Iterator.single(HllRow(win, used, numerator / z))
-      }
-  }
-
-  /** Streaming DISTINCT-EVENT-IDS-PER-HOUR via HLL registers — the
-    * ingest-health monitor (estimated distinct ids vs raw row count
-    * exposes duplicate floods without per-id state): [[HllWindowProcessor]]
-    * over 1-hour tumbling windows, same chunked replay + far-future
-    * sentinel + RocksDB provider discipline as [[streamingKmv]]. At 100 TB
-    * the keyed shuffle ships (window, bucket, rho) triples and per-window
-    * state is 512 longs regardless of id volume. */
-  def streamingHll(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
+  /** The runner of every window sketch: the events with a non-NULL `key`,
+    * projected to (win_us, `cells`…, us) — the per-row sketch inputs are
+    * computed in the codegen'd scan projection, before the keyed shuffle,
+    * so the state store never hashes — replayed in `numChunks` time
+    * chunks through `sketch`, keyed by window, in EventTime/Append mode
+    * under the RocksDB provider that transformWithState requires.
+    * `sentinel(w)` is the sketch's row at window and event time
+    * [[sentinelWin]]: folded into the last chunk, it pushes the watermark
+    * past every real window end, firing all timers in the final no-data
+    * micro-batch (same flush discipline as the outer joins). The filter
+    * is structural — the sentinel's window START is beyond every real
+    * event, no marker column involved — and belt-and-braces: its timer
+    * never fires anyway.
+    *
+    * At 100 TB the plan holds: the keyed shuffle ships the (window, cell
+    * input) rows any windowed count pays for, and per-window state stays
+    * `size`-bounded. */
+  private def windowSketch[E <: Product : TypeTag, R <: Product : TypeTag](
+      spark: SparkSession, sfDir: String, numChunks: Int, name: String, key: String,
+      cells: Seq[Column], sentinel: Long => E, sketch: WindowSketchProcessor[E, R]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import graft.operators.{Hashing, TextAnalysis}
-    val m = TextAnalysis.HllM
-    val evs = Tables.events(spark, sfDir)
-      .filter(col("event_id").isNotNull)
-      .select(
-        expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us"),
-        Hashing.md5Long(col("event_id").cast("string")).as("h"),
-        expr("ts div 1000").as("us"))
-      .select(col("win_us"), (col("h") % m).as("bucket"),
-        expr(s"h div $m").as("x"), col("us"))
-      .select(col("win_us"), col("bucket"),
-        expr(s"CASE WHEN x = 0 THEN ${TextAnalysis.HllRhoMax} ELSE least(bit_count((x & (-x)) - 1) + 1, ${TextAnalysis.HllRhoMax}) END")
-          .cast("long").as("rho"),
-        col("us"))
-    val name = "graft_stream_hll"
-    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
-        Some(maxUs => HllEv(sentinelWin(maxUs), 0L, 1L, sentinelWin(maxUs))))), RocksDb) { s =>
-      watermarked(s.head).as[HllEv]
-        .groupByKey(_.win_us)
-        .transformWithState(
-          new HllWindowProcessor(m.toInt, TextAnalysis.HllNumerator),
-          TimeMode.EventTime(), OutputMode.Append())
+    val evs = Tables.events(spark, sfDir).filter(col(key).isNotNull)
+      .select(expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us") +: cells :+
+        expr("ts div 1000").as("us"): _*)
+    val maxUs = replay(spark, name, sfDir, numChunks,
+        Seq(Side(evs, "us", Some(maxUs => sentinel(sentinelWin(maxUs))))), RocksDb) { s =>
+      watermarked(s.head).groupBy(col("win_us")).as[Long, E]
+        .transformWithState(sketch, TimeMode.EventTime(), OutputMode.Append())
         .toDF()
     }
     spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
+  }
+
+  /** Streaming DISTINCT-USERS-PER-HOUR via a KMV sketch — the continuous
+    * twin of [[graft.operators.TextAnalysis.distinctKmv]]. The cells are
+    * the k smallest DISTINCT 56-bit user hashes seen for the hour, kept
+    * sorted (O(k) longs, where a streaming `count(DISTINCT)` grows with
+    * the user population); the min-k-of-distinct merge is a set union
+    * followed by trim, and KMV's estimate is a pure integer function of
+    * those hashes (TextAnalysis.scala KMV scaladoc), so the output is
+    * bit-comparable against a batch DuckDB oracle. */
+  def streamingKmv(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
+    import graft.operators.{Hashing, TextAnalysis}
+    val k = TextAnalysis.KmvK
+    val numerator = TextAnalysis.KmvNumerator
+    windowSketch(spark, sfDir, numChunks, "graft_stream_kmv", "user_id",
+      Seq(Hashing.md5Long(col("user_id").cast("string")).as("h")),
+      w => KEv(w, -1L, w),
+      new WindowSketchProcessor[KEv, KmvRow](0,
+        (hs, rows) => (hs ++ rows.map(_.h)).distinct.sorted.take(k),
+        (win, hs) => Iterator.single(KmvRow(win, hs.length.toLong,
+          if (hs.length < k) hs.length.toLong else numerator / hs.last))))
+  }
+
+  /** Streaming DISTINCT-EVENT-IDS-PER-HOUR via HyperLogLog registers — the
+    * ingest-health monitor (estimated distinct ids vs raw row count
+    * exposes duplicate floods without per-id state) and the n ≫ m member
+    * of the trio (KMV: how many distinct, small-range exact; CMS: how often
+    * these keys). The cells are m registers; bucket/rho arrive with each
+    * row ([[graft.operators.TextAnalysis.hllRegister]], the batch
+    * `hll_distinct`'s own projection), so the fold is one array max per
+    * event, and the fixed-point integer estimator of
+    * [[graft.operators.TextAnalysis.hllDistinct]] makes the output
+    * bit-exact against the batch register math. */
+  def streamingHll(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
+    import graft.operators.{Hashing, TextAnalysis}
+    val m = TextAnalysis.HllM.toInt
+    val numerator = TextAnalysis.HllNumerator
+    windowSketch(spark, sfDir, numChunks, "graft_stream_hll", "event_id",
+      TextAnalysis.hllRegister(Hashing.md5Long(col("event_id").cast("string"))),
+      w => HllEv(w, 0L, 1L, w),
+      new WindowSketchProcessor[HllEv, HllRow](m,
+        (regs, rows) => {
+          rows.foreach { e =>
+            val b = e.bucket.toInt
+            if (e.rho > regs(b)) regs(b) = e.rho
+          }
+          regs
+        },
+        (win, regs) => {
+          var used = 0L
+          var z = 0L
+          var i = 0
+          while (i < m) {
+            if (regs(i) > 0) { used += 1; z += 1L << (45 - regs(i)) }
+            else z += 1L << 45
+            i += 1
+          }
+          Iterator.single(HllRow(win, used, numerator / z))
+        }))
   }
 
   /** Batch oracle for [[streamingHll]]: identical register math per
@@ -906,110 +865,47 @@ object StreamingOps {
        |FROM regs GROUP BY win_us""".stripMargin
   }
 
-  case class CmsEv(win_us: Long, b0: Long, b1: Long, b2: Long, b3: Long, us: Long)
-  case class CmsState(cs: Array[Long])
-  case class CmsProbeRow(win_us: Long, user_id: Long, cms_est: Long)
-
-  /** Per-WINDOW Count-Min sketch: depth×width int64 counters — 32 KiB per
-    * window forever, however many users the hour holds — completing the
-    * streaming sketch pair ([[KmvWindowProcessor]] answers "how many
-    * distinct", this answers "how often did THESE keys occur"). The
-    * per-depth bucket ids arrive PRE-COMPUTED on each row (Catalyst
-    * [[graft.operators.TextAnalysis.cmsBucket]] md5 expressions, codegen'd
-    * in the scan stage before the shuffle), so the hot loop is four array
-    * increments per event — no hashing inside the state store. Counter
-    * addition commutes, so chunk boundaries and arrival order cannot
-    * change the final sketch; at the fixed end-of-window timer the probe
-    * keys' cells (min over depth rows) emit once and the state drops. */
-  class CmsWindowProcessor(depth: Int, width: Int, probes: Seq[(Long, Array[Int])])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, CmsEv, CmsProbeRow] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-      ExpiredTimerInfo, TTLConfig, ValueState}
-    import org.apache.spark.sql.Encoders
-    @transient private var st: ValueState[CmsState] = _
-    @transient private var armed: ValueState[Boolean] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      st = getHandle.getValueState[CmsState]("st", Encoders.product[CmsState], TTLConfig.NONE)
-      armed = getHandle.getValueState[Boolean]("armed", Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-    override def handleInputRows(win: Long, rows: Iterator[CmsEv],
-        tv: TimerValues): Iterator[CmsProbeRow] = {
-      val cs = if (st.exists()) st.get().cs else new Array[Long](depth * width)
-      rows.foreach { e =>
-        cs(e.b0.toInt) += 1
-        cs(width + e.b1.toInt) += 1
-        cs(2 * width + e.b2.toInt) += 1
-        cs(3 * width + e.b3.toInt) += 1
-      }
-      st.update(CmsState(cs))
-      if (!armed.exists()) {
-        getHandle.registerTimer(
-          math.max((win + WinUs) / 1000L + 1L, tv.getCurrentWatermarkInMs() + 1L))
-        armed.update(true)
-      }
-      Iterator.empty
-    }
-    override def handleExpiredTimer(win: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[CmsProbeRow] =
-      if (!st.exists()) Iterator.empty
-      else {
-        val cs = st.get().cs
-        st.clear()
-        armed.clear()
-        probes.iterator.map { case (u, cells) =>
-          var est = Long.MaxValue
-          var d = 0
-          while (d < depth) { est = math.min(est, cs(d * width + cells(d))); d += 1 }
-          CmsProbeRow(win, u, est)
-        }
-      }
-  }
-
   /** Tracked probe users for [[streamingCms]] — the "watch these known
     * keys" monitoring shape (a probe with no events in a window reports
     * its collision mass, exactly as CMS defines it). */
   val CmsProbeUsers: Seq[Long] = 0L until 8L
 
-  /** Streaming HEAVY-KEY FREQUENCY estimation per hour window via a
-    * Count-Min sketch — the fourth `transformWithState` operator and the
-    * frequency half of the streaming sketch pair (with [[streamingKmv]]).
-    * Exact per-user hourly counts need state proportional to the active
-    * user set; the CMS needs depth×width counters per window, full stop —
-    * the sketch contract an unbounded 100 TB ingest requires. Everything
-    * deterministic: md5-derived buckets (computed in the codegen'd scan
-    * projection, not in the state store), integer counters, and a min
-    * over depth cells per probe — so the streaming result hash-matches
-    * the batch DuckDB oracle cell-for-cell. Same fixed-timer /
-    * sentinel-flush / RocksDB discipline as the KMV window. */
+  /** Streaming HEAVY-KEY FREQUENCY per hour window via a Count-Min sketch:
+    * exact per-user hourly counts need state proportional to the active
+    * user set, the sketch needs depth×width int64 counters (32 KiB) per
+    * window, full stop. The per-depth bucket ids arrive with each row
+    * ([[graft.operators.TextAnalysis.cmsBucket]] md5 expressions), so the
+    * fold is four counter increments per event; at the window's close
+    * each probe user's estimate is the min over its depth cells. md5
+    * buckets, integer counters and a min make the result hash-match the
+    * batch DuckDB oracle cell-for-cell. */
   def streamingCms(spark: SparkSession, sfDir: String, numChunks: Int = 2): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.operators.{Hashing, TextAnalysis}
     val depth = TextAnalysis.CmsDepth
     val width = TextAnalysis.CmsWidth
     val uStr = col("user_id").cast("string")
-    val evs = Tables.events(spark, sfDir)
-      .filter(col("user_id").isNotNull)
-      .select(
-        expr(s"(ts div 1000) div $WinUs * $WinUs").as("win_us"),
-        TextAnalysis.cmsBucket(lit(0), uStr).as("b0"),
-        TextAnalysis.cmsBucket(lit(1), uStr).as("b1"),
-        TextAnalysis.cmsBucket(lit(2), uStr).as("b2"),
-        TextAnalysis.cmsBucket(lit(3), uStr).as("b3"),
-        expr("ts div 1000").as("us"))
     val probes = CmsProbeUsers.map { u =>
       u -> Array.tabulate(depth)(d => (Hashing.md5LongJvm(s"$d:$u") % width).toInt)
     }
-    val name = "graft_stream_cms"
-    val maxUs = replay(spark, name, sfDir, numChunks, Seq(Side(evs, "us",
-        Some(maxUs => CmsEv(sentinelWin(maxUs), 0L, 0L, 0L, 0L, sentinelWin(maxUs))))), RocksDb) { s =>
-      watermarked(s.head).as[CmsEv]
-        .groupByKey(_.win_us)
-        .transformWithState(new CmsWindowProcessor(depth, width, probes),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-    }
-    spark.table(name).filter(col("win_us") < lit(sentinelWin(maxUs)))
+    windowSketch(spark, sfDir, numChunks, "graft_stream_cms", "user_id",
+      (0 until depth).map(d => TextAnalysis.cmsBucket(lit(d), uStr).as(s"b$d")),
+      w => CmsEv(w, 0L, 0L, 0L, 0L, w),
+      new WindowSketchProcessor[CmsEv, CmsProbeRow](depth * width,
+        (cs, rows) => {
+          rows.foreach { e =>
+            cs(e.b0.toInt) += 1
+            cs(width + e.b1.toInt) += 1
+            cs(2 * width + e.b2.toInt) += 1
+            cs(3 * width + e.b3.toInt) += 1
+          }
+          cs
+        },
+        (win, cs) => probes.iterator.map { case (u, cells) =>
+          var est = Long.MaxValue
+          var d = 0
+          while (d < depth) { est = math.min(est, cs(d * width + cells(d))); d += 1 }
+          CmsProbeRow(win, u, est)
+        }))
   }
 
   /** Batch oracle for [[streamingCms]]: per-window sketch cells from the

@@ -1,11 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TempDirs.withTempDir
 
 /** Physical-parquet-type drift tolerance (the round-5 incident, generalized).
   *
@@ -44,8 +46,8 @@ class SchemaDriftSpec extends AnyFunSuite {
     (4L, -1234567L * 1000000L, 12L, "click", 0.5))
 
   /** Write one physical variant of the events table under a fresh sfDir. */
-  private def writeEventsVariant(variant: String): String = {
-    val dir = Files.createTempDirectory(s"graft-drift-$variant").toString
+  private def writeEventsVariant(tmp: Path, variant: String): String = {
+    val dir = Files.createTempDirectory(tmp, variant).toString
     val base = rowsUs.toDF("event_id", "us", "user_id", "event_type", "value")
       .withColumn("props", lit("{}"))
     val df = variant match {
@@ -61,58 +63,64 @@ class SchemaDriftSpec extends AnyFunSuite {
   private val variants = Seq("long_ns", "ts_ltz", "ts_ntz")
 
   for (v <- variants) test(s"Tables.events normalizes ts physical variant '$v' to int64 ns") {
-    val dir = writeEventsVariant(v)
-    val got = Tables.events(spark, dir)
-    assert(got.schema("ts").dataType === LongType,
-      s"variant $v: ts must arrive as canonical long ns, got ${got.schema("ts").dataType}")
-    val byId = got.select("event_id", "ts").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for ((id, us, _, _, _) <- rowsUs)
-      assert(byId(id) === us * 1000L, s"variant $v: ts value drifted for event $id")
+    withTempDir("graft-drift-") { tmp =>
+      val dir = writeEventsVariant(tmp, v)
+      val got = Tables.events(spark, dir)
+      assert(got.schema("ts").dataType === LongType,
+        s"variant $v: ts must arrive as canonical long ns, got ${got.schema("ts").dataType}")
+      val byId = got.select("event_id", "ts").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      for ((id, us, _, _, _) <- rowsUs)
+        assert(byId(id) === us * 1000L, s"variant $v: ts value drifted for event $id")
+    }
   }
 
   test("EventOps.hourly is bit-identical across every ts physical variant") {
-    val results = variants.map { v =>
-      val dir = writeEventsVariant(v)
-      v -> graft.operators.EventOps.hourly(spark, dir)
-        .orderBy("hour_epoch", "event_type").collect().toSeq
+    withTempDir("graft-drift-") { tmp =>
+      val results = variants.map { v =>
+        val dir = writeEventsVariant(tmp, v)
+        v -> graft.operators.EventOps.hourly(spark, dir)
+          .orderBy("hour_epoch", "event_type").collect().toSeq
+      }
+      val (refName, ref) = results.head
+      for ((v, got) <- results.tail)
+        assert(got === ref, s"hourly($v) != hourly($refName)")
     }
-    val (refName, ref) = results.head
-    for ((v, got) <- results.tail)
-      assert(got === ref, s"hourly($v) != hourly($refName)")
   }
 
   /** Date-contract drift for the relational family: a regeneration back to
     * TIMESTAMP(NANOS) must not break timestamp-literal pushdown filters. */
   for (v <- variants) test(s"lineitem/orders date columns normalize to timestamp under variant '$v'") {
-    val dir = Files.createTempDirectory(s"graft-drift-rel-$v").toString
-    val dateUs = 867715200000000L // 1997-07-01 00:00:00 UTC
-    def dateCol(c: org.apache.spark.sql.Column) = v match {
-      case "long_ns" => c * 1000L
-      case "ts_ltz" => timestamp_micros(c)
-      case "ts_ntz" => timestamp_micros(c).cast(TimestampNTZType)
-    }
-    Seq((1L, 2L, 3L, 1, 4.0, 100.0, 0.01, 0.02, "N", "O"))
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus")
-      .withColumn("l_shipdate", dateCol(lit(dateUs)))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    Seq((1L, 2L, "O", 100.0, "1-URGENT"))
-      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-      .withColumn("o_orderdate", dateCol(lit(dateUs)))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    withTempDir("graft-drift-") { tmp =>
+      val dir = Files.createTempDirectory(tmp, s"rel-$v").toString
+      val dateUs = 867715200000000L // 1997-07-01 00:00:00 UTC
+      def dateCol(c: org.apache.spark.sql.Column) = v match {
+        case "long_ns" => c * 1000L
+        case "ts_ltz" => timestamp_micros(c)
+        case "ts_ntz" => timestamp_micros(c).cast(TimestampNTZType)
+      }
+      Seq((1L, 2L, 3L, 1, 4.0, 100.0, 0.01, 0.02, "N", "O"))
+        .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+          "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus")
+        .withColumn("l_shipdate", dateCol(lit(dateUs)))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      Seq((1L, 2L, "O", 100.0, "1-URGENT"))
+        .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+        .withColumn("o_orderdate", dateCol(lit(dateUs)))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
 
-    def check(df: DataFrame, c: String): Unit = {
-      assert(df.schema(c).dataType == TimestampType || df.schema(c).dataType == TimestampNTZType,
-        s"variant $v: $c must arrive timestamp-typed, got ${df.schema(c).dataType}")
-      // The actual engine contract: timestamp-literal comparison + epoch
-      // extraction both analyze and produce the right values.
-      val r = df.filter(col(c) < lit("1998-01-01").cast("timestamp"))
-        .select(unix_timestamp(col(c))).collect()
-      assert(r.map(_.getLong(0)).toSeq === Seq(dateUs / 1000000L), s"variant $v: $c value drifted")
+      def check(df: DataFrame, c: String): Unit = {
+        assert(df.schema(c).dataType == TimestampType || df.schema(c).dataType == TimestampNTZType,
+          s"variant $v: $c must arrive timestamp-typed, got ${df.schema(c).dataType}")
+        // The actual engine contract: timestamp-literal comparison + epoch
+        // extraction both analyze and produce the right values.
+        val r = df.filter(col(c) < lit("1998-01-01").cast("timestamp"))
+          .select(unix_timestamp(col(c))).collect()
+        assert(r.map(_.getLong(0)).toSeq === Seq(dateUs / 1000000L), s"variant $v: $c value drifted")
+      }
+      check(Tables.lineitem(spark, dir), "l_shipdate")
+      check(Tables.orders(spark, dir), "o_orderdate")
     }
-    check(Tables.lineitem(spark, dir), "l_shipdate")
-    check(Tables.orders(spark, dir), "o_orderdate")
   }
 
   test("TESTDATA.md documents the ts contract that the loaders actually enforce") {
@@ -138,20 +146,22 @@ class SchemaDriftSpec extends AnyFunSuite {
     // produce the same row cardinalities. Regression target: a Row
     // accessor or case-class encoder hard-bound to LongType/DoubleType
     // would throw here.
-    val dir = Files.createTempDirectory("graft-drift-narrow").toString
-    rowsUs.toDF("event_id", "us", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType))
-      .withColumn("user_id", col("user_id").cast(IntegerType)) // int32 drift
-      .withColumn("value", col("value").cast(DecimalType(9, 3))) // decimal drift
-      .withColumn("props", lit("{}"))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val canonical = writeEventsVariant("ts_ntz")
-    for (q <- Seq("events_hourly", "events_sliding", "events_first_per_user",
-        "row_quality_gate", "events_type_pivot")) {
-      val drifted = SparkEntry.queries(q)(spark, dir).count()
-      val base = SparkEntry.queries(q)(spark, canonical).count()
-      assert(drifted === base, s"$q cardinality drifted under int32/decimal physical types")
+    withTempDir("graft-drift-") { tmp =>
+      val dir = Files.createTempDirectory(tmp, "narrow").toString
+      rowsUs.toDF("event_id", "us", "user_id", "event_type", "value")
+        .withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType))
+        .withColumn("user_id", col("user_id").cast(IntegerType)) // int32 drift
+        .withColumn("value", col("value").cast(DecimalType(9, 3))) // decimal drift
+        .withColumn("props", lit("{}"))
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val canonical = writeEventsVariant(tmp, "ts_ntz")
+      for (q <- Seq("events_hourly", "events_sliding", "events_first_per_user",
+          "row_quality_gate", "events_type_pivot")) {
+        val drifted = SparkEntry.queries(q)(spark, dir).count()
+        val base = SparkEntry.queries(q)(spark, canonical).count()
+        assert(drifted === base, s"$q cardinality drifted under int32/decimal physical types")
+      }
     }
   }
 
@@ -173,8 +183,8 @@ class SchemaDriftSpec extends AnyFunSuite {
   private def embVal(i: Int, j: Int): Double = ((i * 7 + j * 3) % 16) / 4.0
 
   /** Write one physical variant of the embeddings table (20 × dim-8). */
-  private def writeEmbeddingsVariant(variant: String): String = {
-    val dir = Files.createTempDirectory(s"graft-drift-emb-$variant").toString
+  private def writeEmbeddingsVariant(tmp: Path, variant: String): String = {
+    val dir = Files.createTempDirectory(tmp, s"emb-$variant").toString
     val base = (0 until 20).map { i =>
       (i.toLong, (0 until embDim).map(j => embVal(i, j)).toArray, (i % 3))
     }.toDF("vec_id", "embedding", "label")
@@ -194,17 +204,19 @@ class SchemaDriftSpec extends AnyFunSuite {
   private val annQueries = Seq("knn_brute", "knn_ivf", "dedup_embedding_srp")
 
   test("ANN queries are value-identical across embedding physical variants (f32/f64/i32-ids)") {
-    def run(dir: String): Map[String, Seq[String]] =
-      annQueries.map { q =>
-        q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq.sorted
-      }.toMap
-    val ref = run(writeEmbeddingsVariant("f32"))
-    assert(ref("knn_brute").nonEmpty && ref("dedup_embedding_srp").nonEmpty,
-      "drift fixture must actually exercise the operators")
-    for (v <- Seq("f64", "i32")) {
-      val got = run(writeEmbeddingsVariant(v))
-      for (q <- annQueries)
-        assert(got(q) === ref(q), s"$q drifted under embedding variant '$v'")
+    withTempDir("graft-drift-") { tmp =>
+      def run(dir: String): Map[String, Seq[String]] =
+        annQueries.map { q =>
+          q -> SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq.sorted
+        }.toMap
+      val ref = run(writeEmbeddingsVariant(tmp, "f32"))
+      assert(ref("knn_brute").nonEmpty && ref("dedup_embedding_srp").nonEmpty,
+        "drift fixture must actually exercise the operators")
+      for (v <- Seq("f64", "i32")) {
+        val got = run(writeEmbeddingsVariant(tmp, v))
+        for (q <- annQueries)
+          assert(got(q) === ref(q), s"$q drifted under embedding variant '$v'")
+      }
     }
   }
 
@@ -214,52 +226,58 @@ class SchemaDriftSpec extends AnyFunSuite {
     // stores it as a LIST group + arrow schema metadata; the contract under
     // test is that Spark's reader lands it as array<float> and every ANN
     // query stays in lockstep with the Spark-written float32 layout.
-    val fsl = getClass.getResource("/graft/drift/embeddings_fsl").getPath
-    val arrived = Tables.embeddings(spark, fsl).schema("embedding").dataType
-    assert(arrived.isInstanceOf[ArrayType],
-      s"fixed-size-list embedding must arrive as array, got $arrived")
-    val ref = writeEmbeddingsVariant("f32")
-    for (q <- annQueries) {
-      val got = SparkEntry.queries(q)(spark, fsl).collect().map(_.toString).toSeq.sorted
-      val want = SparkEntry.queries(q)(spark, ref).collect().map(_.toString).toSeq.sorted
-      assert(got === want, s"$q drifted under fixed-size-list embedding layout")
+    withTempDir("graft-drift-") { tmp =>
+      val fsl = getClass.getResource("/graft/drift/embeddings_fsl").getPath
+      val arrived = Tables.embeddings(spark, fsl).schema("embedding").dataType
+      assert(arrived.isInstanceOf[ArrayType],
+        s"fixed-size-list embedding must arrive as array, got $arrived")
+      val ref = writeEmbeddingsVariant(tmp, "f32")
+      for (q <- annQueries) {
+        val got = SparkEntry.queries(q)(spark, fsl).collect().map(_.toString).toSeq.sorted
+        val want = SparkEntry.queries(q)(spark, ref).collect().map(_.toString).toSeq.sorted
+        assert(got === want, s"$q drifted under fixed-size-list embedding layout")
+      }
     }
   }
 
   test("text queries survive int32 doc_id/n_chars drift on documents (value lockstep)") {
-    def writeDocs(narrow: Boolean): String = {
-      val dir = Files.createTempDirectory(s"graft-drift-docs-$narrow").toString
-      val base = Seq(
-        (1L, "the quick brown fox jumps over the lazy dog", "en", "web"),
-        (2L, "the quick brown fox jumps over the lazy dog", "en", "web"), // exact dup
-        (3L, "le renard brun rapide saute par dessus le chien", "fr", "web"),
-        (4L, "pack my box with five dozen liquor jugs", "en", "books"),
-        (5L, "", "en", "web") // empty text edge
-      ).toDF("doc_id", "text", "lang", "source")
-        .withColumn("n_chars", length(col("text")).cast(LongType))
-      val df = if (narrow) base
-        .withColumn("doc_id", col("doc_id").cast(IntegerType))
-        .withColumn("n_chars", col("n_chars").cast(IntegerType))
-      else base
-      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      dir
-    }
-    val canonical = writeDocs(narrow = false)
-    val narrow = writeDocs(narrow = true)
-    for (q <- Seq("dedup_exact", "text_quality", "lang_id")) {
-      val want = SparkEntry.queries(q)(spark, canonical).collect().map(_.toString).toSeq.sorted
-      val got = SparkEntry.queries(q)(spark, narrow).collect().map(_.toString).toSeq.sorted
-      assert(want.nonEmpty, s"$q fixture must produce rows")
-      assert(got === want, s"$q drifted under int32 doc_id/n_chars physical types")
+    withTempDir("graft-drift-") { tmp =>
+      def writeDocs(narrow: Boolean): String = {
+        val dir = Files.createTempDirectory(tmp, s"docs-$narrow").toString
+        val base = Seq(
+          (1L, "the quick brown fox jumps over the lazy dog", "en", "web"),
+          (2L, "the quick brown fox jumps over the lazy dog", "en", "web"), // exact dup
+          (3L, "le renard brun rapide saute par dessus le chien", "fr", "web"),
+          (4L, "pack my box with five dozen liquor jugs", "en", "books"),
+          (5L, "", "en", "web") // empty text edge
+        ).toDF("doc_id", "text", "lang", "source")
+          .withColumn("n_chars", length(col("text")).cast(LongType))
+        val df = if (narrow) base
+          .withColumn("doc_id", col("doc_id").cast(IntegerType))
+          .withColumn("n_chars", col("n_chars").cast(IntegerType))
+        else base
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        dir
+      }
+      val canonical = writeDocs(narrow = false)
+      val narrow = writeDocs(narrow = true)
+      for (q <- Seq("dedup_exact", "text_quality", "lang_id")) {
+        val want = SparkEntry.queries(q)(spark, canonical).collect().map(_.toString).toSeq.sorted
+        val got = SparkEntry.queries(q)(spark, narrow).collect().map(_.toString).toSeq.sorted
+        assert(want.nonEmpty, s"$q fixture must produce rows")
+        assert(got === want, s"$q drifted under int32 doc_id/n_chars physical types")
+      }
     }
   }
 
   test("an unnormalizable ts physical type fails loudly at the loader, not downstream") {
-    val dir = Files.createTempDirectory("graft-drift-bad").toString
-    rowsUs.toDF("event_id", "us", "user_id", "event_type", "value")
-      .withColumn("ts", lit("not-a-time"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val e = intercept[IllegalStateException](Tables.events(spark, dir))
-    assert(e.getMessage.contains("tsToLongNs"))
+    withTempDir("graft-drift-") { tmp =>
+      val dir = Files.createTempDirectory(tmp, "bad").toString
+      rowsUs.toDF("event_id", "us", "user_id", "event_type", "value")
+        .withColumn("ts", lit("not-a-time"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val e = intercept[IllegalStateException](Tables.events(spark, dir))
+      assert(e.getMessage.contains("tsToLongNs"))
+    }
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.TaskContext
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 /** F13 verified, not asserted: the Spark analog of the reference's
   * dead-worker reassignment tests
@@ -50,16 +51,16 @@ class FaultToleranceSpec extends AnyFunSuite {
       }
       NativeQueries.wcMapSh(lines)
     }
-    val out = Files.createTempDirectory("graft-f13-")
-    out.toFile.deleteOnExit()
-    MrJob.run(spark, JobSpec(RefInput, out.toString,
-      failingMapper, Native(NativeQueries.wcReduceSh),
-      numMappers = 4, numReducers = 1))
-    assert(FaultToleranceSpec.drills.get() === 1,
-      "the injected failure must have fired exactly once (attempt 0), then been retried")
-    // Identical to the undisturbed golden: the retry re-ran the SAME file
-    // split (deterministic F2 assignment), not a different one.
-    assert(readLines(out.resolve("part-00000")) === readLines(Paths.get(WcGolden)))
+    withTempDir("graft-f13-") { out =>
+      MrJob.run(spark, JobSpec(RefInput, out.toString,
+        failingMapper, Native(NativeQueries.wcReduceSh),
+        numMappers = 4, numReducers = 1))
+      assert(FaultToleranceSpec.drills.get() === 1,
+        "the injected failure must have fired exactly once (attempt 0), then been retried")
+      // Identical to the undisturbed golden: the retry re-ran the SAME file
+      // split (deterministic F2 assignment), not a different one.
+      assert(readLines(out.resolve("part-00000")) === readLines(Paths.get(WcGolden)))
+    }
   }
 
   /** Generated corpus in four files, no reference checkout: a Zipf-ish
@@ -83,29 +84,23 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(bytes > 8192, s"the drill dies after $n lines, only $bytes bytes: still inside the writer buffer")
   }
 
-  private lazy val corpusDir: Path = {
-    val in = Files.createTempDirectory("graft-f13-in-")
-    in.toFile.deleteOnExit()
-    corpus.grouped(400).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-    }
-    in
-  }
-
   private val Parts = (0 until 3).map(i => f"part-$i%05d")
 
-  private def tmpOut(): Path = {
-    val out = Files.createTempDirectory("graft-f13-out-")
-    out.toFile.deleteOnExit()
-    out
-  }
+  /** Word count at R=3 of the corpus, written as four files of a scratch
+    * input dir, into `out`; the bytes of each part file. */
+  private def runWordCountInto(out: Path, mapper: LineProc, reducer: LineProc): Seq[Array[Byte]] =
+    withTempDir("graft-f13-in-") { in =>
+      corpus.grouped(400).zipWithIndex.foreach { case (chunk, i) =>
+        Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      }
+      MrJob.run(spark, JobSpec(in.toString, out.toString, mapper, reducer,
+        numMappers = 4, numReducers = 3))
+      Parts.map(p => Files.readAllBytes(out.resolve(p)))
+    }
 
-  /** Word count of the corpus at R=3 into `out`; the bytes of each part file. */
-  private def runWordCount(mapper: LineProc, reducer: LineProc, out: Path = tmpOut()): Seq[Array[Byte]] = {
-    MrJob.run(spark, JobSpec(corpusDir.toString, out.toString, mapper, reducer,
-      numMappers = 4, numReducers = 3))
-    Parts.map(p => Files.readAllBytes(out.resolve(p)))
-  }
+  /** [[runWordCountInto]] a scratch output dir. */
+  private def runWordCount(mapper: LineProc, reducer: LineProc): Seq[Array[Byte]] =
+    withTempDir("graft-f13-out-")(runWordCountInto(_, mapper, reducer))
 
   /** Every name in `dir`, hidden ones included, sorted. */
   private def listing(dir: Path): Seq[String] =
@@ -185,10 +180,11 @@ class FaultToleranceSpec extends AnyFunSuite {
 
   test("hermetic: a committed job's output dir holds exactly part-00000 … part-00002") {
     // No checksum files, no _SUCCESS marker, no _temporary scratch dir.
-    val out = tmpOut()
-    val parts = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
-    assert(listing(out) === Parts)
-    assert(parts.forall(_.nonEmpty))
+    withTempDir("graft-f13-out-") { out =>
+      val parts = runWordCountInto(out, Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+      assert(listing(out) === Parts)
+      assert(parts.forall(_.nonEmpty))
+    }
   }
 
   test("hermetic: a job whose reduce task fails on every attempt leaves its output dir empty") {
@@ -200,24 +196,26 @@ class FaultToleranceSpec extends AnyFunSuite {
     assert(half > 0)
     assertTearsFile(undisturbed(1), half)
     FaultToleranceSpec.drills.set(0)
-    val out = tmpOut()
-    intercept[org.apache.spark.SparkException] {
-      runWordCount(Native(NativeQueries.wcMapSh),
-        dieAfter(1, half, NativeQueries.wcReduceSh, everyAttempt = true), out)
+    withTempDir("graft-f13-out-") { out =>
+      intercept[org.apache.spark.SparkException] {
+        runWordCountInto(out, Native(NativeQueries.wcMapSh),
+          dieAfter(1, half, NativeQueries.wcReduceSh, everyAttempt = true))
+      }
+      assert(FaultToleranceSpec.drills.get() === 2, "both attempts of reduce partition 1 must have died")
+      assert(listing(out) === Nil)
     }
-    assert(FaultToleranceSpec.drills.get() === 2, "both attempts of reduce partition 1 must have died")
-    assert(listing(out) === Nil)
   }
 
   test("hermetic: a rerun into the same output dir replaces its part files byte for byte") {
-    val out = tmpOut()
-    val first = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
-    // A stale, half-written part file from an earlier run must be replaced.
-    Files.write(out.resolve(Parts(1)), first(1).take(first(1).length / 2))
-    val rerun = runWordCount(Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh), out)
-    for (i <- 0 until 3)
-      assert(java.util.Arrays.equals(rerun(i), first(i)), s"${Parts(i)} differs")
-    assert(listing(out) === Parts)
+    withTempDir("graft-f13-out-") { out =>
+      val first = runWordCountInto(out, Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+      // A stale, half-written part file from an earlier run must be replaced.
+      Files.write(out.resolve(Parts(1)), first(1).take(first(1).length / 2))
+      val rerun = runWordCountInto(out, Native(NativeQueries.wcMapSh), Native(NativeQueries.wcReduceSh))
+      for (i <- 0 until 3)
+        assert(java.util.Arrays.equals(rerun(i), first(i)), s"${Parts(i)} differs")
+      assert(listing(out) === Parts)
+    }
   }
 }
 

@@ -10,6 +10,7 @@ import org.apache.spark.rdd.RDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 /** The shuffle contract byte for byte, with no reference checkout: an
   * identity job over generated corpora must write into each `part-%05d`
@@ -44,16 +45,12 @@ class MrShuffleSpec extends AnyFunSuite {
     }
   }
 
-  /** The lines in three files; no line holds a `\r` or `\n`, so every line
-    * reads back as written. */
-  private def inputDir(lines: Seq[String]): Path = {
-    val dir = Files.createTempDirectory("graft-mr-shuffle-in-")
-    dir.toFile.deleteOnExit()
+  /** Writes the lines into three files of `dir`; no line holds a `\r` or
+    * `\n`, so every line reads back as written. */
+  private def writeInput(dir: Path, lines: Seq[String]): Unit =
     lines.grouped(math.max(1, (lines.size + 2) / 3)).zipWithIndex.foreach { case (chunk, i) =>
       Files.write(dir.resolve(f"file$i%02d"), utf8(chunk.mkString("", "\n", "\n")))
     }
-    dir
-  }
 
   private def assertPartsMatch(out: Path, want: Seq[Array[Byte]], name: String): Unit =
     for (p <- 0 until R) {
@@ -62,22 +59,21 @@ class MrShuffleSpec extends AnyFunSuite {
         s"$name: $part differs from the oracle")
     }
 
-  private def assertIdentityJobsMatchOracle(lines: Seq[String]): Unit = {
-    val in = inputDir(lines)
-    val want = oracle(lines, R)
-    val identity: Iterator[String] => Iterator[String] = it => it
-    val jobs = Seq(
-      "native" -> (Native(identity), false),
-      "exec cat" -> (Exec(Seq("/bin/cat")), false),
-      "native, byte-split" -> (Native(identity), true))
-    for ((name, (reducer, split)) <- jobs) {
-      val out = Files.createTempDirectory("graft-mr-shuffle-out-")
-      out.toFile.deleteOnExit()
-      MrJob.run(spark, JobSpec(in.toString, out.toString, Native(identity), reducer,
-        numMappers = 2, numReducers = R, splitFilesByBytes = split))
-      assertPartsMatch(out, want, name)
+  private def assertIdentityJobsMatchOracle(lines: Seq[String]): Unit =
+    withTempDir("graft-mr-shuffle-in-") { in =>
+      writeInput(in, lines)
+      val want = oracle(lines, R)
+      val identity: Iterator[String] => Iterator[String] = it => it
+      val jobs = Seq(
+        "native" -> (Native(identity), false),
+        "exec cat" -> (Exec(Seq("/bin/cat")), false),
+        "native, byte-split" -> (Native(identity), true))
+      for ((name, (reducer, split)) <- jobs) withTempDir("graft-mr-shuffle-out-") { out =>
+        MrJob.run(spark, JobSpec(in.toString, out.toString, Native(identity), reducer,
+          numMappers = 2, numReducers = R, splitFilesByBytes = split))
+        assertPartsMatch(out, want, name)
+      }
     }
-  }
 
   /** The shuffle dependencies under `rdd`, nearest first. */
   private def shuffleDeps(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
@@ -142,12 +138,9 @@ class MrShuffleSpec extends AnyFunSuite {
   /** An identity job over `lines` in ONE file (so one map task), byte for
     * byte against the oracle with both reducers, after checking that the
     * map task's count table flushed: the shuffle's parent RDD emits more
-    * `(line, n)` pairs than there are distinct lines. Its input and output
-    * run to tens of MiB, so it deletes them when done. */
-  private def assertFlushingJobMatchesOracle(lines: Seq[String]): Unit = {
-    val in = Files.createTempDirectory("graft-mr-flush-in-")
-    val out = Files.createTempDirectory("graft-mr-flush-out-")
-    try {
+    * `(line, n)` pairs than there are distinct lines. */
+  private def assertFlushingJobMatchesOracle(lines: Seq[String]): Unit =
+    withTempDir("graft-mr-flush-in-") { in => withTempDir("graft-mr-flush-out-") { out =>
       Files.write(in.resolve("file00"), utf8(lines.mkString("", "\n", "\n")))
       val identity: Iterator[String] => Iterator[String] = it => it
       val spec = JobSpec(in.toString, "", Native(identity), Native(identity), numMappers = 2, numReducers = R)
@@ -162,11 +155,7 @@ class MrShuffleSpec extends AnyFunSuite {
         MrJob.run(spark, spec.copy(outputDir = parts.toString, reducer = reducer))
         assertPartsMatch(parts, want, name)
       }
-    } finally {
-      graft.LocalDirs.rmTree(in.toString)
-      graft.LocalDirs.rmTree(out.toString)
-    }
-  }
+    } }
 
   test("more distinct lines than the count table holds: equal lines split across flushes") {
     // Three rounds over more distinct lines than the entry cap, so every

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 /** The `mapreduce-submit` analog run on the reference's own fixtures must
   * reproduce the reference goldens end-to-end (submit.py's defaults are
@@ -39,15 +40,16 @@ class MrSubmitSpec extends AnyFunSuite {
 
   test("submit on the reference fixtures reproduces the wc golden (R=1)") {
     assume(haveFixtures)
-    val out = Files.createTempDirectory("graft-submit-wc-")
-    out.toFile.deleteOnExit()
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", s"$Ref/input", "-o", out.toString,
-      "-m", s"$Ref/exec/wc_map.sh", "-r", s"$Ref/exec/wc_reduce.sh",
-      "--nmappers", "4", "--nreducers", "1")))
-    assert(parts.size === 1)
-    assert(readLines(Paths.get(parts.head)) ===
-      readLines(Paths.get(s"$Ref/correct/word_count_correct.txt")))
+    withTempDir("graft-submit-") { tmp =>
+      val out = Files.createTempDirectory(tmp, "wc-")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", s"$Ref/input", "-o", out.toString,
+        "-m", s"$Ref/exec/wc_map.sh", "-r", s"$Ref/exec/wc_reduce.sh",
+        "--nmappers", "4", "--nreducers", "1")))
+      assert(parts.size === 1)
+      assert(readLines(Paths.get(parts.head)) ===
+        readLines(Paths.get(s"$Ref/correct/word_count_correct.txt")))
+    }
   }
 
   test("submit of the wc .py exec pair matches an independent wordcount (M=3, R=1)") {
@@ -57,21 +59,22 @@ class MrSubmitSpec extends AnyFunSuite {
     // recomputed here from the input files with the same Python semantics
     // (whitespace-run split, per-key sum, byte-ordered keys).
     assume(haveFixtures)
-    val out = Files.createTempDirectory("graft-submit-wcpy-")
-    out.toFile.deleteOnExit()
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", s"$Ref/input", "-o", out.toString,
-      "-m", s"$Ref/exec/wc_map.py", "-r", s"$Ref/exec/wc_reduce.py",
-      "--nmappers", "3", "--nreducers", "1")))
-    assert(parts.size === 1)
-    import scala.jdk.CollectionConverters._
-    val words = Files.list(Paths.get(s"$Ref/input")).iterator().asScala.toSeq
-      .sortBy(_.getFileName.toString)
-      .flatMap(readLines)
-      .flatMap(_.split("\\s+").filter(_.nonEmpty))
-    val expected = words.groupBy(identity).view.mapValues(_.size).toSeq
-      .sortBy(_._1).map { case (w, c) => s"$w $c" }
-    assert(readLines(Paths.get(parts.head)) === expected)
+    withTempDir("graft-submit-") { tmp =>
+      val out = Files.createTempDirectory(tmp, "wcpy-")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", s"$Ref/input", "-o", out.toString,
+        "-m", s"$Ref/exec/wc_map.py", "-r", s"$Ref/exec/wc_reduce.py",
+        "--nmappers", "3", "--nreducers", "1")))
+      assert(parts.size === 1)
+      import scala.jdk.CollectionConverters._
+      val words = Files.list(Paths.get(s"$Ref/input")).iterator().asScala.toSeq
+        .sortBy(_.getFileName.toString)
+        .flatMap(readLines)
+        .flatMap(_.split("\\s+").filter(_.nonEmpty))
+      val expected = words.groupBy(identity).view.mapValues(_.size).toSeq
+        .sortBy(_._1).map { case (w, c) => s"$w $c" }
+      assert(readLines(Paths.get(parts.head)) === expected)
+    }
   }
 
   // Reference routing semantics, recomputed independently for the CLI
@@ -95,51 +98,80 @@ class MrSubmitSpec extends AnyFunSuite {
     // F4+F5+F6 — every input line must land in partition md5(key) % 2 in
     // C byte order, nothing added, nothing lost.
     assume(haveFixtures)
-    val out = Files.createTempDirectory("graft-submit-cat-")
-    out.toFile.deleteOnExit()
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", s"$Ref/input", "-o", out.toString,
-      "-m", "cat", "-r", "cat", "--nmappers", "2", "--nreducers", "2")))
-    assert(parts.size === 2)
-    import scala.jdk.CollectionConverters._
-    val lines = Files.list(Paths.get(s"$Ref/input")).iterator().asScala.toSeq
-      .sortBy(_.getFileName.toString).flatMap(readLines)
-    val expected = (0 until 2).map { r =>
-      lines.filter(l => md5Part(l.split("\t", 2).head, 2) == r).sorted(cOrder)
+    withTempDir("graft-submit-") { tmp =>
+      val out = Files.createTempDirectory(tmp, "cat-")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", s"$Ref/input", "-o", out.toString,
+        "-m", "cat", "-r", "cat", "--nmappers", "2", "--nreducers", "2")))
+      assert(parts.size === 2)
+      import scala.jdk.CollectionConverters._
+      val lines = Files.list(Paths.get(s"$Ref/input")).iterator().asScala.toSeq
+        .sortBy(_.getFileName.toString).flatMap(readLines)
+      val expected = (0 until 2).map { r =>
+        lines.filter(l => md5Part(l.split("\t", 2).head, 2) == r).sorted(cOrder)
+      }
+      val got = parts.sorted.map(p => readLines(Paths.get(p)))
+      assert(got === expected,
+        "identity job must reproduce md5-mod routing + C-sort exactly")
     }
-    val got = parts.sorted.map(p => readLines(Paths.get(p)))
-    assert(got === expected,
-      "identity job must reproduce md5-mod routing + C-sort exactly")
   }
 
   test("hermetic: submit with the cat identity pair on a generated corpus routes and C-sorts every line (M=2, R=3)") {
     // The fixture test above, over four generated files: TAB-keyed and
     // whole-line keys, duplicates, empty lines and non-ASCII text. The
     // output dir must hold exactly the R part files.
-    val rnd = new scala.util.Random(11)
-    val words = Vector("alpha", "Beta", "", "\u00e9t\u00e9", "\ud83d\ude00", "\ue000", "z")
-    val lines = Seq.fill(400) {
-      val key = words(rnd.nextInt(words.size))
-      if (rnd.nextBoolean()) s"$key\t${words(rnd.nextInt(words.size))}" else key
+    withTempDir("graft-submit-") { tmp =>
+      val rnd = new scala.util.Random(11)
+      val words = Vector("alpha", "Beta", "", "\u00e9t\u00e9", "\ud83d\ude00", "\ue000", "z")
+      val lines = Seq.fill(400) {
+        val key = words(rnd.nextInt(words.size))
+        if (rnd.nextBoolean()) s"$key\t${words(rnd.nextInt(words.size))}" else key
+      }
+      val in = Files.createTempDirectory(tmp, "cat-gen-in-")
+      lines.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
+        Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+      }
+      val out = Files.createTempDirectory(tmp, "cat-gen-").resolve("out")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", in.toString, "-o", out.toString,
+        "-m", "cat", "-r", "cat", "--nmappers", "2", "--nreducers", "3")))
+      val names = (0 until 3).map(r => f"part-$r%05d")
+      assert(parts.map(p => Paths.get(p).getFileName.toString) === names)
+      assert(out.toFile.list().toSeq.sorted === names)
+      val expected = (0 until 3).map { r =>
+        lines.filter(l => md5Part(l.split("\t", 2).head, 3) == r).sorted(cOrder)
+      }
+      val got = parts.map(p => readLines(Paths.get(p)))
+      assert(got === expected,
+        "identity job must reproduce md5-mod routing + C-sort exactly")
     }
-    val in = Files.createTempDirectory("graft-submit-cat-gen-in-")
-    in.toFile.deleteOnExit()
-    lines.grouped(100).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+  }
+
+  test("hermetic: submit of the vendored wc .py pair == the native py twins byte-exactly (M=3, R=2)") {
+    // The .py pair through the CLI path over generated corpora: each part
+    // file must equal the Native wcMapPy/wcReducePy job's byte for byte.
+    withTempDir("graft-submit-") { tmp =>
+      val Seq(map, reduce) = ExecFixtures.extract(tmp, "wc_map.py", "wc_reduce.py")
+      for ((tag, lines) <- ExecFixtures.pyWordCorpora(29)) {
+        val in = Files.createDirectory(tmp.resolve(s"$tag-in"))
+        lines.grouped(200).zipWithIndex.foreach { case (chunk, i) =>
+          Files.write(in.resolve(f"file$i%02d"), chunk.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+        }
+        val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+          "-i", in.toString, "-o", tmp.resolve(s"$tag-exec").toString,
+          "-m", map, "-r", reduce, "--nmappers", "3", "--nreducers", "2")))
+        val native = tmp.resolve(s"$tag-native")
+        MrJob.run(spark, JobSpec(in.toString, native.toString,
+          Native(NativeQueries.wcMapPy), Native(NativeQueries.wcReducePy), numMappers = 2, numReducers = 2))
+        assert(parts.map(p => Paths.get(p).getFileName.toString) === Seq("part-00000", "part-00001"))
+        for (p <- parts.map(Paths.get(_))) {
+          val got = Files.readAllBytes(p)
+          assert(got.nonEmpty, s"$tag: ${p.getFileName} is empty")
+          assert(java.util.Arrays.equals(got, Files.readAllBytes(native.resolve(p.getFileName))),
+            s"$tag: ${p.getFileName} differs")
+        }
+      }
     }
-    val out = Files.createTempDirectory("graft-submit-cat-gen-").resolve("out")
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", in.toString, "-o", out.toString,
-      "-m", "cat", "-r", "cat", "--nmappers", "2", "--nreducers", "3")))
-    val names = (0 until 3).map(r => f"part-$r%05d")
-    assert(parts.map(p => Paths.get(p).getFileName.toString) === names)
-    assert(out.toFile.list().toSeq.sorted === names)
-    val expected = (0 until 3).map { r =>
-      lines.filter(l => md5Part(l.split("\t", 2).head, 3) == r).sorted(cOrder)
-    }
-    val got = parts.map(p => readLines(Paths.get(p)))
-    assert(got === expected,
-      "identity job must reproduce md5-mod routing + C-sort exactly")
   }
 
   test("submit of the wc .sh pair with TWO reducers partitions the golden by md5 (M=4, R=2)") {
@@ -147,30 +179,32 @@ class MrSubmitSpec extends AnyFunSuite {
     // md5(word) % 2 across the two part files, each file C-sorted — the
     // full shipped-binary x entry-point x reducer-count matrix.
     assume(haveFixtures)
-    val out = Files.createTempDirectory("graft-submit-wc2-")
-    out.toFile.deleteOnExit()
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", s"$Ref/input", "-o", out.toString,
-      "-m", s"$Ref/exec/wc_map.sh", "-r", s"$Ref/exec/wc_reduce.sh",
-      "--nmappers", "4", "--nreducers", "2")))
-    assert(parts.size === 2)
-    val golden = readLines(Paths.get(s"$Ref/correct/word_count_correct.txt"))
-    val expected = (0 until 2).map { r =>
-      golden.filter(l => md5Part(l.split("\t", 2).head, 2) == r).sorted(cOrder)
+    withTempDir("graft-submit-") { tmp =>
+      val out = Files.createTempDirectory(tmp, "wc2-")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", s"$Ref/input", "-o", out.toString,
+        "-m", s"$Ref/exec/wc_map.sh", "-r", s"$Ref/exec/wc_reduce.sh",
+        "--nmappers", "4", "--nreducers", "2")))
+      assert(parts.size === 2)
+      val golden = readLines(Paths.get(s"$Ref/correct/word_count_correct.txt"))
+      val expected = (0 until 2).map { r =>
+        golden.filter(l => md5Part(l.split("\t", 2).head, 2) == r).sorted(cOrder)
+      }
+      val got = parts.sorted.map(p => readLines(Paths.get(p)))
+      assert(got === expected)
     }
-    val got = parts.sorted.map(p => readLines(Paths.get(p)))
-    assert(got === expected)
   }
 
   test("submit on the reference fixtures reproduces the grep golden (M=2, R=1)") {
     assume(haveFixtures)
-    val out = Files.createTempDirectory("graft-submit-grep-")
-    out.toFile.deleteOnExit()
-    val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
-      "-i", s"$Ref/input", "-o", out.toString,
-      "-m", s"$Ref/exec/grep_map.py", "-r", s"$Ref/exec/grep_reduce.py",
-      "--nmappers", "2", "--nreducers", "1")))
-    assert(readLines(Paths.get(parts.head)) ===
-      readLines(Paths.get(s"$Ref/correct/grep_correct.txt")))
+    withTempDir("graft-submit-") { tmp =>
+      val out = Files.createTempDirectory(tmp, "grep-")
+      val parts = MrSubmit.run(spark, MrSubmit.parse(Seq(
+        "-i", s"$Ref/input", "-o", out.toString,
+        "-m", s"$Ref/exec/grep_map.py", "-r", s"$Ref/exec/grep_reduce.py",
+        "--nmappers", "2", "--nreducers", "1")))
+      assert(readLines(Paths.get(parts.head)) ===
+        readLines(Paths.get(s"$Ref/correct/grep_correct.txt")))
+    }
   }
 }

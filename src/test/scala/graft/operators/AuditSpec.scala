@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 class AuditSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -44,31 +45,33 @@ class AuditSpec extends AnyFunSuite {
   }
 
   test("row_quality_gate counts every crafted violation class exactly once") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rqg").toString
-    val ns2024 = 1704067200L * 1000000000L
-    // (event_id, ts_ns, user_id, type, value): one clean row + one or two
-    // violations per rule, including the NULL forms.
-    Seq(
-      (1L, Option(ns2024), Option(7L), "click", Option(1.0)), // clean
-      (2L, Option(ns2024), Option(0L), "click", Option(1.0)), // user_id = 0
-      (3L, Option(ns2024), None: Option[Long], "view", Option(1.0)), // user_id NULL
-      (9L, Option(ns2024), Option(-3L), "click", Option(1.0)), // user_id negative
-      (4L, Option(ns2024), Option(8L), "click", Option(-0.5)), // negative value
-      (5L, Option(ns2024), Option(9L), "purchase", None: Option[Double]), // value NULL
-      (6L, Option(ns2024), Option(10L), "bogus", Option(2.0)), // unknown type
-      (7L, Option(915148800L * 1000000000L), Option(11L), "click", Option(1.0)), // 1999
-      (8L, Option(2082758400L * 1000000000L), Option(12L), "click", Option(1.0)) // 2036
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("props", org.apache.spark.sql.functions.lit("{}"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = Audit.rowQualityGate(spark, dir).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    // 9 rows total: user rule trips on 0, NULL, and -3 (all three forms).
-    assert(got("null_or_nonpositive_user") === ((3L, 9L, 333333L)))
-    assert(got("negative_or_null_value") === ((2L, 9L, 222222L)))
-    assert(got("unknown_event_type") === ((1L, 9L, 111111L)))
-    assert(got("ts_outside_2000_2035") === ((2L, 9L, 222222L)))
+    withTempDir("graft-rqg") { tmp =>
+      import spark.implicits._
+      val dir = tmp.toString
+      val ns2024 = 1704067200L * 1000000000L
+      // (event_id, ts_ns, user_id, type, value): one clean row + one or two
+      // violations per rule, including the NULL forms.
+      Seq(
+        (1L, Option(ns2024), Option(7L), "click", Option(1.0)), // clean
+        (2L, Option(ns2024), Option(0L), "click", Option(1.0)), // user_id = 0
+        (3L, Option(ns2024), None: Option[Long], "view", Option(1.0)), // user_id NULL
+        (9L, Option(ns2024), Option(-3L), "click", Option(1.0)), // user_id negative
+        (4L, Option(ns2024), Option(8L), "click", Option(-0.5)), // negative value
+        (5L, Option(ns2024), Option(9L), "purchase", None: Option[Double]), // value NULL
+        (6L, Option(ns2024), Option(10L), "bogus", Option(2.0)), // unknown type
+        (7L, Option(915148800L * 1000000000L), Option(11L), "click", Option(1.0)), // 1999
+        (8L, Option(2082758400L * 1000000000L), Option(12L), "click", Option(1.0)) // 2036
+      ).toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withColumn("props", org.apache.spark.sql.functions.lit("{}"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = Audit.rowQualityGate(spark, dir).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+      // 9 rows total: user rule trips on 0, NULL, and -3 (all three forms).
+      assert(got("null_or_nonpositive_user") === ((3L, 9L, 333333L)))
+      assert(got("negative_or_null_value") === ((2L, 9L, 222222L)))
+      assert(got("unknown_event_type") === ((1L, 9L, 111111L)))
+      assert(got("ts_outside_2000_2035") === ((2L, 9L, 222222L)))
+    }
   }
 
   test("bloomSemijoinPrune matches a driver re-derivation of the bloom algebra") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 /** Crafted-golden coverage for the attribution family: the sf testdata is
   * oracle-checked end-to-end, but its matched sets are mostly 1–2 touches —
@@ -14,10 +15,10 @@ class EventOpsSpec extends AnyFunSuite {
 
   private val T = 1700000000000000L // anchor instant, epoch µs
 
-  /** Write a crafted events table; rows are (event_id, us, user_id, type, value). */
-  private def writeEvents(rows: Seq[(Long, Long, Long, String, Double)]): String = {
+  /** Write a crafted events table under `tmp`; rows are (event_id, us, user_id, type, value). */
+  private def writeEvents(tmp: java.nio.file.Path, rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
+    val dir = java.nio.file.Files.createTempDirectory(tmp, "attr").toString
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .withColumn("ts", col("us") * 1000L) // canonical int64 ns layout
       .withColumn("props", lit("{}"))
@@ -27,72 +28,76 @@ class EventOpsSpec extends AnyFunSuite {
   }
 
   test("U-shape attribution: 1/2/3/4-touch weights, window boundary, no-touch exclusion") {
-    val min = 60L * 1000000L
-    val dir = writeEvents(Seq(
-      // user 100: 3 touches → 40/20/40 of 10.0
-      (1L, T, 100L, "purchase", 10.0),
-      (11L, T - 30 * min, 100L, "click", 0.0),
-      (12L, T - 10 * min, 100L, "click", 0.0),
-      (13L, T - 5 * min, 100L, "click", 0.0),
-      // user 200: single touch → full 8.0
-      (2L, T, 200L, "purchase", 8.0),
-      (21L, T - min, 200L, "click", 0.0),
-      // user 300: 2 touches → 50/50 of 6.0
-      (3L, T, 300L, "purchase", 6.0),
-      (31L, T - 50 * min, 300L, "click", 0.0),
-      (32L, T - 20 * min, 300L, "click", 0.0),
-      // user 400: 4 touches → 40/10/10/40 of 5.0
-      (4L, T, 400L, "purchase", 5.0),
-      (41L, T - 40 * min, 400L, "click", 0.0),
-      (42L, T - 30 * min, 400L, "click", 0.0),
-      (43L, T - 20 * min, 400L, "click", 0.0),
-      (44L, T - 10 * min, 400L, "click", 0.0),
-      // user 500: only click is OUTSIDE the hour window → purchase excluded
-      (5L, T, 500L, "purchase", 9.0),
-      (51L, T - 120 * min, 500L, "click", 0.0),
-      // user 600: click EXACTLY at the -1h boundary is included (>=)
-      (6L, T, 600L, "purchase", 2.0),
-      (61L, T - 60 * min, 600L, "click", 0.0)))
-    val got = EventOps.attributionPosition(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(2)) ->
-        (r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
-    assert(got.size === 11, s"expected 11 attributed touches, got ${got.keySet}")
-    assert(!got.keys.exists(_._1 == 5L), "out-of-window purchase must be excluded")
-    // 3 touches: first/last 4.0, middle 2.0
-    assert(got((1L, 11L)) === ((3L, 1L, 4.0)))
-    assert(got((1L, 12L)) === ((3L, 2L, 2.0)))
-    assert(got((1L, 13L)) === ((3L, 3L, 4.0)))
-    // 1 touch: everything
-    assert(got((2L, 21L)) === ((1L, 1L, 8.0)))
-    // 2 touches: 50/50
-    assert(got((3L, 31L)) === ((2L, 1L, 3.0)))
-    assert(got((3L, 32L)) === ((2L, 2L, 3.0)))
-    // 4 touches: 2.0 / 0.5 / 0.5 / 2.0
-    assert(got((4L, 41L)) === ((4L, 1L, 2.0)))
-    assert(got((4L, 42L)) === ((4L, 2L, 0.5)))
-    assert(got((4L, 43L)) === ((4L, 3L, 0.5)))
-    assert(got((4L, 44L)) === ((4L, 4L, 2.0)))
-    // boundary click at exactly -1h attributes fully
-    assert(got((6L, 61L)) === ((1L, 1L, 2.0)))
-    // Weights per purchase must sum to the purchase value (conservation).
-    val sums = got.toSeq.groupBy(_._1._1).view.mapValues(_.map(_._2._3).sum).toMap
-    assert(sums === Map(1L -> 10.0, 2L -> 8.0, 3L -> 6.0, 4L -> 5.0, 6L -> 2.0))
+    withTempDir("graft-attr") { tmp =>
+      val min = 60L * 1000000L
+      val dir = writeEvents(tmp, Seq(
+        // user 100: 3 touches → 40/20/40 of 10.0
+        (1L, T, 100L, "purchase", 10.0),
+        (11L, T - 30 * min, 100L, "click", 0.0),
+        (12L, T - 10 * min, 100L, "click", 0.0),
+        (13L, T - 5 * min, 100L, "click", 0.0),
+        // user 200: single touch → full 8.0
+        (2L, T, 200L, "purchase", 8.0),
+        (21L, T - min, 200L, "click", 0.0),
+        // user 300: 2 touches → 50/50 of 6.0
+        (3L, T, 300L, "purchase", 6.0),
+        (31L, T - 50 * min, 300L, "click", 0.0),
+        (32L, T - 20 * min, 300L, "click", 0.0),
+        // user 400: 4 touches → 40/10/10/40 of 5.0
+        (4L, T, 400L, "purchase", 5.0),
+        (41L, T - 40 * min, 400L, "click", 0.0),
+        (42L, T - 30 * min, 400L, "click", 0.0),
+        (43L, T - 20 * min, 400L, "click", 0.0),
+        (44L, T - 10 * min, 400L, "click", 0.0),
+        // user 500: only click is OUTSIDE the hour window → purchase excluded
+        (5L, T, 500L, "purchase", 9.0),
+        (51L, T - 120 * min, 500L, "click", 0.0),
+        // user 600: click EXACTLY at the -1h boundary is included (>=)
+        (6L, T, 600L, "purchase", 2.0),
+        (61L, T - 60 * min, 600L, "click", 0.0)))
+      val got = EventOps.attributionPosition(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(2)) ->
+          (r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
+      assert(got.size === 11, s"expected 11 attributed touches, got ${got.keySet}")
+      assert(!got.keys.exists(_._1 == 5L), "out-of-window purchase must be excluded")
+      // 3 touches: first/last 4.0, middle 2.0
+      assert(got((1L, 11L)) === ((3L, 1L, 4.0)))
+      assert(got((1L, 12L)) === ((3L, 2L, 2.0)))
+      assert(got((1L, 13L)) === ((3L, 3L, 4.0)))
+      // 1 touch: everything
+      assert(got((2L, 21L)) === ((1L, 1L, 8.0)))
+      // 2 touches: 50/50
+      assert(got((3L, 31L)) === ((2L, 1L, 3.0)))
+      assert(got((3L, 32L)) === ((2L, 2L, 3.0)))
+      // 4 touches: 2.0 / 0.5 / 0.5 / 2.0
+      assert(got((4L, 41L)) === ((4L, 1L, 2.0)))
+      assert(got((4L, 42L)) === ((4L, 2L, 0.5)))
+      assert(got((4L, 43L)) === ((4L, 3L, 0.5)))
+      assert(got((4L, 44L)) === ((4L, 4L, 2.0)))
+      // boundary click at exactly -1h attributes fully
+      assert(got((6L, 61L)) === ((1L, 1L, 2.0)))
+      // Weights per purchase must sum to the purchase value (conservation).
+      val sums = got.toSeq.groupBy(_._1._1).view.mapValues(_.map(_._2._3).sum).toMap
+      assert(sums === Map(1L -> 10.0, 2L -> 8.0, 3L -> 6.0, 4L -> 5.0, 6L -> 2.0))
+    }
   }
 
   test("linear and U-shape attribution agree on 1- and 2-touch purchases") {
-    val min = 60L * 1000000L
-    val dir = writeEvents(Seq(
-      (1L, T, 100L, "purchase", 7.0),
-      (11L, T - min, 100L, "click", 0.0),
-      (2L, T, 200L, "purchase", 4.0),
-      (21L, T - 2 * min, 200L, "click", 0.0),
-      (22L, T - min, 200L, "click", 0.0)))
-    def byKey(df: org.apache.spark.sql.DataFrame) = df
-      .select("purchase_id", "click_id", "attributed").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val linear = byKey(EventOps.attribution(spark, dir))
-    val ushape = byKey(EventOps.attributionPosition(spark, dir))
-    assert(linear === ushape, "n<=2 is the degenerate case where both models coincide")
+    withTempDir("graft-attr") { tmp =>
+      val min = 60L * 1000000L
+      val dir = writeEvents(tmp, Seq(
+        (1L, T, 100L, "purchase", 7.0),
+        (11L, T - min, 100L, "click", 0.0),
+        (2L, T, 200L, "purchase", 4.0),
+        (21L, T - 2 * min, 200L, "click", 0.0),
+        (22L, T - min, 200L, "click", 0.0)))
+      def byKey(df: org.apache.spark.sql.DataFrame) = df
+        .select("purchase_id", "click_id", "attributed").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val linear = byKey(EventOps.attribution(spark, dir))
+      val ushape = byKey(EventOps.attributionPosition(spark, dir))
+      assert(linear === ushape, "n<=2 is the degenerate case where both models coincide")
+    }
   }
 
   test("ewma: constant series locks to the constant; a spike decays by exact halves; gaps pull the baseline") {

@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 
 class SamplingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -91,44 +92,46 @@ class SamplingSpec extends AnyFunSuite {
   }
 
   test("shard_manifest: fingerprint flips on one changed doc and XOR-merges across deliveries") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, length, lit}
-    def write(dir: String, docs: Seq[(Long, String)]): String = {
-      docs.toDF("doc_id", "text")
-        .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      dir
-    }
-    def manifest(dir: String): Map[Long, (Long, Long)] =
-      Sampling.shardManifest(spark, dir).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(5))).toMap
-    val base = (1L to 40L).map(i => i -> s"document number $i body")
-    val a = manifest(write(
-      java.nio.file.Files.createTempDirectory("graft-man-a").toString, base))
-    // One changed document: exactly that doc's shard fingerprint flips.
-    val changed = base.map { case (i, t) => if (i == 7L) i -> (t + " EDITED") else i -> t }
-    val b = manifest(write(
-      java.nio.file.Files.createTempDirectory("graft-man-b").toString, changed))
-    val editedShard = Sampling.shardAssign(spark,
-      write(java.nio.file.Files.createTempDirectory("graft-man-c").toString, base))
-      .filter(col("doc_id") === 7L).head.getLong(1)
-    for ((shard, (n, fp)) <- a) {
-      assert(b(shard)._1 === n, s"shard $shard row count must not change")
-      if (shard == editedShard) assert(b(shard)._2 !== fp, "edited shard fingerprint must flip")
-      else assert(b(shard)._2 === fp, s"untouched shard $shard fingerprint must hold")
-    }
-    // Mergeability: manifest(first ∪ second) = per-shard XOR of the parts —
-    // the property that lets 100 TB deliveries verify incrementally.
-    val part1 = base.take(25)
-    val part2 = base.drop(25)
-    val m1 = manifest(write(java.nio.file.Files.createTempDirectory("graft-man-1").toString, part1))
-    val m2 = manifest(write(java.nio.file.Files.createTempDirectory("graft-man-2").toString, part2))
-    for ((shard, (n, fp)) <- a) {
-      val (n1, f1) = m1.getOrElse(shard, (0L, 0L))
-      val (n2, f2) = m2.getOrElse(shard, (0L, 0L))
-      assert(n1 + n2 === n, s"shard $shard counts must add")
-      assert((f1 ^ f2) === fp, s"shard $shard fingerprints must XOR-merge")
+    withTempDir("graft-man-") { tmp =>
+      import spark.implicits._
+      import org.apache.spark.sql.functions.{col, length, lit}
+      def write(dir: String, docs: Seq[(Long, String)]): String = {
+        docs.toDF("doc_id", "text")
+          .withColumn("lang", lit("en")).withColumn("source", lit("t"))
+          .withColumn("n_chars", length(col("text")).cast("long"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        dir
+      }
+      def manifest(dir: String): Map[Long, (Long, Long)] =
+        Sampling.shardManifest(spark, dir).collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(5))).toMap
+      val base = (1L to 40L).map(i => i -> s"document number $i body")
+      val a = manifest(write(
+        java.nio.file.Files.createTempDirectory(tmp, "a").toString, base))
+      // One changed document: exactly that doc's shard fingerprint flips.
+      val changed = base.map { case (i, t) => if (i == 7L) i -> (t + " EDITED") else i -> t }
+      val b = manifest(write(
+        java.nio.file.Files.createTempDirectory(tmp, "b").toString, changed))
+      val editedShard = Sampling.shardAssign(spark,
+        write(java.nio.file.Files.createTempDirectory(tmp, "c").toString, base))
+        .filter(col("doc_id") === 7L).head.getLong(1)
+      for ((shard, (n, fp)) <- a) {
+        assert(b(shard)._1 === n, s"shard $shard row count must not change")
+        if (shard == editedShard) assert(b(shard)._2 !== fp, "edited shard fingerprint must flip")
+        else assert(b(shard)._2 === fp, s"untouched shard $shard fingerprint must hold")
+      }
+      // Mergeability: manifest(first ∪ second) = per-shard XOR of the parts —
+      // the property that lets 100 TB deliveries verify incrementally.
+      val part1 = base.take(25)
+      val part2 = base.drop(25)
+      val m1 = manifest(write(java.nio.file.Files.createTempDirectory(tmp, "1").toString, part1))
+      val m2 = manifest(write(java.nio.file.Files.createTempDirectory(tmp, "2").toString, part2))
+      for ((shard, (n, fp)) <- a) {
+        val (n1, f1) = m1.getOrElse(shard, (0L, 0L))
+        val (n2, f2) = m2.getOrElse(shard, (0L, 0L))
+        assert(n1 + n2 === n, s"shard $shard counts must add")
+        assert((f1 ^ f2) === fp, s"shard $shard fingerprints must XOR-merge")
+      }
     }
   }
 

@@ -1,13 +1,12 @@
 package graft.plans
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession, Tables}
+import graft.TempDirs.withTempDir
 
 /** The pushdown rule must be EXACTLY the identity on results: it rewrites
   * `normalized-ts cmp literal` onto the raw parquet column, and any
@@ -24,8 +23,9 @@ class TsComparisonPushdownSpec extends AnyFunSuite {
   private val micros = Seq(-2000001L, -2000000L, -1999999L, -1L, 0L, 1L,
     999L, 1000L, 1001L, 5000000L, 5000001L, 1704844800000000L)
 
-  private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-tspush").toString
+  /** Runs `body` on the events table of these instants, written into a
+    * scratch dir. */
+  private def withEvents[A](body: DataFrame => A): A = withTempDir("graft-tspush") { d =>
     micros.zipWithIndex.map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")
       .withColumn("ts", timestamp_micros(col("us")).cast(TimestampNTZType))
@@ -33,10 +33,8 @@ class TsComparisonPushdownSpec extends AnyFunSuite {
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
+    body(Tables.events(spark, d.toString))
   }
-
-  private def events: DataFrame = Tables.events(spark, dir)
 
   // Cutoffs in ns, hitting exact-multiple and non-multiple cases.
   private val cutoffsNs = Seq(-2000000000000L, -1999999000L - 1L, -1L, 0L, 1L,
@@ -45,24 +43,28 @@ class TsComparisonPushdownSpec extends AnyFunSuite {
 
   for (c <- cutoffsNs) {
     test(s"all four comparisons agree with driver-side evaluation at cutoff $c") {
-      val nsById = micros.zipWithIndex.map { case (us, i) => i.toLong -> us * 1000L }.toMap
-      def got(df: DataFrame): Set[Long] =
-        df.select("event_id").collect().map(_.getLong(0)).toSet
-      assert(got(events.filter(col("ts") < c)) === nsById.filter(_._2 < c).keySet, "<")
-      assert(got(events.filter(col("ts") <= c)) === nsById.filter(_._2 <= c).keySet, "<=")
-      assert(got(events.filter(col("ts") > c)) === nsById.filter(_._2 > c).keySet, ">")
-      assert(got(events.filter(col("ts") >= c)) === nsById.filter(_._2 >= c).keySet, ">=")
-      // literal-on-left mirror
-      assert(got(events.filter(lit(c) > col("ts"))) === nsById.filter(_._2 < c).keySet, "lit >")
-      assert(got(events.filter(lit(c) <= col("ts"))) === nsById.filter(_._2 >= c).keySet, "lit <=")
+      withEvents { events =>
+        val nsById = micros.zipWithIndex.map { case (us, i) => i.toLong -> us * 1000L }.toMap
+        def got(df: DataFrame): Set[Long] =
+          df.select("event_id").collect().map(_.getLong(0)).toSet
+        assert(got(events.filter(col("ts") < c)) === nsById.filter(_._2 < c).keySet, "<")
+        assert(got(events.filter(col("ts") <= c)) === nsById.filter(_._2 <= c).keySet, "<=")
+        assert(got(events.filter(col("ts") > c)) === nsById.filter(_._2 > c).keySet, ">")
+        assert(got(events.filter(col("ts") >= c)) === nsById.filter(_._2 >= c).keySet, ">=")
+        // literal-on-left mirror
+        assert(got(events.filter(lit(c) > col("ts"))) === nsById.filter(_._2 < c).keySet, "lit >")
+        assert(got(events.filter(lit(c) <= col("ts"))) === nsById.filter(_._2 >= c).keySet, "lit <=")
+      }
     }
   }
 
   test("the rewritten predicate reaches PushedFilters on the raw parquet column") {
-    val p = events.filter(col("ts") < 1000000L)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters") && p.contains("LessThan(ts"),
-      s"ts range predicate must prune at the scan:\n$p")
+    withEvents { events =>
+      val p = events.filter(col("ts") < 1000000L)
+        .queryExecution.executedPlan.toString
+      assert(p.contains("PushedFilters") && p.contains("LessThan(ts"),
+        s"ts range predicate must prune at the scan:\n$p")
+    }
   }
 
   test("the rule leaves arbitrary long arithmetic alone (fires only on the ts-norm shape)") {
@@ -80,8 +82,10 @@ class TsComparisonPushdownSpec extends AnyFunSuite {
   test("ceilDiv edge: Long.MinValue literal does not wrap (bound stays correct)") {
     // ts >= Long.MinValue must keep ALL rows: the old `floorDiv(l-1,k)+1`
     // spelling wrapped l-1 to Long.MaxValue, inverting the bound.
-    assert(events.filter(col("ts") >= Long.MinValue).count() === micros.size.toLong)
-    assert(events.filter(col("ts") < Long.MinValue).count() === 0L)
+    withEvents { events =>
+      assert(events.filter(col("ts") >= Long.MinValue).count() === micros.size.toLong)
+      assert(events.filter(col("ts") < Long.MinValue).count() === 0L)
+    }
   }
 
   test("a range query over normalized ts prunes row groups identically to raw (count parity)") {

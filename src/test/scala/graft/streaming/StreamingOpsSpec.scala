@@ -3,6 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.TempDirs.withTempDir
 import graft.operators.EventOps
 
 class StreamingOpsSpec extends AnyFunSuite {
@@ -249,7 +250,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     for ((prefix, run) <- Seq(
         "graft_stream_dedup-" -> (() => StreamingOps.streamingDedup(spark, Sf)),
         "graft_stream_hourly-" -> (() => StreamingOps.streamingHourly(spark, Sf)),
-        "graft_stream_upsert" -> (() => StreamingOps.streamingUpsert(spark, Sf)))) {
+        "graft_stream_upsert" -> (() => StreamingOps.streamingUpsert(spark, Sf)),
+        "graft_stream_kmv-" -> (() => StreamingOps.streamingKmv(spark, Sf)))) {
       val before = entries(prefix)
       assert(run().count() > 0)
       assert(entries(prefix) === before, s"$prefix run left scratch behind")
@@ -528,35 +530,36 @@ class StreamingOpsSpec extends AnyFunSuite {
     // documented: distinct keys must stage their own frames, and a key
     // collision must (by design) hand back the first-staged master — the
     // failure mode a call site with an under-specified key would hit.
-    val df1 = Seq((1L, 10L), (2L, 20L)).toDF("id", "us")
-    val df2 = Seq((3L, 30L), (4L, 40L), (5L, 50L)).toDF("id", "us")
-    def runDir() =
-      s"${graft.LocalDirs.scratchRoot}/graft-io/feedspec-${java.util.UUID.randomUUID}"
-    def idsOf(feed: StreamingOps.ChunkFeed): Set[Long] =
-      spark.read.parquet(feed.chunks.flatten.map(_.getAbsolutePath): _*)
-        .select("id").collect().map(_.getLong(0)).toSet
-    val salt = java.util.UUID.randomUUID.toString // keys fresh per suite run
-    val fA = StreamingOps.stageTimeChunksCached(df1, "us", 2, runDir(), s"spec-$salt-A")
-    val fB = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-B")
-    assert(idsOf(fA) === Set(1L, 2L), "key A must stage df1")
-    assert(idsOf(fB) === Set(3L, 4L, 5L), "distinct key B must stage df2, not reuse A")
-    // Colliding key, different frame: the master wins — replaying df1.
-    val fC = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-A")
-    assert(idsOf(fC) === Set(1L, 2L),
-      "a colliding key must replay the first-staged master (the contract call sites must respect)")
-    // Per-run physical isolation: deleting run A's links must not disturb
-    // run C's view of the shared master (hardlinks, not shared paths).
-    fA.chunks.flatten.foreach(f => f.delete(): Unit)
-    assert(idsOf(fC) === Set(1L, 2L), "hardlinked runs must be physically independent")
-    // Sentinel cache: same contract.
-    val s1 = StreamingOps.stageSentinelCached(
-      Seq((-1L, 99L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
-    val s2 = StreamingOps.stageSentinelCached(
-      Seq((-2L, 77L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
-    def sentIds(fs: Seq[java.io.File]) =
-      spark.read.parquet(fs.map(_.getAbsolutePath): _*)
-        .select("id").collect().map(_.getLong(0)).toSet
-    assert(sentIds(s1) === Set(-1L))
-    assert(sentIds(s2) === Set(-1L), "colliding sentinel key must replay the master")
+    withTempDir("feedspec-", s"${graft.LocalDirs.scratchRoot}/graft-io") { tmp =>
+      val df1 = Seq((1L, 10L), (2L, 20L)).toDF("id", "us")
+      val df2 = Seq((3L, 30L), (4L, 40L), (5L, 50L)).toDF("id", "us")
+      def runDir() = s"$tmp/${java.util.UUID.randomUUID}"
+      def idsOf(feed: StreamingOps.ChunkFeed): Set[Long] =
+        spark.read.parquet(feed.chunks.flatten.map(_.getAbsolutePath): _*)
+          .select("id").collect().map(_.getLong(0)).toSet
+      val salt = java.util.UUID.randomUUID.toString // keys fresh per suite run
+      val fA = StreamingOps.stageTimeChunksCached(df1, "us", 2, runDir(), s"spec-$salt-A")
+      val fB = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-B")
+      assert(idsOf(fA) === Set(1L, 2L), "key A must stage df1")
+      assert(idsOf(fB) === Set(3L, 4L, 5L), "distinct key B must stage df2, not reuse A")
+      // Colliding key, different frame: the master wins — replaying df1.
+      val fC = StreamingOps.stageTimeChunksCached(df2, "us", 2, runDir(), s"spec-$salt-A")
+      assert(idsOf(fC) === Set(1L, 2L),
+        "a colliding key must replay the first-staged master (the contract call sites must respect)")
+      // Per-run physical isolation: deleting run A's links must not disturb
+      // run C's view of the shared master (hardlinks, not shared paths).
+      fA.chunks.flatten.foreach(f => f.delete(): Unit)
+      assert(idsOf(fC) === Set(1L, 2L), "hardlinked runs must be physically independent")
+      // Sentinel cache: same contract.
+      val s1 = StreamingOps.stageSentinelCached(
+        Seq((-1L, 99L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
+      val s2 = StreamingOps.stageSentinelCached(
+        Seq((-2L, 77L)).toDF("id", "us"), runDir(), s"spec-$salt-sent")
+      def sentIds(fs: Seq[java.io.File]) =
+        spark.read.parquet(fs.map(_.getAbsolutePath): _*)
+          .select("id").collect().map(_.getLong(0)).toSet
+      assert(sentIds(s1) === Set(-1L))
+      assert(sentIds(s2) === Set(-1L), "colliding sentinel key must replay the master")
+    }
   }
 }
