@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.SortedIntersectExpression.{sorted_intersect_count, sorted_intersect_count3}
-import Similarity.{cosine, toDoubleVec}
 
 /** Document deduplication for training-data pipelines, each shape a
   * first-class operator over the `documents` table:
@@ -1124,9 +1123,7 @@ object Dedup {
     * oversized-bucket corpus through the SAME baseline code path. */
   def embeddingNearDupOf(embeddings: DataFrame, threshold: Double = 0.4,
       maxRows: Long = 20000L): DataFrame = {
-    val e = embeddings
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
+    val e = Similarity.vectors(embeddings)
     val n = e.count()
     require(n <= maxRows,
       s"embeddingNearDup is the all-pairs exactness baseline (O(n^2) = ${n * n} " +

@@ -19,6 +19,28 @@ import graft.Tables
   * All arithmetic runs in double with a fixed left-to-right fold
   * ([[cosine]]) so the DuckDB oracle (same fold order via list_transform +
   * list_sum) reproduces the scores.
+  *
+  * Each shared step below has ONE definition, so a fold, tie-break or
+  * plan-shape change lands in every query that takes it:
+  *  - [[vectors]]: the (vec_id, v, nrm) scan of the kNN, IVF, quantized,
+  *    SRP and eval queries and of [[Dedup.embeddingNearDupOf]];
+  *  - [[topK]] / [[neighborTable]]: the per-query rank ≤ k on (score,
+  *    vec_id ASC) and its (query, neighbor_id, rank, score) output;
+  *  - [[probeAssigned]]: the in-cluster cosine probe of the seeded,
+  *    trained and multi-probe IVF paths (each passes its query frame);
+  *  - [[adcInCluster]]: IVFPQ's in-cluster ADC scoring, for [[knnIvfPq]]
+  *    and the [[knnIvfRerank]] shortlist;
+  *  - [[rerankExact]]: the exact-cosine re-rank of a shortlist, for
+  *    [[knnIvfRerank]] and [[knnBinary]];
+  *  - [[windowCandidates]]: the sorted-neighborhood window of
+  *    [[embeddingNearDupIvf]], [[dedupSemantic]] and [[knnJoin]];
+  *  - [[centroidScore]] / [[decodeCentroids]] / [[trainedCodebook]]: the
+  *    k-means score and codebook decode of [[kmeansTrain]],
+  *    [[knnIvfTrained]] and [[embeddingOutliers]];
+  *  - [[dimBounds]]: the per-dimension min/max of [[knnSq8]] and
+  *    [[binaryCodes]];
+  *  - [[evalPairs]]: the eval-vs-corpus scan of [[contaminationSemantic]]
+  *    and [[hardNegatives]].
   */
 object Similarity {
 
@@ -66,21 +88,45 @@ object Similarity {
 
   val NumQueries = 10 // query set = vec_id < 10
 
-  /** Exact brute-force top-k cosine neighbors for the query vectors.
-    * Norms are computed once per row (narrow map), never per pair. */
-  def knnBrute(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
+  /** The vector scan: (vec_id, v, nrm) — the float→double widening
+    * ([[toDoubleVec]]) and the row's norm, once per row, never per pair.
+    * A caller that never reads `nrm` pays nothing for it: Catalyst prunes
+    * the unused column. */
+  private[operators] def vectors(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    rebalance(spark, e).join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos_sim"))
+
+  /** The query set of a `(vec_id, v, nrm, …)` frame as (query_id, qv, qnrm,
+    * `extra`…). */
+  private def queryRows(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < NumQueries)
+      .select(Seq(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm")) ++ extra: _*)
+
+  /** Query-to-candidate cosine over a (qv, qnrm) × (v, nrm) row. */
+  private def queryCos: Column = cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm"))
+
+  /** The per-query top-k every probe ends in: partition by `query`, order
+    * by `by` then vec_id ASC, keep `rank` ≤ k. The rank filter compiles to
+    * WindowGroupLimit, so each map task forwards at most k rows per query. */
+  private def topK(scored: DataFrame, query: String, by: Column, k: Int,
+      rank: String = "rank"): DataFrame = {
+    val w = Window.partitionBy(col(query)).orderBy(by, col("vec_id").asc)
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** A [[topK]] result as a neighbor table: (query, neighbor_id, rank,
+    * `scores`…). */
+  private def neighborTable(ranked: DataFrame, query: String, scores: Column*): DataFrame =
+    ranked.select(Seq(col(query), col("vec_id").as("neighbor_id"),
+      col("rank").cast("long").as("rank")) ++ scores: _*)
+
+  /** Exact brute-force top-k cosine neighbors for the query vectors. */
+  def knnBrute(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
+    val e = vectors(Tables.embeddings(spark, sfDir))
+    val scored = rebalance(spark, e).join(broadcast(queryRows(e)), col("vec_id") =!= col("query_id"))
+      .withColumn("cos", queryCos)
+    neighborTable(topK(scored, "query_id", col("cos").desc, k), "query_id",
+      round(col("cos"), 6).as("cos_sim"))
   }
 
   def knnBruteSql(k: Int = 5): String =
@@ -103,29 +149,33 @@ object Similarity {
     * the plan). */
   val NumCentroids = 128
 
-  /** The in-cluster cosine probe shared by the seeded ([[knnIvf]]) and
-    * trained ([[knnIvfTrained]]) IVF paths: broadcast the (tiny) query
-    * rows, scan only same-cluster candidates, rank per query with the
-    * (cos desc, vec_id) tie-break via WindowGroupLimit. ONE definition so
-    * a tie-break or fold change cannot desynchronize the two paths. */
-  private def probeAssigned(assigned: DataFrame, k: Int): DataFrame = {
-    val q = assigned.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("cluster").as("qcluster"))
-    val wRank = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id").asc)
-    assigned.join(broadcast(q),
+  /** The seeded centroid set of a `(vec_id, v, nrm)` frame as (cent_id, cv,
+    * cnrm). */
+  private def seedCentroids(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NumCentroids)
+      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+
+  /** The in-cluster cosine probe shared by the seeded ([[knnIvf]]),
+    * trained ([[knnIvfTrained]]) and multi-probe ([[knnIvfMultiprobe]])
+    * IVF paths: broadcast the (tiny) query frame `q` — (query_id, qv,
+    * qnrm, qcluster), one row per cluster a query probes — scan only
+    * same-cluster candidates, rank per query with the (cos desc, vec_id)
+    * tie-break. ONE definition so a tie-break or fold change cannot
+    * desynchronize the paths. */
+  private def probeAssigned(assigned: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    val scored = assigned.join(broadcast(q),
         col("cluster") === col("qcluster") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos_sim"))
+      .withColumn("cos", queryCos)
+    neighborTable(topK(scored, "query_id", col("cos").desc, k), "query_id",
+      round(col("cos"), 6).as("cos_sim"))
   }
 
   /** IVF-bucketed ANN: assign every vector to its nearest of the seeded
     * centroids, then answer each query inside its own cluster only. */
-  def knnIvf(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame =
-    probeAssigned(ivfAssigned(spark, sfDir), k)
+  def knnIvf(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
+    val assigned = ivfAssigned(spark, sfDir)
+    probeAssigned(assigned, queryRows(assigned, col("cluster").as("qcluster")), k)
+  }
 
   /** Cluster assignment (vec → nearest seeded centroid) shared by
     * [[knnIvf]] and the bucketed near-dup dedup.
@@ -144,12 +194,8 @@ object Similarity {
     * materialization Spark re-executes the whole scan+assign lineage per
     * join side — the round-1 plan computed it twice per query. */
   def ivfAssigned(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
-    val cent = e.filter(col("vec_id") < NumCentroids)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
-    rebalance(spark, e).join(broadcast(cent))
+    val e = vectors(Tables.embeddings(spark, sfDir))
+    rebalance(spark, e).join(broadcast(seedCentroids(e)))
       .select(col("vec_id"), col("v"), col("nrm"), col("cent_id"),
         cosinePre(col("v"), col("cv"), col("nrm"), col("cnrm")).as("ccos"))
       .groupBy(col("vec_id"))
@@ -276,22 +322,8 @@ object Similarity {
     * holds ≤ W+1 members (every cluster at the oracle scales) the window
     * covers the cluster and output is IDENTICAL to all-pairs. */
   def embeddingNearDupIvf(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("simc").desc, col("vec_id").asc)
-    val ranked = ivfAssigned(spark, sfDir)
-      .withColumn("rnk", row_number().over(w))
-      .localCheckpoint() // probe and build sides both read it
-    val probes = ranked
-      .select(col("cluster"), col("rnk"), col("vec_id").as("a_id"),
-        col("v").as("va"), col("nrm").as("na"),
-        explode(expr(s"sequence(1, $SemWindow)")).as("j"))
-      .select(col("cluster"), (col("rnk") + col("j")).as("rnk"),
-        col("a_id"), col("va"), col("na"))
-    probes
-      .join(ranked.select(col("cluster"), col("rnk"), col("vec_id").as("b_id"),
-        col("v").as("vb"), col("nrm").as("nb")), Seq("cluster", "rnk"))
-      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
-      .filter(col("cos") >= threshold)
+    val (_, cand) = windowCandidates(spark, sfDir, expr(s"sequence(1, $SemWindow)"))
+    cand.filter(col("cos") >= threshold)
       .select(least(col("a_id"), col("b_id")).as("vec_a"),
         greatest(col("a_id"), col("b_id")).as("vec_b"),
         round(col("cos"), 6).as("cos_sim"))
@@ -345,21 +377,9 @@ object Similarity {
     * makes through its corpus-scaled cluster count. The verdict join back
     * to the corpus is a LEFT join on vec_id (one key shuffle of n rows). */
   def dedupSemantic(spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("simc").desc, col("vec_id").asc)
-    val ranked = ivfAssigned(spark, sfDir)
-      .withColumn("rnk", row_number().over(w))
-      .localCheckpoint() // probe side, build side and the verdict join all read it
-    val probes = ranked
-      .select(col("cluster"), col("rnk"), col("vec_id").as("a_id"),
-        col("v").as("va"), col("nrm").as("na"),
-        explode(expr(s"sequence(1, $SemWindow)")).as("j"))
-      .select(col("cluster"), (col("rnk") + col("j")).as("rnk"),
-        col("a_id"), col("va"), col("na"))
-    val dupOf = probes
-      .join(ranked.select(col("cluster"), col("rnk"), col("vec_id").as("b_id"),
-        col("v").as("vb"), col("nrm").as("nb")), Seq("cluster", "rnk"))
-      .filter(cosinePre(col("va"), col("vb"), col("na"), col("nb")) >= threshold)
+    val (ranked, cand) = windowCandidates(spark, sfDir, expr(s"sequence(1, $SemWindow)"))
+    val dupOf = cand
+      .filter(col("cos") >= threshold)
       .groupBy(greatest(col("a_id"), col("b_id")).as("dup_id"))
       .agg(min(least(col("a_id"), col("b_id"))).as("dup_of"))
     ranked.select(col("vec_id"), col("cluster"))
@@ -374,6 +394,31 @@ object Similarity {
     * larger clusters compare 1-D neighbors only, keeping cost n·W. */
   val SemWindow = 32
 
+  /** The sorted-neighborhood candidates of [[embeddingNearDupIvf]],
+    * [[dedupSemantic]] and [[knnJoin]]: cluster members rank by assignment
+    * cosine (simc desc, vec_id asc) behind one eager checkpoint (probe side,
+    * build side and dedupSemantic's verdict join all read it), each probe
+    * row explodes over the caller's rank `offsets`, and the candidates are
+    * the equi-join on (cluster, rank) with their cosine. Returns (ranked,
+    * candidates (a_id, b_id, va, vb, na, nb, cos, …)). */
+  private def windowCandidates(spark: SparkSession, sfDir: String,
+      offsets: Column): (DataFrame, DataFrame) = {
+    val w = Window.partitionBy(col("cluster")).orderBy(col("simc").desc, col("vec_id").asc)
+    val ranked = ivfAssigned(spark, sfDir)
+      .withColumn("rnk", row_number().over(w))
+      .localCheckpoint()
+    val probes = ranked
+      .select(col("cluster"), col("rnk"), col("vec_id").as("a_id"),
+        col("v").as("va"), col("nrm").as("na"), explode(offsets).as("j"))
+      .select(col("cluster"), (col("rnk") + col("j")).as("rnk"),
+        col("a_id"), col("va"), col("na"))
+    val cand = probes
+      .join(ranked.select(col("cluster"), col("rnk"), col("vec_id").as("b_id"),
+        col("v").as("vb"), col("nrm").as("nb")), Seq("cluster", "rnk"))
+      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
+    (ranked, cand)
+  }
+
   /** Corpus-wide kNN GRAPH build — every vector's top-k in-cluster
     * neighbors, the bulk-inference shape behind kNN-graph clustering,
     * diversity sampling and graph-based dedup (the `knn_*` family serves a
@@ -387,24 +432,10 @@ object Similarity {
     * the top-k filter (`cos` DESC, neighbor ASC) compiles to
     * WindowGroupLimit: ≤ k rows per vector survive pre-shuffle. */
   def knnJoin(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("cluster")).orderBy(col("simc").desc, col("vec_id").asc)
-    val ranked = ivfAssigned(spark, sfDir)
-      .withColumn("rnk", row_number().over(w))
-      .localCheckpoint() // probe and build sides both read it
     val offs = ((-SemWindow to -1) ++ (1 to SemWindow)).toArray
-    val probes = ranked
-      .select(col("cluster"), col("rnk"), col("vec_id").as("a_id"),
-        col("v").as("va"), col("nrm").as("na"),
-        explode(typedLit(offs)).as("j"))
-      .select(col("cluster"), (col("rnk") + col("j")).as("rnk"),
-        col("a_id"), col("va"), col("na"))
-    val topW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id").asc)
-    probes
-      .join(ranked.select(col("cluster"), col("rnk"), col("vec_id").as("b_id"),
-        col("v").as("vb"), col("nrm").as("nb")), Seq("cluster", "rnk"))
-      .withColumn("cos", cosinePre(col("va"), col("vb"), col("na"), col("nb")))
+    val (_, cand) = windowCandidates(spark, sfDir, typedLit(offs))
+    val topW = Window.partitionBy(col("a_id")).orderBy(col("cos").desc, col("b_id").asc)
+    cand
       .withColumn("nrank", row_number().over(topW))
       .filter(col("nrank") <= k) // WindowGroupLimit
       .select(col("a_id").as("vec_id"), col("b_id").as("neighbor_id"),
@@ -503,14 +534,7 @@ object Similarity {
     * |flagged|-row aggregation. */
   def contaminationSemantic(spark: SparkSession, sfDir: String,
       threshold: Double = ContamSemTau): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
-    val ev = e.filter(col("vec_id") >= EvalLo && col("vec_id") < EvalHi)
-      .select(col("vec_id").as("eval_id"), col("v").as("evv"), col("nrm").as("evnrm"))
-    rebalance(spark, e.filter(col("vec_id") < EvalLo || col("vec_id") >= EvalHi))
-      .join(broadcast(ev))
-      .withColumn("cos", cosinePre(col("v"), col("evv"), col("nrm"), col("evnrm")))
+    evalPairs(spark, sfDir)
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(max_by(col("eval_id"), struct(col("cos"), -col("eval_id"))).as("eval_id"),
@@ -559,21 +583,22 @@ object Similarity {
     * exchange), so the only shuffle is O(|eval|·k·tasks) candidate rows —
     * never the corpus. */
   def hardNegatives(spark: SparkSession, sfDir: String, k: Int = HardNegK,
-      posTau: Double = ContamSemTau): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
+      posTau: Double = ContamSemTau): DataFrame =
+    neighborTable(topK(evalPairs(spark, sfDir).filter(col("cos") < posTau), "eval_id",
+      col("cos").desc, k), "eval_id", round(col("cos"), 6).as("cos_sim"))
+
+  /** Every (corpus vector, eval vector) pair with its cosine — the one
+    * eval-vs-corpus scan [[contaminationSemantic]] and [[hardNegatives]]
+    * decide on: the eval slice [EvalLo, EvalHi) broadcasts as (eval_id,
+    * evv, evnrm), the rest of the corpus is re-balanced and scored
+    * map-side. */
+  private def evalPairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = vectors(Tables.embeddings(spark, sfDir))
     val ev = e.filter(col("vec_id") >= EvalLo && col("vec_id") < EvalHi)
       .select(col("vec_id").as("eval_id"), col("v").as("evv"), col("nrm").as("evnrm"))
-    val w = Window.partitionBy(col("eval_id")).orderBy(col("cos").desc, col("vec_id").asc)
     rebalance(spark, e.filter(col("vec_id") < EvalLo || col("vec_id") >= EvalHi))
       .join(broadcast(ev))
       .withColumn("cos", cosinePre(col("v"), col("evv"), col("nrm"), col("evnrm")))
-      .filter(col("cos") < posTau)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("eval_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos_sim"))
   }
 
   /** DuckDB twin: same fold-order cosine, same raw-double τ filter, same
@@ -686,9 +711,7 @@ object Similarity {
   val SrpChunk = 4096
 
   def embeddingNearDupSrpOf(embeddings: DataFrame, threshold: Double = 0.4): DataFrame = {
-    val e = embeddings
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
+    val e = vectors(embeddings)
       .localCheckpoint() // feeds code computation AND the vector re-attach
     // 4n small rows (no vectors — the rank window sorts 32 B rows):
     // serialized checkpoint so the code computation runs once.
@@ -829,26 +852,15 @@ object Similarity {
   def knnIvfMultiprobe(spark: SparkSession, sfDir: String, k: Int = 3,
       p: Int = NumProbes): DataFrame = {
     val assigned = ivfAssigned(spark, sfDir)
-    val cent = assigned.filter(col("vec_id") < NumCentroids)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cnrm"))
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("ccos").desc, col("cent_id").asc)
-    val qp = assigned.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-      .join(broadcast(cent))
+    val qp = queryRows(assigned)
+      .join(broadcast(seedCentroids(assigned)))
       .withColumn("ccos", cosinePre(col("qv"), col("cv"), col("qnrm"), col("cnrm")))
       .withColumn("prn", row_number().over(wProbe))
       .filter(col("prn") <= p)
       .select(col("query_id"), col("qv"), col("qnrm"), col("cent_id").as("qcluster"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    assigned.join(broadcast(qp),
-        col("cluster") === col("qcluster") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos_sim"))
+    probeAssigned(assigned, qp, k)
   }
 
   /** DuckDB twin — same seeded assignment as [[knnIvfSql]], with the query
@@ -946,17 +958,14 @@ object Similarity {
     import spark.implicits._
     val vecs = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
-    def centDf(cents: Seq[(Long, Seq[Double])]) =
-      broadcast(cents.toDF("cluster", "cvec"))
     var cents: Seq[(Long, Seq[Double])] = vecs.filter(col("vec_id") < k)
       .select(col("vec_id"), toDoubleVec(col("embedding")))
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     var update: DataFrame = null
     for (_ <- 1 to iters) {
       val w = Window.partitionBy(col("vec_id"))
-        .orderBy((dot(toDoubleVec(col("embedding")), col("cvec")) /
-          sqrt(dot(col("cvec"), col("cvec")))).desc, col("cluster").asc)
-      val assigned = vecs.crossJoin(centDf(cents))
+        .orderBy(centroidScore(toDoubleVec(col("embedding"))).desc, col("cluster").asc)
+      val assigned = vecs.crossJoin(codebook(spark, cents))
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("cluster"), col("embedding"))
       update = assigned
@@ -965,17 +974,42 @@ object Similarity {
           floor(col("x").cast("double") * 1000000).cast("long").as("fp"))
         .groupBy(col("cluster"), col("dim"))
         .agg(count(lit(1)).as("n_vecs"), sum(col("fp")).as("sum_fp"))
-      cents = update
-        .select(col("cluster"), col("dim"),
-          expr("(sum_fp div n_vecs) / CAST(1000000 AS DOUBLE)").as("cv"))
-        .as[(Long, Long, Double)].collect().toSeq
-        .groupBy(_._1).toSeq
-        .map { case (cl, rows) => (cl, rows.sortBy(_._2).map(_._3)) }
-        .sortBy(_._1)
+      cents = decodeCentroids(spark, update.select(col("cluster"), col("dim"),
+        expr("(sum_fp div n_vecs) / CAST(1000000 AS DOUBLE)").as("cv")))
     }
     update.select(col("cluster"), col("dim"), col("n_vecs"),
       expr("sum_fp div n_vecs").as("centroid_fp"))
   }
+
+  /** The k-means assignment score of vector column `v` against the
+    * codebook row's `cvec`: dot/|c|, the same ranking as cosine for a fixed
+    * vector. ONE definition for training and both trained-codebook
+    * consumers, so their argmax cannot drift apart. */
+  private def centroidScore(v: Column): Column =
+    dot(v, col("cvec")) / sqrt(dot(col("cvec"), col("cvec")))
+
+  /** Centroid rows (cluster, dim, cv) → each cluster's dim-ordered vector,
+    * clusters ascending: the collected O(K·d) decode between Lloyd
+    * iterations and of the trained codebook. */
+  private def decodeCentroids(spark: SparkSession, rows: DataFrame): Seq[(Long, Seq[Double])] = {
+    import spark.implicits._
+    rows.as[(Long, Long, Double)].collect().toSeq
+      .groupBy(_._1).toSeq
+      .map { case (cl, rs) => (cl, rs.sortBy(_._2).map(_._3)) }
+      .sortBy(_._1)
+  }
+
+  /** A codebook as the broadcast (cluster, cvec) frame. */
+  private def codebook(spark: SparkSession, cents: Seq[(Long, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    broadcast(cents.toDF("cluster", "cvec"))
+  }
+
+  /** [[kmeansTrain]]'s final centroids, decoded from fixed point and
+    * broadcast as a [[codebook]]. */
+  private def trainedCodebook(spark: SparkSession, sfDir: String): DataFrame =
+    codebook(spark, decodeCentroids(spark, kmeansTrain(spark, sfDir)
+      .select(col("cluster"), col("dim"), expr("centroid_fp / CAST(1000000 AS DOUBLE)").as("cv"))))
 
   /** Embedding·centroid dot and centroid norm in SQL — ONE definition for
     * the k-means CTE chain AND the trained-probe oracle (they must agree
@@ -1032,26 +1066,14 @@ object Similarity {
     * re-runs the full unrolled training chain and probes against its final
     * centroids — train AND serve hash-match end-to-end. */
   def knnIvfTrained(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    import spark.implicits._
-    val cents: Seq[(Long, Seq[Double])] = kmeansTrain(spark, sfDir)
-      .select(col("cluster"), col("dim"),
-        expr("centroid_fp / CAST(1000000 AS DOUBLE)").as("cv"))
-      .as[(Long, Long, Double)].collect().toSeq
-      .groupBy(_._1).toSeq
-      .map { case (cl, rows) => (cl, rows.sortBy(_._2).map(_._3)) }
-      .sortBy(_._1)
-    val cdf = broadcast(cents.toDF("cluster", "cvec"))
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
-    val assigned = e.join(cdf)
+    val assigned = vectors(Tables.embeddings(spark, sfDir)).join(trainedCodebook(spark, sfDir))
       .select(col("vec_id"), col("v"), col("nrm"), col("cluster"),
-        (dot(col("v"), col("cvec")) / sqrt(dot(col("cvec"), col("cvec")))).as("score"))
+        centroidScore(col("v")).as("score"))
       .groupBy(col("vec_id"))
       .agg(first(col("v")).as("v"), first(col("nrm")).as("nrm"),
         max_by(col("cluster"), struct(col("score"), -col("cluster"))).as("cluster"))
       .localCheckpoint()
-    probeAssigned(assigned, k)
+    probeAssigned(assigned, queryRows(assigned, col("cluster").as("qcluster")), k)
   }
 
   def knnIvfTrainedSql(k: Int = 5): String = {
@@ -1096,20 +1118,9 @@ object Similarity {
     * discipline), so the ascending rank order is engine-portable. */
   def embeddingOutliers(spark: SparkSession, sfDir: String,
       kOut: Int = OutliersPerCluster): DataFrame = {
-    import spark.implicits._
-    val cents: Seq[(Long, Seq[Double])] = kmeansTrain(spark, sfDir)
-      .select(col("cluster"), col("dim"),
-        expr("centroid_fp / CAST(1000000 AS DOUBLE)").as("cv"))
-      .as[(Long, Long, Double)].collect().toSeq
-      .groupBy(_._1).toSeq
-      .map { case (cl, rows) => (cl, rows.sortBy(_._2).map(_._3)) }
-      .sortBy(_._1)
-    val cdf = broadcast(cents.toDF("cluster", "cvec"))
-    val assigned = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .join(cdf)
-      .select(col("vec_id"), col("cluster"),
-        (dot(col("v"), col("cvec")) / sqrt(dot(col("cvec"), col("cvec")))).as("score"))
+    val assigned = vectors(Tables.embeddings(spark, sfDir))
+      .join(trainedCodebook(spark, sfDir))
+      .select(col("vec_id"), col("cluster"), centroidScore(col("v")).as("score"))
       .groupBy(col("vec_id"))
       .agg(max(struct(col("score").as("s"), (-col("cluster")).as("nc"))).as("best"))
       .select(col("vec_id"), (-col("best.nc")).as("cluster"), col("best.s").as("score"))
@@ -1193,10 +1204,8 @@ object Similarity {
     * (encWide, dtab, adist) — the M-code row per vector, the per-query ADC
     * tables, and the unrolled lookup-sum column over their join. */
   private def pqParts(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, Column) = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
     // (vec_id, m, sv): the M subvectors of every vector
-    val sub = e.select(col("vec_id"),
+    val sub = vectors(Tables.embeddings(spark, sfDir)).select(col("vec_id"),
         explode(array((0 until PqM).map(m =>
           struct(lit(m).as("m"), slice(col("v"), m * PqSubDim + 1, PqSubDim).as("sv"))): _*)).as("s"))
       .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
@@ -1231,15 +1240,16 @@ object Similarity {
   def knnPq(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
     val (encWide, dtab, adist) = pqParts(spark, sfDir)
     // map-only scoring: M unrolled lookups per (query, vector), fixed
-    // left-to-right addition, then top-k via WindowGroupLimit
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)
-    encWide.join(broadcast(dtab), col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 6).as("adist"))
+    // left-to-right addition, then the per-query top-k
+    adistNeighbors(encWide.join(broadcast(dtab), col("vec_id") =!= col("query_id"))
+      .withColumn("adist", adist), k)
   }
+
+  /** The neighbor table of ascending approximate distances (knnPq,
+    * knnIvfPq, knnSq8). */
+  private def adistNeighbors(scored: DataFrame, k: Int): DataFrame =
+    neighborTable(topK(scored, "query_id", col("adist").asc, k), "query_id",
+      round(col("adist"), 6).as("adist"))
 
   /** The COMPOSED production ANN index — IVF partitioning × PQ compression
     * (FAISS's IVFPQ): the corpus is bucketed by nearest coarse centroid
@@ -1261,20 +1271,31 @@ object Similarity {
     * ([[knnRecallCompressed]]) shares ONE encode + assignment pass across
     * every compressed probe instead of rebuilding them per method. */
   private def knnIvfPqOn(encWide: DataFrame, dtab: DataFrame, adist: Column,
-      assignedFull: DataFrame, k: Int): DataFrame = {
-    val assigned = assignedFull.select(col("vec_id"), col("cluster"))
-    val cand = encWide.join(assigned, "vec_id")
+      assigned: DataFrame, k: Int): DataFrame =
+    adistNeighbors(adcInCluster(encWide, dtab, adist, assigned), k)
+
+  /** ADC scoring inside the query's own cluster, shared by IVFPQ and the
+    * rerank shortlist: code rows carry their cluster, the per-query ADC
+    * tables carry the query's (broadcast), and the scoring join is an
+    * equi-join on cluster. */
+  private def adcInCluster(encWide: DataFrame, dtab: DataFrame, adist: Column,
+      assigned: DataFrame): DataFrame = {
+    val cand = encWide.join(assigned.select(col("vec_id"), col("cluster")), "vec_id")
     val qmeta = assigned.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("cluster").as("qcluster"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)
     cand.join(broadcast(dtab.join(qmeta, "query_id")),
         col("cluster") === col("qcluster") && col("vec_id") =!= col("query_id"))
       .withColumn("adist", adist)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 6).as("adist"))
   }
+
+  /** Exact re-rank of a per-query shortlist (query_id, vec_id, …): join
+    * the shortlist back to the vectors of `e` — a (vec_id, v, nrm) frame —
+    * and to the broadcast query rows, score exact cosine and keep the
+    * top-k. Every other shortlist column rides through. */
+  private def rerankExact(short: DataFrame, e: DataFrame, k: Int): DataFrame =
+    topK(short.join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+      .join(broadcast(queryRows(e)), "query_id")
+      .withColumn("cos", queryCos), "query_id", col("cos").desc, k)
 
   /** The shared PQ CTE block (encode + per-query ADC tables). */
   private def pqCtes: String =
@@ -1362,28 +1383,10 @@ object Similarity {
   /** [[knnIvfRerank]] over precomputed building blocks — see [[knnIvfPqOn]]. */
   private def knnIvfRerankOn(encWide: DataFrame, dtab: DataFrame, adist: Column,
       assigned: DataFrame, k: Int, shortlist: Int = 20): DataFrame = {
-    val cand = encWide.join(assigned.select(col("vec_id"), col("cluster")), "vec_id")
-    val qmeta = assigned.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("cluster").as("qcluster"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id").asc)
-    val short = cand.join(broadcast(dtab.join(qmeta, "query_id")),
-        col("cluster") === col("qcluster") && col("vec_id") =!= col("query_id"))
-      .withColumn("adist", adist)
-      .withColumn("arank", row_number().over(wShort))
-      .filter(col("arank") <= shortlist)
+    val short = topK(adcInCluster(encWide, dtab, adist, assigned), "query_id",
+        col("adist").asc, shortlist, "arank")
       .select(col("query_id"), col("vec_id"))
-    val vecs = assigned.select(col("vec_id"), col("v"), col("nrm"))
-    val q = assigned.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    short.join(vecs, "vec_id").join(broadcast(q), "query_id")
-      .withColumn("cos", cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("cos"), 6).as("cos_sim"))
+    neighborTable(rerankExact(short, assigned, k), "query_id", round(col("cos"), 6).as("cos_sim"))
   }
 
   def knnIvfRerankSql(k: Int = 5, shortlist: Int = 20): String =
@@ -1436,17 +1439,22 @@ object Similarity {
     * code 0 and reconstruct exactly. */
   val Sq8Levels = 255
 
-  def knnSq8(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val stats = e.select(posexplode(col("v")).as(Seq("dim", "x")))
+  /** Per-dimension corpus bounds of a `(…, v)` frame as ONE row of two
+    * dim-ordered arrays named `lo` and `hi`: a |dims|-group min/max
+    * aggregation (associative, map-side combined), then a single-row
+    * collect — the "training" pass of [[knnSq8]] and [[binaryCodes]]. */
+  private def dimBounds(e: DataFrame, lo: String, hi: String): DataFrame =
+    e.select(posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("dim")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .agg(
         transform(array_sort(collect_list(struct(col("dim"), col("mn")))),
-          s => s.getField("mn")).as("vmin"),
+          s => s.getField("mn")).as(lo),
         transform(array_sort(collect_list(struct(col("dim"), col("mx")))),
-          s => s.getField("mx")).as("vmax"))
-    val recon = e.crossJoin(broadcast(stats))
+          s => s.getField("mx")).as(hi))
+
+  def knnSq8(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
+    val e = vectors(Tables.embeddings(spark, sfDir))
+    val recon = e.crossJoin(broadcast(dimBounds(e, "vmin", "vmax")))
       .withColumn("codes", expr(
         s"""transform(v, (x, i) -> CASE WHEN vmax[i] = vmin[i] THEN 0L
            |ELSE CAST(floor(((x - vmin[i]) * $Sq8Levels.0D) / (vmax[i] - vmin[i])) AS BIGINT) END)""".stripMargin))
@@ -1454,15 +1462,8 @@ object Similarity {
         s"""transform(codes, (c, i) -> CASE WHEN vmax[i] = vmin[i] THEN vmin[i]
            |ELSE vmin[i] + ((CAST(c AS DOUBLE) * (vmax[i] - vmin[i])) / $Sq8Levels.0D) END)""".stripMargin))
       .select(col("vec_id"), col("recon"))
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adist").asc, col("vec_id").asc)
-    recon.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("adist", dist2(col("qv"), col("recon")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), round(col("adist"), 6).as("adist"))
+    adistNeighbors(recon.join(broadcast(queryRows(e)), col("vec_id") =!= col("query_id"))
+      .withColumn("adist", dist2(col("qv"), col("recon"))), k)
   }
 
   /** Oracle twin: same bounds, same encode→decode chain (identical
@@ -1976,17 +1977,9 @@ object Similarity {
     * (2^(wb−1−b)), so the packed words sort like the bit string;
     * out-of-range dims pack 0. */
   def binaryCodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val stats = e.select(posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("dim")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-      .agg(
-        transform(array_sort(collect_list(struct(col("dim"), col("mn")))),
-          s => s.getField("mn")).as("vmn"),
-        transform(array_sort(collect_list(struct(col("dim"), col("mx")))),
-          s => s.getField("mx")).as("vmx"))
+    val e = vectors(Tables.embeddings(spark, sfDir))
     val wb = BinWordBits
-    e.crossJoin(broadcast(stats))
+    e.crossJoin(broadcast(dimBounds(e, "vmn", "vmx")))
       .withColumn("wrds", expr(
         s"""transform(sequence(0, CAST((size(v) + ${wb - 1}) div $wb AS INT) - 1),
            |  j -> aggregate(sequence(0, ${wb - 1}), 0L,
@@ -1998,34 +1991,18 @@ object Similarity {
 
   def knnBinary(spark: SparkSession, sfDir: String, k: Int = 5,
       shortlist: Int = BinShortlist): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorExpressions.vec_norm(col("v")))
     val enc = binaryCodes(spark, sfDir)
       .localCheckpoint() // corpus side + query side both read the codes
     val q = enc.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("wrds").as("qwrds"))
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham").asc, col("vec_id").asc)
-    val short = rebalance(spark, enc).join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val hammed = rebalance(spark, enc).join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("ham", expr(
         """aggregate(sequence(0, size(wrds) - 1), 0L,
           |  (acc, j) -> acc + CAST(bit_count(wrds[j] ^ qwrds[j]) AS LONG))""".stripMargin))
-      .withColumn("arank", row_number().over(wShort))
-      .filter(col("arank") <= shortlist)
+    val short = topK(hammed, "query_id", col("ham").asc, shortlist, "arank")
       .select(col("query_id"), col("vec_id"), col("ham"))
-    val vecs = e.select(col("vec_id"), col("v"), col("nrm"))
-    val qv = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    short.join(vecs, "vec_id").join(broadcast(qv), "query_id")
-      .withColumn("cos", cosinePre(col("qv"), col("v"), col("qnrm"), col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("ham").as("hamming"),
-        round(col("cos"), 6).as("cos_sim"))
+    neighborTable(rerankExact(short, vectors(Tables.embeddings(spark, sfDir)), k), "query_id",
+      col("ham").as("hamming"), round(col("cos"), 6).as("cos_sim"))
   }
 
   /** Oracle twin: same midrange bounds, same MSB-first pack (shifts, no

@@ -361,6 +361,42 @@ object StreamingOps {
   private def emitRow(user: Long, s: OpenSession): SessionRow =
     SessionRow(user, s.sid, s.n, s.minId, s.maxId, BigDecimal(s.sumMicros, 6).toDouble)
 
+  /** The session fold both gap sessionizers run on one batch of a user's
+    * events: sort by (us, event_id), then extend the open session `open`
+    * (null = none yet) event by event, closing it where the gap from its
+    * last event exceeds `gapUs`. Returns the session left open and the
+    * sessions the batch closed. */
+  private def foldSession(user: Long, open: OpenSession, evs: Iterator[Ev],
+      gapUs: Long): (OpenSession, List[SessionRow]) = {
+    val out = List.newBuilder[SessionRow]
+    var cur = open
+    evs.toIndexedSeq.sortBy(e => (e.us, e.event_id)).foreach { e =>
+      val m = micros(e.value)
+      cur =
+        if (cur == null)
+          OpenSession(1L, 1L, e.event_id, e.event_id, m, e.us)
+        else if (cur.n == 0L) // tombstone: continue the ordinals
+          OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
+        else if (e.us - cur.lastUs > gapUs) {
+          out += emitRow(user, cur)
+          OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
+        } else
+          OpenSession(cur.sid, cur.n + 1,
+            math.min(cur.minId, e.event_id), math.max(cur.maxId, e.event_id),
+            cur.sumMicros + m, math.max(cur.lastUs, e.us))
+    }
+    (cur, out.result())
+  }
+
+  /** The closed form of session `s`: no session open, `sid` kept as the
+    * user's ordinal counter. */
+  private def tombstone(s: OpenSession): OpenSession = OpenSession(s.sid, 0L, 0L, 0L, 0L, s.lastUs)
+
+  /** Event-time ms at which open session `s` closes: just past its gap
+    * edge, never at or behind the watermark (an illegal timer). */
+  private def gapCloseMs(s: OpenSession, gapUs: Long, watermarkMs: Long): Long =
+    math.max((s.lastUs + gapUs) / 1000L + 1L, watermarkMs + 1L)
+
   /** PRODUCTION-SHAPE gap sessionization over any streaming event source:
     * `flatMapGroupsWithState` with an EVENT-TIME TIMEOUT. Per user, state
     * holds only the open session's aggregates; closed sessions are emitted
@@ -394,34 +430,15 @@ object StreamingOps {
             // Leave the sid-counter tombstone (no timeout armed) so a
             // returning user continues the ordinal sequence.
             val s = state.get
-            state.update(OpenSession(s.sid, 0L, 0L, 0L, 0L, s.lastUs))
+            state.update(tombstone(s))
             Iterator.single(emitRow(user, s))
           } else {
-            val sorted = evs.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-            val out = List.newBuilder[SessionRow]
-            var cur = state.getOption.orNull
-            sorted.foreach { e =>
-              val m = micros(e.value)
-              cur =
-                if (cur == null)
-                  OpenSession(1L, 1L, e.event_id, e.event_id, m, e.us)
-                else if (cur.n == 0L) // tombstone: continue the ordinals
-                  OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
-                else if (e.us - cur.lastUs > gapUs) {
-                  out += emitRow(user, cur)
-                  OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
-                } else
-                  OpenSession(cur.sid, cur.n + 1,
-                    math.min(cur.minId, e.event_id), math.max(cur.maxId, e.event_id),
-                    cur.sumMicros + m, math.max(cur.lastUs, e.us))
-            }
+            val (cur, closed) = foldSession(user, state.getOption.orNull, evs, gapUs)
             // The data path always sees ≥1 event, so cur is a live session.
             state.update(cur)
             // Close via timeout when the watermark passes the gap edge.
-            // (max-guard: a timestamp at/behind the watermark is illegal.)
-            state.setTimeoutTimestamp(math.max(
-              (cur.lastUs + gapUs) / 1000L + 1L, state.getCurrentWatermarkMs() + 1L))
-            out.result().iterator
+            state.setTimeoutTimestamp(gapCloseMs(cur, gapUs, state.getCurrentWatermarkMs()))
+            closed.iterator
           }
       }
   }
@@ -535,31 +552,14 @@ object StreamingOps {
     }
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         tv: TimerValues): Iterator[SessionRow] = {
-      val sorted = rows.toIndexedSeq.sortBy(e => (e.us, e.event_id))
-      val out = List.newBuilder[SessionRow]
-      var cur = if (open.exists()) open.get() else null
-      sorted.foreach { e =>
-        val m = micros(e.value)
-        cur =
-          if (cur == null)
-            OpenSession(1L, 1L, e.event_id, e.event_id, m, e.us)
-          else if (cur.n == 0L) // tombstone: continue the ordinals
-            OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
-          else if (e.us - cur.lastUs > gapUs) {
-            out += emitRow(user, cur)
-            OpenSession(cur.sid + 1L, 1L, e.event_id, e.event_id, m, e.us)
-          } else
-            OpenSession(cur.sid, cur.n + 1,
-              math.min(cur.minId, e.event_id), math.max(cur.maxId, e.event_id),
-              cur.sumMicros + m, math.max(cur.lastUs, e.us))
-      }
+      val (cur, closed) = foldSession(user, if (open.exists()) open.get() else null, rows, gapUs)
       open.update(cur)
       // Re-arm the ONE gap timer (timers add, not replace — delete first).
       if (timer.exists()) getHandle.deleteTimer(timer.get())
-      val t = math.max((cur.lastUs + gapUs) / 1000L + 1L, tv.getCurrentWatermarkInMs() + 1L)
+      val t = gapCloseMs(cur, gapUs, tv.getCurrentWatermarkInMs())
       getHandle.registerTimer(t)
       timer.update(t)
-      out.result().iterator
+      closed.iterator
     }
     override def handleExpiredTimer(user: Long, tv: TimerValues,
         info: ExpiredTimerInfo): Iterator[SessionRow] = {
@@ -569,7 +569,7 @@ object StreamingOps {
         val s = open.get()
         if (s.n == 0L) Iterator.empty // already a tombstone
         else {
-          open.update(OpenSession(s.sid, 0L, 0L, 0L, 0L, s.lastUs))
+          open.update(tombstone(s))
           Iterator.single(emitRow(user, s))
         }
       }

@@ -11,21 +11,41 @@ class SimilaritySpec extends AnyFunSuite {
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-  test("knn_recall equals the overlap of the two probes' own outputs") {
-    val brute = Similarity.knnBrute(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.knnIvf(spark, Sf, k = 5).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = brute.groupBy(_._1).map { case (q, bs) =>
-      val vs = ivf.filter(_._1 == q)
+  private def queryPairs(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  // (query, n_brute, n_index, n_overlap, recall_fp) per brute query,
+  // recomputed from the two probes' (query, neighbor) pairs
+  private def recallRows(brute: Set[(Long, Long)], index: Set[(Long, Long)]) =
+    brute.groupBy(_._1).map { case (q, bs) =>
+      val vs = index.filter(_._1 == q)
       val ov = bs.count(vs.contains).toLong
       (q, bs.size.toLong, vs.size.toLong, ov, 1000000L * ov / bs.size)
     }.toSet
+
+  test("knn_recall equals the overlap of the two probes' own outputs") {
+    val expected = recallRows(queryPairs(Similarity.knnBrute(spark, Sf)),
+      queryPairs(Similarity.knnIvf(spark, Sf, k = 5)))
     val got = Similarity.knnRecall(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     assert(got === expected)
     // the eval is informative only if the index is actually approximate
     assert(got.exists(_._5 < 1000000L) || got.forall(_._5 == 1000000L))
+  }
+
+  test("knn_recall_compressed equals each compressed probe's overlap with knn_brute") {
+    val brute = queryPairs(Similarity.knnBrute(spark, Sf))
+    val expected = Seq(
+      "sq8" -> Similarity.knnSq8(spark, Sf),
+      "ivfpq" -> Similarity.knnIvfPq(spark, Sf),
+      "rerank" -> Similarity.knnIvfRerank(spark, Sf)).flatMap { case (m, probe) =>
+      recallRows(brute, queryPairs(probe)).map { case (q, nb, ni, ov, r) => (m, q, nb, ni, ov, r) }
+    }.toSet
+    val got = Similarity.knnRecallCompressed(spark, Sf).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getLong(5))).toSet
+    assert(got === expected)
+    assert(got.size === 3 * Similarity.NumQueries, "one row per (method, query)")
   }
 
   test("knn_pq: ADC ranking recalls exact-L2 neighbors above the measured floor") {
@@ -309,6 +329,38 @@ class SimilaritySpec extends AnyFunSuite {
       assert(ranks === (1L to ranks.size))
       assert(ranks.size <= Similarity.OutliersPerCluster, s"cluster $cl overflows kOut")
     }
+  }
+
+  test("knn_ivf_trained equals an in-memory replay of trained assignment and in-cluster top-k") {
+    import org.apache.spark.sql.functions._
+    val got = Similarity.knnIvfTrained(spark, Sf).collect()
+      .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
+    // kmeansTrain's centroid rows, decoded from fixed point per cluster
+    val cents = Similarity.kmeansTrain(spark, Sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3) / 1e6))
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (c, rows) => c -> rows.sortBy(_._2).map(_._3).toSeq }
+    val vecs = graft.Tables.embeddings(spark, Sf)
+      .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    def dotL2R(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    def cos(a: Seq[Double], b: Seq[Double]) =
+      dotL2R(a, b) / (math.sqrt(dotL2R(a, a)) * math.sqrt(dotL2R(b, b)))
+    // argmax of dot/|c|, lowest cluster on ties
+    val cluster = vecs.map { case (id, v) =>
+      id -> cents.map { case (c, cv) => (c, dotL2R(v, cv) / math.sqrt(dotL2R(cv, cv))) }
+        .maxBy { case (c, s) => (s, -c) }._1
+    }
+    val want = (0L until Similarity.NumQueries.toLong).flatMap { q =>
+      vecs.keys.filter(id => id != q && cluster(id) == cluster(q)).toSeq
+        .map(id => (id, cos(vecs(q), vecs(id))))
+        .sortBy { case (id, c) => (-c, id) }.take(5)
+        .zipWithIndex.map { case ((id, c), i) => ((q, id, (i + 1).toLong), c) }
+    }.toMap
+    assert(got.keySet === want.keySet)
+    got.foreach { case (key, c) => assert(math.abs(c - want(key)) < 1e-6, s"cos_sim of $key") }
+    // the codebook actually partitions: more than one cluster serves queries
+    assert((0L until Similarity.NumQueries.toLong).map(cluster).toSet.size > 1)
   }
 
   // driver-side mirror of the binary pack: midrange thresholds, MSB-first
