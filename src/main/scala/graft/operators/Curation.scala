@@ -58,7 +58,7 @@ object Curation {
   }
 
   def contaminationSql: String =
-    s"""WITH ${Dedup.shinglesSql(3)},
+    s"""WITH ${Dedup.shinglesSql},
        |hs AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} AS h FROM sh),
        |bench AS (SELECT DISTINCT h FROM hs WHERE doc_id % $BenchmarkMod = 0),
        |doc AS (SELECT doc_id, hs.h, bench.h AS bh FROM hs LEFT JOIN bench ON hs.h = bench.h
@@ -307,7 +307,7 @@ object Curation {
   }
 
   def noveltySql: String =
-    s"""WITH ${Dedup.shinglesSql(3)},
+    s"""WITH ${Dedup.shinglesSql},
        |hs AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} AS h FROM sh),
        |first AS (SELECT h, min(doc_id) AS first_doc FROM hs GROUP BY 1)
        |SELECT hs.doc_id,
@@ -900,6 +900,28 @@ object Curation {
        |  CAST(sum(c2) - sum(c1) AS BIGINT) AS chars_delta
        |FROM j GROUP BY 1, 2""".stripMargin
 
+  /** Tokenized `base` (doc_id, lang, text, t) and one doc_id-keyed frame per gate. */
+  private[operators] case class Gates(base: DataFrame, quality: DataFrame,
+      repetition: DataFrame, contamination: DataFrame, nonCanonical: DataFrame)
+
+  /** The gates of [[Sampling.trainingMixFull]] and [[curationFunnel]], in
+    * the flagship's order. ONE checkpointed scan+tokenize pass (and its
+    * checkpointed shingles) feeds them all — per-consumer scans cost 3× the
+    * most expensive narrow stage at 100 TB. */
+  private[operators] def gates(spark: SparkSession, sfDir: String): Gates = {
+    val base = Checkpoints.ser(Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), col("text"))
+      .withColumn("t", TextOps.tokens(col("text"))))
+    val quality = TextAnalysis.qualityOfTokenized(base)
+      .select(col("doc_id"), col("n_tokens"), col("quality_score"))
+    val rep = repetitionOfTokenized(base).select(col("doc_id"), col("top_bigram_frac"))
+    val sh = Checkpoints.ser(Dedup.shinglesOfTokenized(base))
+    val contam = contaminationOfShingles(sh).select(col("doc_id"), col("contamination_frac"))
+    val nonCanonical = Dedup.clustersOfPairs(Dedup.minhashLshStarOfShingles(sh))
+      .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
+    Gates(base, quality, rep, contam, nonCanonical)
+  }
+
   /** THE ATTRITION FUNNEL — the per-gate drop accounting every published
     * curation pipeline reports (RefinedWeb Table 2, Gopher A1.1, the C4
     * paper's filter cascade): one row per stage of the
@@ -919,21 +941,11 @@ object Curation {
     * shuffle class at any corpus size. */
   def curationFunnel(spark: SparkSession, sfDir: String, minQuality: Double = 0.5,
       maxRep: Double = 0.1, maxContam: Double = 0.1): DataFrame = {
-    val base = Checkpoints.ser(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .withColumn("t", TextOps.tokens(col("text"))))
-    val q = TextAnalysis.qualityOfTokenized(base)
-      .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-    val rep = repetitionOfTokenized(base).select(col("doc_id"), col("top_bigram_frac"))
-    val sh = Checkpoints.ser(Dedup.shinglesOfTokenized(base))
-    val contam = contaminationOfShingles(sh).select(col("doc_id"), col("contamination_frac"))
-    val nonCanonical = Dedup.clustersOfPairs(Dedup.minhashLshStarOfShingles(sh))
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id"), lit(1L).as("dup"))
-    val flags = q
-      .join(rep, Seq("doc_id"), "left")
-      .join(contam, Seq("doc_id"), "left")
-      .join(nonCanonical, Seq("doc_id"), "left")
+    val g = gates(spark, sfDir)
+    val flags = g.quality
+      .join(g.repetition, Seq("doc_id"), "left")
+      .join(g.contamination, Seq("doc_id"), "left")
+      .join(g.nonCanonical.select(col("doc_id"), lit(1L).as("dup")), Seq("doc_id"), "left")
       // first failing stage; missing gate rows fail that gate (the
       // flagship's inner joins drop those docs at the same point)
       .withColumn("s",

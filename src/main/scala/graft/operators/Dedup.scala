@@ -21,6 +21,12 @@ import graft.functions.SortedIntersectExpression.{sorted_intersect_count, sorted
   * *within* buckets, which is the property that makes MinHash/LSH viable at
   * 100 TB. All hashing is md5-based so the DuckDB oracle reproduces results
   * bit-for-bit (Spark and DuckDB md5 both emit lowercase hex).
+  *
+  * Each shared decision has ONE private helper (DuckDB twin in parentheses):
+  * `shinglesOf`; the signature `shingleHashes`, `signatures`, `bandKey`
+  * (`hashedCtes`, `slotsSql`, `bandCasesSql`); `bandBuckets`; the edges
+  * `undirectedEdges` (`edgesCte`); `containmentSetsAndKeep`,
+  * `containedFirst`; `unionSketch`; SimHash (`simhashVoteCtes`, `simhashSumSql`).
   */
 object Dedup {
 
@@ -92,7 +98,7 @@ object Dedup {
   def substringPairsOf(docs: DataFrame, minSpan: Int, bound: Int,
       w: Int, maxDf: Int): DataFrame = {
     val ext = bound - minSpan
-    val kh = s"CAST(conv(substring(md5(concat_ws(' ', slice(t, i + 1, $minSpan))), 1, 14), 16, 10) AS LONG)"
+    val kh = Hashing.md5LongSparkSql(s"concat_ws(' ', slice(t, i + 1, $minSpan))")
     // NOTHING here is materialized: the first spelling localCheckpoint'ed
     // the suffix frame (and the ranked frame) so two consumers could share
     // it, and the ~100M-row × array-typed block unroll OOM'd a 24 GiB
@@ -205,30 +211,35 @@ object Dedup {
 
   // ---- shared shingling (word 3-grams) ------------------------------------
 
+  /** Words per shingle: every shingle consumer reads word 3-grams. */
+  private val ShingleWords = 3
+
   /** Distinct word-3-gram shingles per document: (doc_id, shingle).
     * transform(sequence(...)) builds the shingle list without a join;
     * explode + distinct is one narrow pass, so the only shuffle downstream
     * is on the shingle key itself. */
-  def shingles(spark: SparkSession, sfDir: String, n: Int = 3): DataFrame =
-    shinglesOfTokenized(
-      Tables.documents(spark, sfDir)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("t")), n)
+  def shingles(spark: SparkSession, sfDir: String): DataFrame =
+    shinglesOf(Tables.documents(spark, sfDir))
+
+  /** [[shingles]] over an explicit (doc_id, text) frame. */
+  private def shinglesOf(docs: DataFrame): DataFrame =
+    shinglesOfTokenized(docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
 
   /** Core of [[shingles]] over a pre-tokenized (doc_id, t) frame. */
-  def shinglesOfTokenized(d: DataFrame, n: Int = 3): DataFrame =
+  def shinglesOfTokenized(d: DataFrame): DataFrame =
     d.select(col("doc_id"), col("t"))
-      .filter(size(col("t")) >= n)
+      .filter(size(col("t")) >= ShingleWords)
       .select(col("doc_id"),
-        explode(graft.functions.ShinglesExpression.word_shingles(col("t"), n)).as("shingle"))
+        explode(graft.functions.ShinglesExpression.word_shingles(col("t"), ShingleWords)).as("shingle"))
       .distinct()
 
   /** DuckDB twin of [[shingles]] as a WITH-clause body (1-based lists). */
-  def shinglesSql(n: Int = 3): String = {
-    val parts = (0 until n).map(k => s"t[i + $k]").mkString(" || ' ' || ")
+  def shinglesSql: String = {
+    val parts = (0 until ShingleWords).map(k => s"t[i + $k]").mkString(" || ' ' || ")
     s"""toks AS (SELECT doc_id, ${TextOps.tokensSql} AS t FROM documents),
        |sh AS (SELECT DISTINCT doc_id, $parts AS shingle
-       |       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - ${n - 1})) AS i) g
-       |       WHERE len(t) >= $n)""".stripMargin
+       |       FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - ${ShingleWords - 1})) AS i) g
+       |       WHERE len(t) >= $ShingleWords)""".stripMargin
   }
 
   /** Exact n-gram Jaccard near-dup pairs (a < b, jaccard ≥ threshold),
@@ -322,7 +333,7 @@ object Dedup {
   }
 
   def ngramJaccardSql(threshold: Double = 0.8): String =
-    s"""WITH ${shinglesSql(3)},
+    s"""WITH $shinglesSql,
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
        |          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -394,25 +405,7 @@ object Dedup {
   def containmentOf(docs: DataFrame,
       tPpm: Long, dfCapNum: Int, dfCapDen: Int,
       maxDf: Int = ContainMaxDf): DataFrame = {
-    val sh = shinglesOfTokenized(
-        docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-      .localCheckpoint() // sets + df + candidate join all read it
-    val sets = sh.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(col("sh"))).as("ss"))
-      .withColumn("n", size(col("ss")).cast("long"))
-      .localCheckpoint()
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val dfc = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    // `keep` is referenced twice (prefix derivation + the b-side); both
-    // subtrees are structurally identical up to the df aggregation, so
-    // ReuseExchange shares the dfc shuffle instead of a checkpoint —
-    // which would eagerly materialize and hide the cap filter from the
-    // plan the audit pins.
-    val keep = sh.join(dfc, Seq("sh")).crossJoin(broadcast(nDocs))
-      .filter(col("df") <= maxDf &&
-        col("df") * dfCapDen <= col("n_docs") * dfCapNum)
-      .select(col("sh"), col("doc_id"), col("df"))
+    val (sets, keep) = containmentSetsAndKeep(docs, dfCapNum, dfCapDen, maxDf)
     // Prefix postings: per doc, the first ⌊(1-t)·n_full⌋+1 KEPT shingles
     // in (df asc, hash asc) order. n is the FULL set size (the score's
     // min-denominator), so the bound |A\B| ≤ ⌊(1-t)·n⌋ is over the same
@@ -435,6 +428,46 @@ object Dedup {
     scoreContainment(candidates, sets, tPpm)
   }
 
+  /** Per-doc sorted hash sets (doc_id, ss, n) and the postings (sh, doc_id,
+    * df) passing both df caps. `keep` is not checkpointed: ReuseExchange
+    * shares its dfc shuffle, and a checkpoint would hide the cap filter. */
+  private def containmentSetsAndKeep(docs: DataFrame, dfCapNum: Int, dfCapDen: Int,
+      maxDf: Int): (DataFrame, DataFrame) = {
+    val sh = shinglesOf(docs)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
+      .localCheckpoint() // sets + df + candidate join all read it
+    val sets = sh.groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(col("sh"))).as("ss"))
+      .withColumn("n", size(col("ss")).cast("long"))
+      .localCheckpoint()
+    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+    val dfc = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    val keep = sh.join(dfc, Seq("sh")).crossJoin(broadcast(nDocs))
+      .filter(col("df") <= maxDf &&
+        col("df") * dfCapDen <= col("n_docs") * dfCapNum)
+      .select(col("sh"), col("doc_id"), col("df"))
+    (sets, keep)
+  }
+
+  /** Contained side first: the smaller set (ties → smaller doc_id, which
+    * the da < db candidate order already guarantees), then `rest`. */
+  private def containedFirst(rest: String*)(scored: DataFrame): DataFrame =
+    scored.select(Seq(
+      when(col("na") <= col("nb"), col("da")).otherwise(col("db")).as("doc_contained"),
+      when(col("na") <= col("nb"), col("db")).otherwise(col("da")).as("doc_container"),
+      least(col("na"), col("nb")).as("n_contained")) ++ rest.map(col): _*)
+
+  /** The union-sketch overlap of a pair's two sorted bottom-k sketches
+    * `sa`/`sb`: m = bottom-k of sa ∪ sb, ku = |m|, i = |m ∩ sa ∩ sb|. Each
+    * caller derives its own estimate (and cap) from (ku, i). */
+  private def unionSketch(k: Int)(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("m", expr(s"slice(array_sort(array_union(sa, sb)), 1, $k)"))
+      .withColumn("ku", size(col("m")).cast("long"))
+      // m/sa/sb are all sorted → one 3-pointer merge replaces the nested
+      // array_intersect pair (two hash sets + two arrays per pair; r14, §4)
+      .withColumn("i", sorted_intersect_count3(col("m"), col("sa"), col("sb")))
+
   /** Exact containment scoring shared by [[containmentOf]] and its naive
     * differential twin: two candidate-bounded joins back to the full
     * sorted-hash arrays, integer-ppm threshold. */
@@ -448,13 +481,7 @@ object Dedup {
       .withColumn("n_common", sorted_intersect_count(col("ssa"), col("ssb")))
       .withColumn("containment_ppm", expr("n_common * 1000000 div least(na, nb)"))
       .filter(col("containment_ppm") >= tPpm)
-      .select(
-        // contained side first: the smaller set (ties → smaller doc_id,
-        // which the a<b candidate order already guarantees)
-        when(col("na") <= col("nb"), col("da")).otherwise(col("db")).as("doc_contained"),
-        when(col("na") <= col("nb"), col("db")).otherwise(col("da")).as("doc_container"),
-        least(col("na"), col("nb")).as("n_contained"),
-        col("n_common"), col("containment_ppm"))
+      .transform(containedFirst("n_common", "containment_ppm"))
 
   /** Bottom-k sketch size for [[containmentKmv]]. */
   val ContainSketchK = 16
@@ -490,8 +517,7 @@ object Dedup {
 
   def containmentKmvOf(docs: DataFrame, tPpm: Long, k: Int,
       maxDf: Int): DataFrame = {
-    val sh = shinglesOfTokenized(
-        docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
+    val sh = shinglesOf(docs)
       .select(col("doc_id"), Hashing.md5Long(col("shingle")).as("h"))
     val sketches = sh.groupBy(col("doc_id"))
       .agg(expr(s"slice(array_sort(collect_list(h)), 1, $k)").as("sk"),
@@ -508,25 +534,17 @@ object Dedup {
     candidates
       .join(sketches.select(col("doc_id").as("da"), col("sk").as("sa"), col("n").as("na")), Seq("da"))
       .join(sketches.select(col("doc_id").as("db"), col("sk").as("sb"), col("n").as("nb")), Seq("db"))
-      .withColumn("m", expr(s"slice(array_sort(array_union(sa, sb)), 1, $k)"))
-      .withColumn("ku", size(col("m")).cast("long"))
-      // m/sa/sb are all sorted → one 3-pointer merge replaces the nested
-      // array_intersect pair (two hash sets + two arrays per pair; r14, §4)
-      .withColumn("i", sorted_intersect_count3(col("m"), col("sa"), col("sb")))
+      .transform(unionSketch(k))
       .withColumn("inter_est", expr("i * (na + nb) div (ku + i)"))
       .withColumn("containment_est_ppm",
         expr("least(1000000L, inter_est * 1000000 div least(na, nb))"))
       .filter(col("containment_est_ppm") >= tPpm)
-      .select(
-        when(col("na") <= col("nb"), col("da")).otherwise(col("db")).as("doc_contained"),
-        when(col("na") <= col("nb"), col("db")).otherwise(col("da")).as("doc_container"),
-        least(col("na"), col("nb")).as("n_contained"),
-        col("containment_est_ppm"))
+      .transform(containedFirst("containment_est_ppm"))
   }
 
   def containmentKmvSql(tPpm: Long = 600000L, k: Int = ContainSketchK,
       maxDf: Int = ContainMaxDf): String =
-    s"""WITH ${shinglesSql(3)},
+    s"""WITH $shinglesSql,
        |hs AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} AS h FROM sh),
        |sketches AS (SELECT doc_id,
        |    (list_sort(list(h)))[1:$k] AS sk, count(*) AS n
@@ -563,20 +581,7 @@ object Dedup {
   def containmentOfNaive(docs: DataFrame,
       tPpm: Long, dfCapNum: Int, dfCapDen: Int,
       maxDf: Int = ContainMaxDf): DataFrame = {
-    val sh = shinglesOfTokenized(
-        docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-      .localCheckpoint()
-    val sets = sh.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(col("sh"))).as("ss"))
-      .withColumn("n", size(col("ss")).cast("long"))
-      .localCheckpoint()
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val dfc = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val keep = sh.join(dfc, Seq("sh")).crossJoin(broadcast(nDocs))
-      .filter(col("df") <= maxDf &&
-        col("df") * dfCapDen <= col("n_docs") * dfCapNum)
-      .select(col("sh"), col("doc_id"))
+    val (sets, keep) = containmentSetsAndKeep(docs, dfCapNum, dfCapDen, maxDf)
     val candidates = keep.as("a").join(keep.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -586,7 +591,7 @@ object Dedup {
 
   def containmentSql(tPpm: Long = 900000L, dfCapNum: Int = 1, dfCapDen: Int = 10,
       maxDf: Int = ContainMaxDf): String =
-    s"""WITH ${shinglesSql(3)},
+    s"""WITH $shinglesSql,
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
        |dfc AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
        |keep AS (SELECT s.doc_id, s.shingle FROM sh s JOIN dfc USING (shingle)
@@ -663,12 +668,7 @@ object Dedup {
     // 30× slower here: InMemoryRelation build+read dominated; and at 100 TB
     // the bucket-local expansion is the only shape that doesn't re-shuffle
     // the full signature table twice.)
-    BucketPairs.expand(
-      minhashBands(sh0).groupBy(col("band"), col("bk"))
-        .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1),
-      "doc_a", "doc_b")
-      .distinct()
+    BucketPairs.expand(bandBuckets(sh0), "doc_a", "doc_b").distinct()
 
   /** STAR-pairing variant of [[minhashLshOfShingles]] for CONNECTIVITY
     * consumers ([[clusters]] and the composites built on it): each bucket
@@ -689,35 +689,46 @@ object Dedup {
     * weights, splitLeakage's cross-split pair count) keep the all-pairs
     * form — pair multiplicity is their semantics; connectivity is not. */
   def minhashLshStarOfShingles(sh0: DataFrame): DataFrame =
-    minhashBands(sh0).groupBy(col("band"), col("bk"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
+    bandBuckets(sh0)
       .select(explode(expr(
         "transform(slice(ids, 2, size(ids) - 1), y -> struct(ids[0] AS doc_a, y AS doc_b))"))
         .as("p"))
       .select(col("p.doc_a"), col("p.doc_b"))
       .distinct()
 
+  /** The (band, bk) buckets holding ≥ 2 documents, each with its sorted
+    * member array `ids` — what both pairings above expand. */
+  private def bandBuckets(sh0: DataFrame): DataFrame =
+    minhashBands(sh0).groupBy(col("band"), col("bk"))
+      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
+      .filter(size(col("ids")) > 1)
+
+  /** (doc_id, h): each (doc, shingle)'s one md5, reduced mod [[MinhashM]]. */
+  private def shingleHashes(sh0: DataFrame): DataFrame =
+    sh0.select(col("doc_id"), (Hashing.md5Long(col("shingle")) % MinhashM).as("h"))
+
+  /** (doc_id, s0..s15): per slot, min (A(i)·h + B(i)) mod M over a doc's
+    * rows. h arrives projected once (unprojected, md5 re-runs per slot). */
+  private def signatures(hashed: DataFrame): DataFrame = {
+    val slotCols = (0 until MinhashHashes).map(i =>
+      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % MinhashM).as(s"s$i"))
+    hashed.groupBy(col("doc_id")).agg(slotCols.head, slotCols.tail: _*)
+  }
+
+  /** Band `b`'s '|'-joined slot key when the signature splits into `bands`. */
+  private def bandKey(b: Int, bands: Int): Column = {
+    val rows = MinhashHashes / bands
+    concat_ws("|", (0 until rows).map(k => col(s"s${b * rows + k}").cast("string")): _*)
+  }
+
   /** (doc_id, band, bk) LSH band keys — the signature half of the MinHash
     * pipeline, shared by the self-dedup pair expansion and the
     * cross-corpus [[incremental]] probe. */
-  private[operators] def minhashBands(sh0: DataFrame): DataFrame = {
-    val rows = MinhashHashes / MinhashBands
-    // h is projected ONCE per row before the aggregate (referenced by all
-    // 16 slots; unprojected it would re-evaluate the md5 per slot).
-    val slotCols = (0 until MinhashHashes).map(i =>
-      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % MinhashM).as(s"s$i"))
-    val sigs = sh0
-      .select(col("doc_id"), (Hashing.md5Long(col("shingle")) % MinhashM).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(slotCols.head, slotCols.tail: _*)
-    val bandKey = (b: Int) =>
-      concat_ws("|", (0 until rows).map(k => col(s"s${b * rows + k}").cast("string")): _*)
-    sigs.select(col("doc_id"),
+  private[operators] def minhashBands(sh0: DataFrame): DataFrame =
+    signatures(shingleHashes(sh0)).select(col("doc_id"),
         explode(array((0 until MinhashBands).map(b =>
-          struct(lit(b).as("band"), bandKey(b).as("bk"))): _*)).as("bb"))
+          struct(lit(b).as("band"), bandKey(b, MinhashBands).as("bk"))): _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bk").as("bk"))
-  }
 
   /** The batch slice for [[incremental]]: documents from these sources play
     * the "new crawl"; everything else is the already-ingested reference
@@ -783,22 +794,32 @@ object Dedup {
     * `pairs` CTE — [[minhashLshSql]] selects from it directly and
     * [[clustersSql]] extends it with the recursive connected-components
     * walk. */
-  private[operators] def minhashCtes: String = {
-    val rows = MinhashHashes / MinhashBands
-    val slotExprs = (0 until MinhashHashes).map(i =>
-      s"min((${MinhashA(i)}::BIGINT * h + ${MinhashB(i)}) % $MinhashM) AS s$i").mkString(", ")
-    val bandCases = (0 until MinhashBands).map { b =>
-      val key = (0 until rows).map(k => s"s${b * rows + k}").mkString(" || '|' || ")
-      if (b < MinhashBands - 1) s"WHEN $b THEN $key" else s"ELSE $key"
-    }.mkString(" ")
-    s"""${shinglesSql(3)},
-       |hashed AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} % $MinhashM AS h FROM sh),
-       |sigs AS (SELECT doc_id, $slotExprs FROM hashed GROUP BY doc_id),
-       |bands AS (SELECT doc_id, band, CASE band $bandCases END AS bk
+  private[operators] def minhashCtes: String =
+    s"""$hashedCtes,
+       |sigs AS (SELECT doc_id, $slotsSql FROM hashed GROUP BY doc_id),
+       |bands AS (SELECT doc_id, band, CASE band ${bandCasesSql(MinhashBands)} END AS bk
        |          FROM sigs, LATERAL (SELECT unnest(generate_series(0, ${MinhashBands - 1})) AS band) b),
        |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |          FROM bands a JOIN bands b
        |            ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** DuckDB twin of [[shingleHashes]]: the shingle CTEs plus `hashed(doc_id, h)`. */
+  private def hashedCtes: String =
+    s"""$shinglesSql,
+       |hashed AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} % $MinhashM AS h FROM sh)""".stripMargin
+
+  /** DuckDB twin of [[signatures]]' 16 slot aggregates. */
+  private def slotsSql: String =
+    (0 until MinhashHashes).map(i =>
+      s"min((${MinhashA(i)}::BIGINT * h + ${MinhashB(i)}) % $MinhashM) AS s$i").mkString(", ")
+
+  /** DuckDB twin of [[bandKey]]: the `CASE band` arms of `bands` bands. */
+  private def bandCasesSql(bands: Int): String = {
+    val rows = MinhashHashes / bands
+    (0 until bands).map { b =>
+      val key = (0 until rows).map(k => s"s${b * rows + k}").mkString(" || '|' || ")
+      if (b < bands - 1) s"WHEN $b THEN $key" else s"ELSE $key"
+    }.mkString(" ")
   }
 
   def minhashLshSql: String =
@@ -823,18 +844,26 @@ object Dedup {
     * localCheckpoint so the loop's lineage doesn't stack. The driver only
     * runs the loop and a per-round 1-row convergence probe; all data stays
     * distributed. This is the standard Pregel-style CC at 100 TB scale. */
-  def clusters(spark: SparkSession, sfDir: String, maxIters: Int = 20): DataFrame =
+  def clusters(spark: SparkSession, sfDir: String): DataFrame =
     // star pairs: identical components at bucket-LINEAR pair volume (see
     // minhashLshStarOfShingles — the round-11 sf100 audit's fix)
-    clustersOfPairs(minhashLshStarOfShingles(shingles(spark, sfDir)), maxIters)
+    clustersOfPairs(minhashLshStarOfShingles(shingles(spark, sfDir)))
+
+  /** (src, dst): every (doc_a, doc_b) pair in both directions. */
+  private def undirectedEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+
+  /** DuckDB twin of [[undirectedEdges]] over a `pairs(doc_a, doc_b)` CTE. */
+  private def edgesCte: String =
+    """edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+      |          UNION SELECT doc_b, doc_a FROM pairs)""".stripMargin
 
   /** Connected components over ANY (doc_a, doc_b) pair DataFrame —
     * [[clusters]] wires it to the LSH candidates; the property spec feeds
     * it random graphs against a union-find ground truth. */
   def clustersOfPairs(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
+    val edges = undirectedEdges(pairs).localCheckpoint()
     // Labels only ever decrease, so the label sum is a monotone convergence
     // witness. It rides the round's OWN materialization job via
     // Dataset.observe (optimization round 14, VERDICT #5 / guide §2.1):
@@ -872,18 +901,12 @@ object Dedup {
     labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** The recursive connected-components walk as CTE text ending in a
-    * `comp(doc_id, cluster_id)` CTE — shared by [[clustersSql]] and the
-    * composed curation oracle. (node, label) is derivable when `label` can
-    * reach `node` through the bidirectional edge set; min label per node =
-    * the component's min. */
   /** The recursive min-label walk as CTE text over any `pairs(doc_a,
     * doc_b)` CTE, ending in `comp(doc_id, cluster_id)` — ONE definition
     * shared by the LSH cluster oracle and the entity-resolution oracle so
     * a change to the walk cannot silently diverge them. */
   private[operators] def ccWalkCtes: String =
-    s"""edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION SELECT doc_b, doc_a FROM pairs),
+    s"""$edgesCte,
        |reach(node, label) AS (
        |  SELECT src, src FROM edges
        |  UNION
@@ -965,9 +988,7 @@ object Dedup {
     pagerankOfPairs(minhashLsh(spark, sfDir), iters)
 
   def pagerankOfPairs(pairs: DataFrame, iters: Int = PagerankIters): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
+    val edges = undirectedEdges(pairs).localCheckpoint()
     val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
       .localCheckpoint()
     val n = deg.count() // the single driver-side scalar (node count)
@@ -996,8 +1017,7 @@ object Dedup {
          |  GROUP BY e.dst)""".stripMargin
     }.mkString(",\n")
     s"""WITH $minhashCtes,
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION SELECT doc_b, doc_a FROM pairs),
+       |$edgesCte,
        |deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY 1),
        |nn AS (SELECT count(*) AS n FROM deg),
        |tele AS (SELECT ((15 * $PagerankScale) // 100) // n AS t FROM nn),
@@ -1042,14 +1062,22 @@ object Dedup {
       .agg(sum(when(col("vote") > 0, expr("CAST(pow(2, j) AS BIGINT)")).otherwise(lit(0L)))
         .cast("long").as("simhash"))
 
-  val simhashSql: String =
-    s"""WITH occ AS (SELECT doc_id, unnest(${TextOps.tokensSql}) AS tok FROM documents),
+  /** [[simhash]]'s per-bit votes as CTE text ending in `votes(doc_id, j, vote)`. */
+  private def simhashVoteCtes: String =
+    s"""occ AS (SELECT doc_id, unnest(${TextOps.tokensSql}) AS tok FROM documents),
        |bits AS (SELECT doc_id, j,
        |    (strpos('0123456789abcdef', substr(md5(tok), j + 1, 1)) - 1) % 2 AS bit
        |  FROM occ, LATERAL (SELECT unnest(generate_series(0, ${SimhashBits - 1})) AS j) s),
-       |votes AS (SELECT doc_id, j, sum(bit * 2 - 1) AS vote FROM bits GROUP BY doc_id, j)
+       |votes AS (SELECT doc_id, j, sum(bit * 2 - 1) AS vote FROM bits GROUP BY doc_id, j)""".stripMargin
+
+  /** The fingerprint over `votes`: bit j set when its vote is positive. */
+  private def simhashSumSql: String =
+    "CAST(sum(CASE WHEN vote > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash"
+
+  val simhashSql: String =
+    s"""WITH $simhashVoteCtes
        |SELECT doc_id,
-       |  CAST(sum(CASE WHEN vote > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
+       |  $simhashSumSql
        |FROM votes GROUP BY doc_id""".stripMargin
 
   /** SimHash near-duplicate PAIRS: hamming distance ≤ `maxDist` between
@@ -1090,13 +1118,9 @@ object Dedup {
         else s"((simhash >> ${b * bits}) & ${(1L << bits) - 1})"
       s"SELECT doc_id, simhash, $b AS blk, $bv AS bv FROM fp"
     }.mkString(" UNION ALL ")
-    s"""WITH occ AS (SELECT doc_id, unnest(${TextOps.tokensSql}) AS tok FROM documents),
-       |bits AS (SELECT doc_id, j,
-       |    (strpos('0123456789abcdef', substr(md5(tok), j + 1, 1)) - 1) % 2 AS bit
-       |  FROM occ, LATERAL (SELECT unnest(generate_series(0, ${SimhashBits - 1})) AS j) s),
-       |votes AS (SELECT doc_id, j, sum(bit * 2 - 1) AS vote FROM bits GROUP BY doc_id, j),
+    s"""WITH $simhashVoteCtes,
        |fp AS (SELECT doc_id,
-       |  CAST(sum(CASE WHEN vote > 0 THEN CAST(pow(2, j) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
+       |  $simhashSumSql
        |  FROM votes GROUP BY doc_id),
        |blocks AS ($blockExprs)
        |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1194,10 +1218,7 @@ object Dedup {
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
         col("a.sk").as("sa"), col("b.sk").as("sb"),
         col("a.n").as("na"), col("b.n").as("nb"))
-      .withColumn("m", expr(s"slice(array_sort(array_union(sa, sb)), 1, $k)"))
-      .withColumn("ku", size(col("m")).cast("long"))
-      // sorted inputs → 3-pointer merge count (r14, §4; see containmentKmvOf)
-      .withColumn("i", sorted_intersect_count3(col("m"), col("sa"), col("sb")))
+      .transform(unionSketch(k))
       // inter_est caps at min(nA,nB) — a TRUE bound of the estimand the
       // raw ratio can exceed under heavy size skew (small A, huge B,
       // shared minima), and the cap keeps containment ≤ 1 by construction
@@ -1391,7 +1412,7 @@ object Dedup {
     * min over the raw stream, so the candidate set is unchanged (the
     * nesting/cap/zero-candidate specs and the oracle hash pin it). */
   private def lshTuneDocsets(sh0: DataFrame): DataFrame =
-    sh0.select(col("doc_id"), (Hashing.md5Long(col("shingle")) % MinhashM).as("h"))
+    shingleHashes(sh0)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("h"))).as("hset"))
       .select(col("doc_id"), col("hset"), size(col("hset")).cast("long").as("nsh"))
@@ -1407,27 +1428,17 @@ object Dedup {
     // evaluates higher-order-function lambdas interpreted, per element per
     // slot). The docset checkpoint preserves its doc_id hash partitioning,
     // and explode is narrow, so this groupBy adds NO exchange.
-    val slotCols = (0 until MinhashHashes).map(i =>
-      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % MinhashM).as(s"s$i"))
-    val sigs = docsets.select(col("doc_id"), explode(col("hset")).as("h"))
-      .groupBy(col("doc_id")).agg(slotCols.head, slotCols.tail: _*)
-    val bandStructs = TuneBandCounts.flatMap { b =>
-      val r = MinhashHashes / b
-      (0 until b).map { i =>
-        val key = concat_ws("|",
-          (0 until r).map(k => col(s"s${i * r + k}").cast("string")): _*)
-        struct(lit(b).as("cfg"), lit(i).as("band"), key.as("bk"))
-      }
-    }
+    val sigs = signatures(docsets.select(col("doc_id"), explode(col("hset")).as("h")))
+    val bandStructs = for (b <- TuneBandCounts; i <- 0 until b)
+      yield struct(lit(b).as("cfg"), lit(i).as("band"), bandKey(i, b).as("bk"))
     val br = sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("e"))
       .select(col("doc_id"), col("e.cfg").as("cfg"),
         col("e.band").as("band"), col("e.bk").as("bk"))
-    br.groupBy(col("cfg"), col("band"), col("bk"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2 && size(col("ids")) <= TuneBucketCap)
-      .select(col("cfg"), explode(expr(
-        "flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS doc_a, y AS doc_b))))")).as("p"))
-      .select(col("cfg"), col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+    BucketPairs.expand(
+      br.groupBy(col("cfg"), col("band"), col("bk"))
+        .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
+        .filter(size(col("ids")) >= 2 && size(col("ids")) <= TuneBucketCap),
+      "doc_a", "doc_b", "cfg")
   }
 
   /** Candidate pairs per configuration — split out for the nesting spec. */
@@ -1498,22 +1509,14 @@ object Dedup {
     * ALL, same bucket cap, same exact-Jaccard scoring on distinct hash
     * sets. */
   def lshTuneSql: String = {
-    val slotExprs = (0 until MinhashHashes).map(i =>
-      s"min((${MinhashA(i)}::BIGINT * h + ${MinhashB(i)}) % $MinhashM) AS s$i").mkString(", ")
     val brSelects = TuneBandCounts.map { b =>
-      val r = MinhashHashes / b
-      val cases = (0 until b).map { i =>
-        val key = (0 until r).map(k => s"s${i * r + k}").mkString(" || '|' || ")
-        if (i < b - 1) s"WHEN $i THEN $key" else s"ELSE $key"
-      }.mkString(" ")
-      s"""  SELECT doc_id, $b AS cfg, band, CASE band $cases END AS bk
+      s"""  SELECT doc_id, $b AS cfg, band, CASE band ${bandCasesSql(b)} END AS bk
          |  FROM sigs, LATERAL (SELECT unnest(generate_series(0, ${b - 1})) AS band) u$b""".stripMargin
     }.mkString("\n  UNION ALL\n")
-    s"""WITH ${shinglesSql(3)},
-       |hashed AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} % $MinhashM AS h FROM sh),
+    s"""WITH $hashedCtes,
        |hsd AS (SELECT DISTINCT doc_id, h FROM hashed),
        |docsets AS (SELECT doc_id, list_sort(list(h)) AS hset, count(*) AS nsh FROM hsd GROUP BY 1),
-       |sigs AS (SELECT doc_id, $slotExprs FROM hashed GROUP BY doc_id),
+       |sigs AS (SELECT doc_id, $slotsSql FROM hashed GROUP BY doc_id),
        |br AS (
        |$brSelects),
        |ok AS (SELECT cfg, band, bk FROM br GROUP BY 1, 2, 3

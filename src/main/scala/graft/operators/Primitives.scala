@@ -72,10 +72,10 @@ object Checkpoints {
   * the three paths. */
 object BucketPairs {
   /** `buckets` must carry a sorted array column `ids`; returns one row per
-    * unordered pair, columns named (`aName`, `bName`). */
-  def expand(buckets: DataFrame, aName: String, bName: String): DataFrame =
-    buckets.select(explode(expr(
+    * unordered pair, columns named (`aName`, `bName`) after the `keep` ones. */
+  def expand(buckets: DataFrame, aName: String, bName: String, keep: String*): DataFrame =
+    buckets.select(keep.map(col) :+ explode(expr(
       s"flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS $aName, y AS $bName))))"
-    )).as("p"))
-      .select(col(s"p.$aName"), col(s"p.$bName"))
+    )).as("p"): _*)
+      .select(keep.map(col) ++ Seq(col(s"p.$aName"), col(s"p.$bName")): _*)
 }

@@ -521,33 +521,15 @@ object Sampling {
   def trainingMixFull(spark: SparkSession, sfDir: String, minQuality: Double = 0.5,
       maxRep: Double = 0.1, maxContam: Double = 0.1, perLang: Int = 30,
       binTokens: Int = PackBinTokens): DataFrame = {
-    // ONE scan+tokenize pass feeds every text consumer: the quality and
-    // repetition gates read the shared tokenized projection, and the
-    // shingle set derived from it feeds both the contamination gate and
-    // the LSH cluster graph. The naive composition ran the scan+tokenize
-    // once PER consumer — 3× the most expensive narrow stage at 100 TB;
-    // the checkpoint trades scratch storage for those repeat scans,
-    // exactly what a production pipeline does by materializing its gate
-    // columns.
-    val base = Checkpoints.ser(Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .withColumn("t", TextOps.tokens(col("text"))))
-    val docs = base.select(col("doc_id"), col("lang"))
-    val quality = TextAnalysis.qualityOfTokenized(base)
-      .select(col("doc_id"), col("n_tokens"), col("quality_score"))
-    val rep = Curation.repetitionOfTokenized(base).select(col("doc_id"), col("top_bigram_frac"))
-    val sh = Checkpoints.ser(Dedup.shinglesOfTokenized(base))
-    val contam = Curation.contaminationOfShingles(sh)
-      .select(col("doc_id"), col("contamination_frac"))
-    val nonCanonical = Dedup.clustersOfPairs(Dedup.minhashLshStarOfShingles(sh))
-      .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
+    val g = Curation.gates(spark, sfDir)
     val wQuota = Window.partitionBy(col("lang"))
       .orderBy(md5(col("doc_id").cast("string")).asc, col("doc_id").asc)
     val wPack = Window.partitionBy(col("lang")).orderBy(col("rn").asc)
-    docs.join(quality, Seq("doc_id")).filter(col("quality_score") >= minQuality)
-      .join(rep, Seq("doc_id")).filter(col("top_bigram_frac") <= maxRep)
-      .join(contam, Seq("doc_id")).filter(col("contamination_frac") <= maxContam)
-      .join(nonCanonical, Seq("doc_id"), "left_anti")
+    g.base.select(col("doc_id"), col("lang"))
+      .join(g.quality, Seq("doc_id")).filter(col("quality_score") >= minQuality)
+      .join(g.repetition, Seq("doc_id")).filter(col("top_bigram_frac") <= maxRep)
+      .join(g.contamination, Seq("doc_id")).filter(col("contamination_frac") <= maxContam)
+      .join(g.nonCanonical, Seq("doc_id"), "left_anti")
       .withColumn("rn", row_number().over(wQuota).cast("long"))
       .filter(col("rn") <= perLang)
       .withColumn("start_offset", sum(col("n_tokens")).over(wPack) - col("n_tokens"))

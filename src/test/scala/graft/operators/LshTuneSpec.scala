@@ -32,6 +32,21 @@ class LshTuneSpec extends AnyFunSuite {
     assert(cands(16).nonEmpty, "the widest arm must find candidates on the real corpus")
   }
 
+  test("the 4-band arm's candidates are minhash_lsh's pairs: one signature, one 4×4 split") {
+    import org.apache.spark.sql.functions.max
+    val sh = Dedup.shingles(spark, Sf).localCheckpoint()
+    // the sweep drops buckets above TuneBucketCap and minhash_lsh does not;
+    // on this corpus no 4×4 bucket reaches the cap, so the uncapped pair
+    // set is the one to match
+    val biggest = Dedup.minhashBands(sh).groupBy("band", "bk").count()
+      .agg(max("count")).head().getLong(0)
+    assert(biggest <= Dedup.TuneBucketCap, s"a $biggest-doc bucket exceeds the cap")
+    val lsh = Dedup.minhashLsh(spark, Sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(lsh.nonEmpty, "minhash_lsh must find pairs on the real corpus")
+    assert(candSets(sh)(4) === lsh)
+  }
+
   test("sweep output invariants on the real corpus") {
     val rows = Dedup.lshTune(spark, Sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),

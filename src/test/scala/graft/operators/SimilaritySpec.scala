@@ -34,18 +34,29 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("knn_recall_compressed equals each compressed probe's overlap with knn_brute") {
-    val brute = queryPairs(Similarity.knnBrute(spark, Sf))
-    val expected = Seq(
-      "sq8" -> Similarity.knnSq8(spark, Sf),
-      "ivfpq" -> Similarity.knnIvfPq(spark, Sf),
-      "rerank" -> Similarity.knnIvfRerank(spark, Sf)).flatMap { case (m, probe) =>
-      recallRows(brute, queryPairs(probe)).map { case (q, nb, ni, ov, r) => (m, q, nb, ni, ov, r) }
-    }.toSet
-    val got = Similarity.knnRecallCompressed(spark, Sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-        r.getLong(5))).toSet
-    assert(got === expected)
-    assert(got.size === 3 * Similarity.NumQueries, "one row per (method, query)")
+    // sf0.01 is the input where IVFPQ and its rerank disagree on some
+    // query: at sf0.001 their rows are identical, so a swap of the two
+    // method labels would pass unseen there
+    Seq(Sf -> false, "/root/testdata/sf0.01" -> true).foreach { case (sf, discriminating) =>
+      val brute = queryPairs(Similarity.knnBrute(spark, sf))
+      val expected = Seq(
+        "sq8" -> Similarity.knnSq8(spark, sf),
+        "ivfpq" -> Similarity.knnIvfPq(spark, sf),
+        "rerank" -> Similarity.knnIvfRerank(spark, sf)).flatMap { case (m, probe) =>
+        recallRows(brute, queryPairs(probe)).map { case (q, nb, ni, ov, r) => (m, q, nb, ni, ov, r) }
+      }.toSet
+      val got = Similarity.knnRecallCompressed(spark, sf).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+          r.getLong(5))).toSet
+      assert(got === expected, s"on $sf")
+      assert(got.size === 3 * Similarity.NumQueries, s"one row per (method, query) on $sf")
+      if (discriminating) {
+        def rows(m: String) = got.collect { case (`m`, q, nb, ni, ov, r) => q -> (nb, ni, ov, r) }.toMap
+        val (ivfpq, rerank) = (rows("ivfpq"), rows("rerank"))
+        assert(ivfpq.keySet.exists(q => ivfpq(q) != rerank(q)),
+          s"ivfpq and rerank rows must differ for some query on $sf")
+      }
+    }
   }
 
   test("knn_pq: ADC ranking recalls exact-L2 neighbors above the measured floor") {
