@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev tool: the formatted physical plan of each named query, then `reps`
   * timed passes, each re-planned from scratch as Bench's are.
@@ -9,7 +11,11 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Plans go to stdout, or with `outDir` to `<outDir>/<query>.txt`; then
   * streaming queries get no plan file, since invoking one RUNS the stream
-  * and the returned memory-table frame's plan says nothing about it.
+  * and the returned memory-table frame's plan says nothing about it. A
+  * query's plan text is the formatted plan of every action its
+  * construction runs (eager `localCheckpoint`s, driver-side counts), in
+  * order, then the returned frame's plan — a frame read back from a
+  * checkpoint is a bare RDD scan, and the work lives in those actions.
   * A pass splits into construct (building the frame, including eager
   * driver-sequenced work: k-means/BPE loops, checkpoints), plan (analysis
   * through physical planning) and exec (Bench's full-row `toRdd.count`).
@@ -32,7 +38,7 @@ object Explain {
         if (outDir.nonEmpty && (name.startsWith("events_stream") || name == "docs_stream_dedup"))
           System.err.println(s"[explain] $name: streaming query, no plan file")
         else {
-          val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+          val plan = plansOf(spark)(fn(spark, sfDir))
           outDir match {
             case Some(d) =>
               val f = java.nio.file.Files.writeString(d.toPath.resolve(s"$name.txt"), plan + "\n")
@@ -50,5 +56,24 @@ object Explain {
       }
     }
     spark.stop()
+  }
+
+  /** The formatted plans of the actions `construct` runs, each headed by
+    * its action name, then the returned frame's. */
+  private def plansOf(spark: SparkSession)(construct: => DataFrame): String = {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        actions.add(s"== construction action: $funcName ==\n${qe.explainString(FormattedMode)}\n")
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = try construct finally {
+      GraftSqlBridge.drainListeners(spark)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (actions.asScala.toSeq :+
+      s"== returned frame ==\n${df.queryExecution.explainString(FormattedMode)}").mkString("\n")
   }
 }

@@ -905,9 +905,10 @@ object Curation {
       repetition: DataFrame, contamination: DataFrame, nonCanonical: DataFrame)
 
   /** The gates of [[Sampling.trainingMixFull]] and [[curationFunnel]], in
-    * the flagship's order. ONE checkpointed scan+tokenize pass (and its
-    * checkpointed shingles) feeds them all — per-consumer scans cost 3× the
-    * most expensive narrow stage at 100 TB. */
+    * the flagship's order. ONE checkpointed scan+tokenize pass feeds them
+    * all (contamination through its checkpointed shingles, the near-dup
+    * gate through its in-scan MinHash signatures) — per-consumer scans cost
+    * 3× the most expensive narrow stage at 100 TB. */
   private[operators] def gates(spark: SparkSession, sfDir: String): Gates = {
     val base = Checkpoints.ser(Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -917,7 +918,7 @@ object Curation {
     val rep = repetitionOfTokenized(base).select(col("doc_id"), col("top_bigram_frac"))
     val sh = Checkpoints.ser(Dedup.shinglesOfTokenized(base))
     val contam = contaminationOfShingles(sh).select(col("doc_id"), col("contamination_frac"))
-    val nonCanonical = Dedup.clustersOfPairs(Dedup.minhashLshStarOfShingles(sh))
+    val nonCanonical = Dedup.clustersOfPairs(Dedup.minhashLshStarOfTokenized(base))
       .filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
     Gates(base, quality, rep, contam, nonCanonical)
   }

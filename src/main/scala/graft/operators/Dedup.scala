@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.MinhashExpression.{MinhashA, MinhashB, MinhashM, ShingleWords,
+  minhash_slots, shingle_hashes}
 import graft.functions.SortedIntersectExpression.{sorted_intersect_count, sorted_intersect_count3}
 
 /** Document deduplication for training-data pipelines, each shape a
@@ -11,7 +13,7 @@ import graft.functions.SortedIntersectExpression.{sorted_intersect_count, sorted
   *  - exact (content-hash groupBy)
   *  - normalized fingerprint (rolling normalization → hash groupBy)
   *  - n-gram Jaccard (shingle inverted-index self-join)
-  *  - MinHash + LSH (shingle → signature → band buckets → bucket join)
+  *  - MinHash + LSH (tokens → signature in the scan → band buckets → bucket join)
   *  - SimHash (per-bit majority vote → 32-bit fingerprint)
   *  - embedding cosine near-dup (pairwise; LSH/IVF is the scale path, see
   *    [[Similarity]])
@@ -23,7 +25,9 @@ import graft.functions.SortedIntersectExpression.{sorted_intersect_count, sorted
   * bit-for-bit (Spark and DuckDB md5 both emit lowercase hex).
   *
   * Each shared decision has ONE private helper (DuckDB twin in parentheses):
-  * `shinglesOf`; the signature `shingleHashes`, `signatures`, `bandKey`
+  * `shinglesOf`; the signature, computed per document in the scan, from
+  * `shingle_hashes` and `minhash_slots` (the [[graft.functions.ShingleHashes]]
+  * and [[graft.functions.MinhashSlots]] kernels), and `bandKey`
   * (`hashedCtes`, `slotsSql`, `bandCasesSql`); `bandBuckets`; the edges
   * `undirectedEdges` (`edgesCte`); `containmentSetsAndKeep`,
   * `containedFirst`; `unionSketch`; SimHash (`simhashVoteCtes`, `simhashSumSql`).
@@ -211,9 +215,6 @@ object Dedup {
 
   // ---- shared shingling (word 3-grams) ------------------------------------
 
-  /** Words per shingle: every shingle consumer reads word 3-grams. */
-  private val ShingleWords = 3
-
   /** Distinct word-3-gram shingles per document: (doc_id, shingle).
     * transform(sequence(...)) builds the shingle list without a join;
     * explode + distinct is one narrow pass, so the only shuffle downstream
@@ -223,7 +224,15 @@ object Dedup {
 
   /** [[shingles]] over an explicit (doc_id, text) frame. */
   private def shinglesOf(docs: DataFrame): DataFrame =
-    shinglesOfTokenized(docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
+    shinglesOfTokenized(tokenizedOf(docs))
+
+  /** (doc_id, t): the `documents` table tokenized — what every MinHash
+    * consumer reads. */
+  private[graft] def tokenized(spark: SparkSession, sfDir: String): DataFrame =
+    tokenizedOf(Tables.documents(spark, sfDir))
+
+  private def tokenizedOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
 
   /** Core of [[shingles]] over a pre-tokenized (doc_id, t) frame. */
   def shinglesOfTokenized(d: DataFrame): DataFrame =
@@ -619,58 +628,39 @@ object Dedup {
   val MinhashHashes = 16 // 4 bands × 4 rows
   val MinhashBands = 4
 
-  /** Carter–Wegman universal hash family over the Mersenne prime 2^31−1:
-    * slot i of shingle-hash h is (A(i)·h + B(i)) mod M. All arithmetic
-    * stays inside int64 — h, A(i) < M so A(i)·h < 2^62 — in BOTH engines
-    * (DuckDB BIGINT errors on overflow rather than wrapping, so staying in
-    * range is a correctness requirement, not a nicety). Constants are
-    * fixed pseudorandom values; independence across slots is what keeps
-    * band collisions ≈ J^rows (a derived h1 + i·h2 family was measured
-    * 5× worse on false-positive candidates — correlated slot minima). */
-  val MinhashM = 2147483647L
-  val MinhashA: IndexedSeq[Long] = Vector(
-    300537208L, 318191818L, 1632373033L, 336989641L, 1037712787L, 1853115849L,
-    733686386L, 762488286L, 833838633L, 1011080508L, 2099359591L, 1271464279L,
-    1779067578L, 1570600698L, 1604944238L, 1068580105L)
-  val MinhashB: IndexedSeq[Long] = Vector(
-    1258153104L, 204742078L, 714890015L, 924184435L, 1149325504L, 1583711222L,
-    1777668512L, 2100953239L, 503223453L, 323304978L, 722671194L, 519185490L,
-    496142157L, 1994051211L, 547206507L, 1677539535L)
-
-  /** MinHash/LSH candidate pairs. ONE md5 per distinct (doc, shingle) —
-    * the first 14 hex chars (56 bits) parse to int64 identically in Spark
-    * (`conv(…,16,10)`) and DuckDB (`('0x'||…)::BIGINT`) — then the 16
-    * signature slots derive arithmetically from that single hash
-    * ([[MinhashA]]/[[MinhashB]] family); signature = per-slot min over the
-    * doc's shingles; band key = '|'-joined 4-slot group; candidates =
+  /** MinHash/LSH candidate pairs. ONE md5 per shingle — its first 56 bits,
+    * what the first 14 hex chars parse to in DuckDB (`('0x'||…)::BIGINT`)
+    * — then the 16 signature slots derive arithmetically from that single
+    * hash (the [[graft.functions.MinhashExpression.MinhashA]] family);
+    * signature = per-slot min over
+    * the doc's shingles; band key = '|'-joined 4-slot group; candidates =
     * distinct doc pairs sharing a (band, key) bucket.
     *
-    * Why this shape: round 1 exploded ×16 and ran one string md5 per
-    * (shingle, slot) — 16× the hashing and 16× the pre-aggregation row
-    * volume, 51% of the whole bench. Now the aggregate input is one row
-    * per shingle with all 16 mins as primitive int64 HashAggregate slots
-    * (min(string) would force SortAggregate — measured ~25× slower).
+    * Why this shape: the signature is a function of ONE document's tokens,
+    * so it is computed in the scan ([[minhashBands]]) and no (doc, shingle)
+    * row crosses a shuffle. The only shuffles are the (band, key) bucket
+    * aggregate and the pair distinct.
     *
     * This is THE 100 TB dedup path: cost is linear in total shingles plus
     * the within-bucket pair expansion (controlled by band/row choice), with
     * no quadratic term. */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame =
-    minhashLshOfShingles(shingles(spark, sfDir))
+    minhashLshOfTokenized(tokenized(spark, sfDir))
 
-  /** Core of [[minhashLsh]] over any (doc_id, shingle) set — lets callers
-    * that ALSO consume shingles (e.g. the full curation composite, which
-    * feeds the same set to the contamination gate) materialize the
-    * shingling once instead of re-running the corpus scan per consumer. */
-  def minhashLshOfShingles(sh0: DataFrame): DataFrame =
+  /** Core of [[minhashLsh]] over any tokenized (doc_id, t) frame — lets
+    * callers that ALSO consume the tokens (e.g. the full curation
+    * composite's checkpointed base) tokenize once instead of re-running the
+    * corpus scan per consumer. */
+  def minhashLshOfTokenized(d: DataFrame): DataFrame =
     // Candidate pairs come from grouping doc ids per (band, key) bucket and
     // expanding pairs WITHIN each bucket — one shuffle on the bucket key,
     // pair work bounded by bucket sizes. (A cached self-join was measured
     // 30× slower here: InMemoryRelation build+read dominated; and at 100 TB
     // the bucket-local expansion is the only shape that doesn't re-shuffle
     // the full signature table twice.)
-    BucketPairs.expand(bandBuckets(sh0), "doc_a", "doc_b").distinct()
+    BucketPairs.expand(bandBuckets(d), "doc_a", "doc_b").distinct()
 
-  /** STAR-pairing variant of [[minhashLshOfShingles]] for CONNECTIVITY
+  /** STAR-pairing variant of [[minhashLshOfTokenized]] for CONNECTIVITY
     * consumers ([[clusters]] and the composites built on it): each bucket
     * member pairs with the bucket MINIMUM instead of with every other
     * member. The connected components are PROVABLY identical — star edges
@@ -688,8 +678,8 @@ object Dedup {
     * ([[minhashLsh]] the registered query, [[graphPagerank]]'s edge
     * weights, splitLeakage's cross-split pair count) keep the all-pairs
     * form — pair multiplicity is their semantics; connectivity is not. */
-  def minhashLshStarOfShingles(sh0: DataFrame): DataFrame =
-    bandBuckets(sh0)
+  def minhashLshStarOfTokenized(d: DataFrame): DataFrame =
+    bandBuckets(d)
       .select(explode(expr(
         "transform(slice(ids, 2, size(ids) - 1), y -> struct(ids[0] AS doc_a, y AS doc_b))"))
         .as("p"))
@@ -698,37 +688,33 @@ object Dedup {
 
   /** The (band, bk) buckets holding ≥ 2 documents, each with its sorted
     * member array `ids` — what both pairings above expand. */
-  private def bandBuckets(sh0: DataFrame): DataFrame =
-    minhashBands(sh0).groupBy(col("band"), col("bk"))
+  private def bandBuckets(d: DataFrame): DataFrame =
+    minhashBands(d).groupBy(col("band"), col("bk"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
-
-  /** (doc_id, h): each (doc, shingle)'s one md5, reduced mod [[MinhashM]]. */
-  private def shingleHashes(sh0: DataFrame): DataFrame =
-    sh0.select(col("doc_id"), (Hashing.md5Long(col("shingle")) % MinhashM).as("h"))
-
-  /** (doc_id, s0..s15): per slot, min (A(i)·h + B(i)) mod M over a doc's
-    * rows. h arrives projected once (unprojected, md5 re-runs per slot). */
-  private def signatures(hashed: DataFrame): DataFrame = {
-    val slotCols = (0 until MinhashHashes).map(i =>
-      min((lit(MinhashA(i)) * col("h") + lit(MinhashB(i))) % MinhashM).as(s"s$i"))
-    hashed.groupBy(col("doc_id")).agg(slotCols.head, slotCols.tail: _*)
-  }
 
   /** Band `b`'s '|'-joined slot key when the signature splits into `bands`. */
   private def bandKey(b: Int, bands: Int): Column = {
     val rows = MinhashHashes / bands
-    concat_ws("|", (0 until rows).map(k => col(s"s${b * rows + k}").cast("string")): _*)
+    concat_ws("|", (0 until rows).map(k => col("sig")(b * rows + k).cast("string")): _*)
   }
 
-  /** (doc_id, band, bk) LSH band keys — the signature half of the MinHash
-    * pipeline, shared by the self-dedup pair expansion and the
-    * cross-corpus [[incremental]] probe. */
-  private[operators] def minhashBands(sh0: DataFrame): DataFrame =
-    signatures(shingleHashes(sh0)).select(col("doc_id"),
-        explode(array((0 until MinhashBands).map(b =>
-          struct(lit(b).as("band"), bandKey(b, MinhashBands).as("bk"))): _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bk").as("bk"))
+  /** (doc_id, …, band, bk) LSH band keys of a tokenized (doc_id, t, …)
+    * frame, every column but `t` riding along — the signature half of the
+    * MinHash pipeline, shared by the self-dedup pair expansion and the
+    * cross-corpus [[incremental]] probe. The 16-slot signature `sig` is a
+    * narrow map over each doc's own tokens (the slot step's DuckDB twin is
+    * [[slotsSql]]; [[lshTuneCandidatePairs]] calls the same step). Docs
+    * under `ShingleWords` tokens have no shingle, so no signature and no
+    * band rows. */
+  private[operators] def minhashBands(d: DataFrame): DataFrame = {
+    val rest = d.columns.toSeq.filterNot(_ == "t").map(col)
+    d.filter(size(col("t")) >= ShingleWords)
+      .select(rest :+ minhash_slots(shingle_hashes(col("t"))).as("sig"): _*)
+      .select(rest :+ explode(array((0 until MinhashBands).map(b =>
+          struct(lit(b).as("band"), bandKey(b, MinhashBands).as("bk"))): _*)).as("bb"): _*)
+      .select(rest ++ Seq(col("bb.band").as("band"), col("bb.bk").as("bk")): _*)
+  }
 
   /** The batch slice for [[incremental]]: documents from these sources play
     * the "new crawl"; everything else is the already-ingested reference
@@ -743,19 +729,20 @@ object Dedup {
     * novel set an ingest pipeline keeps. Zero-shingle batch docs surface
     * with 0 matches rather than vanishing.
     *
-    * Scale shape: band keys compute ONCE over the union (the labeled band
-    * table materializes via localCheckpoint and both probe sides read it),
-    * and the batch×reference join is keyed on (band, bucket) — candidate
+    * Scale shape: band keys compute ONCE over the union, in the scan (the
+    * labeled band table materializes via localCheckpoint and both probe
+    * sides read it), and the batch×reference join is keyed on (band,
+    * bucket) — candidate
     * work is bounded by bucket co-occupancy exactly like the self-dedup
     * path, never |batch|×|reference|. At 100 TB the reference side's band
     * table is the persisted LSH index a crawler maintains between
     * ingests. */
   def incremental(spark: SparkSession, sfDir: String,
       batchSources: Seq[String] = IncrementalBatchSources): DataFrame = {
-    val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
-    val labeled = minhashBands(shingles(spark, sfDir))
-      .join(docs, "doc_id")
-      .withColumn("is_batch", col("source").isin(batchSources: _*))
+    val docs = Tables.documents(spark, sfDir)
+    val labeled = minhashBands(docs.select(col("doc_id"),
+        col("source").isin(batchSources: _*).as("is_batch"),
+        TextOps.tokens(col("text")).as("t")))
       .localCheckpoint() // both probe sides read the labeled band table
     val b = labeled.filter(col("is_batch"))
       .select(col("doc_id").as("batch_doc"), col("band"), col("bk"))
@@ -803,12 +790,12 @@ object Dedup {
        |          FROM bands a JOIN bands b
        |            ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id)""".stripMargin
 
-  /** DuckDB twin of [[shingleHashes]]: the shingle CTEs plus `hashed(doc_id, h)`. */
+  /** DuckDB twin of `shingle_hashes`: the shingle CTEs plus `hashed(doc_id, h)`. */
   private def hashedCtes: String =
     s"""$shinglesSql,
        |hashed AS (SELECT doc_id, ${Hashing.md5LongSql("shingle")} % $MinhashM AS h FROM sh)""".stripMargin
 
-  /** DuckDB twin of [[signatures]]' 16 slot aggregates. */
+  /** DuckDB twin of the `minhash_slots` slot step: 16 min aggregates. */
   private def slotsSql: String =
     (0 until MinhashHashes).map(i =>
       s"min((${MinhashA(i)}::BIGINT * h + ${MinhashB(i)}) % $MinhashM) AS s$i").mkString(", ")
@@ -835,19 +822,19 @@ object Dedup {
     * chain a~b~c dedups to two different survivors depending on pair
     * order.
     *
-    * Shape: min-label propagation. Every node starts labeled with itself;
-    * each round pushes labels across edges and keeps the per-node min;
-    * fixpoint in O(component diameter) rounds (near-dup components are
-    * shallow — theirs is essentially a clique structure from shared
-    * buckets). Each round is one edge join + one min-groupBy, shuffle
+    * Shape: min-label propagation. Every node starts labeled with the min
+    * of itself and its neighbours; each round pushes labels across edges
+    * and keeps the per-node min; fixpoint in O(component diameter) rounds
+    * (near-dup components are shallow — theirs is essentially a clique
+    * structure from shared buckets). Each round is one edge join + one min-groupBy, shuffle
     * volume bounded by |edges| — never pairs² — and rounds
     * localCheckpoint so the loop's lineage doesn't stack. The driver only
     * runs the loop and a per-round 1-row convergence probe; all data stays
     * distributed. This is the standard Pregel-style CC at 100 TB scale. */
   def clusters(spark: SparkSession, sfDir: String): DataFrame =
     // star pairs: identical components at bucket-LINEAR pair volume (see
-    // minhashLshStarOfShingles — the round-11 sf100 audit's fix)
-    clustersOfPairs(minhashLshStarOfShingles(shingles(spark, sfDir)))
+    // minhashLshStarOfTokenized — the round-11 sf100 audit's fix)
+    clustersOfPairs(minhashLshStarOfTokenized(tokenized(spark, sfDir)))
 
   /** (src, dst): every (doc_a, doc_b) pair in both directions. */
   private def undirectedEdges(pairs: DataFrame): DataFrame =
@@ -878,9 +865,13 @@ object Dedup {
         .localCheckpoint() // eager: materializes now, firing the observation
       (out, () => obs.get("label_sum").asInstanceOf[Long])
     }
+    // The first labels are the first propagation round, with no join: a
+    // node's min over itself and its neighbours is one aggregate over its
+    // out-edges. A diameter-d component is labelled after d - 1 rounds,
+    // and one more round confirms it (a star about its min: 0 + 1).
     val (labels0, sum0) = observedSum(
-      edges.select(col("src").as("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
+      edges.groupBy(col("src")).agg(least(col("src"), min(col("dst"))).as("label"))
+        .select(col("src").as("doc_id"), col("label")))
     var labels = labels0
     var prevSum = sum0()
     var converged = false
@@ -1394,41 +1385,37 @@ object Dedup {
     * explicit zero-candidate row with NULL precision/recall instead of
     * vanishing from the output.
     *
-    * Scale shape: one signature aggregation (16 mergeable min slots), 30
-    * band rows per doc, ONE bucket shuffle keyed (cfg, band, key) with
-    * pair expansion bucket-local and capped ([[TuneBucketCap]]), exact
-    * scoring only on candidates via two equi-joins against the
+    * Scale shape: per-doc hash sets and signatures in the scan (no
+    * shuffle), 30 band rows per doc, ONE bucket shuffle keyed (cfg, band,
+    * key) with pair expansion bucket-local and capped ([[TuneBucketCap]]),
+    * exact scoring only on candidates via two equi-joins against the
     * checkpointed sorted-hash arrays (the [[containment]] scoring shape).
     * Output: one row per configuration. */
   def lshTune(spark: SparkSession, sfDir: String): DataFrame =
-    lshTuneOfShingles(shingles(spark, sfDir))
+    lshTuneOfTokenized(tokenized(spark, sfDir))
 
-  /** The per-doc DISTINCT shingle-hash set — the ONE aggregation the whole
-    * sweep derives from (optimization round 13). collect_set replaces the
-    * previous distinct-then-collect_list (same values after sort_array,
-    * one exchange instead of two), and the signature slots now derive from
-    * `hset` as a narrow `array_min(transform(...))` map instead of a
-    * second corpus scan + md5 + groupBy — min over distinct hashes equals
-    * min over the raw stream, so the candidate set is unchanged (the
-    * nesting/cap/zero-candidate specs and the oracle hash pin it). */
-  private def lshTuneDocsets(sh0: DataFrame): DataFrame =
-    shingleHashes(sh0)
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("h"))).as("hset"))
+  /** The per-doc DISTINCT sorted shingle-hash set `hset` and its size — the
+    * one per-doc artifact the whole sweep derives from, a narrow map over
+    * each doc's own tokens. The signature slots derive from `hset`: min
+    * over distinct hashes equals min over the raw stream, so the candidate
+    * set is unchanged (the nesting/cap/zero-candidate specs and the oracle
+    * hash pin it). */
+  private def lshTuneDocsets(d: DataFrame): DataFrame =
+    d.filter(size(col("t")) >= ShingleWords)
+      .select(col("doc_id"), sort_array(array_distinct(shingle_hashes(col("t")))).as("hset"))
       .select(col("doc_id"), col("hset"), size(col("hset")).cast("long").as("nsh"))
 
   /** Candidate pairs per configuration over the docset frame — the
     * signature slots are a zero-shuffle expression over `hset`. Emits one
     * row per (cfg, bucket-pair) occurrence; [[lshTuneCandidates]] adds the
-    * distinct, [[lshTuneOfShingles]] folds the dedup into its own
+    * distinct, [[lshTuneOfTokenized]] folds the dedup into its own
     * per-pair collect_set instead. */
   private def lshTuneCandidatePairs(docsets: DataFrame): DataFrame = {
-    // Signature slots as a codegen'd HashAggregate over the exploded hset
-    // (an array_min(transform(...)) spelling was measured SLOWER — Spark
+    // the minhash_lsh slot step over hset: one call per doc (an
+    // array_min(transform(...)) spelling was measured SLOWER — Spark
     // evaluates higher-order-function lambdas interpreted, per element per
-    // slot). The docset checkpoint preserves its doc_id hash partitioning,
-    // and explode is narrow, so this groupBy adds NO exchange.
-    val sigs = signatures(docsets.select(col("doc_id"), explode(col("hset")).as("h")))
+    // slot)
+    val sigs = docsets.select(col("doc_id"), minhash_slots(col("hset")).as("sig"))
     val bandStructs = for (b <- TuneBandCounts; i <- 0 until b)
       yield struct(lit(b).as("cfg"), lit(i).as("band"), bandKey(i, b).as("bk"))
     val br = sigs.select(col("doc_id"), explode(array(bandStructs: _*)).as("e"))
@@ -1442,12 +1429,12 @@ object Dedup {
   }
 
   /** Candidate pairs per configuration — split out for the nesting spec. */
-  private[graft] def lshTuneCandidates(sh0: DataFrame): DataFrame =
-    lshTuneCandidatePairs(lshTuneDocsets(sh0)).distinct()
+  private[graft] def lshTuneCandidates(d: DataFrame): DataFrame =
+    lshTuneCandidatePairs(lshTuneDocsets(d)).distinct()
 
-  /** Core of [[lshTune]] over any (doc_id, shingle) set. */
-  private[graft] def lshTuneOfShingles(sh0: DataFrame): DataFrame = {
-    val docsets = lshTuneDocsets(sh0).localCheckpoint()
+  /** Core of [[lshTune]] over any tokenized (doc_id, t) frame. */
+  private[graft] def lshTuneOfTokenized(d: DataFrame): DataFrame = {
+    val docsets = lshTuneDocsets(d).localCheckpoint()
     // ONE exact-scoring evaluation per distinct candidate pair, total.
     // Attribution (round-10 stage timing at sf1: 1.58M (cfg, pair) rows, 1.56M
     // distinct pairs — the (16×1) arm IS the candidate volume, and the
@@ -1469,7 +1456,7 @@ object Dedup {
         col("hset").as("ha"), col("nsh").as("na")), Seq("doc_a"))
       .join(docsets.select(col("doc_id").as("doc_b"),
         col("hset").as("hb"), col("nsh").as("nb")), Seq("doc_b"))
-      // hset is sort_array(collect_set(...)) → merge-count applies (r14, §4)
+      // hset is sort_array(array_distinct(...)) → merge-count applies (r14, §4)
       .withColumn("inter", sorted_intersect_count(col("ha"), col("hb")))
       .withColumn("is_dup", when(col("inter") * lit(1000000L) >=
           lit(TuneJaccardPpm) * (col("na") + col("nb") - col("inter")), 1L)
@@ -1486,7 +1473,7 @@ object Dedup {
     // re-create the empty-crossJoin bug the zero-candidate spec pins.
     val truth = agg.filter(col("cfg") === -1)
       .agg(coalesce(sum(col("n_true_pairs")), lit(0L)).as("truth_pairs"))
-    import sh0.sparkSession.implicits._
+    import d.sparkSession.implicits._
     val cfgs = TuneBandCounts.toDF("cfg")
     cfgs.join(per, Seq("cfg"), "left")
       .crossJoin(broadcast(truth))

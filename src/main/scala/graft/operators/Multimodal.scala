@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.MinhashExpression
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` payload
   * columns with typed metadata, processed by a partition-wise decoder.
@@ -489,7 +490,7 @@ object Multimodal {
             d.frameSizes.iterator.map { sz =>
               val hex = hexUpper(d.payload, off, sz)
               off += sz
-              FrameHashRow(p.doc_id, Hashing.top56(md.digest(hex)))
+              FrameHashRow(p.doc_id, MinhashExpression.top56(md.digest(hex)))
             }
           case None => Iterator.empty
         }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.MinhashExpression
 
 /** The portable md5-prefix-to-int64 hash used everywhere a hash must be
   * bit-identical between Spark and the DuckDB oracle (MinHash shingle
@@ -29,21 +30,8 @@ object Hashing {
     * (e.g. the streaming CMS probe cells). Must stay bit-identical to the
     * Column form; HashingSpec pins the equivalence. */
   def md5LongJvm(s: String): Long =
-    top56(java.security.MessageDigest.getInstance("MD5")
+    MinhashExpression.top56(java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-
-  /** The digest's first 7 bytes as a big-endian unsigned 56-bit value —
-    * what parsing its first 14 hex chars base-16 gives, with no text in
-    * between. */
-  def top56(digest: Array[Byte]): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < 7) {
-      acc = (acc << 8) | (digest(i) & 0xffL)
-      i += 1
-    }
-    acc
-  }
 }
 
 /** Checkpoint policy for CORPUS-SCALE shared artifacts (the tokenized

@@ -14,4 +14,9 @@ object GraftSqlBridge {
     * SQL functions in an already-running session. */
   def functionRegistry(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+
+  /** Block until every listener event posted so far is delivered (the bus
+    * is `private[spark]`; QueryExecutionListener callbacks ride it). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

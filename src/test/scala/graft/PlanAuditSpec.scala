@@ -691,13 +691,39 @@ class PlanAuditSpec extends AnyFunSuite {
       s"per and truth must split the 5-row checkpointed aggregation:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"nothing may go cartesian (the 1-row truth broadcast aside):\n$p")
-    val sh = operators.Dedup.shingles(spark, Sf)
-    val cand = operators.Dedup.lshTuneCandidates(sh)
+    val cand = operators.Dedup.lshTuneCandidates(operators.Dedup.tokenized(spark, Sf))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(nodes(cand, "Generate") >= 2,
       s"30-band fan-out + in-bucket pair expansion must both be explodes:\n$cand")
     assert(!cand.contains("CartesianProduct"),
       s"candidates must stay bucket-equi-joined:\n$cand")
+  }
+
+  test("dedup_minhash_lsh: signatures come from the scan — no exchange below the (band, bk) bucket aggregate") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val df = SparkEntry.queries("dedup_minhash_lsh")(spark, Sf)
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    def bucketAgg(n: SparkPlan): Boolean = n match {
+      case a: BaseAggregateExec => a.groupingExpressions.map(_.name) == Seq("band", "bk")
+      case _ => false
+    }
+    // the map-side half: the bucket aggregate with no other one below it
+    val mapSide = physical.collect { case a if bucketAgg(a) => a }
+      .filter(a => a.children.forall(_.find(bucketAgg).isEmpty))
+    assert(mapSide.size === 1, s"one (band, bk) bucket aggregate:\n$physical")
+    val below = mapSide.head
+    assert(below.find(_.isInstanceOf[FileSourceScanExec]).nonEmpty,
+      s"the bucket aggregate must read the documents scan's own stage:\n$physical")
+    assert(below.find(_.isInstanceOf[ShuffleExchangeLike]).isEmpty,
+      s"no (doc, shingle) distinct or doc_id regroup may shuffle before the buckets:\n$physical")
+    // what remains: the bucket exchange and the pair distinct's
+    assert(nodes(plan("dedup_minhash_lsh"), "Exchange") === 2)
   }
 
   test("dedup_substring: suffix stream derives once; df is a window over the lead window's exchange") {

@@ -31,6 +31,41 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(Seq("world", "goodbye", "hadoop").forall(byPart(_) == 1))
   }
 
+  test("shingle_hashes and minhash_slots equal md5LongJvm(shingle) % M folded into 16 slot minima") {
+    import spark.implicits._
+    import graft.operators.{Dedup, Hashing}
+    import MinhashExpression.{MinhashA, MinhashB, MinhashM}
+    // a small vocabulary with 2-, 3- and 4-byte UTF-8 tokens (𝄞 is a
+    // surrogate pair), so repeated shingles within a doc are common
+    val vocab = Seq("a", "b", "the", "café", "naïve", "日本", "語", "𝄞", "x\u00e9y", "zz")
+    val rnd = new scala.util.Random(15)
+    val docs = Seq(
+      Seq("a", "b", "the"),               // exactly 3 tokens: one shingle
+      Seq("日本", "語", "𝄞"),             // exactly 3 multi-byte tokens
+      Seq("a", "b", "a", "b", "a", "b")   // "a b a" and "b a b" twice each
+    ) ++ Seq.fill(40)(Seq.fill(3 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))))
+    def expectedHashes(t: Seq[String]): Seq[Long] =
+      t.sliding(3).map(w => Hashing.md5LongJvm(w.mkString(" ")) % MinhashM).toSeq
+    def expectedSlots(t: Seq[String]): Seq[Long] = {
+      val hs = expectedHashes(t)
+      (0 until Dedup.MinhashHashes).map(i =>
+        hs.map(h => (MinhashA(i) * h + MinhashB(i)) % MinhashM).min)
+    }
+    val rows = docs.toDF("t")
+      .select(col("t"),
+        MinhashExpression.shingle_hashes(col("t")).as("h"),
+        MinhashExpression.minhash_slots(MinhashExpression.shingle_hashes(col("t"))).as("sig"))
+      .collect()
+    assert(rows.length === docs.size)
+    rows.foreach { r =>
+      val t = r.getSeq[String](0)
+      assert(r.getSeq[Long](1) === expectedHashes(t), s"hashes of $t")
+      assert(r.getSeq[Long](2) === expectedSlots(t), s"signature of $t")
+    }
+    assert(rows.exists(r => r.getSeq[Long](1).distinct.size < r.getSeq[Long](1).size),
+      "the sample must repeat a shingle within a doc")
+  }
+
   test("vec_dot handles nulls and length mismatch defensively") {
     import spark.implicits._
     val df = Seq(

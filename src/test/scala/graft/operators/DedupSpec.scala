@@ -296,6 +296,28 @@ class DedupSpec extends AnyFunSuite {
     assert(got === (0L to 49L).map(_ -> 0L).toMap)
   }
 
+  test("clustersOfPairs: a star about its min converges with maxIters = 1") {
+    import spark.implicits._
+    // the fused start labels every node with the centre; one round confirms
+    val star = (1L to 9L).map(i => (0L, i))
+    val got = Dedup.clustersOfPairs(star.toDF("doc_a", "doc_b"), maxIters = 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (0L to 9L).map(_ -> 0L).toMap)
+  }
+
+  test("clustersOfPairs: an n-node chain needs exactly n - 1 rounds after the fused start") {
+    import spark.implicits._
+    // the start labels node i with i - 1, so node n - 1 reaches 0 after
+    // n - 2 rounds and one more round confirms the fixpoint
+    val n = 12
+    val chain = (0L until n - 1L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val got = Dedup.clustersOfPairs(chain, maxIters = n - 1)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (0L until n.toLong).map(_ -> 0L).toMap)
+    val e = intercept[IllegalArgumentException](Dedup.clustersOfPairs(chain, maxIters = n - 2))
+    assert(e.getMessage.contains("did not converge"))
+  }
+
   test("incremental dedup agrees with the self-dedup pair set on cross-side pairs") {
     import org.apache.spark.sql.functions._
     val batch = Dedup.IncrementalBatchSources.toSet

@@ -15,14 +15,14 @@ class LshTuneSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val Sf = "/root/testdata/sf0.001"
 
-  private def candSets(sh: org.apache.spark.sql.DataFrame): Map[Int, Set[(Long, Long)]] =
-    Dedup.lshTuneCandidates(sh).collect()
+  private def candSets(d: org.apache.spark.sql.DataFrame): Map[Int, Set[(Long, Long)]] =
+    Dedup.lshTuneCandidates(d).collect()
       .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
       .withDefaultValue(Set.empty)
 
   test("candidate sets nest: each config's candidates contain every narrower config's") {
-    val cands = candSets(Dedup.shingles(spark, Sf))
+    val cands = candSets(Dedup.tokenized(spark, Sf))
     // (2×8) ⊆ (4×4) ⊆ (8×2) ⊆ (16×1): an r-row band equality implies both
     // aligned r/2-row halves match, which are bands of the next config.
     Seq(2, 4, 8).zip(Seq(4, 8, 16)).foreach { case (narrow, wide) =>
@@ -34,17 +34,17 @@ class LshTuneSpec extends AnyFunSuite {
 
   test("the 4-band arm's candidates are minhash_lsh's pairs: one signature, one 4×4 split") {
     import org.apache.spark.sql.functions.max
-    val sh = Dedup.shingles(spark, Sf).localCheckpoint()
+    val d = Dedup.tokenized(spark, Sf).localCheckpoint()
     // the sweep drops buckets above TuneBucketCap and minhash_lsh does not;
     // on this corpus no 4×4 bucket reaches the cap, so the uncapped pair
     // set is the one to match
-    val biggest = Dedup.minhashBands(sh).groupBy("band", "bk").count()
+    val biggest = Dedup.minhashBands(d).groupBy("band", "bk").count()
       .agg(max("count")).head().getLong(0)
     assert(biggest <= Dedup.TuneBucketCap, s"a $biggest-doc bucket exceeds the cap")
     val lsh = Dedup.minhashLsh(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh.nonEmpty, "minhash_lsh must find pairs on the real corpus")
-    assert(candSets(sh)(4) === lsh)
+    assert(candSets(d)(4) === lsh)
   }
 
   test("sweep output invariants on the real corpus") {
@@ -83,9 +83,8 @@ class LshTuneSpec extends AnyFunSuite {
     val a = (1L, (1 to 40).map(k => s"w$k").mkString(" "))
     val b = (2L, ((1 to 36).map(k => s"w$k") ++ Seq("x1", "x2", "x3", "x4")).mkString(" "))
     val docs = (flood :+ a :+ b).toDF("doc_id", "text")
-    val cands = candSets(Dedup.shinglesOfTokenized(
-      docs.select(org.apache.spark.sql.functions.col("doc_id"),
-        TextOps.tokens(org.apache.spark.sql.functions.col("text")).as("t"))))
+    val cands = candSets(docs.select(org.apache.spark.sql.functions.col("doc_id"),
+      TextOps.tokens(org.apache.spark.sql.functions.col("text")).as("t")))
     val floodIds = (1000L until 1250L).toSet
     cands.values.flatten.foreach { case (x, y) =>
       assert(!(floodIds(x) && floodIds(y)),
@@ -103,10 +102,9 @@ class LshTuneSpec extends AnyFunSuite {
     // crossJoin silently emptied the whole sweep output.
     val docs = Seq.tabulate(250)(i =>
       (i.toLong, (1 to 30).map(k => s"same$k").mkString(" "))).toDF("doc_id", "text")
-    val sh = Dedup.shinglesOfTokenized(
-      docs.select(org.apache.spark.sql.functions.col("doc_id"),
-        TextOps.tokens(org.apache.spark.sql.functions.col("text")).as("t")))
-    val rows = Dedup.lshTuneOfShingles(sh).collect()
+    val d = docs.select(org.apache.spark.sql.functions.col("doc_id"),
+      TextOps.tokens(org.apache.spark.sql.functions.col("text")).as("t"))
+    val rows = Dedup.lshTuneOfTokenized(d).collect()
     assert(rows.map(_.getLong(0)).toSet === Set(2L, 4L, 8L, 16L))
     rows.foreach { r =>
       assert(r.getLong(2) === 0L, "n_candidates must be an explicit 0")

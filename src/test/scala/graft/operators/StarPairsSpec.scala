@@ -19,9 +19,9 @@ class StarPairsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("sf0.01: star components == all-pairs components, star edges are a subset") {
-    val sh = Dedup.shingles(spark, Sf).localCheckpoint()
-    val all = Dedup.minhashLshOfShingles(sh).localCheckpoint()
-    val star = Dedup.minhashLshStarOfShingles(sh).localCheckpoint()
+    val d = Dedup.tokenized(spark, Sf).localCheckpoint()
+    val all = Dedup.minhashLshOfTokenized(d).localCheckpoint()
+    val star = Dedup.minhashLshStarOfTokenized(d).localCheckpoint()
     val allEdges = all.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val starEdges = star.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(starEdges.nonEmpty && starEdges.subsetOf(allEdges),
@@ -33,23 +33,23 @@ class StarPairsSpec extends AnyFunSuite {
   test("crafted bucket: {1,2,3,4} colliding in one band gives 3 star edges, same single component") {
     import spark.implicits._
     // four docs with identical text -> identical signatures -> one bucket
-    val sh = Seq(1L, 2L, 3L, 4L).flatMap(id =>
-      Seq((id, "a b c"), (id, "b c d"), (id, "c d e"))).toDF("doc_id", "shingle")
-    val star = Dedup.minhashLshStarOfShingles(sh).collect()
+    // (shingles "a b c", "b c d", "c d e")
+    val d = Seq(1L, 2L, 3L, 4L).map(id => (id, Seq("a", "b", "c", "d", "e"))).toDF("doc_id", "t")
+    val star = Dedup.minhashLshStarOfTokenized(d).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(star === Set((1L, 2L), (1L, 3L), (1L, 4L)),
       s"star must pair every member with the bucket minimum, got $star")
-    val comp = componentsOf(Dedup.minhashLshStarOfShingles(sh))
+    val comp = componentsOf(Dedup.minhashLshStarOfTokenized(d))
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
   }
 
   test("quadratic vs linear: on a k-replica bucket the star emits k-1 edges, all-pairs k(k-1)/2") {
     import spark.implicits._
     val k = 40
-    val sh = (1L to k.toLong).flatMap(id =>
-      Seq((id, "x y z"), (id, "y z w"))).toDF("doc_id", "shingle")
-    val nStar = Dedup.minhashLshStarOfShingles(sh).count()
-    val nAll = Dedup.minhashLshOfShingles(sh).count()
+    // (shingles "x y z", "y z w")
+    val d = (1L to k.toLong).map(id => (id, Seq("x", "y", "z", "w"))).toDF("doc_id", "t")
+    val nStar = Dedup.minhashLshStarOfTokenized(d).count()
+    val nAll = Dedup.minhashLshOfTokenized(d).count()
     assert(nStar === (k - 1).toLong)
     assert(nAll === (k.toLong * (k - 1)) / 2)
   }

@@ -15,6 +15,7 @@ without changing the work done:
   - exchange plan ids         `[plan_id=831]`          -> `[plan_id=N]`
   - call sites                `at Dedup.scala:399`     -> `at Dedup.scala:N`
   - lambda variable suffixes  `lambda x_27`            -> `lambda x_N`
+  - observation names (UUIDs) `CollectMetrics` arguments -> `UUID`
 
 Prints a unified diff of the masked text for every query whose plans
 differ, and one line for a query that has a plan on one side only. Exits 1
@@ -31,6 +32,7 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"\b([a-z])_\d+\b"), r"\1_N"),
+    (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"), "UUID"),
 ]
 
 
