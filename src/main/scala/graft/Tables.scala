@@ -43,10 +43,77 @@ import org.apache.spark.sql.types._
   * what the engine itself computes on; let everything else drift in
   * lockstep. SchemaDriftSpec writes synthetic parquet in every plausible
   * physical variant and proves these loaders normalize.
+  *
+  * == One schema inference per table per session ==
+  *
+  * `spark.read.parquet(path)` infers the schema with a one-task Spark job
+  * (the footer read) on every call, a fixed cost of tens of milliseconds
+  * paid by every query for every table it reads. [[table]] therefore
+  * infers each table's raw `StructType` once ([[rawSchema]]) and reads
+  * through `spark.read.schema(s).parquet(path)`, which starts no job. The
+  * cache key has three parts, each there so a hit is never stale:
+  *
+  *   - the path, the table's identity;
+  *   - the (file, length, mtime) listing of every file under it, taken
+  *     with the session's Hadoop conf (so the same filesystem client, and
+  *     its credentials, as the read itself): an in-place rewrite with a
+  *     different physical type, the round-5 incident above, changes the
+  *     listing and re-infers instead of serving the old type to
+  *     [[tsToLongNs]]/[[toTimestamp]];
+  *   - the session's Parquet type-mapping confs ([[SchemaConfs]]): the
+  *     same footer maps to a different Spark type under another
+  *     `nanosAsLong`, `binaryAsString`, `int96AsTimestamp` or
+  *     `inferTimestampNTZ`, so a session with other settings never gets
+  *     this one's schema.
+  *
+  * The normalizers still branch on the cached schema, which is exactly the
+  * schema inference would return for the same files under the same confs.
   */
 object Tables {
+  /** Session confs under which the same Parquet footer infers to a
+    * different Spark schema (see the object doc). */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private final case class SchemaKey(path: String, confs: Seq[Option[String]])
+  private final case class Inferred(files: Seq[(String, Long, Long)], schema: StructType)
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[SchemaKey, Inferred]()
+
+  /** (file, length, mtime) of every file at or under `path`, or None when
+    * the path does not exist. Reads no permissions: on the local
+    * filesystem those fork a process per file. */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(s: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    try Some(walk(fs.getFileStatus(p)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The table's schema as the Parquet reader infers it, before any
+    * normalization: what a `readStream` over the raw files needs. Inferred
+    * once per (path, listing, confs); a missing path falls through to
+    * Spark's own inference, and so to its error. */
+  private[graft] def rawSchema(spark: SparkSession, sfDir: String, name: String): StructType = {
+    val path = s"$sfDir/$name.parquet"
+    def infer() = spark.read.parquet(path).schema
+    listing(spark, path).fold(infer()) { files =>
+      val key = SchemaKey(path, SchemaConfs.map(spark.conf.getOption))
+      Option(schemas.get(key)).filter(_.files == files).getOrElse {
+        val fresh = Inferred(files, infer())
+        schemas.put(key, fresh)
+        fresh
+      }.schema
+    }
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(rawSchema(spark, sfDir, name)).parquet(s"$sfDir/$name.parquet")
 
   /** ts-column → canonical int64 ns. Works on batch AND streaming frames
     * (pure projection). Fails loudly on a physical type no branch handles —

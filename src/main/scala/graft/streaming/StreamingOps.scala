@@ -213,11 +213,26 @@ object StreamingOps {
     * unique-per-run checkpoints that are never restarted from, so bit-rot
     * protection buys nothing and doubles the per-commit file count
     * (measured: summed per-batch store commit time ~3-5 s across the 32
-    * store instances of a join batch). [[replay]] restores both settings
-    * afterwards; a production run keeps checksums on its durable
-    * checkpoints. */
+    * store instances of a join batch).
+    *
+    * They also write through the FileSystem-based checkpoint file manager
+    * instead of the default FileContext one. Every offset, commit and
+    * source log entry and every state-store delta is an atomic
+    * write-then-rename, and on Hadoop's local filesystem without libhadoop
+    * the FileContext path forks helper processes for each one
+    * (`FileUtil.readLink` on rename, `chmod` from `setPermission` on
+    * create). On a 4-vCPU VM this cut `docs_stream_dedup`'s summed
+    * per-pass state-store commit from 0.154 s to 0.007 s and its log
+    * commits from 0.057 s to 0.015 s. The FileSystem manager's rename is
+    * atomic only where the filesystem's rename is; that holds here because
+    * every checkpoint lives under [[graft.LocalDirs.streamingCkpt]] on a
+    * local POSIX filesystem and is deleted after its run. [[replay]]
+    * restores all three settings afterwards; a production run keeps
+    * checksums and the FileContext manager on its durable checkpoints. */
   private val StateParts = Seq("spark.sql.shuffle.partitions" -> "4",
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** The RocksDB state store: `transformWithState` requires it (multiple
     * column families for named state + timers), so every tws demo pins it
@@ -256,7 +271,7 @@ object StreamingOps {
     * row folded into this side's LAST chunk drop — a watermark-advancing
     * flush whose own output the demo filters out. Its fields follow
     * `df`'s columns. */
-  private case class Side(df: DataFrame, orderCol: String,
+  private[streaming] case class Side(df: DataFrame, orderCol: String,
       sentinel: Option[Long => Product] = None)
 
   /** The replay loop of every streaming query. Stages each side's
@@ -273,7 +288,7 @@ object StreamingOps {
     *
     * Returns the sides' max order (the sentinel base), or Long.MaxValue
     * when no side has a sentinel. */
-  private def replay(spark: SparkSession, name: String, sfDir: String, numChunks: Int,
+  private[streaming] def replay(spark: SparkSession, name: String, sfDir: String, numChunks: Int,
       sides: Seq[Side], confs: Seq[(String, String)] = Nil, outputMode: String = "append",
       foreachBatch: Option[(DataFrame, Long) => Unit] = None, feed: Int => Unit = _ => ())(
       query: Seq[DataFrame] => DataFrame): Long = {
@@ -321,7 +336,7 @@ object StreamingOps {
   def streamingHourly(spark: SparkSession, sfDir: String): DataFrame = {
     // RAW physical schema (NOT Tables.events' normalized one: the stream
     // reads the raw files, so the ts normalization must run stream-side).
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.rawSchema(spark, sfDir, "events")
     val name = "graft_stream_hourly"
     replay(spark, name, sfDir, 1, Nil, outputMode = "complete") { _ =>
       // File-stream sources take a directory; glob-filter to the events table.
@@ -1230,7 +1245,10 @@ object StreamingOps {
     val baseDir =
       s"${graft.LocalDirs.jvmScratchRoot}/graft_stream_upsert_snap-${java.util.UUID.randomUUID}"
     var currentVersion = -1L
+    var currentSchema = new org.apache.spark.sql.types.StructType()
     def snapPath(v: Long) = s"$baseDir/v$v"
+    // The schema is the one just written, so reading it back infers nothing.
+    def snapshot() = spark.read.schema(currentSchema).parquet(snapPath(currentVersion))
     run { (batch, batchId) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("us").desc, col("event_id").desc)
@@ -1239,8 +1257,7 @@ object StreamingOps {
       val merged =
         if (currentVersion < 0) latest
         else {
-          val snap = spark.read.parquet(snapPath(currentVersion))
-          snap.as("s").join(latest.as("u"),
+          snapshot().as("s").join(latest.as("u"),
               col("s.user_id") === col("u.user_id"), "full_outer")
             .select(
               coalesce(col("u.user_id"), col("s.user_id")).as("user_id"),
@@ -1258,6 +1275,7 @@ object StreamingOps {
       merged.write.mode("overwrite").parquet(snapPath(batchId))
       val superseded = currentVersion
       currentVersion = batchId
+      currentSchema = merged.schema
       // A/B swap: the new version is durable, so the old one (fully
       // read by the merge's write above) is garbage now.
       if (superseded >= 0) graft.LocalDirs.rmTree(snapPath(superseded))
@@ -1266,8 +1284,7 @@ object StreamingOps {
       spark.range(0).selectExpr("id AS user_id", "id AS last_us",
         "CAST(id AS DOUBLE) AS last_value")
     else
-      spark.read.parquet(snapPath(currentVersion))
-        .select(col("user_id"), col("us").as("last_us"), col("value").as("last_value"))
+      snapshot().select(col("user_id"), col("us").as("last_us"), col("value").as("last_value"))
   }
 
   /** CONTINUOUS UPSERT via `foreachBatch` — the streaming twin of the batch
@@ -1318,7 +1335,7 @@ object StreamingOps {
     * still-open windows. */
   def watermarkedWindowCounts(spark: SparkSession, sfDir: String): DataFrame = {
     // Raw schema + stream-side normalization, as in [[streamingHourly]].
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.rawSchema(spark, sfDir, "events")
     val stream = Tables.normalizeEvents(spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(sfDir))
     stream

@@ -270,6 +270,108 @@ class SchemaDriftSpec extends AnyFunSuite {
     }
   }
 
+  // ---- the per-session schema cache (Tables.rawSchema) -----------------
+  //
+  // These cases run in ONE session on ONE path, where a cache keyed too
+  // loosely would serve a stale schema. The fixture is written with
+  // parquet's own example writer, not Spark's: a Spark-written file carries
+  // Spark's schema in its footer metadata, which the reader prefers over
+  // the Parquet types, so only a foreign file (like the generator's) shows
+  // a type-mapping conf at work.
+
+  /** Writes `events.parquet` under `dir` as ONE file, (event_id, ts) with
+    * ts an int64 TIMESTAMP of `unit` (NANOS: the ns-era generator; MICROS
+    * with isAdjustedToUTC=false: the current one), replacing any file there. */
+  private def writeTsFile(dir: Path, unit: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter.Mode
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      s"message events { required int64 event_id; " +
+        s"required int64 ts (TIMESTAMP($unit,${unit == "NANOS"})); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(dir.resolve("events.parquet")))
+      .withType(schema).withWriteMode(Mode.OVERWRITE).build()
+    val rows = new SimpleGroupFactory(schema)
+    try for ((id, us, _, _, _) <- rowsUs)
+      w.write(rows.newGroup().append("event_id", id)
+        .append("ts", if (unit == "NANOS") us * 1000L else us))
+    finally w.close()
+  }
+
+  private def tsById(df: DataFrame): Map[Long, Long] =
+    df.select("event_id", "ts").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private val wantNs = rowsUs.map { case (id, us, _, _, _) => id -> us * 1000L }.toMap
+
+  test("Tables.events follows an in-place rewrite of its file to another ts physical type") {
+    withTempDir("graft-drift-") { dir =>
+      writeTsFile(dir, "NANOS")
+      assert(Tables.rawSchema(spark, dir.toString, "events")("ts").dataType === LongType)
+      assert(tsById(Tables.events(spark, dir.toString)) === wantNs)
+      writeTsFile(dir, "MICROS") // same path, same file name
+      assert(Tables.rawSchema(spark, dir.toString, "events")("ts").dataType === TimestampNTZType,
+        "the rewritten file must be re-inferred, not served the cached LongType")
+      assert(tsById(Tables.events(spark, dir.toString)) === wantNs)
+      writeTsFile(dir, "NANOS") // and back
+      assert(Tables.rawSchema(spark, dir.toString, "events")("ts").dataType === LongType)
+      assert(tsById(Tables.events(spark, dir.toString)) === wantNs)
+    }
+  }
+
+  test("a session with another nanosAsLong never gets this session's cached schema") {
+    withTempDir("graft-drift-") { dir =>
+      writeTsFile(dir, "NANOS")
+      val path = dir.resolve("events.parquet").toString
+      assert(Tables.rawSchema(spark, dir.toString, "events")("ts").dataType === LongType)
+      val other = spark.newSession()
+      other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      // What an uncached inference says in the other session: a failure or
+      // another type, never the first session's LongType.
+      def outcome(f: => StructType): String =
+        scala.util.Try(f("ts").dataType).fold(e => s"fails: ${e.getMessage}", _.toString)
+      val fresh = outcome(other.read.parquet(path).schema)
+      assert(fresh !== LongType.toString)
+      assert(outcome(Tables.rawSchema(other, dir.toString, "events")) === fresh)
+      // and the first session still gets its own
+      assert(Tables.rawSchema(spark, dir.toString, "events")("ts").dataType === LongType)
+    }
+  }
+
+  test("a warm Tables.documents call starts no Spark job; a cold one infers once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // Count only the jobs of this thread's job group: other suites may share
+    // the context.
+    val group = s"tables-warm-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet(): Unit
+    }
+    def jobsOf(body: => Any): Int = {
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark)
+      jobs.get
+    }
+    withTempDir("graft-drift-") { dir =>
+      Seq((1L, "some text")).toDF("doc_id", "text")
+        .coalesce(1).write.parquet(dir.resolve("documents.parquet").toString)
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "Tables schema cache")
+      try {
+        assert(jobsOf(Tables.documents(spark, dir.toString).schema) >= 1,
+          "the cold call infers the schema with a job, or this listener sees nothing")
+        assert(jobsOf(Tables.documents(spark, dir.toString).schema) === 0)
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+  }
+
   test("an unnormalizable ts physical type fails loudly at the loader, not downstream") {
     withTempDir("graft-drift-") { tmp =>
       val dir = Files.createTempDirectory(tmp, "bad").toString

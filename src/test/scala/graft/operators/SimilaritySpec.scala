@@ -7,6 +7,8 @@ import graft.SparkTestSession
 class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val Sf = "/root/testdata/sf0.001"
+  // the next scale factor, for cases that need a corpus where two methods disagree
+  private val Sf01 = Sf.stripSuffix("sf0.001") + "sf0.01"
 
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -37,7 +39,7 @@ class SimilaritySpec extends AnyFunSuite {
     // sf0.01 is the input where IVFPQ and its rerank disagree on some
     // query: at sf0.001 their rows are identical, so a swap of the two
     // method labels would pass unseen there
-    Seq(Sf -> false, "/root/testdata/sf0.01" -> true).foreach { case (sf, discriminating) =>
+    Seq(Sf -> false, Sf01 -> true).foreach { case (sf, discriminating) =>
       val brute = queryPairs(Similarity.knnBrute(spark, sf))
       val expected = Seq(
         "sq8" -> Similarity.knnSq8(spark, sf),
@@ -344,34 +346,48 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("knn_ivf_trained equals an in-memory replay of trained assignment and in-cluster top-k") {
     import org.apache.spark.sql.functions._
-    val got = Similarity.knnIvfTrained(spark, Sf).collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
-    // kmeansTrain's centroid rows, decoded from fixed point per cluster
-    val cents = Similarity.kmeansTrain(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(3) / 1e6))
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (c, rows) => c -> rows.sortBy(_._2).map(_._3).toSeq }
-    val vecs = graft.Tables.embeddings(spark, Sf)
-      .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    def dotL2R(a: Seq[Double], b: Seq[Double]) =
-      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
-    def cos(a: Seq[Double], b: Seq[Double]) =
-      dotL2R(a, b) / (math.sqrt(dotL2R(a, a)) * math.sqrt(dotL2R(b, b)))
-    // argmax of dot/|c|, lowest cluster on ties
-    val cluster = vecs.map { case (id, v) =>
-      id -> cents.map { case (c, cv) => (c, dotL2R(v, cv) / math.sqrt(dotL2R(cv, cv))) }
-        .maxBy { case (c, s) => (s, -c) }._1
+    // sf0.01 is the input where scoring the assignment by plain dot(v, c)
+    // instead of dot/|c| changes the output: at sf0.001 no query's in-cluster
+    // top-5 moves, so that mutant would pass unseen there
+    Seq(Sf -> false, Sf01 -> true).foreach { case (sf, discriminating) =>
+      val got = Similarity.knnIvfTrained(spark, sf).collect()
+        .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getDouble(3))).toMap
+      // kmeansTrain's centroid rows, decoded from fixed point per cluster
+      val cents = Similarity.kmeansTrain(spark, sf).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(3) / 1e6))
+        .groupBy(_._1).toSeq.sortBy(_._1).map { case (c, rows) => c -> rows.sortBy(_._2).map(_._3).toSeq }
+      val vecs = graft.Tables.embeddings(spark, sf)
+        .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      def dotL2R(a: Seq[Double], b: Seq[Double]) =
+        a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+      def cos(a: Seq[Double], b: Seq[Double]) =
+        dotL2R(a, b) / (math.sqrt(dotL2R(a, a)) * math.sqrt(dotL2R(b, b)))
+      // argmax of score(v, c), lowest cluster on ties
+      def assign(score: (Seq[Double], Seq[Double]) => Double): Map[Long, Long] =
+        vecs.map { case (id, v) =>
+          id -> cents.map { case (c, cv) => (c, score(v, cv)) }.maxBy { case (c, s) => (s, -c) }._1
+        }
+      def topK(cluster: Map[Long, Long]) = (0L until Similarity.NumQueries.toLong).flatMap { q =>
+        vecs.keys.filter(id => id != q && cluster(id) == cluster(q)).toSeq
+          .map(id => (id, cos(vecs(q), vecs(id))))
+          .sortBy { case (id, c) => (-c, id) }.take(5)
+          .zipWithIndex.map { case ((id, c), i) => ((q, id, (i + 1).toLong), c) }
+      }.toMap
+      val cluster = assign((v, c) => dotL2R(v, c) / math.sqrt(dotL2R(c, c)))
+      val want = topK(cluster)
+      assert(got.keySet === want.keySet, s"on $sf")
+      got.foreach { case (key, c) => assert(math.abs(c - want(key)) < 1e-6, s"cos_sim of $key on $sf") }
+      // the codebook actually partitions: more than one cluster serves queries
+      assert((0L until Similarity.NumQueries.toLong).map(cluster).toSet.size > 1, s"on $sf")
+      if (discriminating) {
+        val byDot = assign(dotL2R)
+        assert(vecs.keys.exists(id => byDot(id) != cluster(id)),
+          s"some vector's dot and dot/|c| argmaxes must differ on $sf")
+        assert(topK(byDot).keySet !== want.keySet,
+          s"a plain-dot assignment must change knn_ivf_trained's rows on $sf")
+      }
     }
-    val want = (0L until Similarity.NumQueries.toLong).flatMap { q =>
-      vecs.keys.filter(id => id != q && cluster(id) == cluster(q)).toSeq
-        .map(id => (id, cos(vecs(q), vecs(id))))
-        .sortBy { case (id, c) => (-c, id) }.take(5)
-        .zipWithIndex.map { case ((id, c), i) => ((q, id, (i + 1).toLong), c) }
-    }.toMap
-    assert(got.keySet === want.keySet)
-    got.foreach { case (key, c) => assert(math.abs(c - want(key)) < 1e-6, s"cos_sim of $key") }
-    // the codebook actually partitions: more than one cluster serves queries
-    assert((0L until Similarity.NumQueries.toLong).map(cluster).toSet.size > 1)
   }
 
   // driver-side mirror of the binary pack: midrange thresholds, MSB-first

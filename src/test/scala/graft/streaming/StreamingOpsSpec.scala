@@ -258,6 +258,31 @@ class StreamingOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("a replay checkpoints through the FileSystem-based manager and restores the conf after") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+      FileSystemBasedCheckpointFileManager}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // The manager Spark builds for a path from the session's Hadoop conf,
+    // as the query's offset/commit logs and state stores get theirs.
+    def manager(): Class[_] = CheckpointFileManager.create(new Path(Sf),
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+      .getClass
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    val source = MemoryStream[Long]
+    val during = Seq.newBuilder[Class[_]]
+    StreamingOps.replay(spark, "graft_stream_ckpt_mgr", "", 2, Nil,
+      feed = k => { source.addData(k.toLong); during += manager() })(_ => source.toDF())
+    assert(during.result() === Seq.fill(2)(classOf[FileSystemBasedCheckpointFileManager]))
+    assert(spark.table("graft_stream_ckpt_mgr").as[Long].collect().sorted.toSeq === Seq(0L, 1L))
+    assert(spark.conf.getOption(key) === before, "replay must restore the session conf")
+    assert(manager() !== classOf[FileSystemBasedCheckpointFileManager],
+      "outside a replay the session keeps Spark's default manager")
+  }
+
   test("foreachBatch upsert: chunked-feed snapshot equals the batch latest-per-user") {
     import org.apache.spark.sql.functions._
     val snap = StreamingOps.streamingUpsert(spark, Sf, numChunks = 4)
