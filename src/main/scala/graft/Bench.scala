@@ -43,15 +43,12 @@ object Bench {
     val cpus = GraftSession.cpus
     // Hashed at launch, so the id names the sources this run was built from.
     val codeId = BenchCore.codeId(new java.io.File("."))
+    // Dev-only subset filter (a SparkEntry.resolve list, checked before the
+    // session starts): scaling audits time the heaviest queries on a larger
+    // synthetic corpus without paying the full pass. Canonical
+    // windows never set this.
+    val ordered = SparkEntry.resolve(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "ALL")).sorted
     val spark = GraftSession.local(cpus, sfDir)
-
-    // Dev-only subset filter (comma-separated names): scaling audits time
-    // the heaviest queries on a larger synthetic corpus without paying the
-    // full 118-query pass. The driver's per-round bench never sets this.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     BenchCore.warmUp(spark, ordered, sfDir, warmDir, "bench")
 
     // Measurement + noise defense live in BenchCore (median-of-3, adaptive
@@ -65,13 +62,8 @@ object Bench {
       val p = BenchCore.timedPass(spark, name, sfDir, "bench")
       (p.total, p.ok)
     }
-    // Dev-only single-pass probe mode for very large tiered decades
-    // (sf100); the driver's per-round bench never sets it, so every
-    // canonical capture stays median-of-3-to-5.
-    val basePasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .map(_.toInt).filter(p => p >= 1 && p <= 5).getOrElse(3)
     val core = BenchCore.measure(ordered, onePass, () => BenchCore.calibrate(spark),
-      log = System.err.println(_), basePasses = basePasses)
+      log = System.err.println(_))
 
     // Canonical noise gate (BenchCore.canonicalAcceptable). The exit
     // calibration separates self-inflicted mid-run calibration drift
@@ -103,7 +95,7 @@ object Bench {
         .format(java.time.format.DateTimeFormatter.ofPattern("MM-dd'T'HH:mm:ss")),
       codeId = codeId, sf = sfDir, work = "full_rows", noiseIndex = noiseIndex,
       exitRatio = exitRatioOpt, spreadDirty = spreadDirty, queries = core.queries,
-      accepted = accepted, passes = basePasses, cpus = cpus,
+      accepted = accepted, passes = BenchCore.BasePasses, cpus = cpus,
       heapGb = (Runtime.getRuntime.maxMemory >> 30).toInt,
       calibrations = core.calibrations, exitCalibration = exitCalOpt,
       rescueRan = core.rescueRan)

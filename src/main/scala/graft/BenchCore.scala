@@ -37,6 +37,7 @@ import org.json4s.jackson.JsonMethods
   *      timing and the re-run happens AFTER recovery was observed.
   */
 object BenchCore {
+  val BasePasses = 3 // layer 1; every window records it as its `passes`
   val NoiseThreshold = 3.0
   val UnstableSpread = 50.0 // escalated to 5 passes AND still above = dirty window
   val RecoveredFactor = 1.5
@@ -141,8 +142,8 @@ object BenchCore {
 
   /** One bench window as appended to the windows log, the only state the
     * bench keeps: the details file is [[derive]]d from the log. `accepted`
-    * is the [[canonicalAcceptable]] verdict, `passes` the base pass count,
-    * `heapGb` the JVM's max heap in whole GiB. */
+    * is the [[canonicalAcceptable]] verdict, `passes` the base pass count
+    * ([[BasePasses]]), `heapGb` the JVM's max heap in whole GiB. */
   case class WindowRecord(ts: String, codeId: String, sf: String, work: String,
       noiseIndex: Double, exitRatio: Option[Double], spreadDirty: Boolean,
       queries: Seq[Q], accepted: Boolean, passes: Int, cpus: Int, heapGb: Int,
@@ -275,7 +276,8 @@ object BenchCore {
     * windows in log order, and the assembly when rule 2 chose it. */
   case class Derived(details: JValue, refused: Seq[WindowRecord], assembled: Option[Assembled])
 
-  /** Minimum base pass count of a window that may define or join an identity. */
+  /** Minimum base pass count of a window that may define or join an
+    * identity: older logs also hold single-pass windows. */
   val MinCanonicalPasses = 3
 
   /** The details file as a function of the windows log. The identity is
@@ -420,8 +422,7 @@ object BenchCore {
   /** Untimed warm-up before the first timed pass, logged under `tag`: each
     * named query once on the tiny `warmDir` corpus (JIT/codegen — see
     * [[Bench]]), the calibration plan once, then every byte under `sfDir`
-    * via [[warmData]] unless SPARK_GRAFT_DATA_WARM=0 (e.g. when cold-read
-    * behavior is itself the measurement target). */
+    * via [[warmData]], so no timed pass pays a cold page-cache read. */
   def warmUp(spark: SparkSession, names: Seq[String], sfDir: String, warmDir: String,
       tag: String): Unit = {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) names.foreach { name =>
@@ -429,12 +430,10 @@ object BenchCore {
       catch { case e: Throwable => System.err.println(s"[$tag] warmup $name: ${e.getMessage}") }
     }
     calibrate(spark): Unit
-    if (sys.env.getOrElse("SPARK_GRAFT_DATA_WARM", "1") != "0") {
-      val tw0 = System.nanoTime()
-      val warmed = warmData(new java.io.File(sfDir), System.err.println(_))
-      System.err.println(f"[$tag] data-warm: ${warmed / 1e9}%.2f GB in " +
-        f"${(System.nanoTime() - tw0) / 1e9}%.1f s")
-    }
+    val tw0 = System.nanoTime()
+    val warmed = warmData(new java.io.File(sfDir), System.err.println(_))
+    System.err.println(f"[$tag] data-warm: ${warmed / 1e9}%.2f GB in " +
+      f"${(System.nanoTime() - tw0) / 1e9}%.1f s")
   }
 
   /** Decade-scale heap hygiene, run OUTSIDE a timed region: checkpoint
@@ -625,18 +624,12 @@ object BenchCore {
     (med, spread)
   }
 
-  /** Layers 1+2 for one query: `basePasses` passes (3 in every driver /
-    * canonical run), adaptively up to 5. basePasses = 1 is the dev-only
-    * single-pass probe mode for very large tiered decades (sf100), where
-    * three passes of a 10-minute query buy little: a single sample cannot
-    * spread-escalate, so such probes rely on the calibration bracketing
-    * alone and are recorded with passes = 1 in the artifact — never the
-    * cross-round baseline. */
-  private def measureOne(name: String, onePass: String => (Double, Boolean),
-      basePasses: Int): Q = {
-    var passes = (1 to basePasses).map(_ => onePass(name))
+  /** Layers 1+2 for one query: [[BasePasses]] passes, adaptively up to 5.
+    * (Single-pass timings of very large tiered decades are [[Probe]]'s.) */
+  private def measureOne(name: String, onePass: String => (Double, Boolean)): Q = {
+    var passes = (1 to BasePasses).map(_ => onePass(name))
     var good = passes.filter(_._2).map(_._1)
-    while (good.nonEmpty && passes.size < 5 && basePasses > 1 && stats(good)._2 > 50.0) {
+    while (good.nonEmpty && passes.size < 5 && stats(good)._2 > 50.0) {
       passes = passes :+ onePass(name)
       good = passes.filter(_._2).map(_._1)
     }
@@ -649,14 +642,13 @@ object BenchCore {
 
   def measure(names: Seq[String], onePass: String => (Double, Boolean),
       calibrate: () => Double,
-      log: String => Unit = _ => (),
-      basePasses: Int = 3): Result = {
+      log: String => Unit = _ => ()): Result = {
     val calStart = calibrate()
     val midpoint = names.size / 2
     var calMiddle = calStart // overwritten at the midpoint query
     val firstRound = names.zipWithIndex.map { case (name, i) =>
       if (i == midpoint) calMiddle = calibrate()
-      measureOne(name, onePass, basePasses)
+      measureOne(name, onePass)
     }
     val calEnd = calibrate()
     val cals = Seq(calStart, calMiddle, calEnd)
@@ -699,7 +691,7 @@ object BenchCore {
         val (screen, screenOk) = onePass(q.name)
         if (!screenOk || screen >= q.median * ScreenSlack) q
         else {
-          val re = measureOne(q.name, onePass, basePasses)
+          val re = measureOne(q.name, onePass)
           // Throttling only inflates; the re-run happened after observed
           // recovery, so the smaller median is the honest one.
           if (re.ok && re.median < q.median) { rescuedCount += 1; re.copy(rescued = true) }

@@ -23,10 +23,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: runMain graft.Explain <q1>[,...]|ALL [sfDir] [reps] [outDir]")
-    val names0 = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val names = if (names0 == Seq("ALL")) SparkEntry.queries.keys.toSeq.sorted else names0
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"not in the registry: ${unknown.mkString(", ")}")
+    val names = SparkEntry.resolve(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val reps = if (args.length > 2) args(2).toInt else 2
     val outDir = args.lift(3).map(new java.io.File(_))

@@ -2,7 +2,7 @@ package graft
 
 /** Dev tool: print the DuckDB oracle SQL for the named queries (or all) so
   * candidate SQL can be prototyped against DuckDB before a Verify run.
-  * Usage: runMain graft.PrintSql [-o file] [name...]
+  * Usage: runMain graft.PrintSql [-o file] [name[,name...] ...]
   *
   * With `-o`, only the oracle text goes to `file` (sbt writes its own
   * `[info]`/`[success]` lines into the same stdout), so two checkouts'
@@ -14,7 +14,7 @@ object PrintSql {
       case "-o" +: file +: names => (Some(file), names)
       case names => (None, names)
     }
-    val names = if (rest.nonEmpty) rest else SparkEntry.oracleSql.keys.toSeq.sorted
+    val names = SparkEntry.resolve(if (rest.nonEmpty) rest.mkString(",") else "ALL")
     val text = names.map(n => s"-- >>> $n\n${SparkEntry.oracleSql(n)}\n-- <<< $n\n").mkString
     out match {
       case Some(f) =>

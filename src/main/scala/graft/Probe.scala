@@ -29,15 +29,13 @@ import org.json4s.JsonDSL._
   * Usage: runMain graft.Probe <query>[,<query>...]
   * Env: SPARK_GRAFT_SF_DIR (target data), SPARK_GRAFT_PROBE_OUT (artifact,
   * default probes.jsonl), SPARK_GRAFT_PROBE_PASSES (default 2 = one cold +
-  * one warm), SPARK_GRAFT_WARM_DIR / SPARK_GRAFT_DATA_WARM / SPARK_GRAFT_CPUS
-  * as in [[Bench]].
+  * one warm), SPARK_GRAFT_WARM_DIR / SPARK_GRAFT_CPUS as in [[Bench]]; the
+  * page-cache warm of SPARK_GRAFT_SF_DIR always runs ([[BenchCore.warmUp]]).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val names = args.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val names = SparkEntry.resolve(args.mkString(","))
     require(names.nonEmpty, "usage: runMain graft.Probe <query>[,<query>...]")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"not in the registry: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "probes.jsonl")
     val passes = sys.env.get("SPARK_GRAFT_PROBE_PASSES").map(_.toInt)

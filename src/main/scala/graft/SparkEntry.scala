@@ -1,15 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.mr.MrQueries
 import graft.operators._
+import graft.streaming.StreamingOps
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is a complete operator from SURVEY.md §2 (the
-  * reference's query surface re-expressed Spark-first) or a first-class
+  * Every query is a complete operator from SURVEY.md §2 (the reference's
+  * query surface re-expressed Spark-first) or a first-class
   * LLM-data-pipeline operator (dedup / similarity / text analysis /
-  * multimodal). Each key with an [[oracleSql]] twin is hash-checked against
-  * DuckDB at sf0.01 by the driver's Verify harness.
+  * multimodal), registered as ONE [[Query]] row: its name, the function
+  * that builds its Spark frame, and the DuckDB SQL that Verify's harness
+  * hash-checks it against at sf0.01. [[queries]] and [[oracleSql]] are
+  * both read off those rows, so their key sets are equal by construction.
   */
 object SparkEntry {
 
@@ -20,409 +24,256 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Sampling.trainingMixFull(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One registered query: `build(spark, sfDir)` is the Spark frame, `sql`
+    * the equivalent SQL runnable by DuckDB on the same parquet tables. */
+  private case class Query(name: String, build: (SparkSession, String) => DataFrame, sql: String)
+
+  private val registry: Seq[Query] = Seq(
     // Reference parity (SURVEY.md §2.2 Q1–Q4 re-expressed natively)
-    "wc_wordcount" -> ((s, d) => TextOps.wordcount(s, d)),
-    "wc_by_source" -> ((s, d) => TextOps.wordcountBySource(s, d)),
-    "grep_product" -> ((s, d) => TextOps.grep(s, d)),
-    "grep_match" -> ((s, d) => TextOps.grep(s, d, "vector")),
+    Query("wc_wordcount", TextOps.wordcount, TextOps.wordcountSql),
+    Query("wc_by_source", TextOps.wordcountBySource, TextOps.wordcountBySourceSql),
+    Query("grep_product", (s, d) => TextOps.grep(s, d), TextOps.grepSql()),
+    Query("grep_match", (s, d) => TextOps.grep(s, d, "vector"), TextOps.grepSql("vector")),
     // MapReduce engine end-to-end (F3–F7 dataflow over documents.text)
-    "mr_wordcount" -> ((s, d) => graft.mr.MrQueries.mrWordcount(s, d)),
-    "mr_wordcount_exec" -> ((s, d) => graft.mr.MrQueries.mrWordcountExec(s, d)),
-    "mr_grep" -> ((s, d) => graft.mr.MrQueries.mrGrep(s, d)),
+    Query("mr_wordcount", MrQueries.mrWordcount, MrQueries.mrWordcountSql),
+    Query("mr_wordcount_exec", MrQueries.mrWordcountExec, MrQueries.mrWordcountSql),
+    Query("mr_grep", (s, d) => MrQueries.mrGrep(s, d), MrQueries.mrGrepSql()),
     // Relational coverage (bench headliners)
-    "q1_agg" -> ((s, d) => Relational.q1Agg(s, d)),
-    "q1_rollup" -> ((s, d) => Relational.q1Rollup(s, d)),
-    "q1_cube" -> ((s, d) => Relational.q1Cube(s, d)),
-    "top_customers_per_nation" -> ((s, d) => Relational.topCustomersPerNation(s, d)),
-    "q3_topk" -> ((s, d) => Relational.q3Topk(s, d)),
-    "q5_region" -> ((s, d) => Relational.q5Region(s, d)),
-    "q14_promo" -> ((s, d) => Relational.q14Promo(s, d)),
-    "q17_small_qty" -> ((s, d) => Relational.q17SmallQty(s, d)),
-    "q7_volume" -> ((s, d) => Relational.q7Volume(s, d)),
-    "q8_mkt_share" -> ((s, d) => Relational.q8MktShare(s, d)),
-    "customers_no_urgent" -> ((s, d) => Relational.customersNoOrders(s, d)),
-    "orders_with_returns" -> ((s, d) => Relational.ordersWithReturns(s, d)),
-    "customer_value_profile" -> ((s, d) => Relational.customerValueProfile(s, d)),
-    "orders_above_cust_avg" -> ((s, d) => Relational.ordersAboveCustAvg(s, d)),
-    "snapshot_merge" -> ((s, d) => Relational.snapshotMerge(s, d)),
-    "table_profile" -> ((s, d) => Relational.tableProfile(s, d)),
-    "fuzzy_pairs" -> ((s, d) => FuzzyJoin.fuzzyPairs(s, d)),
-    "entity_resolution" -> ((s, d) => FuzzyJoin.entityResolution(s, d)),
-    "fk_integrity" -> ((s, d) => Audit.fkIntegrity(s, d)),
-    "join_cardinality_kmv" -> ((s, d) => Audit.joinCardinalityKmv(s, d)),
-    "bloom_semijoin_prune" -> ((s, d) => Audit.bloomSemijoinPrune(s, d)),
-    "hll_distinct" -> ((s, d) => TextAnalysis.hllDistinct(s, d)),
-    "row_quality_gate" -> ((s, d) => Audit.rowQualityGate(s, d)),
+    Query("q1_agg", Relational.q1Agg, Relational.q1AggSql),
+    Query("q1_rollup", Relational.q1Rollup, Relational.q1RollupSql),
+    Query("q1_cube", Relational.q1Cube, Relational.q1CubeSql),
+    Query("top_customers_per_nation", (s, d) => Relational.topCustomersPerNation(s, d),
+      Relational.topCustomersPerNationSql()),
+    Query("q3_topk", Relational.q3Topk, Relational.q3TopkSql),
+    Query("q5_region", Relational.q5Region, Relational.q5RegionSql),
+    Query("q14_promo", Relational.q14Promo, Relational.q14PromoSql),
+    Query("q17_small_qty", (s, d) => Relational.q17SmallQty(s, d), Relational.q17SmallQtySql()),
+    Query("q7_volume", (s, d) => Relational.q7Volume(s, d), Relational.q7VolumeSql()),
+    Query("q8_mkt_share", (s, d) => Relational.q8MktShare(s, d), Relational.q8MktShareSql()),
+    Query("customers_no_urgent", Relational.customersNoOrders, Relational.customersNoOrdersSql),
+    Query("orders_with_returns", Relational.ordersWithReturns, Relational.ordersWithReturnsSql),
+    Query("customer_value_profile", Relational.customerValueProfile, Relational.customerValueProfileSql),
+    Query("orders_above_cust_avg", Relational.ordersAboveCustAvg, Relational.ordersAboveCustAvgSql),
+    Query("snapshot_merge", Relational.snapshotMerge, Relational.snapshotMergeSql),
+    Query("table_profile", Relational.tableProfile, Relational.tableProfileSql),
+    Query("fuzzy_pairs", FuzzyJoin.fuzzyPairs, FuzzyJoin.fuzzyPairsSql),
+    Query("entity_resolution", FuzzyJoin.entityResolution, FuzzyJoin.entityResolutionSql),
+    Query("fk_integrity", Audit.fkIntegrity, Audit.fkIntegritySql),
+    Query("join_cardinality_kmv", Audit.joinCardinalityKmv, Audit.joinCardinalityKmvSql),
+    Query("bloom_semijoin_prune", Audit.bloomSemijoinPrune, Audit.bloomSemijoinPruneSql),
+    Query("hll_distinct", TextAnalysis.hllDistinct, TextAnalysis.hllDistinctSql),
+    Query("row_quality_gate", Audit.rowQualityGate, Audit.rowQualityGateSql),
     // Event analytics (windows / sessions)
-    "events_hourly" -> ((s, d) => EventOps.hourly(s, d)),
-    "events_ewma" -> ((s, d) => EventOps.ewma(s, d)),
-    "events_sliding" -> ((s, d) => EventOps.slidingCounts(s, d)),
-    "events_rolling_1h" -> ((s, d) => EventOps.rolling1h(s, d)),
-    "events_first_per_user" -> ((s, d) => EventOps.firstEventsPerUser(s, d)),
-    "events_sessionize" -> ((s, d) => EventOps.sessionize(s, d)),
-    "events_click_no_purchase" -> ((s, d) => EventOps.clickNoPurchase(s, d)),
-    "events_click_and_purchase" -> ((s, d) => EventOps.clickAndPurchase(s, d)),
-    "events_value_ntile" -> ((s, d) => EventOps.valueNtile(s, d)),
-    "events_type_pivot" -> ((s, d) => EventOps.typePivot(s, d)),
-    "events_props_json" -> ((s, d) => EventOps.propsJson(s, d)),
-    "events_date_parts" -> ((s, d) => EventOps.dateParts(s, d)),
-    "events_funnel" -> ((s, d) => EventOps.funnel(s, d)),
-    "events_asof_click" -> ((s, d) => EventOps.asofClickBeforePurchase(s, d)),
-    "events_session_concurrency" -> ((s, d) => EventOps.sessionConcurrency(s, d)),
-    "events_time_rollup" -> ((s, d) => EventOps.timeRollup(s, d)),
-    "events_anomaly" -> ((s, d) => EventOps.anomalyHours(s, d)),
-    "events_cohort_retention" -> ((s, d) => EventOps.cohortRetention(s, d)),
-    "events_gap_fill" -> ((s, d) => EventOps.gapFill(s, d)),
-    "events_click_minus_purchase_all" -> ((s, d) => EventOps.clickMinusPurchaseAll(s, d)),
-    "events_user_paths" -> ((s, d) => EventOps.userPaths(s, d)),
-    "events_transitions" -> ((s, d) => EventOps.transitions(s, d)),
-    "events_attribution" -> ((s, d) => EventOps.attribution(s, d)),
-    "events_attribution_position" -> ((s, d) => EventOps.attributionPosition(s, d)),
-    "events_user_counts_salted" -> ((s, d) => Skew.userEventCountsSalted(s, d)),
-    "events_join_salted" -> ((s, d) => Skew.eventsJoinSalted(s, d)),
-    "q13_order_dist" -> ((s, d) => Relational.q13OrderDist(s, d)),
-    "q16_supplier_cnt" -> ((s, d) => Relational.q16SupplierCnt(s, d)),
-    "q18_large_orders" -> ((s, d) => Relational.q18LargeOrders(s, d)),
-    "q22_global_bal" -> ((s, d) => Relational.q22GlobalBal(s, d)),
-    "q6_forecast" -> ((s, d) => Relational.q6Forecast(s, d)),
-    "q10_returns" -> ((s, d) => Relational.q10Returns(s, d)),
-    "q12_priority" -> ((s, d) => Relational.q12Priority(s, d)),
-    "q15_top_supplier" -> ((s, d) => Relational.q15TopSupplier(s, d)),
-    "q19_disjunctive" -> ((s, d) => Relational.q19Disjunctive(s, d)),
-    "q21_waiting" -> ((s, d) => Relational.q21Waiting(s, d)),
-    "q2_min_cost" -> ((s, d) => Relational.q2MinCost(s, d)),
-    "q9_profit" -> ((s, d) => Relational.q9Profit(s, d)),
-    "q11_important_part" -> ((s, d) => Relational.q11ImportantPart(s, d)),
-    "q20_potential_promo" -> ((s, d) => Relational.q20PotentialPromo(s, d)),
-    "bpe_pair_counts" -> ((s, d) => Bpe.bpePairCounts(s, d)),
-    "bpe_train" -> ((s, d) => Bpe.bpeTrain(s, d)),
-    "bpe_encode" -> ((s, d) => Bpe.bpeEncode(s, d)),
-    "tokenizer_fertility" -> ((s, d) => Bpe.tokenizerFertility(s, d)),
-    "skew_profile" -> ((s, d) => Skew.skewProfile(s, d)),
-    "events_scd2_history" -> ((s, d) => EventOps.scd2History(s, d)),
-    "dup_spans" -> ((s, d) => Curation.dupSpans(s, d)),
-    "events_stream_hourly" -> ((s, d) => graft.streaming.StreamingOps.streamingHourly(s, d)),
-    "events_stream_sessionize" -> ((s, d) => graft.streaming.StreamingOps.streamingSessionize(s, d)),
-    "events_stream_session_native" -> ((s, d) => graft.streaming.StreamingOps.streamingSessionWindow(s, d)),
-    "events_stream_session_tws" -> ((s, d) => graft.streaming.StreamingOps.streamingSessionizeTws(s, d)),
-    "docs_stream_dedup" -> ((s, d) => graft.streaming.StreamingOps.streamingDedup(s, d)),
-    "events_stream_dedup_wm" -> ((s, d) => graft.streaming.StreamingOps.streamingDedupWatermarked(s, d)),
-    "events_stream_enrich" -> ((s, d) => graft.streaming.StreamingOps.streamingEnrich(s, d)),
-    "events_stream_join" -> ((s, d) => graft.streaming.StreamingOps.streamingIntervalJoin(s, d)),
-    "events_stream_join_outer" -> ((s, d) => graft.streaming.StreamingOps.streamingJoinOuter(s, d)),
-    "events_stream_join_full" -> ((s, d) => graft.streaming.StreamingOps.streamingJoinFull(s, d)),
-    "events_stream_transitions" -> ((s, d) => graft.streaming.StreamingOps.streamingTransitions(s, d)),
-    "events_stream_upsert" -> ((s, d) => graft.streaming.StreamingOps.streamingUpsert(s, d)),
-    "events_stream_kmv" -> ((s, d) => graft.streaming.StreamingOps.streamingKmv(s, d)),
-    "events_stream_hll" -> ((s, d) => graft.streaming.StreamingOps.streamingHll(s, d)),
-    "events_stream_cms" -> ((s, d) => graft.streaming.StreamingOps.streamingCms(s, d)),
+    Query("events_hourly", EventOps.hourly, EventOps.hourlySql),
+    Query("events_ewma", EventOps.ewma, EventOps.ewmaSql),
+    Query("events_sliding", EventOps.slidingCounts, EventOps.slidingCountsSql),
+    Query("events_rolling_1h", EventOps.rolling1h, EventOps.rolling1hSql),
+    Query("events_first_per_user", EventOps.firstEventsPerUser, EventOps.firstEventsPerUserSql),
+    Query("events_sessionize", (s, d) => EventOps.sessionize(s, d), EventOps.sessionizeSql()),
+    Query("events_click_no_purchase", EventOps.clickNoPurchase, EventOps.clickNoPurchaseSql),
+    Query("events_click_and_purchase", EventOps.clickAndPurchase, EventOps.clickAndPurchaseSql),
+    Query("events_value_ntile", EventOps.valueNtile, EventOps.valueNtileSql),
+    Query("events_type_pivot", EventOps.typePivot, EventOps.typePivotSql),
+    Query("events_props_json", EventOps.propsJson, EventOps.propsJsonSql),
+    Query("events_date_parts", EventOps.dateParts, EventOps.datePartsSql),
+    Query("events_funnel", EventOps.funnel, EventOps.funnelSql),
+    Query("events_asof_click", EventOps.asofClickBeforePurchase, EventOps.asofClickBeforePurchaseSql),
+    Query("events_session_concurrency", (s, d) => EventOps.sessionConcurrency(s, d),
+      EventOps.sessionConcurrencySql()),
+    Query("events_time_rollup", EventOps.timeRollup, EventOps.timeRollupSql),
+    Query("events_anomaly", EventOps.anomalyHours, EventOps.anomalyHoursSql),
+    Query("events_cohort_retention", EventOps.cohortRetention, EventOps.cohortRetentionSql),
+    Query("events_gap_fill", EventOps.gapFill, EventOps.gapFillSql),
+    Query("events_click_minus_purchase_all", EventOps.clickMinusPurchaseAll,
+      EventOps.clickMinusPurchaseAllSql),
+    Query("events_user_paths", (s, d) => EventOps.userPaths(s, d), EventOps.userPathsSql()),
+    Query("events_transitions", EventOps.transitions, EventOps.transitionsSql),
+    Query("events_attribution", EventOps.attribution, EventOps.attributionSql),
+    Query("events_attribution_position", EventOps.attributionPosition, EventOps.attributionPositionSql),
+    Query("events_user_counts_salted", Skew.userEventCountsSalted, Skew.userEventCountsSaltedSql),
+    Query("events_join_salted", Skew.eventsJoinSalted, Skew.eventsJoinSaltedSql),
+    Query("q13_order_dist", Relational.q13OrderDist, Relational.q13OrderDistSql),
+    Query("q16_supplier_cnt", (s, d) => Relational.q16SupplierCnt(s, d), Relational.q16SupplierCntSql()),
+    Query("q18_large_orders", (s, d) => Relational.q18LargeOrders(s, d), Relational.q18LargeOrdersSql()),
+    Query("q22_global_bal", Relational.q22GlobalBal, Relational.q22GlobalBalSql),
+    Query("q6_forecast", Relational.q6Forecast, Relational.q6ForecastSql),
+    Query("q10_returns", (s, d) => Relational.q10Returns(s, d), Relational.q10ReturnsSql()),
+    Query("q12_priority", Relational.q12Priority, Relational.q12PrioritySql),
+    Query("q15_top_supplier", Relational.q15TopSupplier, Relational.q15TopSupplierSql),
+    Query("q19_disjunctive", Relational.q19Disjunctive, Relational.q19DisjunctiveSql),
+    Query("q21_waiting", Relational.q21Waiting, Relational.q21WaitingSql),
+    Query("q2_min_cost", (s, d) => Relational.q2MinCost(s, d), Relational.q2MinCostSql()),
+    Query("q9_profit", (s, d) => Relational.q9Profit(s, d), Relational.q9ProfitSql()),
+    Query("q11_important_part", (s, d) => Relational.q11ImportantPart(s, d),
+      Relational.q11ImportantPartSql()),
+    Query("q20_potential_promo", (s, d) => Relational.q20PotentialPromo(s, d),
+      Relational.q20PotentialPromoSql()),
+    Query("bpe_pair_counts", (s, d) => Bpe.bpePairCounts(s, d), Bpe.bpePairCountsSql()),
+    Query("bpe_train", (s, d) => Bpe.bpeTrain(s, d), Bpe.bpeTrainSql()),
+    Query("bpe_encode", (s, d) => Bpe.bpeEncode(s, d), Bpe.bpeEncodeSql()),
+    Query("tokenizer_fertility", (s, d) => Bpe.tokenizerFertility(s, d), Bpe.tokenizerFertilitySql()),
+    Query("skew_profile", Skew.skewProfile, Skew.skewProfileSql),
+    Query("events_scd2_history", (s, d) => EventOps.scd2History(s, d), EventOps.scd2HistorySql()),
+    Query("dup_spans", Curation.dupSpans, Curation.dupSpansSql),
+    Query("events_stream_hourly", StreamingOps.streamingHourly, EventOps.hourlySql),
+    Query("events_stream_sessionize", (s, d) => StreamingOps.streamingSessionize(s, d),
+      EventOps.sessionizeSql()),
+    Query("events_stream_session_native", (s, d) => StreamingOps.streamingSessionWindow(s, d),
+      StreamingOps.streamingSessionWindowSql()),
+    Query("events_stream_session_tws", (s, d) => StreamingOps.streamingSessionizeTws(s, d),
+      EventOps.sessionizeSql()),
+    Query("docs_stream_dedup", (s, d) => StreamingOps.streamingDedup(s, d),
+      "SELECT DISTINCT md5(text) AS content_hash FROM documents"),
+    Query("events_stream_dedup_wm", (s, d) => StreamingOps.streamingDedupWatermarked(s, d),
+      StreamingOps.streamingDedupWatermarkedSql),
+    Query("events_stream_enrich", (s, d) => StreamingOps.streamingEnrich(s, d),
+      StreamingOps.streamingEnrichSql),
+    Query("events_stream_join", (s, d) => StreamingOps.streamingIntervalJoin(s, d),
+      StreamingOps.streamingIntervalJoinSql),
+    Query("events_stream_join_outer", (s, d) => StreamingOps.streamingJoinOuter(s, d),
+      StreamingOps.streamingJoinOuterSql),
+    Query("events_stream_join_full", (s, d) => StreamingOps.streamingJoinFull(s, d),
+      StreamingOps.streamingJoinFullSql),
+    Query("events_stream_transitions", (s, d) => StreamingOps.streamingTransitions(s, d),
+      EventOps.transitionsSql),
+    Query("events_stream_upsert", (s, d) => StreamingOps.streamingUpsert(s, d),
+      StreamingOps.streamingUpsertSql),
+    Query("events_stream_kmv", (s, d) => StreamingOps.streamingKmv(s, d), StreamingOps.streamingKmvSql),
+    Query("events_stream_hll", (s, d) => StreamingOps.streamingHll(s, d), StreamingOps.streamingHllSql),
+    Query("events_stream_cms", (s, d) => StreamingOps.streamingCms(s, d), StreamingOps.streamingCmsSql),
     // Deduplication
-    "dedup_exact" -> ((s, d) => Dedup.exact(s, d)),
-    "dedup_fingerprint" -> ((s, d) => Dedup.fingerprint(s, d)),
-    "dedup_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(s, d)),
-    "dedup_containment" -> ((s, d) => Dedup.containment(s, d)),
-    "dedup_substring" -> ((s, d) => Dedup.substringPairs(s, d)),
-    "dedup_containment_kmv" -> ((s, d) => Dedup.containmentKmv(s, d)),
-    "dedup_cdc" -> ((s, d) => Dedup.cdcChunkDedup(s, d)),
-    "source_overlap_kmv" -> ((s, d) => Dedup.sourceOverlapKmv(s, d)),
-    "dedup_minhash_lsh" -> ((s, d) => Dedup.minhashLsh(s, d)),
-    "dedup_lsh_tune" -> ((s, d) => Dedup.lshTune(s, d)),
-    "dedup_simhash" -> ((s, d) => Dedup.simhash(s, d)),
-    "dedup_simhash_pairs" -> ((s, d) => Dedup.simhashPairs(s, d)),
-    "dedup_embedding_ivf" -> ((s, d) => Similarity.embeddingNearDupIvf(s, d)),
-    "dedup_semantic" -> ((s, d) => Similarity.dedupSemantic(s, d)),
-    "knn_join" -> ((s, d) => Similarity.knnJoin(s, d)),
-    "dedup_embedding_srp" -> ((s, d) => Similarity.embeddingNearDupSrp(s, d)),
-    "dedup_clusters" -> ((s, d) => Dedup.clusters(s, d)),
-    "dedup_keep_best" -> ((s, d) => Dedup.keepBest(s, d)),
-    "dedup_incremental" -> ((s, d) => Dedup.incremental(s, d)),
-    "graph_pagerank" -> ((s, d) => Dedup.pagerank(s, d)),
-    "graph_triangles" -> ((s, d) => Curation.graphTriangles(s, d)),
+    Query("dedup_exact", Dedup.exact, Dedup.exactSql),
+    Query("dedup_fingerprint", Dedup.fingerprint, Dedup.fingerprintSql),
+    Query("dedup_ngram_jaccard", (s, d) => Dedup.ngramJaccard(s, d), Dedup.ngramJaccardSql()),
+    Query("dedup_containment", (s, d) => Dedup.containment(s, d), Dedup.containmentSql()),
+    Query("dedup_substring", Dedup.substringPairs, Dedup.substringPairsSql()),
+    Query("dedup_containment_kmv", (s, d) => Dedup.containmentKmv(s, d), Dedup.containmentKmvSql()),
+    Query("dedup_cdc", Dedup.cdcChunkDedup, Dedup.cdcChunkDedupSql),
+    Query("source_overlap_kmv", (s, d) => Dedup.sourceOverlapKmv(s, d), Dedup.sourceOverlapKmvSql()),
+    Query("dedup_minhash_lsh", Dedup.minhashLsh, Dedup.minhashLshSql),
+    Query("dedup_lsh_tune", Dedup.lshTune, Dedup.lshTuneSql),
+    Query("dedup_simhash", Dedup.simhash, Dedup.simhashSql),
+    Query("dedup_simhash_pairs", (s, d) => Dedup.simhashPairs(s, d), Dedup.simhashPairsSql()),
+    Query("dedup_embedding_ivf", (s, d) => Similarity.embeddingNearDupIvf(s, d),
+      Similarity.embeddingNearDupIvfSql()),
+    Query("dedup_semantic", (s, d) => Similarity.dedupSemantic(s, d), Similarity.dedupSemanticSql()),
+    Query("knn_join", (s, d) => Similarity.knnJoin(s, d), Similarity.knnJoinSql()),
+    Query("dedup_embedding_srp", (s, d) => Similarity.embeddingNearDupSrp(s, d),
+      Similarity.embeddingNearDupSrpSql()),
+    Query("dedup_clusters", Dedup.clusters, Dedup.clustersSql),
+    Query("dedup_keep_best", Dedup.keepBest, Dedup.keepBestSql),
+    Query("dedup_incremental", (s, d) => Dedup.incremental(s, d), Dedup.incrementalSql()),
+    Query("graph_pagerank", (s, d) => Dedup.pagerank(s, d), Dedup.pagerankSql()),
+    Query("graph_triangles", Curation.graphTriangles, Curation.graphTrianglesSql),
     // Similarity search
-    "knn_brute" -> ((s, d) => Similarity.knnBrute(s, d)),
-    "knn_ivf" -> ((s, d) => Similarity.knnIvf(s, d)),
-    "knn_ivf_multiprobe" -> ((s, d) => Similarity.knnIvfMultiprobe(s, d)),
-    "embedding_health" -> ((s, d) => Similarity.embeddingHealth(s, d)),
-    "embedding_drift" -> ((s, d) => Similarity.embeddingDrift(s, d)),
-    "embedding_centroids" -> ((s, d) => Similarity.embeddingCentroids(s, d)),
-    "kmeans_train" -> ((s, d) => Similarity.kmeansTrain(s, d)),
-    "knn_recall" -> ((s, d) => Similarity.knnRecall(s, d)),
-    "knn_recall_compressed" -> ((s, d) => Similarity.knnRecallCompressed(s, d)),
-    "knn_ivf_trained" -> ((s, d) => Similarity.knnIvfTrained(s, d)),
-    "embedding_outliers" -> ((s, d) => Similarity.embeddingOutliers(s, d)),
-    "embedding_top_direction" -> ((s, d) => Similarity.embeddingTopDirection(s, d)),
-    "ivf_balance" -> ((s, d) => Similarity.ivfBalance(s, d)),
-    "sample_per_cluster" -> ((s, d) => Similarity.samplePerCluster(s, d)),
-    "knn_pq" -> ((s, d) => Similarity.knnPq(s, d)),
-    "knn_ivfpq" -> ((s, d) => Similarity.knnIvfPq(s, d)),
-    "knn_sq8" -> ((s, d) => Similarity.knnSq8(s, d)),
-    "knn_binary" -> ((s, d) => Similarity.knnBinary(s, d)),
-    "knn_ivf_rerank" -> ((s, d) => Similarity.knnIvfRerank(s, d)),
-    "hard_negatives" -> ((s, d) => Similarity.hardNegatives(s, d)),
+    Query("knn_brute", (s, d) => Similarity.knnBrute(s, d), Similarity.knnBruteSql()),
+    Query("knn_ivf", (s, d) => Similarity.knnIvf(s, d), Similarity.knnIvfSql()),
+    Query("knn_ivf_multiprobe", (s, d) => Similarity.knnIvfMultiprobe(s, d),
+      Similarity.knnIvfMultiprobeSql()),
+    Query("embedding_health", Similarity.embeddingHealth, Similarity.embeddingHealthSql),
+    Query("embedding_drift", Similarity.embeddingDrift, Similarity.embeddingDriftSql),
+    Query("embedding_centroids", Similarity.embeddingCentroids, Similarity.embeddingCentroidsSql),
+    Query("kmeans_train", (s, d) => Similarity.kmeansTrain(s, d), Similarity.kmeansTrainSql()),
+    Query("knn_recall", (s, d) => Similarity.knnRecall(s, d), Similarity.knnRecallSql()),
+    Query("knn_recall_compressed", (s, d) => Similarity.knnRecallCompressed(s, d),
+      Similarity.knnRecallCompressedSql()),
+    Query("knn_ivf_trained", (s, d) => Similarity.knnIvfTrained(s, d), Similarity.knnIvfTrainedSql()),
+    Query("embedding_outliers", (s, d) => Similarity.embeddingOutliers(s, d),
+      Similarity.embeddingOutliersSql()),
+    Query("embedding_top_direction", Similarity.embeddingTopDirection, Similarity.embeddingTopDirectionSql()),
+    Query("ivf_balance", Similarity.ivfBalance, Similarity.ivfBalanceSql()),
+    Query("sample_per_cluster", (s, d) => Similarity.samplePerCluster(s, d),
+      Similarity.samplePerClusterSql()),
+    Query("knn_pq", (s, d) => Similarity.knnPq(s, d), Similarity.knnPqSql()),
+    Query("knn_ivfpq", (s, d) => Similarity.knnIvfPq(s, d), Similarity.knnIvfPqSql()),
+    Query("knn_sq8", (s, d) => Similarity.knnSq8(s, d), Similarity.knnSq8Sql()),
+    Query("knn_binary", (s, d) => Similarity.knnBinary(s, d), Similarity.knnBinarySql()),
+    Query("knn_ivf_rerank", (s, d) => Similarity.knnIvfRerank(s, d), Similarity.knnIvfRerankSql()),
+    Query("hard_negatives", (s, d) => Similarity.hardNegatives(s, d), Similarity.hardNegativesSql()),
     // Text analysis
-    "text_quality" -> ((s, d) => TextAnalysis.quality(s, d)),
-    "quality_gopher" -> ((s, d) => TextAnalysis.gopherGate(s, d)),
-    "quality_classifier" -> ((s, d) => TextAnalysis.classifierGate(s, d)),
-    "source_divergence" -> ((s, d) => TextAnalysis.sourceDivergence(s, d)),
-    "diversity_distinct_n" -> ((s, d) => TextAnalysis.distinctN(s, d)),
-    "lang_id" -> ((s, d) => TextAnalysis.langId(s, d)),
-    "token_count" -> ((s, d) => TextAnalysis.tokenCount(s, d)),
-    "term_df" -> ((s, d) => TextAnalysis.termDf(s, d)),
-    "phrase_detect" -> ((s, d) => TextAnalysis.phraseDetect(s, d)),
-    "length_quantiles" -> ((s, d) => TextAnalysis.lengthQuantiles(s, d)),
-    "tfidf_top_terms" -> ((s, d) => Ranking.tfIdfTopTerms(s, d)),
-    "bm25_rank" -> ((s, d) => Ranking.bm25Rank(s, d)),
-    "inverted_postings" -> ((s, d) => Ranking.invertedPostings(s, d)),
-    "phrase_search" -> ((s, d) => Ranking.phraseSearch(s, d)),
-    "doc_sim_sparse" -> ((s, d) => Ranking.docSimSparse(s, d)),
-    "token_histogram" -> ((s, d) => TextAnalysis.tokenHistogram(s, d)),
-    "distinct_kmv" -> ((s, d) => TextAnalysis.distinctKmv(s, d)),
-    "cms_topk" -> ((s, d) => TextAnalysis.cmsTopk(s, d)),
-    "lang_classify" -> ((s, d) => TextAnalysis.langClassify(s, d)),
-    "stats_incremental" -> ((s, d) => TextAnalysis.statsIncremental(s, d)),
-    "token_diversity" -> ((s, d) => TextAnalysis.tokenDiversity(s, d)),
-    "clustering_coeff" -> ((s, d) => Curation.clusteringCoeff(s, d)),
-    "contamination_spans" -> ((s, d) => Curation.contaminationSpans(s, d)),
-    "lm_bigram_score" -> ((s, d) => Curation.lmScore(s, d)),
-    "ccnet_buckets" -> ((s, d) => Curation.ccnetBuckets(s, d)),
+    Query("text_quality", TextAnalysis.quality, TextAnalysis.qualitySql),
+    Query("quality_gopher", TextAnalysis.gopherGate, TextAnalysis.gopherGateSql),
+    Query("quality_classifier", TextAnalysis.classifierGate, TextAnalysis.classifierGateSql),
+    Query("source_divergence", TextAnalysis.sourceDivergence, TextAnalysis.sourceDivergenceSql),
+    Query("diversity_distinct_n", TextAnalysis.distinctN, TextAnalysis.distinctNSql),
+    Query("lang_id", TextAnalysis.langId, TextAnalysis.langIdSql),
+    Query("token_count", TextAnalysis.tokenCount, TextAnalysis.tokenCountSql),
+    Query("term_df", (s, d) => TextAnalysis.termDf(s, d), TextAnalysis.termDfSql()),
+    Query("phrase_detect", TextAnalysis.phraseDetect, TextAnalysis.phraseDetectSql),
+    Query("length_quantiles", TextAnalysis.lengthQuantiles, TextAnalysis.lengthQuantilesSql),
+    Query("tfidf_top_terms", (s, d) => Ranking.tfIdfTopTerms(s, d), Ranking.tfIdfTopTermsSql()),
+    Query("bm25_rank", (s, d) => Ranking.bm25Rank(s, d), Ranking.bm25RankSql()),
+    Query("inverted_postings", (s, d) => Ranking.invertedPostings(s, d), Ranking.invertedPostingsSql()),
+    Query("phrase_search", (s, d) => Ranking.phraseSearch(s, d), Ranking.phraseSearchSql()),
+    Query("doc_sim_sparse", Ranking.docSimSparse, Ranking.docSimSparseSql()),
+    Query("token_histogram", (s, d) => TextAnalysis.tokenHistogram(s, d), TextAnalysis.tokenHistogramSql()),
+    Query("distinct_kmv", TextAnalysis.distinctKmv, TextAnalysis.distinctKmvSql),
+    Query("cms_topk", TextAnalysis.cmsTopk, TextAnalysis.cmsTopkSql),
+    Query("lang_classify", TextAnalysis.langClassify, TextAnalysis.langClassifySql),
+    Query("stats_incremental", TextAnalysis.statsIncremental, TextAnalysis.statsIncrementalSql),
+    Query("token_diversity", TextAnalysis.tokenDiversity, TextAnalysis.tokenDiversitySql),
+    Query("clustering_coeff", Curation.clusteringCoeff, Curation.clusteringCoeffSql),
+    Query("contamination_spans", Curation.contaminationSpans, Curation.contaminationSpansSql),
+    Query("lm_bigram_score", Curation.lmScore, Curation.lmScoreSql),
+    Query("ccnet_buckets", Curation.ccnetBuckets, Curation.ccnetBucketsSql),
     // Curation / sampling
-    "sample_stratified" -> ((s, d) => Sampling.stratifiedSample(s, d)),
-    "sample_weighted" -> ((s, d) => Sampling.weightedSample(s, d)),
-    "hist_quantiles" -> ((s, d) => TextAnalysis.histQuantiles(s, d)),
-    "shard_assign" -> ((s, d) => Sampling.shardAssign(s, d)),
-    "epoch_reshuffle" -> ((s, d) => Sampling.epochReshuffle(s, d)),
-    "shard_manifest" -> ((s, d) => Sampling.shardManifest(s, d)),
-    "compaction_plan" -> ((s, d) => Sampling.compactionPlan(s, d)),
-    "zorder_layout" -> ((s, d) => Sampling.zorderLayout(s, d)),
-    "zonemap_prune" -> ((s, d) => Sampling.zonemapPrune(s, d)),
-    "training_mix_temperature" -> ((s, d) => Sampling.trainingMixTemperature(s, d)),
-    "mix_epochs_plan" -> ((s, d) => Sampling.mixEpochsPlan(s, d)),
-    "dsir_select" -> ((s, d) => Sampling.dsirSelect(s, d)),
-    "pack_chunks" -> ((s, d) => Sampling.packChunks(s, d)),
-    "pack_multimodal" -> ((s, d) => Sampling.packMultimodal(s, d)),
-    "pack_best_fit" -> ((s, d) => Sampling.packBestFit(s, d)),
-    "doc_novelty" -> ((s, d) => Curation.novelty(s, d)),
-    "training_mix" -> ((s, d) => Sampling.trainingMix(s, d)),
-    "training_mix_full" -> ((s, d) => Sampling.trainingMixFull(s, d)),
-    "contamination" -> ((s, d) => Curation.contamination(s, d)),
-    "contamination_semantic" -> ((s, d) => Similarity.contaminationSemantic(s, d)),
-    "contamination_verdict" -> ((s, d) => Curation.contaminationVerdict(s, d)),
-    "corpus_diff" -> ((s, d) => Curation.corpusDiff(s, d)),
-    "curation_funnel" -> ((s, d) => Curation.curationFunnel(s, d)),
-    "split_leakage" -> ((s, d) => Curation.splitLeakage(s, d)),
-    "quality_repetition" -> ((s, d) => Curation.repetition(s, d)),
-    "doc_winnow" -> ((s, d) => Curation.winnow(s, d)),
-    "doc_winnow_pairs" -> ((s, d) => Curation.winnowPairs(s, d)),
-    "pii_redact" -> ((s, d) => Curation.piiRedact(s, d)),
-    "doc_chunks" -> ((s, d) => Curation.chunkDocs(s, d)),
-    "pack_sequences" -> ((s, d) => Sampling.packSequences(s, d)),
+    Query("sample_stratified", (s, d) => Sampling.stratifiedSample(s, d), Sampling.stratifiedSampleSql()),
+    Query("sample_weighted", Sampling.weightedSample, Sampling.weightedSampleSql),
+    Query("hist_quantiles", TextAnalysis.histQuantiles, TextAnalysis.histQuantilesSql),
+    Query("shard_assign", (s, d) => Sampling.shardAssign(s, d), Sampling.shardAssignSql()),
+    Query("epoch_reshuffle", (s, d) => Sampling.epochReshuffle(s, d), Sampling.epochReshuffleSql()),
+    Query("shard_manifest", (s, d) => Sampling.shardManifest(s, d), Sampling.shardManifestSql()),
+    Query("compaction_plan", (s, d) => Sampling.compactionPlan(s, d), Sampling.compactionPlanSql()),
+    Query("zorder_layout", Sampling.zorderLayout, Sampling.zorderLayoutSql),
+    Query("zonemap_prune", Sampling.zonemapPrune, Sampling.zonemapPruneSql),
+    Query("training_mix_temperature", (s, d) => Sampling.trainingMixTemperature(s, d),
+      Sampling.trainingMixTemperatureSql()),
+    Query("mix_epochs_plan", Sampling.mixEpochsPlan, Sampling.mixEpochsPlanSql()),
+    Query("dsir_select", (s, d) => Sampling.dsirSelect(s, d), Sampling.dsirSelectSql()),
+    Query("pack_chunks", (s, d) => Sampling.packChunks(s, d), Sampling.packChunksSql()),
+    Query("pack_multimodal", (s, d) => Sampling.packMultimodal(s, d), Sampling.packMultimodalSql()),
+    Query("pack_best_fit", (s, d) => Sampling.packBestFit(s, d), Sampling.packBestFitSql()),
+    Query("doc_novelty", Curation.novelty, Curation.noveltySql),
+    Query("training_mix", (s, d) => Sampling.trainingMix(s, d), Sampling.trainingMixSql()),
+    Query("training_mix_full", (s, d) => Sampling.trainingMixFull(s, d), Sampling.trainingMixFullSql()),
+    Query("contamination", Curation.contamination, Curation.contaminationSql),
+    Query("contamination_semantic", (s, d) => Similarity.contaminationSemantic(s, d),
+      Similarity.contaminationSemanticSql()),
+    Query("contamination_verdict", (s, d) => Curation.contaminationVerdict(s, d),
+      Curation.contaminationVerdictSql()),
+    Query("corpus_diff", Curation.corpusDiff, Curation.corpusDiffSql),
+    Query("curation_funnel", (s, d) => Curation.curationFunnel(s, d), Curation.curationFunnelSql()),
+    Query("split_leakage", Curation.splitLeakage, Curation.splitLeakageSql),
+    Query("quality_repetition", Curation.repetition, Curation.repetitionSql),
+    Query("doc_winnow", Curation.winnow, Curation.winnowSql),
+    Query("doc_winnow_pairs", (s, d) => Curation.winnowPairs(s, d), Curation.winnowPairsSql()),
+    Query("pii_redact", Curation.piiRedact, Curation.piiRedactSql),
+    Query("doc_chunks", Curation.chunkDocs, Curation.chunkDocsSql),
+    Query("pack_sequences", (s, d) => Sampling.packSequences(s, d), Sampling.packSequencesSql()),
     // Multimodal plumbing (stub decoder, real pipeline)
-    "multimodal_media" -> ((s, d) => Multimodal.mediaFeatures(s, d)),
-    "multimodal_frames" -> ((s, d) => Multimodal.frameSamples(s, d)),
-    "multimodal_frame_dedup" -> ((s, d) => Multimodal.frameDedup(s, d)),
-    "multimodal_frame_stats" -> ((s, d) => Multimodal.frameStats(s, d)),
-    "multimodal_keyframes" -> ((s, d) => Multimodal.keyframes(s, d)),
-    "multimodal_audio" -> ((s, d) => Multimodal.audioFeatures(s, d)),
+    Query("multimodal_media", Multimodal.mediaFeatures, Multimodal.mediaFeaturesSql),
+    Query("multimodal_frames", Multimodal.frameSamples, Multimodal.frameSamplesSql),
+    Query("multimodal_frame_dedup", Multimodal.frameDedup, Multimodal.frameDedupSql),
+    Query("multimodal_frame_stats", Multimodal.frameStats, Multimodal.frameStatsSql),
+    Query("multimodal_keyframes", Multimodal.keyframes, Multimodal.keyframesSql),
+    Query("multimodal_audio", Multimodal.audioFeatures, Multimodal.audioFeaturesSql),
   )
 
-  /** For each key in queries, equivalent SQL runnable by DuckDB on the same
-    * parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "wc_wordcount" -> TextOps.wordcountSql,
-    "wc_by_source" -> TextOps.wordcountBySourceSql,
-    "grep_product" -> TextOps.grepSql(),
-    "grep_match" -> TextOps.grepSql("vector"),
-    "mr_wordcount" -> graft.mr.MrQueries.mrWordcountSql,
-    "mr_wordcount_exec" -> graft.mr.MrQueries.mrWordcountSql,
-    "mr_grep" -> graft.mr.MrQueries.mrGrepSql(),
-    "q1_agg" -> Relational.q1AggSql,
-    "q1_rollup" -> Relational.q1RollupSql,
-    "q1_cube" -> Relational.q1CubeSql,
-    "top_customers_per_nation" -> Relational.topCustomersPerNationSql(),
-    "q3_topk" -> Relational.q3TopkSql,
-    "q5_region" -> Relational.q5RegionSql,
-    "q14_promo" -> Relational.q14PromoSql,
-    "q17_small_qty" -> Relational.q17SmallQtySql(),
-    "q7_volume" -> Relational.q7VolumeSql(),
-    "q8_mkt_share" -> Relational.q8MktShareSql(),
-    "customers_no_urgent" -> Relational.customersNoOrdersSql,
-    "orders_with_returns" -> Relational.ordersWithReturnsSql,
-    "customer_value_profile" -> Relational.customerValueProfileSql,
-    "orders_above_cust_avg" -> Relational.ordersAboveCustAvgSql,
-    "snapshot_merge" -> Relational.snapshotMergeSql,
-    "table_profile" -> Relational.tableProfileSql,
-    "fuzzy_pairs" -> FuzzyJoin.fuzzyPairsSql,
-    "entity_resolution" -> FuzzyJoin.entityResolutionSql,
-    "fk_integrity" -> Audit.fkIntegritySql,
-    "join_cardinality_kmv" -> Audit.joinCardinalityKmvSql,
-    "bloom_semijoin_prune" -> Audit.bloomSemijoinPruneSql,
-    "hll_distinct" -> TextAnalysis.hllDistinctSql,
-    "row_quality_gate" -> Audit.rowQualityGateSql,
-    "events_hourly" -> EventOps.hourlySql,
-    "events_ewma" -> EventOps.ewmaSql,
-    "events_sliding" -> EventOps.slidingCountsSql,
-    "events_rolling_1h" -> EventOps.rolling1hSql,
-    "events_first_per_user" -> EventOps.firstEventsPerUserSql,
-    "events_sessionize" -> EventOps.sessionizeSql(),
-    "events_click_no_purchase" -> EventOps.clickNoPurchaseSql,
-    "events_click_and_purchase" -> EventOps.clickAndPurchaseSql,
-    "events_value_ntile" -> EventOps.valueNtileSql,
-    "events_type_pivot" -> EventOps.typePivotSql,
-    "events_props_json" -> EventOps.propsJsonSql,
-    "events_date_parts" -> EventOps.datePartsSql,
-    "events_funnel" -> EventOps.funnelSql,
-    "events_asof_click" -> EventOps.asofClickBeforePurchaseSql,
-    "events_session_concurrency" -> EventOps.sessionConcurrencySql(),
-    "events_time_rollup" -> EventOps.timeRollupSql,
-    "events_anomaly" -> EventOps.anomalyHoursSql,
-    "events_cohort_retention" -> EventOps.cohortRetentionSql,
-    "events_gap_fill" -> EventOps.gapFillSql,
-    "events_click_minus_purchase_all" -> EventOps.clickMinusPurchaseAllSql,
-    "events_user_paths" -> EventOps.userPathsSql(),
-    "events_transitions" -> EventOps.transitionsSql,
-    "events_attribution" -> EventOps.attributionSql,
-    "events_attribution_position" -> EventOps.attributionPositionSql,
-    "events_user_counts_salted" -> Skew.userEventCountsSaltedSql,
-    "events_join_salted" -> Skew.eventsJoinSaltedSql,
-    "q13_order_dist" -> Relational.q13OrderDistSql,
-    "q16_supplier_cnt" -> Relational.q16SupplierCntSql(),
-    "q18_large_orders" -> Relational.q18LargeOrdersSql(),
-    "q22_global_bal" -> Relational.q22GlobalBalSql,
-    "q6_forecast" -> Relational.q6ForecastSql,
-    "q10_returns" -> Relational.q10ReturnsSql(),
-    "q12_priority" -> Relational.q12PrioritySql,
-    "q15_top_supplier" -> Relational.q15TopSupplierSql,
-    "q19_disjunctive" -> Relational.q19DisjunctiveSql,
-    "q21_waiting" -> Relational.q21WaitingSql,
-    "q2_min_cost" -> Relational.q2MinCostSql(),
-    "q9_profit" -> Relational.q9ProfitSql(),
-    "q11_important_part" -> Relational.q11ImportantPartSql(),
-    "q20_potential_promo" -> Relational.q20PotentialPromoSql(),
-    "bpe_pair_counts" -> Bpe.bpePairCountsSql(),
-    "bpe_train" -> Bpe.bpeTrainSql(),
-    "bpe_encode" -> Bpe.bpeEncodeSql(),
-    "tokenizer_fertility" -> Bpe.tokenizerFertilitySql(),
-    "skew_profile" -> Skew.skewProfileSql,
-    "events_scd2_history" -> EventOps.scd2HistorySql(),
-    "dup_spans" -> Curation.dupSpansSql,
-    "events_stream_hourly" -> EventOps.hourlySql,
-    "events_stream_sessionize" -> EventOps.sessionizeSql(),
-    "events_stream_session_tws" -> EventOps.sessionizeSql(),
-    "events_stream_session_native" -> graft.streaming.StreamingOps.streamingSessionWindowSql(),
-    "docs_stream_dedup" -> "SELECT DISTINCT md5(text) AS content_hash FROM documents",
-    "events_stream_dedup_wm" -> graft.streaming.StreamingOps.streamingDedupWatermarkedSql,
-    "events_stream_enrich" -> graft.streaming.StreamingOps.streamingEnrichSql,
-    "events_stream_join" -> graft.streaming.StreamingOps.streamingIntervalJoinSql,
-    "events_stream_join_outer" -> graft.streaming.StreamingOps.streamingJoinOuterSql,
-    "events_stream_join_full" -> graft.streaming.StreamingOps.streamingJoinFullSql,
-    "events_stream_transitions" -> EventOps.transitionsSql,
-    "events_stream_upsert" -> graft.streaming.StreamingOps.streamingUpsertSql,
-    "events_stream_kmv" -> graft.streaming.StreamingOps.streamingKmvSql,
-    "events_stream_hll" -> graft.streaming.StreamingOps.streamingHllSql,
-    "events_stream_cms" -> graft.streaming.StreamingOps.streamingCmsSql,
-    "dedup_exact" -> Dedup.exactSql,
-    "dedup_fingerprint" -> Dedup.fingerprintSql,
-    "dedup_ngram_jaccard" -> Dedup.ngramJaccardSql(),
-    "dedup_containment" -> Dedup.containmentSql(),
-    "dedup_substring" -> Dedup.substringPairsSql(),
-    "dedup_containment_kmv" -> Dedup.containmentKmvSql(),
-    "dedup_cdc" -> Dedup.cdcChunkDedupSql,
-    "source_overlap_kmv" -> Dedup.sourceOverlapKmvSql(),
-    "dedup_minhash_lsh" -> Dedup.minhashLshSql,
-    "dedup_lsh_tune" -> Dedup.lshTuneSql,
-    "dedup_simhash" -> Dedup.simhashSql,
-    "dedup_simhash_pairs" -> Dedup.simhashPairsSql(),
-    "dedup_embedding_ivf" -> Similarity.embeddingNearDupIvfSql(),
-    "dedup_semantic" -> Similarity.dedupSemanticSql(),
-    "knn_join" -> Similarity.knnJoinSql(),
-    "dedup_embedding_srp" -> Similarity.embeddingNearDupSrpSql(),
-    "dedup_clusters" -> Dedup.clustersSql,
-    "dedup_keep_best" -> Dedup.keepBestSql,
-    "dedup_incremental" -> Dedup.incrementalSql(),
-    "graph_pagerank" -> Dedup.pagerankSql(),
-    "graph_triangles" -> Curation.graphTrianglesSql,
-    "knn_brute" -> Similarity.knnBruteSql(),
-    "knn_ivf" -> Similarity.knnIvfSql(),
-    "knn_ivf_multiprobe" -> Similarity.knnIvfMultiprobeSql(),
-    "embedding_health" -> Similarity.embeddingHealthSql,
-    "embedding_drift" -> Similarity.embeddingDriftSql,
-    "embedding_centroids" -> Similarity.embeddingCentroidsSql,
-    "kmeans_train" -> Similarity.kmeansTrainSql(),
-    "knn_recall" -> Similarity.knnRecallSql(),
-    "knn_recall_compressed" -> Similarity.knnRecallCompressedSql(),
-    "knn_ivf_trained" -> Similarity.knnIvfTrainedSql(),
-    "embedding_outliers" -> Similarity.embeddingOutliersSql(),
-    "embedding_top_direction" -> Similarity.embeddingTopDirectionSql(),
-    "ivf_balance" -> Similarity.ivfBalanceSql(),
-    "sample_per_cluster" -> Similarity.samplePerClusterSql(),
-    "knn_pq" -> Similarity.knnPqSql(),
-    "knn_ivfpq" -> Similarity.knnIvfPqSql(),
-    "knn_sq8" -> Similarity.knnSq8Sql(),
-    "knn_binary" -> Similarity.knnBinarySql(),
-    "knn_ivf_rerank" -> Similarity.knnIvfRerankSql(),
-    "hard_negatives" -> Similarity.hardNegativesSql(),
-    "text_quality" -> TextAnalysis.qualitySql,
-    "quality_gopher" -> TextAnalysis.gopherGateSql,
-    "quality_classifier" -> TextAnalysis.classifierGateSql,
-    "source_divergence" -> TextAnalysis.sourceDivergenceSql,
-    "diversity_distinct_n" -> TextAnalysis.distinctNSql,
-    "lang_id" -> TextAnalysis.langIdSql,
-    "token_count" -> TextAnalysis.tokenCountSql,
-    "term_df" -> TextAnalysis.termDfSql(),
-    "phrase_detect" -> TextAnalysis.phraseDetectSql,
-    "length_quantiles" -> TextAnalysis.lengthQuantilesSql,
-    "tfidf_top_terms" -> Ranking.tfIdfTopTermsSql(),
-    "bm25_rank" -> Ranking.bm25RankSql(),
-    "inverted_postings" -> Ranking.invertedPostingsSql(),
-    "phrase_search" -> Ranking.phraseSearchSql(),
-    "doc_sim_sparse" -> Ranking.docSimSparseSql(),
-    "token_histogram" -> TextAnalysis.tokenHistogramSql(),
-    "distinct_kmv" -> TextAnalysis.distinctKmvSql,
-    "cms_topk" -> TextAnalysis.cmsTopkSql,
-    "lang_classify" -> TextAnalysis.langClassifySql,
-    "stats_incremental" -> TextAnalysis.statsIncrementalSql,
-    "token_diversity" -> TextAnalysis.tokenDiversitySql,
-    "clustering_coeff" -> Curation.clusteringCoeffSql,
-    "contamination_spans" -> Curation.contaminationSpansSql,
-    "lm_bigram_score" -> Curation.lmScoreSql,
-    "ccnet_buckets" -> Curation.ccnetBucketsSql,
-    "sample_stratified" -> Sampling.stratifiedSampleSql(),
-    "sample_weighted" -> Sampling.weightedSampleSql,
-    "hist_quantiles" -> TextAnalysis.histQuantilesSql,
-    "shard_assign" -> Sampling.shardAssignSql(),
-    "epoch_reshuffle" -> Sampling.epochReshuffleSql(),
-    "shard_manifest" -> Sampling.shardManifestSql(),
-    "compaction_plan" -> Sampling.compactionPlanSql(),
-    "zorder_layout" -> Sampling.zorderLayoutSql,
-    "zonemap_prune" -> Sampling.zonemapPruneSql,
-    "training_mix_temperature" -> Sampling.trainingMixTemperatureSql(),
-    "mix_epochs_plan" -> Sampling.mixEpochsPlanSql(),
-    "dsir_select" -> Sampling.dsirSelectSql(),
-    "pack_chunks" -> Sampling.packChunksSql(),
-    "pack_multimodal" -> Sampling.packMultimodalSql(),
-    "pack_best_fit" -> Sampling.packBestFitSql(),
-    "doc_novelty" -> Curation.noveltySql,
-    "training_mix" -> Sampling.trainingMixSql(),
-    "training_mix_full" -> Sampling.trainingMixFullSql(),
-    "contamination" -> Curation.contaminationSql,
-    "contamination_semantic" -> Similarity.contaminationSemanticSql(),
-    "contamination_verdict" -> Curation.contaminationVerdictSql(),
-    "corpus_diff" -> Curation.corpusDiffSql,
-    "curation_funnel" -> Curation.curationFunnelSql(),
-    "split_leakage" -> Curation.splitLeakageSql,
-    "quality_repetition" -> Curation.repetitionSql,
-    "doc_winnow" -> Curation.winnowSql,
-    "doc_winnow_pairs" -> Curation.winnowPairsSql(),
-    "pii_redact" -> Curation.piiRedactSql,
-    "doc_chunks" -> Curation.chunkDocsSql,
-    "pack_sequences" -> Sampling.packSequencesSql(),
-    "multimodal_media" -> Multimodal.mediaFeaturesSql,
-    "multimodal_frames" -> Multimodal.frameSamplesSql,
-    "multimodal_frame_dedup" -> Multimodal.frameDedupSql,
-    "multimodal_frame_stats" -> Multimodal.frameStatsSql,
-    "multimodal_keyframes" -> Multimodal.keyframesSql,
-    "multimodal_audio" -> Multimodal.audioFeaturesSql,
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.sql).toMap
+
+  /** The registry names `spec` selects: `ALL` gives every name, sorted;
+    * otherwise `spec` is a comma list whose entries are trimmed, with empty
+    * entries dropped, kept in the given order without repeats. Throws
+    * IllegalArgumentException naming every entry the registry lacks. */
+  def resolve(spec: String): Seq[String] =
+    if (spec.trim == "ALL") queries.keys.toSeq.sorted
+    else {
+      val names = spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty, s"not in the registry: ${unknown.mkString(", ")}")
+      names
+    }
 }

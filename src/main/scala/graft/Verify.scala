@@ -8,9 +8,9 @@ import org.json4s.{JObject, JString}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional dev-loop filter: comma-separated query names as a 3rd arg
+    // Optional dev-loop filter: a SparkEntry.resolve list as a 3rd arg
     // (the driver always passes exactly 2 args → full dump).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val names = SparkEntry.resolve(args.lift(2).getOrElse("ALL"))
     val spark = GraftSession.local(GraftSession.cpus, sfDir)
     new java.io.File(outDir).mkdirs()
     // A query that throws must become a RED row in the round artifact, not a
@@ -19,10 +19,10 @@ object Verify {
     // first-line error messages and persist them as _errors.json beside
     // oracle_sql.json (the exit status stays 0 — see the note at the end).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.filter(q => only.forall(_.contains(q._1))).foreach { case (name, fn) =>
+    names.foreach { name =>
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
@@ -37,7 +37,7 @@ object Verify {
     def json(kvs: Iterable[(String, String)]): String =
       BenchCore.compact(JObject(kvs.map { case (k, v) => k -> JString(v) }.toList))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      json(SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))))
+      json(names.map(n => n -> SparkEntry.oracleSql(n))))
     Files.writeString(Paths.get(s"$outDir/_errors.json"), json(errors))
     spark.stop()
     // Exit 0 even on failures — a nonzero status could make a driver discard

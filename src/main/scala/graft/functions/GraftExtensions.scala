@@ -1,23 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL surface for the custom Catalyst expressions: makes `vec_dot`,
-  * `word_shingles`, and `md5_mod` callable from `spark.sql(...)` — not just
-  * the Column API — through the two standard wiring paths:
+  * `word_shingles`, `md5_mod` and `winnow_fps` callable from
+  * `spark.sql(...)` — not just the Column API — and adds the ts-pushdown
+  * optimizer rule. There is one wiring path, the static session conf
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (`--conf` on a
+  * cluster; `GraftSession`, `SparkTestSession` and perfbench's harness set
+  * it), which instantiates this class and injects both into every new
+  * session.
   *
-  *  1. Cluster config (no code changes for the user):
-  *     `--conf spark.sql.extensions=graft.functions.GraftExtensions`
-  *     instantiates this class and injects the functions into every new
-  *     session's registry.
-  *  2. A live session (notebook path): `GraftExtensions.register(spark)`.
-  *
-  * Both routes register the SAME codegen'd expressions the Column API
-  * uses — a SQL query calling `vec_dot` gets the tight primitive loop
-  * inside whole-stage codegen, not a UDF. */
+  * It registers the SAME codegen'd expressions the Column API uses — a SQL
+  * query calling `vec_dot` gets the tight primitive loop inside
+  * whole-stage codegen, not a UDF. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
@@ -39,9 +38,8 @@ object GraftExtensions {
   private def arity(fn: String, args: Seq[Expression], n: Int): Unit =
     require(args.length == n, s"$fn expects $n arguments, got ${args.length}")
 
-  /** (identifier, info, builder) triples in the exact shape
-    * `SparkSessionExtensions.injectFunction` and
-    * `FunctionRegistry.registerFunction` share. */
+  /** (identifier, info, builder) triples in the shape
+    * `SparkSessionExtensions.injectFunction` takes. */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("vec_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
@@ -67,17 +65,4 @@ object GraftExtensions {
         WinnowFingerprints(args(0), intLit(args(1), "winnow_fps", "k"),
           intLit(args(2), "winnow_fps", "w"))
       }))
-
-  /** Register into an already-running session (functions + the pushdown
-    * rule — `extraOptimizations` runs before physical planning, which is
-    * when PushedFilters are extracted, so the late batch still prunes). */
-  def register(spark: SparkSession): Unit = {
-    val registry = GraftSqlBridge.functionRegistry(spark)
-    functions.foreach { case (id, info, builder) =>
-      registry.registerFunction(id, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.TsComparisonPushdown))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.TsComparisonPushdown
-  }
 }

@@ -36,10 +36,8 @@ import org.apache.spark.sql.types._
   * forms that are not worth the subtlety for a range-pushdown rule.
   *
   * Injected by [[graft.functions.GraftExtensions]] via
-  * `injectOptimizerRule` (cluster-config path) and
-  * `spark.experimental.extraOptimizations` (live-session path) — in both
-  * positions it runs before physical planning, which is when PushedFilters
-  * are extracted, so either wiring restores the scan-level pruning.
+  * `injectOptimizerRule`: it runs before physical planning, which is when
+  * PushedFilters are extracted, so it restores the scan-level pruning.
   */
 object TsComparisonPushdown extends Rule[LogicalPlan] {
 

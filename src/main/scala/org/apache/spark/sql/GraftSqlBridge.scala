@@ -9,12 +9,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** The session's function registry (behind `sessionState`, which Spark 4
-    * keeps off the public API) — used to register the graft expressions as
-    * SQL functions in an already-running session. */
-  def functionRegistry(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-
   /** Block until every listener event posted so far is delivered (the bus
     * is `private[spark]`; QueryExecutionListener callbacks ride it). */
   def drainListeners(spark: SparkSession): Unit =

@@ -137,16 +137,6 @@ class BenchChaosSpec extends AnyFunSuite {
     assert((out \ "refused").children.map(_ \ "ts") == rs.takeRight(8).map(r => JString(r.ts)))
   }
 
-  test("single-pass probe mode (basePasses=1) runs exactly one pass and never escalates") {
-    // the dev-only sf100 tiered mode: one sample per query, honest
-    // passes=1 in the artifact, no spread machinery (one sample has none)
-    val host = new Host(trueCost, throttleFrom = 0, throttleTo = 0, factor = 1.0)
-    val out = BenchCore.measure(names, host.onePass, host.calibrate, basePasses = 1)
-    assert(host.passCalls.size == names.size)
-    assert(out.queries.forall(q => q.passes == 1 && q.median == trueCost(q.name)))
-    assert(!out.rescueRan)
-  }
-
   test("a quiet host never pays the rescue phase") {
     val host = new Host(trueCost, throttleFrom = 0, throttleTo = 0, factor = 1.0)
     val out = BenchCore.measure(names, host.onePass, host.calibrate)

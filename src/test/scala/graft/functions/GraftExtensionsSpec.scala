@@ -10,7 +10,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("register(spark): custom expressions callable from SQL with codegen semantics") {
-    GraftExtensions.register(spark)
     assert(spark.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .head().getDouble(0) === 11.0)
     assert(spark.sql("SELECT word_shingles(array('a', 'b', 'c', 'd'), 3) AS s")
@@ -20,7 +19,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("SQL vec_dot agrees with the Column API on table data") {
-    GraftExtensions.register(spark)
     graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .createOrReplaceTempView("emb_ext_test")
     val viaSql = spark.sql(
@@ -38,17 +36,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(viaSql === viaCol)
   }
 
-  test("register(spark): the ts-pushdown rule lands in extraOptimizations exactly once") {
-    GraftExtensions.register(spark)
-    GraftExtensions.register(spark) // idempotent — no duplicate rule
-    val rules = spark.experimental.extraOptimizations
-      .filter(_ eq graft.plans.TsComparisonPushdown)
-    assert(rules.size === 1,
-      s"live-session registration must inject the pushdown rule once, got ${rules.size}")
-  }
-
   test("non-literal arity/type misuse fails analysis with a clear message") {
-    GraftExtensions.register(spark)
     val e = intercept[Exception](spark.sql("SELECT word_shingles(array('a'), 1 + 1)").collect())
     assert(e.getMessage.contains("literal INT") || e.getMessage.contains("word_shingles"))
   }
@@ -58,9 +46,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // spark.sql.extensions=graft.functions.GraftExtensions (a STATIC conf —
     // it must be present at context creation, exactly like --conf on a
     // cluster). newSession() builds a brand-new SessionState whose function
-    // registry starts from the extensions, NOT from any explicit register()
-    // calls made on the parent session — so resolving here proves the
-    // config-driven injection itself.
+    // registry starts from the extensions alone — so resolving here proves
+    // the config-driven injection itself.
     val fresh: SparkSession = spark.newSession()
     assert(fresh ne spark, "must be a distinct session object")
     assert(fresh.sql("SELECT vec_dot(array(2.0d, 3.0d), array(4.0d, 5.0d)) AS d")

@@ -16,6 +16,16 @@ without changing the work done:
   - call sites                `at Dedup.scala:399`     -> `at Dedup.scala:N`
   - lambda variable suffixes  `lambda x_27`            -> `lambda x_N`
   - observation names (UUIDs) `CollectMetrics` arguments -> `UUID`
+  - lambda identities         `Multimodal$$$Lambda$6115/0x00007f07dd81ad58@596eead4`
+                                                       -> `Multimodal$$$Lambda$N`
+  - AQE query-stage ids       `Arguments: 19` under `(15) BroadcastQueryStage`
+                              (any `...QueryStage`)    -> `Arguments: N`
+
+Two run-to-run differences are NOT masked, because they change the plan's
+shape rather than a label: AQE's BuildLeft/BuildRight pick between two
+equal-size sides, and the exprId-dependent column order of a
+distinct-aggregate `Expand`. Where a query shows one of these, compare
+against a second dump of the same tree to see whether it is noise.
 
 Prints a unified diff of the masked text for every query whose plans
 differ, and one line for a query that has a plan on one side only. Exits 1
@@ -33,6 +43,8 @@ MASKS = [
     (re.compile(r"(\w+\.scala):\d+"), r"\1:N"),
     (re.compile(r"\b([a-z])_\d+\b"), r"\1_N"),
     (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"), "UUID"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
+    (re.compile(r"(\(\d+\) \w+QueryStage\nOutput [^\n]*\nArguments: )\d+"), r"\1N"),
 ]
 
 
